@@ -246,17 +246,12 @@ object Bench {
         val qe = q.run(spark, dir).queryExecution
         qe.toRdd.count()
         val wall = math.round((System.nanoTime() - w0) / 1e6) / 1000.0
-        // listener bus is async; poll until the stage list stops growing
-        // (bounded at 5 s). A fixed 500 ms could truncate the evidence
+        // listener bus is async: drain it (bounded at 5 s) before reading
+        // the stage list. A fixed 500 ms could truncate the evidence
         // exactly when it matters — this dump fires during loaded
         // windows, when the bus drains slowest (r13 sweep).
-        var seen = -1
-        var waited = 0
-        while (stages.size() != seen && waited < 5000) {
-          seen = stages.size()
-          Thread.sleep(500)
-          waited += 500
-        }
+        if (!org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 5000L))
+          stages.add("    (listener bus not drained in 5 s; stage list may be short)")
         // per-operator SQL metrics (output rows, op wall time) — the
         // stage names alone cannot say WHICH operator a straggler stage
         // was running (r14 sf10 attribution); walk the executed tree
@@ -1055,37 +1050,40 @@ object Bench {
         // SparkContext does — a cluster's per-query-driver posture,
         // reproduced in the sweep. ~2 s per cycle, 7 cycles: noise
         // against a ~450 s sweep. The per-query caches are already
-        // session-safe (timeOnce clears RunCaches; the feature memo
-        // drops stopped sessions' entries).
+        // session-safe (timeOnce clears RunCaches, which drops stopped
+        // sessions' entries).
         val sweepCycle = 20
         var sw = spark
-        val secs = QueryDef.catalogs.zipWithIndex.map { case (q, i) =>
-          if (i > 0 && i % sweepCycle == 0) {
-            sw.stop()
-            sw = Engine.session(appName = "graft-bench-sweep")
+        // stopped in a finally: a failure after the first cycle must not
+        // leak the replacement session. The sweep is the run's last Spark
+        // work; nothing below needs a live context (record lines are
+        // pre-rendered strings)
+        try {
+          val secs = QueryDef.catalogs.zipWithIndex.map { case (q, i) =>
+            if (i > 0 && i % sweepCycle == 0) {
+              sw.stop()
+              sw = Engine.session(appName = "graft-bench-sweep")
+            }
+            val t = try {
+              System.gc()
+              math.round(timeOnce(sw)(q, sf10Dir) * 1000) / 1000.0
+            } catch { case e: Throwable =>
+              System.err.println(s"[bench] sf10 sweep ${q.name} failed: ${e.getMessage}")
+              -1.0
+            }
+            System.err.println(f"[bench] sf10 sweep ${q.name}: $t%.2f s")
+            q.name -> t
           }
-          val t = try {
-            System.gc()
-            math.round(timeOnce(sw)(q, sf10Dir) * 1000) / 1000.0
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] sf10 sweep ${q.name} failed: ${e.getMessage}")
-            -1.0
-          }
-          System.err.println(f"[bench] sf10 sweep ${q.name}: $t%.2f s")
-          q.name -> t
-        }
-        val failed = secs.filter(_._2 < 0).map(_._1)
-        val body = s"""{"sweep":"sf10","dir":${Verify.jsonStr(sf10Dir)},""" +
-          s""""fresh_session_every":$sweepCycle,""" +
-          secs.map { case (k, v) => "\"" + k + "\":" + v }
-            .mkString(""""sec":{""", ",", "},") +
-          failed.map("\"" + _ + "\"").mkString(""""failed":[""", ",", "]}")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(out), body)
-        System.err.println(s"[bench] sf10 sweep written to $out " +
-          s"(${secs.count(_._2 >= 0)} timed, ${failed.size} failed)")
-        // the sweep is the run's last Spark work; nothing below needs a
-        // live context (record lines are pre-rendered strings)
-        sw.stop()
+          val failed = secs.filter(_._2 < 0).map(_._1)
+          val body = s"""{"sweep":"sf10","dir":${Verify.jsonStr(sf10Dir)},""" +
+            s""""fresh_session_every":$sweepCycle,""" +
+            secs.map { case (k, v) => "\"" + k + "\":" + v }
+              .mkString(""""sec":{""", ",", "},") +
+            failed.map("\"" + _ + "\"").mkString(""""failed":[""", ",", "]}")
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(out), body)
+          System.err.println(s"[bench] sf10 sweep written to $out " +
+            s"(${secs.count(_._2 >= 0)} timed, ${failed.size} failed)")
+        } finally sw.stop()
       } catch { case e: Throwable =>
         System.err.println(s"[bench] sf10 sweep skipped: ${e.getMessage}")
       }

@@ -450,8 +450,10 @@ object BenchStreams {
     val wall = (System.nanoTime() - t0) / 1e9
     val progress = q.recentProgress.toSeq
     q.stop()
-    // listener bus is async; give it a moment to drain before reading
-    Thread.sleep(500)
+    // listener bus is async: drain it (bounded) before reading the counts
+    if (!org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 10000L))
+      System.err.println("[bench-stream] listener bus not drained in 10 s; " +
+        "job/stage counts may be short")
     spark.sparkContext.removeSparkListener(jobListener)
     val batches = progress.filter(_.numInputRows > 0)
     val rows = batches.map(_.numInputRows).sum

@@ -108,8 +108,8 @@ object Crypto {
       // job does — the j1_fk_join memo rule (QueryDef.scala): memoize
       // the aggregated frame so the kernel+agg subtree evaluates once
       // (single source → single-version token)
-      val agg = Similarity.cachedFeature(s, s"crypto_nullifier:$dir",
-          Similarity.srcVersion(s, dir, "events.parquet")) {
+      val agg = RunCaches.cachedFeature(s, s"crypto_nullifier:$dir",
+          RunCaches.srcVersion(s, dir, "events.parquet")) {
         pairs
           // long-keyed UDF on the DISTINCT frame: no BigInt, no string
           // re-encode — see poseidon2LongUdf

@@ -115,11 +115,14 @@ object IngestIncr {
 
   /** Runs `body` under a Spark job description (guide §1.5) — the
     * admission path runs 30+ jobs per trigger, and floor-hunting needs
-    * each attributable in the UI / job listeners. Thread-local, restored
-    * after. Shared by this object and [[Similarity.probeIncrIndex]]. */
-  private[operators] def labeledJob[A](s: SparkSession, what: String)(body: => A): A = {
+    * each attributable in the UI / job listeners. Thread-local; the
+    * previous description is restored after, so a nested call (the
+    * admission stages reach [[Similarity.probeIncrIndex]]'s labeled
+    * jobs) hands the outer label back instead of clearing it. */
+  private[graft] def labeledJob[A](s: SparkSession, what: String)(body: => A): A = {
+    val prev = s.sparkContext.getLocalProperty("spark.job.description")
     s.sparkContext.setJobDescription(what)
-    try body finally s.sparkContext.setJobDescription(null)
+    try body finally s.sparkContext.setJobDescription(prev)
   }
 
   private def markEmpty(s: SparkSession, part: String): Unit = {
@@ -173,20 +176,20 @@ object IngestIncr {
     * All `pipe_ingest:$dir:` entries NOT under the current split are
     * evicted; the current split's whole key family is spared. */
   private def reclaimStaleSplit(dir: String, split: Long): Unit =
-    Similarity.evictFeaturePrefix(s"pipe_ingest:$dir:",
+    RunCaches.evictPrefix(s"pipe_ingest:$dir:",
       spare = _.startsWith(s"pipe_ingest:$dir:$split:"))
 
   private def buildPipeIngestIndex(s: SparkSession, dir: String,
       staging: String, split: Long, shards: Int): Unit = {
     reclaimStaleSplit(dir, split)
-    val ver = Similarity.srcVersion(s, dir, "documents.parquet")
+    val ver = RunCaches.srcVersion(s, dir, "documents.parquet")
     val baseDocs = T(s, dir).documents.filter(col("doc_id") < lit(split))
       .select(col("doc_id"), col("source"), col("text"))
     // gate population of the base slice — with append-only ids its
     // keeper election equals the full-corpus election restricted to the
     // base, so persisting (fp → min doc_id) over THIS population is
     // exactly the state the batch dc election implies
-    val gatedBase = Similarity.cachedFeature(s,
+    val gatedBase = RunCaches.cachedFeature(s,
         s"pipe_ingest:$dir:$split:gated", ver) {
       Text.corpusGates(baseDocs)
         .select(col("doc_id"), col("source"), col("text"), col("fp"))
@@ -222,7 +225,7 @@ object IngestIncr {
     // election write, keeper side join) — Spark shares no subplans
     // across actions, so unmemoized it would execute up to 4× per
     // build (r18 review)
-    val feat = Similarity.cachedFeature(s,
+    val feat = RunCaches.cachedFeature(s,
         s"pipe_ingest:$dir:$split:basemh", ver) {
       Similarity.minhashFeatOf(surv1Base)
     }
@@ -265,10 +268,10 @@ object IngestIncr {
     val shards =
       Similarity.effShardsOf(idx, Similarity.minhashIndexShards,
         "probePipeIngest")
-    val ver = Similarity.srcVersion(s, dir, "documents.parquet")
+    val ver = RunCaches.srcVersion(s, dir, "documents.parquet")
     // increment-only scan (doc_id >= split pushed); memoized — it feeds
     // the gate projection and the final verdict assembly
-    val incoming = Similarity.cachedFeature(s,
+    val incoming = RunCaches.cachedFeature(s,
         s"pipe_ingest:$dir:$split:incr", ver) {
       T(s, dir).documents.filter(col("doc_id") >= lit(split))
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
@@ -323,7 +326,7 @@ object IngestIncr {
     // feeds FOUR branches below (intra-increment election, fps probe,
     // train slice, verdict flag) and Spark shares no subplans across
     // DataFrame branches
-    val gatePop = Similarity.cachedFeature(s, memoKey("gate"), ver) {
+    val gatePop = RunCaches.cachedFeature(s, memoKey("gate"), ver) {
       Text.corpusGates(incoming)
         .select(col("doc_id"), col("source"), col("text"), col("fp"))
     }
@@ -361,7 +364,7 @@ object IngestIncr {
     // ids are all smaller); otherwise the increment's own min keeps —
     // and with stream state, any EARLIER stream holder (skeeper) also
     // marks this batch's holders (stream ids all smaller than batch ids)
-    val exactDup = Similarity.cachedFeature(s, memoKey("xdup"), ver) {
+    val exactDup = RunCaches.cachedFeature(s, memoKey("xdup"), ver) {
       val dupBase = gatePop.select(col("doc_id"), col("fp"))
         .join(iMin, Seq("fp"))
         .join(fps, Seq("fp"), "left")
@@ -384,7 +387,7 @@ object IngestIncr {
     // decontamination against the PINNED benchmark set — memoized: the
     // shingle explode+join feeds both the survivor anti-join and the
     // verdict flag. Stateless vs the pinned set on both surfaces.
-    val contaminated = Similarity.cachedFeature(s, memoKey("flag"), ver) {
+    val contaminated = RunCaches.cachedFeature(s, memoKey("flag"), ver) {
       Text.decontamFlagged(train,
         probeRead(s, s"$idx/bsh", "shingle STRING")
           .select(col("shingle")), decontamMinHits)
@@ -393,7 +396,7 @@ object IngestIncr {
     // near-dup: the family probe over the increment's own survivors —
     // intra-increment pairs and increment-vs-corpus pairs fall out of
     // the one least-merged election
-    val feat = Similarity.cachedFeature(s, memoKey("mhfeat"), ver) {
+    val feat = RunCaches.cachedFeature(s, memoKey("mhfeat"), ver) {
       Similarity.minhashFeatOf(survDecontam)
     }
     // an empty-marked bands part (no base-slice pipeline survivor
@@ -468,7 +471,7 @@ object IngestIncr {
       // shares no subplans across actions, so unmemoized the banding +
       // election + anti-join lineage ran twice per trigger. Same
       // supersede-per-batch stamp as the other stream memos.
-      val deltaBands = Similarity.cachedFeature(s, memoKey("deltabands"), ver) {
+      val deltaBands = RunCaches.cachedFeature(s, memoKey("deltabands"), ver) {
         val newBuckets = Similarity.bandedOf(feat)
           .groupBy(col("band"), col("bucket"))
           .agg(min(col("doc_id")).as("keeper"))
@@ -623,7 +626,7 @@ object IngestIncr {
     // (disjoint by construction, and every consumer is an
     // order-insensitive election/join, so read order is immaterial).
     def genPart(g: Long, part: String): DataFrame =
-      Similarity.cachedFeature(s,
+      RunCaches.cachedFeature(s,
           s"pipe_ingest_stream:$statePath:gen:$part", g) {
         s.read.parquet(s"$statePath/gen$g/$part")
       }
@@ -759,14 +762,14 @@ object IngestIncr {
     // before it existed (the j1/incrcand rule; within one stream the
     // per-batch version supersede below is the bound)
     if (loc.isEmpty)
-      Similarity.evictFeaturePrefix("pipe_ingest_stream:",
+      RunCaches.evictPrefix("pipe_ingest_stream:",
         spare = _.startsWith(s"pipe_ingest_stream:$statePath:"))
     // per-batch memo stamp: monotone across batches AND deliveries, so
     // each batch's memoized frames SUPERSEDE (and unpersist) the
     // previous batch's under the same logical keys — the memo stays
     // bounded at one frame per stage
     val ver = memoVersionOf(statePath, batchId)
-    val incoming = Similarity.cachedFeature(s,
+    val incoming = RunCaches.cachedFeature(s,
         s"pipe_ingest_stream:$statePath:incoming", ver) {
       batch.select(col("doc_id"), col("source"), col("lang"), col("text"))
     }
@@ -839,7 +842,7 @@ object IngestIncr {
     * correct but opaque): ver = batchId << 20 | delivery-attempt, so a
     * post-mortem attributes any cached frame to its batch (`ver >>> 20`)
     * and a RE-DELIVERED batch mints a strictly larger stamp than its
-    * first delivery — [[Similarity.cachedFeature]] then supersedes
+    * first delivery — [[RunCaches.cachedFeature]] then supersedes
     * (unpersists) every frame of the first delivery rather than reusing
     * it (StreamingSpec asserts this). Monotone across ascending batch
     * ids, the replay contract's own premise; the map holds one entry per

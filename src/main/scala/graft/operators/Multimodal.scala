@@ -480,7 +480,7 @@ object Multimodal {
     * band width grows with the corpus (16-bit bands of a 256-bit hash),
     * which changes constants, not this shape. The narrow hash frame is
     * persisted through the same feature-cache registry the text dedup
-    * family uses ([[Similarity.cachedFeature]]) — it is consumed by
+    * family uses ([[RunCaches.cachedFeature]]) — it is consumed by
     * three plan branches (banding + two hash join-backs), and at 100 TB
     * re-reading and re-hashing the media bytes per branch is the
     * expensive part; the cache makes the PPM encode + kernel a
@@ -562,7 +562,7 @@ object Multimodal {
   /** The full-corpus phash feature frame, persisted through the shared
     * feature-cache registry (three plan branches consume it). */
   private[graft] def phashFeat(s: SparkSession, dir: String): DataFrame =
-    Similarity.cachedFeature(s, s"mm_phash:$dir", Similarity.srcVersion(s, dir, "documents.parquet")) {
+    RunCaches.cachedFeature(s, s"mm_phash:$dir", RunCaches.srcVersion(s, dir, "documents.parquet")) {
       phashFeatOf(media(s, dir))
     }
 
@@ -655,7 +655,7 @@ object Multimodal {
   def writePhashIndex(s: SparkSession, dir: String, indexPath: String,
       split: Long, shards: Int = Similarity.minhashIndexShards): Unit =
     Similarity.writeIncrIndex(s, indexPath, shards, phFamily,
-      Similarity.cachedFeature(s, s"mm_phash_incr:$dir:corpus$split", Similarity.srcVersion(s, dir, "documents.parquet")) {
+      RunCaches.cachedFeature(s, s"mm_phash_incr:$dir:corpus$split", RunCaches.srcVersion(s, dir, "documents.parquet")) {
         phashFeatOf(media(s, dir).filter(col("media_id") < lit(split)))
       })
 
@@ -668,9 +668,9 @@ object Multimodal {
     * equals the full [[mmPhashDedup]] restricted to the increment. */
   def probePhashIndex(s: SparkSession, dir: String, indexPath: String,
       split: Long, shards: Int = Similarity.minhashIndexShards): DataFrame = {
-    val srcVer = Similarity.srcVersion(s, dir, "documents.parquet")
+    val srcVer = RunCaches.srcVersion(s, dir, "documents.parquet")
     Similarity.probeIncrIndex(s, indexPath, split, shards, phFamily,
-      Similarity.cachedFeature(s, s"mm_phash_incr:$dir:incr$split", srcVer) {
+      RunCaches.cachedFeature(s, s"mm_phash_incr:$dir:incr$split", srcVer) {
         phashFeatOf(media(s, dir).filter(col("media_id") >= lit(split)))
       }, srcVer)
   }

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * cleaning gates and the benchmark (held-out `src0`) shingle set, and
   * each expensive derivation (gated corpus, decontaminated survivors,
   * banded minhash features, the sampled mixture) is itself memoized via
-  * [[Similarity.cachedFeature]], so no stage re-executes an upstream
+  * [[RunCaches.cachedFeature]], so no stage re-executes an upstream
   * stage's work — including across the strata kernels' internal bounded
   * offset jobs. The policy-independent frames (base, gated, cleaned)
   * share ONE memo entry across both variants; policy-dependent frames
@@ -101,17 +101,17 @@ object PipelineE2E {
     * catalog query's. */
   private[graft] def sampled(s: SparkSession, dir: String,
       cfg: PipeCfg = PipeCfg.default): DataFrame = {
-    val ver = Similarity.srcVersion(s, dir, "documents.parquet")
+    val ver = RunCaches.srcVersion(s, dir, "documents.parquet")
     val w = cfg.suffix
     // ONE parquet scan: every stage derives from this frame
     // (policy-independent — both variants share the entry)
-    val base = Similarity.cachedFeature(s, s"pipe_e2e_base:$dir", ver) {
+    val base = RunCaches.cachedFeature(s, s"pipe_e2e_base:$dir", ver) {
       T(s, dir).documents
         .select(col("doc_id"), col("source"), col("lang"), col("text"),
           col("n_chars"))
     }
     // stage 1 — clean gates + fingerprint (the pipe_corpus_clean kernel)
-    val gated = Similarity.cachedFeature(s, s"pipe_e2e_gated:$dir", ver) {
+    val gated = RunCaches.cachedFeature(s, s"pipe_e2e_gated:$dir", ver) {
       Text.corpusGates(base)
     }
     // memoized (r17 advice): cleaned appears in TWO branches of the
@@ -120,7 +120,7 @@ object PipelineE2E {
     // DataFrame branches, so unmemoized the keeper-election groupBy+join
     // executed twice per cold run (no extra FileScan, so the scan-count
     // plan audit could not see it)
-    val cleaned = Similarity.cachedFeature(s, s"pipe_e2e_cleaned:$dir", ver) {
+    val cleaned = RunCaches.cachedFeature(s, s"pipe_e2e_cleaned:$dir", ver) {
       Text.keeperDedup(gated)
         .select(col("doc_id"), col("source"), col("lang"), col("text"),
           col("n_chars"), col("quality_score"))
@@ -132,12 +132,12 @@ object PipelineE2E {
     val bench = Text.benchShinglesOf(base.filter(col("source") === "src0"))
     val train = cleaned.filter(col("source") =!= "src0")
     val flagged = Text.decontamFlagged(train, bench, cfg.decontamMinHits)
-    val surv1 = Similarity.cachedFeature(s, s"pipe_e2e_surv1:$dir$w", ver) {
+    val surv1 = RunCaches.cachedFeature(s, s"pipe_e2e_surv1:$dir$w", ver) {
       train.join(flagged, Seq("doc_id"), "left_anti")
     }
     // stage 3 — near-dup election over survivors (the dd_minhash kernel;
     // feature frame memoized like the standalone query's)
-    val feat = Similarity.cachedFeature(s, s"pipe_e2e_mhfeat:$dir$w", ver) {
+    val feat = RunCaches.cachedFeature(s, s"pipe_e2e_mhfeat:$dir$w", ver) {
       Similarity.minhashFeatOf(surv1.select(col("doc_id"), col("text")))
     }
     val nearDup = Similarity.minhashDedupOf(feat, cfg.jaccardMinPct)
@@ -146,14 +146,14 @@ object PipelineE2E {
     // median gate (thresholds + join-back), and Spark shares no subplans
     // across DataFrame branches — unmemoized, the whole near-dup
     // election subplan executed twice per cold run
-    val surv2 = Similarity.cachedFeature(s, s"pipe_e2e_surv2:$dir$w", ver) {
+    val surv2 = RunCaches.cachedFeature(s, s"pipe_e2e_surv2:$dir$w", ver) {
       surv1.join(nearDup, Seq("doc_id"), "left_anti")
     }
     // stage 4 — per-language median gate over the SURVIVING population
     // (the pipe_quality_gate kernel, shared definition)
     val gatedQ = Text.medianGate(surv2, "lang", "quality_score", "doc_id")
     // stage 5 — deterministic stratified sample (the smp_stratified rule)
-    Similarity.cachedFeature(s, s"pipe_e2e_samp:$dir$w", ver) {
+    RunCaches.cachedFeature(s, s"pipe_e2e_samp:$dir$w", ver) {
       gatedQ
         .withColumn("samp_key", ScaleOps.sampKey)
         .filter(substring(col("samp_key"), 1, 4) <

@@ -282,11 +282,11 @@ object Relational {
       // one-stranded-frame-per-regeneration leak that made r17 reject
       // key-embedding is closed the way incrcand closed it — evict
       // this query's sibling entries before building.
-      val vOrders = Similarity.srcVersion(s, dir, "orders.parquet")
-      val vLineitem = Similarity.srcVersion(s, dir, "lineitem.parquet")
+      val vOrders = RunCaches.srcVersion(s, dir, "orders.parquet")
+      val vLineitem = RunCaches.srcVersion(s, dir, "lineitem.parquet")
       val j1Key = s"j1_joined:$dir:$vOrders:$vLineitem"
-      Similarity.evictFeaturePrefix(s"j1_joined:$dir:", spare = _ == j1Key)
-      val joined = Similarity.cachedFeature(s, j1Key) {
+      RunCaches.evictPrefix(s"j1_joined:$dir:", spare = _ == j1Key)
+      val joined = RunCaches.cachedFeature(s, j1Key) {
         t.orders.hint("merge")
           .join(t.lineitem, col("l_orderkey") === col("o_orderkey"))
           .select(

@@ -24,136 +24,6 @@ object ScaleOps {
 
   private def T(s: SparkSession, dir: String) = Tables(s, dir)
 
-  /** Memoized broadcast Bloom filters keyed per (session, dir): a query
-    * function can run many times in one session (bench passes,
-    * determinism re-runs) and a `SparkContext.broadcast` is pinned on
-    * driver and executors until destroyed — without the memo each run
-    * would leak a fresh copy for the session's lifetime. Same posture as
-    * `Similarity.featCache`: synchronized, stopped-session eviction, and
-    * an explicit clear for harnesses that want cold runs. */
-  private val bloomCache = scala.collection.mutable.HashMap
-    .empty[(SparkSession, String),
-      (Long, org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])]
-  RunCaches.register("scaleops-bloom-memo")(() => clearBloomCache())
-  RunCaches.register("scaleops-cc-checkpoints")(() => clearCcCheckpoints())
-  RunCaches.register("scaleops-kernel-broadcasts")(() => clearKernelBroadcasts())
-  private def cachedBloom(s: SparkSession, key: String, version: Long)(
-      build: => org.apache.spark.util.sketch.BloomFilter)
-      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter] = {
-    val k = (s, key)
-    // Superseded-logical-key eviction, same key/version split as
-    // Similarity.cachedFeature (the fingerprint is its OWN field, never
-    // recovered from the key string — ADVICE r12): an in-session corpus
-    // rewrite otherwise leaves one dead pinned broadcast per rewrite
-    // until a harness clear. Stale entries are detached under the lock
-    // and reclaimed OUTSIDE it (the reclaim blocks on executor-side
-    // removal — the slow-Spark-op-under-lock class this function
-    // already avoids for builds). Every eviction reclaim is
-    // unpersist(false) + drop, NEVER destroy — a CONCURRENT caller (any
-    // session, including this one: two threads of one session can race
-    // a corpus rewrite) may hold the broadcast mid-query, and destroy()
-    // fails that in-flight job where unpersist only re-ships the value
-    // on next use; the dropped driver reference leaves final reclaim to
-    // the ContextCleaner (r13 diff re-review — the earlier 'own session
-    // may destroy' rationale was false for concurrent threads).
-    val (existing, detached) = bloomCache.synchronized {
-      bloomCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      // same ordering rule as Similarity.cachedFeature's eviction: a
-      // same-session entry yields only to a strictly NEWER caller
-      // fingerprint (a mid-regeneration stale caller must not evict the
-      // fresher filter a concurrent caller already built); other
-      // sessions' entries always yield — one filter per logical key
-      val staleKeys = bloomCache.collect {
-        case ((sess, k2), (ver, _))
-            if k2 == key && (!(sess eq s) || ver < version) => (sess, k2)
-      }.toList
-      // removals STRICTLY BEFORE the hit lookup (tuple elements evaluate
-      // left-to-right, so the lookup must not share the tuple): a
-      // superseded same-(session, key) entry is in staleKeys, and a
-      // lookup taken first would return the very broadcast the caller
-      // then reclaims — a reclaimed, wrong-version filter instead of a
-      // rebuild (r13 re-sweep; the pre-r13 code had this order right)
-      val staleB = staleKeys.flatMap(bloomCache.remove).map(_._2)
-      // hit only on the EXACT requested fingerprint (same rule as
-      // Similarity.cachedFeature): a surviving entry can only be
-      // same-version or strictly newer, and serving the newer filter to
-      // an older-fingerprint caller mixes versions within one query; the
-      // older caller falls through to the build path, which returns its
-      // build un-memoized when a newer entry holds the slot (ADVICE r13)
-      (bloomCache.get(k).collect { case (ver, b) if ver == version => b }, staleB)
-    }
-    detached.foreach(b => scala.util.Try(b.unpersist(false)))
-    existing.getOrElse {
-      // build OUTSIDE the monitor (ADVICE r5): the build runs full Spark
-      // jobs (count + bloomFilter treeAggregate) and holding the global
-      // lock across them would serialize every concurrent query and
-      // clearBloomCache() for the duration. Check-then-publish WITH the
-      // version ORDERED (same rule as Similarity.cachedFeature —
-      // fingerprints are mtimes or the monotonic nanoTime fallback): a
-      // concurrent duplicate build of the SAME version loses the race
-      // and is destroyed; a STRICTLY OLDER stored version (corpus
-      // rewritten mid-flight) is superseded — latest fingerprint wins,
-      // because silently returning the stale filter would under-report
-      // contamination via false negatives (r13 re-sweep). A stale build
-      // that finds a FRESHER entry already published must NOT overwrite
-      // it (the old `case other` branch was last-publisher-wins): it
-      // returns its own filter un-memoized — the caller asked for that
-      // fingerprint — and the unreferenced broadcast is reclaimed by
-      // the ContextCleaner once the caller drops it. Reclaims run
-      // outside the monitor; a superseded entry is unpersist-detached
-      // (a concurrent thread may be mid-query on it — see the eviction
-      // comment), while the same-version race LOSER is destroyed
-      // outright: `fresh` was never published or returned to anyone.
-      val fresh = s.sparkContext.broadcast(build)
-      val outcome = bloomCache.synchronized {
-        bloomCache.get(k) match {
-          case Some((ver, w)) if ver == version => Left(w)
-          case Some((ver, _)) if ver > version => Right(None)
-          case other =>
-            bloomCache.update(k, (version, fresh))
-            Right(other.map(_._2))
-        }
-      }
-      outcome match {
-        case Left(w) => scala.util.Try(fresh.destroy()); w
-        case Right(superseded) =>
-          superseded.foreach(b => scala.util.Try(b.unpersist(false)))
-          fresh
-      }
-    }
-  }
-
-  /** Cheap data fingerprint for Bloom cache keys — delegates to
-    * [[Similarity.srcVersion]], the ONE dir-or-file max-mtime rule
-    * (this was a second inline copy that could drift). Rewriting the
-    * files within one session (driver regenerating test data, a harness
-    * rebuilding a fixture) changes the key and so invalidates the memo —
-    * a stale filter yields false NEGATIVES for new benchmark shingles,
-    * and the exact-confirm join only removes false positives, so
-    * contamination would be silently under-reported (ADVICE r5).
-    * Superseded fingerprints are reclaimed by the caches' own
-    * logical-key eviction. The no-mtime-store fallback (jdbc locator,
-    * vanished path → fresh nanoTime, memoization degrading to
-    * build-per-call) lives INSIDE srcVersion since r13 — no second
-    * Try here, the exact drift this delegate exists to avoid. */
-  private def docsFingerprint(s: SparkSession, dir: String): Long =
-    Similarity.srcVersion(s, dir, "documents.parquet")
-
-  /** Destroys and forgets every memoized Bloom broadcast (Try-wrapped:
-    * one stopped session must not abort clearing the rest). Bench calls
-    * this alongside `Similarity.clearFeatureCache` so timed runs build
-    * the filter cold. */
-  def clearBloomCache(): Unit = {
-    // detach under the lock, destroy outside it (blocking destroys must
-    // not stall concurrent cachedBloom lookups)
-    val detached = bloomCache.synchronized {
-      val vs = bloomCache.values.map(_._2).toList
-      bloomCache.clear()
-      vs
-    }
-    detached.foreach(b => scala.util.Try(b.destroy()))
-  }
-
   /** Generic left as-of join: every `left` row paired with the latest
     * `right` row of the same `key` whose `rightTime <= leftTime` —
     * `right`'s columns come back in a nullable `asof` struct (null when
@@ -256,8 +126,7 @@ object ScaleOps {
     * posture as the IVF centroid build. Throws if `maxIter` is hit
     * before the fixpoint rather than returning a half-merged
     * clustering. */
-  /** Per-iteration checkpoint for the fixpoint algorithms
-    * ([[connectedComponents]], [[connectedComponentsStars]]).
+  /** Per-iteration checkpoint for the [[connectedComponents]] fixpoint.
     * Reliable-checkpoint option: localCheckpoint blocks die with their
     * executor, which kills the whole fixpoint at cluster scale. When the
     * caller sets spark.graft.checkpointDir, iteration state goes through
@@ -265,8 +134,8 @@ object ScaleOps {
     * first set wins per SparkContext). Locally the default stays
     * localCheckpoint — no filesystem churn in tests/bench. */
   /** The fixpoint checkpoint-dir conf, with the forked-harness env
-    * fallback (same pattern as SPARK_GRAFT_CCALGO: sbt `run` forks, so a
-    * -D on the sbt command line never reaches the run JVM). */
+    * fallback (sbt `run` forks, so a -D on the sbt command line never
+    * reaches the run JVM). */
   private def ckptDirConf(spark: SparkSession): Option[String] =
     spark.conf.getOption("spark.graft.checkpointDir")
       .orElse(sys.env.get("SPARK_GRAFT_CKPT_DIR"))
@@ -385,193 +254,19 @@ object ScaleOps {
       // free the last iteration's checkpoint before throwing: the error
       // path must not pin O(V) blocks (and reliable-mode files) forever —
       // a retry loop would otherwise leak one orphaned snapshot per
-      // attempt, the leak class ccCheckpoints exists to prevent
+      // attempt, the leak class the tracked release exists to prevent
       scala.util.Try(unpersistCheckpoint(labels))
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter iterations")
     }
     // the returned frame is itself a checkpoint and would otherwise stay
-    // pinned until driver GC triggers ContextCleaner — register it so
+    // pinned until driver GC triggers ContextCleaner — track it so
     // harness resets (Bench / TimeQueries cold runs) free it
-    // deterministically, the same contract as the Bloom memo
-    ccCheckpoints.synchronized { ccCheckpoints += labels }
-    labels
+    // deterministically, the same contract as every memoized frame
+    val out = labels
+    RunCaches.track(spark, "cc-checkpoint")(() => unpersistCheckpoint(out))
+    out
   }
-
-  /** Alternative connected-components realization: the alternating
-    * large-star / small-star edge rewriting (Kiveris, Lattanzi, Mirrokni,
-    * Rastogi, Vassilvitskii — "Connected Components in MapReduce and
-    * Beyond", SoCC 2014). Output contract is IDENTICAL to
-    * [[connectedComponents]]: (node, label) with label = min reachable
-    * id; ScaleOpsSpec asserts exact agreement on shared fixtures.
-    *
-    * Shape per iteration — two grouped rewrites over the EDGE set only
-    * (no separate labels relation, unlike min-label propagation):
-    * large-star attaches every neighbor LARGER than a center to the
-    * center's minimum (including itself); small-star attaches every
-    * smaller neighbor, and the center, to the minimum of the center's
-    * smaller neighborhood. Both preserve connectivity and strictly
-    * shrink the potential until the edge set is a union of stars whose
-    * hubs are the component minima; O(log² n) rounds worst case, and on
-    * high-degree (skewed) components it collapses the hub's whole
-    * neighborhood per round where label propagation moves one hop of
-    * labels through the same hub join. Convergence is detected on the
-    * edge set itself (count + one-sided except over materialized
-    * checkpoints); the converged set is additionally VALIDATED as a
-    * union of stars (no hub is a satellite, one hub per satellite) so a
-    * non-star fixpoint can never silently mislabel — same loud posture
-    * as the maxIter throw.
-    *
-    * Measured against [[connectedComponents]] at the sf10 probe before
-    * choosing g1_components' realization — see SURVEY §6.13 for the
-    * numbers and the decision record. */
-  def connectedComponentsStars(edges: DataFrame, src: String, dst: String,
-      maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    val ckpt = iterCkpt(spark)
-    val raw = edges
-      .select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-    // the node set is fixed by the INPUT (edges only shrink toward
-    // stars); captured up front, one checkpoint, reused by the final join
-    raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = ckpt(raw.select(col("a").as("node"))
-      .union(raw.select(col("b").as("node"))).distinct())
-    // canonical x > y; duplicates collapsed once here and per iteration
-    // (both rewrites re-derive edges, so dedup bounds the set at |E|)
-    var e = ckpt(raw.select(greatest(col("a"), col("b")).as("x"),
-      least(col("a"), col("b")).as("y")).distinct())
-    raw.unpersist(blocking = false)
-    var cnt = e.count()
-    var iter = 0
-    var converged = cnt == 0L
-    while (!converged && iter < maxIter) {
-      // large-star: center u over BOTH directions; m = min(Γ(u) ∪ {u});
-      // every larger neighbor re-attaches to m
-      val nbr = e.select(col("x").as("u"), col("y").as("v"))
-        .union(e.select(col("y").as("u"), col("x").as("v")))
-      val mins = nbr.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      // m ≤ u < v, so the output is already canonical (larger, smaller)
-      val ls = nbr.join(mins, Seq("u")).filter(col("v") > col("u"))
-        .select(col("v").as("x"), col("m").as("y")).distinct()
-      // small-star: Γ⁻(x) = smaller neighbors (the canonical form IS the
-      // grouping); m = min(Γ⁻(x)); every smaller neighbor AND the center
-      // re-attach to m
-      val m2 = ls.groupBy("x").agg(min(col("y")).as("m"))
-      val next = ckpt(
-        ls.join(m2, Seq("x")).select(col("y").as("p"), col("m").as("q"))
-          .union(m2.select(col("x").as("p"), col("m").as("q")))
-          .filter(col("p") =!= col("q"))
-          .select(greatest(col("p"), col("q")).as("x"),
-            least(col("p"), col("q")).as("y"))
-          .distinct())
-      val nextCnt = next.count()
-      // set equality over two materialized checkpoints: same cardinality
-      // + nothing new on one side ⇒ equal (both sides are distinct sets)
-      converged = nextCnt == cnt && next.except(e).limit(1).count() == 0L
-      unpersistCheckpoint(e)
-      e = next
-      cnt = nextCnt
-      iter += 1
-    }
-    if (!converged) {
-      scala.util.Try(unpersistCheckpoint(e))
-      scala.util.Try(unpersistCheckpoint(nodes))
-      throw new IllegalStateException(
-        s"connectedComponentsStars did not converge in $maxIter iterations")
-    }
-    // validate star-ness before labeling: the convergence test proves a
-    // fixpoint of the LS∘SS composite, and every such fixpoint should be
-    // a union of stars — but a wrong label is worse than a loud failure,
-    // so prove it on the converged set: no hub is also a satellite, and
-    // every satellite has exactly one hub
-    if (cnt > 0L) {
-      val hubAsSat = e.select(col("y").as("n"))
-        .intersect(e.select(col("x").as("n")))
-      // count(*), not countDistinct: e is a distinct set (constructed by
-      // .distinct() and kept one by the convergence invariant), so the
-      // per-x row count IS the distinct-parent count — no per-group
-      // dedup pass on the one corpus-scale validation this runs
-      val multiHub = e.groupBy("x").agg(count(lit(1)).as("k"))
-        .filter(col("k") > 1)
-      if (!hubAsSat.isEmpty || !multiHub.isEmpty) {
-        // same reclaim discipline as the maxIter throw: an error path
-        // must not pin two corpus-scale checkpoints for the session
-        scala.util.Try(unpersistCheckpoint(e))
-        scala.util.Try(unpersistCheckpoint(nodes))
-        throw new IllegalStateException(
-          "connectedComponentsStars: converged edge set is not a union " +
-            "of stars — refusing to emit labels from a malformed fixpoint")
-      }
-    }
-    val labels = nodes
-      .join(e.select(col("x").as("node"), col("y").as("lbl")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("lbl"), col("node")).as("label"))
-    // both surviving checkpoints feed the returned lazy frame — register
-    // them for the deterministic harness reclaim like connectedComponents
-    ccCheckpoints.synchronized { ccCheckpoints += e; ccCheckpoints += nodes }
-    labels
-  }
-
-  /** Converged label frames returned by [[connectedComponents]] — each is
-    * a checkpoint whose blocks stay pinned until freed. Harnesses call
-    * [[clearCcCheckpoints]] alongside [[clearBloomCache]] before timed or
-    * repeated runs; library callers may call it once their downstream
-    * consumption of a returned components frame is materialized. */
-  private val ccCheckpoints = scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  /** Frees the storage of every registered converged components frame —
-    * blocks, and for reliable checkpoints the files too (Try-wrapped: a
-    * stopped session must not abort the rest). Only safe once consumers
-    * have materialized; the frames are not recomputable afterwards. */
-  def clearCcCheckpoints(): Unit = {
-    // detach under the lock, reclaim outside it — unpersistCheckpoint
-    // issues filesystem deletes for reliable checkpoints, and a slow
-    // namenode must not block a concurrent connectedComponents at its
-    // registration point (same split as the other two clears)
-    val detached = ccCheckpoints.synchronized {
-      val vs = ccCheckpoints.toList
-      ccCheckpoints.clear()
-      vs
-    }
-    detached.foreach(df => scala.util.Try(unpersistCheckpoint(df)))
-  }
-
-  /** Offsets broadcasts created by [[strataPrefixSum]] — each is
-    * bounded-small (≤ nChunks × |strata| entries) but stays pinned on
-    * the driver and executors until destroyed, and the kernel runs once
-    * per construction (catalog plan sweeps, the 3-pass bench), so
-    * without a registry they accumulate for the session's lifetime
-    * relying on driver GC + ContextCleaner — the same leak class the
-    * Bloom memo and [[ccCheckpoints]] exist to avoid. They cannot be
-    * destroyed eagerly: the returned frame is lazy and reads the
-    * broadcast at every execution. Harness resets free them alongside
-    * the other registries. */
-  private val kernelBroadcasts = scala.collection.mutable.ListBuffer
-    .empty[org.apache.spark.broadcast.Broadcast[_]]
-
-  /** Destroys and forgets every registered kernel broadcast
-    * (Try-wrapped: a stopped session must not abort the rest; destroys
-    * run outside the lock — they block on executor-side removal). Only
-    * safe once every frame returned by [[strataPrefixSum]]/[[strataRank]]
-    * has materialized; Bench/TimeQueries call it between cold runs, the
-    * same contract as [[clearCcCheckpoints]]. */
-  def clearKernelBroadcasts(): Unit = {
-    val detached = kernelBroadcasts.synchronized {
-      val vs = kernelBroadcasts.toList
-      kernelBroadcasts.clear()
-      vs
-    }
-    detached.foreach(b => scala.util.Try(b.destroy()))
-  }
-
-  /** Live registered kernel-broadcast count — the leak-count spec hook
-    * (ScaleOpsSpec asserts the delta across repeated kernel runs is
-    * exactly one registration per construction, reclaimed by the
-    * clear). */
-  private[graft] def kernelBroadcastCount: Int =
-    kernelBroadcasts.synchronized(kernelBroadcasts.size)
 
   /** Frees the storage behind a checkpointed frame. A checkpointed
     * Dataset is not in the CacheManager (`df.unpersist()` is a no-op for
@@ -685,11 +380,11 @@ object ScaleOps {
         }
       }.toMap
     val bc = spark.sparkContext.broadcast(offsets)
-    // registered, not destroyed: the returned frame reads `bc` lazily at
+    // tracked, not destroyed: the returned frame reads `bc` lazily at
     // every execution, so the broadcast lives until a harness reset
-    // ([[clearKernelBroadcasts]]) — the deterministic-cleanup posture
+    // ([[RunCaches.clearAll]]) — the deterministic-cleanup posture
     // every other broadcast/checkpoint in the engine already follows
-    kernelBroadcasts.synchronized { kernelBroadcasts += bc }
+    RunCaches.track(spark, "kernel-broadcast")(() => bc.destroy())
     val outRdd = rdd.mapPartitionsWithIndex { (pid, it) =>
       var cur: List[Any] = null
       var acc = 0L
@@ -745,24 +440,8 @@ object ScaleOps {
         .select(col("o_custkey"), col("o_orderkey"))
         .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
         .filter(col("prev").isNotNull)
-      // spark.graft.ccAlgo selects the fixpoint realization — "jump"
-      // (min-label + pointer jumping, the default) or "stars"
-      // (large-star/small-star edge rewriting). Output-identical
-      // (ScaleOpsSpec pins both the kernel equivalence and this very
-      // query across the switch); the switch exists so the two can be
-      // A/B-measured under the SAME harness at the sf10 probe — the
-      // r15 verdict-#5 adjudication recorded in SURVEY §6.13. The env
-      // fallback is the forked-harness path (sbt `run` forks, so a -D
-      // on the sbt command line never reaches the run JVM).
-      val cc = s.conf.getOption("spark.graft.ccAlgo")
-        .orElse(sys.env.get("SPARK_GRAFT_CCALGO"))
-        .getOrElse("jump") match {
-        case "stars" => connectedComponentsStars(edges, "prev", "o_orderkey")
-        case "jump" => connectedComponents(edges, "prev", "o_orderkey")
-        case other => sys.error(
-          s"spark.graft.ccAlgo must be jump or stars, got $other")
-      }
-      cc.select(col("node"), col("label").as("component"))
+      connectedComponents(edges, "prev", "o_orderkey")
+        .select(col("node"), col("label").as("component"))
         .orderBy(col("node"))
     },
     oracle = Some("""
@@ -1214,14 +893,18 @@ object ScaleOps {
       def shOf(df: DataFrame): DataFrame = df
         .select(col("doc_id"), Text.shingles3Once(col("text")).as("sh"))
         .filter(col("sh").isNotNull)
-      val fp = docsFingerprint(s, dir)
+      // a stale filter yields false NEGATIVES for new benchmark
+      // shingles, and the exact-confirm join only removes false
+      // positives — so the filter is keyed on the corpus fingerprint
+      // (ADVICE r5)
+      val fp = RunCaches.srcVersion(s, dir, "documents.parquet")
       // the distinct benchmark-shingle frame feeds THREE consumers on a
       // cold run — the capacity count, the bloomFilter treeAggregate
       // and the exact-confirm join below — and each would re-run the
       // documents scan + shingle UDF + explode + distinct shuffle; one
       // persisted copy through the shared feature memo (fingerprint-
       // keyed like every entry there) serves all three
-      val bench = Similarity.cachedFeature(s, s"decontam_bench:$dir", fp) {
+      val bench = RunCaches.cachedFeature(s, s"decontam_bench:$dir", fp) {
         shOf(docs.filter(col("source") === "src0"))
           .select(explode(col("sh")).as("shingle")).distinct()
       }
@@ -1229,7 +912,7 @@ object ScaleOps {
       // driver action on the small stratum, memoized with the filter):
       // a hardcoded capacity silently degrades the 1% fpp — and with it
       // the entire point of the pre-filter — once the stratum outgrows it
-      val bc = cachedBloom(s, s"decontam:$dir", fp) {
+      val bc = RunCaches.cachedBroadcast(s, s"decontam:$dir", fp) {
         val n = math.max(1000L, bench.count())
         bench.stat.bloomFilter("shingle", n, 0.01)
       }

@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.functions.{Scored, TopKAggregator}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import RunCaches.{cachedFeature, evictPrefix, srcVersion}
 
 /** Similarity search over the `embeddings` table (driver-requested
   * training-data-pipeline surface) plus MinHash/SimHash near-dup over
@@ -95,20 +95,6 @@ object Similarity {
     udaf(new TopKAggregator[Long](5), Encoders.product[Scored[Long]])
   }
 
-  /** Memoized persisted feature frames, keyed per (session, query, dir):
-    * the dedup queries cache a single-scan feature frame for their plan
-    * branches, but a query function can run many times in one session
-    * (bench warm-up + min-of-2 + sf1 tier, determinism re-runs) and
-    * nothing in the QueryDef lifecycle ever unpersists — without the memo
-    * each run would stack a NEW persisted copy in the cache manager for
-    * the session's lifetime. */
-  private val featCache =
-    scala.collection.mutable.HashMap.empty[(SparkSession, String), (Long, DataFrame)]
-  RunCaches.register("similarity-feature-memo")(() => clearFeatureCache())
-  // operators-visible (not just this object): mm_phash_dedup's hash frame
-  // has the identical consumed-by-three-branches shape and must share the
-  // one registry clearFeatureCache/Bench resets already manage.
-  //
   /** Schema-true empty frame from a DDL string — the ONE definition of
     * the empty-part/empty-state substitution rule (probe-side empty
     * markers, zero-delta stream state, band-degenerate increments).
@@ -118,218 +104,6 @@ object Similarity {
   private[operators] def emptyFromDdl(s: SparkSession, ddl: String): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
-  // `key` is the LOGICAL identity (query family + source dir + any split
-  // suffix); `version` is the source fingerprint (max mtime) as its OWN
-  // field, never embedded in the key string. The r11 shape folded the
-  // version in as `…@<mtime>` and recovered the logical key with a
-  // global `replaceAll("@\\d+", "")` — which also stripped `@<digits>`
-  // occurring inside the dir path itself, collapsing distinct dirs like
-  // `/data/run@1` and `/data/run@2` into one logical key and evicting
-  // each other's live frames (ADVICE r12). A typed field cannot be
-  // confused with path bytes.
-  private[graft] def cachedFeature(s: SparkSession, key: String,
-      version: Long = 0L)(build: => DataFrame): DataFrame = {
-    // 100 TB relief valve: the memoized frames are CORPUS-derived
-    // (tokenized docs, banded vectors) — at bench scale persisting them
-    // is what stops plan branches and repeated runs from re-scanning,
-    // but at corpus scales past the cluster's aggregate storage the
-    // persist itself becomes the failure (disk exhaustion / eviction
-    // thrash) where the unmemoized alternative is merely a second
-    // pushdown-pruned parquet scan. `spark.graft.featureMemoLevel=NONE`
-    // turns the memo off per session (build-per-call, nothing persisted,
-    // nothing to leak); any other value is a StorageLevel name for the
-    // persist tier (default MEMORY_AND_DISK).
-    val lvl = s.conf.get("spark.graft.featureMemoLevel", "MEMORY_AND_DISK")
-    if (lvl.equalsIgnoreCase("NONE")) return build
-    val storage = StorageLevel.fromString(lvl.toUpperCase(java.util.Locale.ROOT))
-    val hit = featCache.synchronized {
-      // a long-lived driver that cycles SparkSessions must not accumulate
-      // entries (and persisted frames) for sessions that are already gone
-      featCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      // …and cycled sessions usually share one long-lived SparkContext,
-      // so the isStopped sweep alone never fires for them: a NEW session
-      // re-requesting a key would stack a second persisted copy of the
-      // same data while the abandoned session's copy pins the cache
-      // manager forever. One frame per logical key: another session's
-      // frame for this key, or this session's frame for a superseded
-      // source version, is unpersisted and dropped before this session
-      // builds its own. (Two live sessions alternating over one key
-      // would thrash — re-persist per swap — but never leak; a
-      // single-driver engine has no such pattern.)
-      featCache.filterInPlace { case ((sess, k), (ver, df)) =>
-        // same-session entries are superseded only by a strictly NEWER
-        // caller fingerprint (versions are ordered — mtime or monotonic
-        // nanoTime): a caller that computed its version just before a
-        // regeneration must not evict the fresher frame a concurrent
-        // caller already built (the publish side enforces the same
-        // ordering). Other sessions' entries always yield — one frame
-        // per logical key.
-        val stale = k == key && (!(sess eq s) || ver < version)
-        if (stale) scala.util.Try(df.unpersist())
-        !stale
-      }
-      // the hit applies the SAME "caller asked for that version" rule as
-      // the publish path: a surviving entry can only be same-version or
-      // strictly NEWER (older ones were just evicted), and serving the
-      // newer frame to an older-fingerprint caller would let one
-      // mid-regeneration probe mix a newer cached candidate frame with
-      // its older uncached inputs in a single result — a version-torn
-      // read. An older caller falls through to the build path, which
-      // already returns its build un-memoized when a newer entry holds
-      // the slot (ADVICE r13).
-      featCache.get((s, key)).collect { case (ver, df) if ver == version => df }
-    }
-    hit.getOrElse {
-      // build OUTSIDE the monitor (same rule as ScaleOps.cachedBloom):
-      // the by-name build constructs plans and reads parquet footers /
-      // file indexes — driver I/O a slow store can stretch, and holding
-      // the single global lock through it would convoy every other
-      // feature-cache consumer behind one round-trip (r13 re-sweep).
-      // persist() itself is lazy registration, not a job.
-      // Check-then-publish: a concurrent duplicate build of the SAME
-      // version loses the race and adopts the winner; a STRICTLY OLDER
-      // entry (corpus regenerated mid-flight) is superseded and
-      // unpersisted. The version compare is what makes "latest version
-      // wins" literally true — versions are mtimes (or the monotonic
-      // nanoTime fallback), so ordered: without it, a slow stale-version
-      // build finishing AFTER a fresher publish would overwrite the
-      // fresh entry (last-publisher-wins, r13 third sweep). A stale
-      // build that finds a fresher entry installed returns its own
-      // frame un-memoized (the caller asked for that version) with the
-      // persist dropped, so nothing leaks in the cache manager.
-      val fresh = build.persist(storage)
-      val outcome = featCache.synchronized {
-        featCache.get((s, key)) match {
-          case Some((ver, w)) if ver == version => Left(w)
-          case Some((ver, _)) if ver > version => Right(false)
-          case other =>
-            other.foreach { case (_, w) => scala.util.Try(w.unpersist()) }
-            featCache.update((s, key), (version, fresh))
-            Right(true)
-        }
-      }
-      outcome match {
-        case Left(w) => scala.util.Try(fresh.unpersist()); w
-        case Right(installed) =>
-          if (!installed) scala.util.Try(fresh.unpersist())
-          fresh
-      }
-    }
-  }
-
-  /** Max mtime of `dir/<file>` — the same dir-or-file rule the index
-    * versioning uses for its `srcMtime` component — folded into every
-    * feature-cache key. Without it, an in-place corpus regeneration
-    * within one session (the driver regenerates test parquet between
-    * rounds; [[graft.Bench.ensureSf1]] documents the same hazard for
-    * its tier) would keep serving the PRE-regeneration persisted frame
-    * — and `ensureVersionedIndex`, whose version name carries this very
-    * mtime precisely to catch regeneration, would then publish a
-    * fresh-named index built from the stale cache.
-    *
-    * A store with NO mtime surface — the `jdbc:` table-set locator
-    * Tables supports with zero query changes, or a vanished path —
-    * fingerprints as a fresh nanoTime instead of throwing: memoization
-    * degrades to build-per-call (each build superseding its
-    * predecessor) rather than killing every dedup query on a store tier
-    * the read facade itself handles fine; a genuinely vanished path
-    * still fails loudly at the read (the same posture
-    * [[graft.operators.ScaleOps]]'s Bloom fingerprint documents — it
-    * delegates here). `ensureVersionedIndex` does NOT share this
-    * fallback: a versioned index name must pin the corpus IDENTITY, so
-    * over a `jdbc:` locator it derives an explicit source-version token
-    * (corpus row count — see its body) and keeps a loud
-    * `getFileStatus` for filesystem stores. */
-  private[operators] def srcVersion(s: SparkSession, dir: String, file: String): Long =
-    try {
-      import org.apache.hadoop.fs.Path
-      val src = new Path(s"$dir/$file")
-      val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(src)
-      if (st.isDirectory)
-        (st.getModificationTime +:
-          fs.listStatus(src).map(_.getModificationTime).toSeq).max
-      else st.getModificationTime
-    } catch {
-      // ONLY the documented no-mtime-surface shapes fall back to the
-      // build-per-call nanoTime: an unresolvable scheme (the jdbc:
-      // locator), an unparseable locator URI, or a vanished path (which
-      // still fails loudly at the READ). A TRANSIENT store error — auth
-      // expiry, throttling — on a store that HAS an mtime surface must
-      // propagate loudly, not silently collapse memoization into
-      // rebuild-per-call cache thrash (r13 diff re-review narrowed this
-      // from a Throwable-broad Try).
-      case _: java.io.FileNotFoundException => System.nanoTime()
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException => System.nanoTime()
-      case _: IllegalArgumentException => System.nanoTime()
-      case e: java.io.IOException
-          if e.getMessage != null &&
-            e.getMessage.contains("No FileSystem for scheme") =>
-        System.nanoTime()
-    }
-
-  /** Evicts (unpersist + drop) memoized frames whose key starts with
-    * `prefix`, sparing `except` — the dead-key reclaim for families
-    * whose cache keys embed a version identity: when the version moves,
-    * the old key can never be matched again and its persisted frame
-    * would otherwise stay pinned until a harness clear
-    * ([[graft.operators.Similarity.probeIncrIndex]]'s incrcand entries,
-    * j1_fk_join's per-pair memo). ALL sessions' prefix-matched entries
-    * are reclaimed, not just the caller's (third r18 review): cycled
-    * sessions share one SparkContext, so a session-scoped sweep left an
-    * abandoned session's superseded-version frame pinned forever — the
-    * cross-session half of cachedFeature's one-frame-per-logical-key
-    * rule, extended to one-live-version-per-family. A concurrent
-    * same-version session's entry lives under a spared key and is kept.
-    *
-    * CONCURRENCY CONTRACT: a concurrent LIVE session mid-query on a
-    * superseded-version key has its frame unpersisted here and silently
-    * recomputed against the regenerated source — a torn read for that
-    * session. Acceptable because the engine is single-driver by design
-    * (SURVEY §6: one Verify/Bench/test driver at a time); live
-    * concurrent-session reads DURING a source regeneration are
-    * undefined, exactly as they are for the underlying parquet files
-    * themselves (ADVICE r19 — stated, not worked around).
-    *
-    * `spare(key)` decides survival among prefix-matched entries — a
-    * predicate, not a single key, because a family can keep SEVERAL
-    * live keys per version (IngestIncr's per-stage memos all share one
-    * split suffix). */
-  private[operators] def evictFeaturePrefix(
-      prefix: String, spare: String => Boolean): Unit =
-    featCache.synchronized {
-      featCache.filterInPlace { case ((_, k), (_, df)) =>
-        val drop = k.startsWith(prefix) && !spare(k)
-        if (drop) scala.util.Try(df.unpersist())
-        !drop
-      }
-    }
-
-  /** Number of live memoized feature frames — spec surface for the
-    * featureMemoLevel relief valve (like ScaleOps.kernelBroadcastCount). */
-  private[graft] def featureCacheSize: Int =
-    featCache.synchronized(featCache.size)
-
-  /** The live memo entry's version stamp for `key` in session `s` —
-    * spec surface for the stream path's batch-keyed memo stamps (a
-    * re-delivered batch must mint a strictly larger stamp, proving it
-    * reuses no frame of its first delivery). */
-  private[graft] def featureVersionOf(s: SparkSession, key: String)
-      : Option[Long] =
-    featCache.synchronized(featCache.collectFirst {
-      case ((sess, k), (ver, _)) if (sess eq s) && k == key => ver })
-
-  /** Unpersists and forgets every memoized feature frame. Bench calls
-    * this before each timed run so headline dedup numbers measure the
-    * full cold pipeline (tokenize + signatures + verify), not a warm
-    * cache hit from the previous run — the memo exists to stop persist
-    * stacking, not to flatter the benchmark. Each unpersist is wrapped in
-    * Try: one stopped session must not abort clearing the rest. */
-  def clearFeatureCache(): Unit = featCache.synchronized {
-    featCache.values.foreach { case (_, df) => scala.util.Try(df.unpersist()) }
-    featCache.clear()
-  }
 
   /** Ranks a scored candidate frame — columns (qid, score, id, pay) — to
     * the top 5 per qid via the partial-aggregating bounded heap. Output:
@@ -1739,7 +1513,7 @@ object Similarity {
     // the dead-sibling reclaim silently never fired (ADVICE r14).
     val idxTrim = indexPath.stripSuffix("/")
     val idxCut = idxTrim.lastIndexOf('/')
-    evictFeaturePrefix(
+    evictPrefix(
       if (idxCut >= 0) s"incrcand:${fam.what}:${idxTrim.substring(0, idxCut + 1)}"
       else s"incrcand:${fam.what}:",
       spare = _ == candKey)

@@ -106,8 +106,8 @@ object Text {
     * one-scan rationale as Similarity.minhashFeat, via the same
     * mtime-keyed memo. */
   private def tokPairsFrame(s: SparkSession, dir: String): DataFrame =
-    Similarity.cachedFeature(s, s"txt_pairs:$dir",
-        Similarity.srcVersion(s, dir, "documents.parquet")) {
+    RunCaches.cachedFeature(s, s"txt_pairs:$dir",
+        RunCaches.srcVersion(s, dir, "documents.parquet")) {
       T(s, dir).documents.select(
         col("doc_id"), tokens(col("text")).as("toks"),
         length(col("text")).cast("long").as("len"))
@@ -243,7 +243,7 @@ object Text {
     (s, dir) => {
       // the shingles3 kernel is the expensive per-row step here — run
       // it once, not once per join branch (see a12's rationale)
-      val d = Similarity.cachedFeature(s, s"txt_shingles:$dir", Similarity.srcVersion(s, dir, "documents.parquet")) {
+      val d = RunCaches.cachedFeature(s, s"txt_shingles:$dir", RunCaches.srcVersion(s, dir, "documents.parquet")) {
         T(s, dir).documents
           .select(col("doc_id"), shingles3Once(col("text")).as("sh"))
           .filter(col("sh").isNotNull)
@@ -524,8 +524,8 @@ object Text {
       // memoized: `gated` feeds the keeper aggregation AND the join-back
       // — unmemoized, both branches re-scanned the corpus and re-ran the
       // three split+filter gate columns (r13 sweep)
-      val gated = Similarity.cachedFeature(s, s"txt_corpus_gated:$dir",
-          Similarity.srcVersion(s, dir, "documents.parquet")) {
+      val gated = RunCaches.cachedFeature(s, s"txt_corpus_gated:$dir",
+          RunCaches.srcVersion(s, dir, "documents.parquet")) {
         corpusGates(T(s, dir).documents)
       }
       keeperDedup(gated)
@@ -562,8 +562,8 @@ object Text {
     * re-scanned the corpus and re-tokenized the scores once per branch
     * (r13 sweep; same rationale as the txt_pairs memo). */
   private def qualityScored(s: SparkSession, dir: String): DataFrame =
-    Similarity.cachedFeature(s, s"txt_quality_scored:$dir",
-        Similarity.srcVersion(s, dir, "documents.parquet")) {
+    RunCaches.cachedFeature(s, s"txt_quality_scored:$dir",
+        RunCaches.srcVersion(s, dir, "documents.parquet")) {
       T(s, dir).documents
         .withColumn("n_words", nWordsCol)
         .withColumn("stop_cnt", stopCntCol)

@@ -206,6 +206,21 @@ class ExpressionsSpec extends SparkSpec {
     assert(e.getMessage.contains("le_decode"), e.getMessage)
   }
 
+  test("le_decode: an offset below 1 is null at every width (both paths)") {
+    // LECodec documents off < 1 as null (the old substring form's
+    // negative-offset wraparound is not reproduced); the equivalence
+    // test above covers only offsets >= 1. Records are long enough that
+    // a wrapped or clamped read would find bytes to decode.
+    val recs = Seq(Array.tabulate(16)(i => (i + 1).toByte), Array.fill(16)(0x7f.toByte))
+    val rdf = recs.map(Tuple1(_)).toDF("rec")
+    for (n <- Seq(1, 2, 4, 8); off <- Seq(0, -3)) {
+      def decs(d: org.apache.spark.sql.DataFrame) =
+        d.select(expr(s"le_decode(rec, $off, $n)")).collect().map(_.isNullAt(0)).toSeq
+      for (nulls <- Seq(decs(rdf), withInterpreted(decs(rdf))))
+        assert(nulls === Seq(true, true), s"le_decode width $n off $off")
+    }
+  }
+
   test("float-vec codec null contracts: null input, null element, undecodable length") {
     val df = Seq(
       (1, Some(Seq(Some(1.0f), Some(2.0f)))), // fine

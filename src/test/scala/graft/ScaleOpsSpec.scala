@@ -231,29 +231,42 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("connectedComponents matches union-find on random graphs") {
+    // brute-force union-find ground truth: label = min node id in the
+    // component; self-loops are dropped like the kernel's a != b filter
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val nodes = parent.keys.toSeq
+      nodes.map(v => v -> nodes.filter(u => find(u) == find(v)).min).toMap
+    }
+    def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
+      graft.operators.ScaleOps
+        .connectedComponents(edges.toDF("a", "b"), "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rng = new scala.util.Random(1234)
     for (trial <- 1 to 3) {
       val n = 60
       val edges = Seq.fill(70)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      // brute-force union-find ground truth
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
-      val want = nodes.map { v =>
-        // component label = min node id in the component
-        val root = find(v.toInt)
-        v -> nodes.filter(u => find(u.toInt) == root).min
-      }.toMap
-      val got = graft.operators.ScaleOps
-        .connectedComponents(edges.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"trial $trial")
+      assert(cc(edges) === unionFind(edges), s"trial $trial")
     }
+    // high-degree hub with an attached tail, plus a disjoint pair — and
+    // the hub is NOT the component min, so its label must come via the tail
+    val hub = (1L to 200L).map(i => (500L, 500L + i)) ++
+      Seq((500L, 3L), (3L, 7L), (900L, 901L))
+    val gotHub = cc(hub)
+    assert(gotHub === unionFind(hub))
+    assert(gotHub(500L) === 3L && gotHub(700L) === 3L && gotHub(900L) === 900L)
+    // empty edge set, and self-loops only: no node survives the filter
+    assert(cc(Seq.empty).isEmpty)
+    assert(cc(Seq((5L, 5L))).isEmpty)
   }
 
   test("connectedComponents: pointer jumping converges on a long chain") {
@@ -264,59 +277,6 @@ class ScaleOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length === 400)
     assert(got.forall(_._2 === 0L), "every chain node must label to the min id 0")
-  }
-
-  test("connectedComponentsStars agrees with connectedComponents on every fixture shape") {
-    // the two realizations must be output-identical — the stars form is
-    // only ever adopted on measurement, never on semantics (r15 verdict
-    // #5); fixtures cover the shapes where they differ mechanically:
-    // random sparse graphs, a diameter-worst-case path, a high-degree
-    // hub (the stars algorithm's claimed win), and empty input
-    import graft.operators.ScaleOps
-    def both(edges: Seq[(Long, Long)]): (Map[Long, Long], Map[Long, Long]) = {
-      val df = edges.toDF("a", "b")
-      val cc = ScaleOps.connectedComponents(df, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val st = ScaleOps.connectedComponentsStars(df, "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      (cc, st)
-    }
-    try {
-      val rng = new scala.util.Random(4321)
-      for (trial <- 1 to 2) {
-        val edges = Seq.fill(80)((rng.nextInt(60).toLong, rng.nextInt(60).toLong))
-          .filter { case (a, b) => a != b }
-        val (cc, st) = both(edges)
-        assert(st === cc, s"random trial $trial")
-      }
-      // 200-node path: diameter worst case for both fixpoints
-      val (ccChain, stChain) = both((0L until 199L).map(i => (i, i + 1)))
-      assert(stChain === ccChain)
-      assert(stChain.values.forall(_ == 0L))
-      // high-degree hub with an attached tail, plus a disjoint pair —
-      // and the hub is NOT the component min, so the star must re-root
-      val hub = (1L to 200L).map(i => (500L, 500L + i)) ++
-        Seq((500L, 3L), (3L, 7L), (900L, 901L))
-      val (ccHub, stHub) = both(hub)
-      assert(stHub === ccHub)
-      assert(stHub(500L) === 3L && stHub(700L) === 3L && stHub(900L) === 900L)
-      // empty edge set: both come back empty with the same schema
-      val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-      assert(ScaleOps.connectedComponentsStars(empty, "a", "b").collect().isEmpty)
-      // self-loops only: no node survives the a != b filter
-      assert(ScaleOps.connectedComponentsStars(
-        Seq((5L, 5L)).toDF("a", "b"), "a", "b").collect().isEmpty)
-      // the catalog query routes across the spark.graft.ccAlgo switch
-      // with identical output (and rejects an unknown algo loudly)
-      val g1 = QueryDef.catalogs.find(_.name == "g1_components").get
-      val viaJump = g1.run(spark, sf001).collect().toSeq
-      spark.conf.set("spark.graft.ccAlgo", "stars")
-      try {
-        assert(g1.run(spark, sf001).collect().toSeq === viaJump)
-        spark.conf.set("spark.graft.ccAlgo", "nope")
-        intercept[RuntimeException](g1.run(spark, sf001).collect())
-      } finally spark.conf.unset("spark.graft.ccAlgo")
-    } finally ScaleOps.clearCcCheckpoints()
   }
 
   test("connectedComponents frees its per-iteration checkpoints") {
@@ -332,9 +292,9 @@ class ScaleOpsSpec extends SparkSpec {
     assert(added.size <= 1, s"expected at most the final labels checkpoint, got ${added.size}")
     // the returned frame is registered: the harness reset frees it too
     // (ADVICE r5: repeated executions each pinned one converged block set)
-    graft.operators.ScaleOps.clearCcCheckpoints()
+    graft.operators.RunCaches.clearAll()
     assert(added.intersect(sc.getPersistentRDDs.keySet).isEmpty,
-      "clearCcCheckpoints left the converged labels pinned")
+      "clearAll left the converged labels pinned")
   }
 
   test("connectedComponents reliable-checkpoint path converges identically") {
@@ -369,7 +329,7 @@ class ScaleOpsSpec extends SparkSpec {
           s"(${liveRddDirs.map(_.getName).sorted.mkString(", ")})")
     } finally {
       spark.conf.unset("spark.graft.checkpointDir")
-      graft.operators.ScaleOps.clearCcCheckpoints()
+      graft.operators.RunCaches.clearAll()
     }
   }
 
@@ -379,8 +339,8 @@ class ScaleOpsSpec extends SparkSpec {
     // the leak-count contract (same as the CC checkpoint registry) is:
     // exactly one registration per construction, all reclaimed by the
     // reset that Bench/TimeQueries run between cold measurements
-    graft.operators.ScaleOps.clearKernelBroadcasts()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 0)
+    graft.operators.RunCaches.clearAll()
+    assert(graft.operators.RunCaches.trackedCount("kernel-broadcast") === 0)
     val df = (1 to 100).map(i => (s"s${i % 3}", i.toLong, i.toLong))
       .toDF("src", "id", "v")
     (1 to 3).foreach { _ =>
@@ -388,11 +348,11 @@ class ScaleOpsSpec extends SparkSpec {
         .strataPrefixSum(df, Seq("src"), Seq("id"), col("v"), "off")
         .collect()
     }
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 3,
+    assert(graft.operators.RunCaches.trackedCount("kernel-broadcast") === 3,
       "expected exactly one registered broadcast per kernel construction")
-    graft.operators.ScaleOps.clearKernelBroadcasts()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 0,
-      "clearKernelBroadcasts left registrations behind")
+    graft.operators.RunCaches.clearAll()
+    assert(graft.operators.RunCaches.trackedCount("kernel-broadcast") === 0,
+      "clearAll left registrations behind")
   }
 
   test("reserved-name guards reject any-case collisions (withColumn resolves case-insensitively)") {
@@ -451,28 +411,21 @@ class ScaleOpsSpec extends SparkSpec {
   test("RunCaches.clearAll runs every registered clearer, even past a failure") {
     var a = 0
     var b = 0
-    graft.operators.RunCaches.register("spec-a")(() => a += 1)
-    graft.operators.RunCaches.register("spec-boom")(() => sys.error("boom"))
-    graft.operators.RunCaches.register("spec-b")(() => b += 1)
-    try {
-      graft.operators.RunCaches.clearAll()
-      assert(a === 1 && b === 1, "a throwing clearer must not skip the rest")
-    } finally
-      // deregister the planted clearers: the registry is JVM-global, and
-      // the permanently-throwing one would otherwise print its warning
-      // on EVERY later clearAll (each timed bench sample, every suite's
-      // reset) — alarm fatigue over a deliberate fixture
-      Seq("spec-a", "spec-boom", "spec-b")
-        .foreach(graft.operators.RunCaches.unregister)
-    // the real caches register at class load: after touching the kernel
-    // path (tests above), one clearAll must reclaim its broadcasts the
-    // same way the targeted clear does — the harness-reset contract
+    // tracked releases are one-shot: clearAll runs and forgets them, so
+    // the planted throwing one cannot outlive this test
+    graft.operators.RunCaches.track(spark, "spec-a")(() => a += 1)
+    graft.operators.RunCaches.track(spark, "spec-boom")(() => sys.error("boom"))
+    graft.operators.RunCaches.track(spark, "spec-b")(() => b += 1)
+    graft.operators.RunCaches.clearAll()
+    assert(a === 1 && b === 1, "a throwing clearer must not skip the rest")
+    // after touching the kernel path, one clearAll must reclaim its
+    // broadcasts — the harness-reset contract
     graft.operators.ScaleOps
       .strataPrefixSum(Seq(("s", 1L, 1L)).toDF("src", "id", "v"),
         Seq("src"), Seq("id"), col("v"), "off").collect()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount >= 1)
+    assert(graft.operators.RunCaches.trackedCount("kernel-broadcast") >= 1)
     graft.operators.RunCaches.clearAll()
-    assert(graft.operators.ScaleOps.kernelBroadcastCount === 0,
+    assert(graft.operators.RunCaches.trackedCount("kernel-broadcast") === 0,
       "clearAll must reach the kernel-broadcast registry")
   }
 

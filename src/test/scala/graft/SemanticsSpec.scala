@@ -219,7 +219,7 @@ class SemanticsSpec extends SparkSpec {
   }
 
   test("j1 memo: offsetting mtime movements on the two sources still mint a fresh entry") {
-    import graft.operators.Similarity
+    import graft.operators.RunCaches
     // the two-source memo's staleness contract (second r18 review): a
     // backup-restore of one source (mtime backward by X) next to a
     // regeneration of the other (forward by X) collides under any
@@ -254,13 +254,13 @@ class SemanticsSpec extends SparkSpec {
       assert(rerun === full / 2,
         s"stale memoized join served after an offsetting mtime change: $rerun vs expected ${full / 2}")
     } finally {
-      Similarity.clearFeatureCache()
+      RunCaches.clearAll()
       deleteAll(new java.io.File(dir))
     }
   }
 
   test("j1 memo: a superseded-version frame from ANOTHER session is reclaimed (r18)") {
-    import graft.operators.Similarity
+    import graft.operators.RunCaches
     // cycled sessions share one SparkContext, so the isStopped sweep
     // never fires for them — and with version-embedded keys the
     // same-key cross-session yield rule never matches either. The
@@ -281,18 +281,18 @@ class SemanticsSpec extends SparkSpec {
       val t0 = 1_700_000_000_000L
       setTreeMtime("orders", t0); setTreeMtime("lineitem", t0)
       val q = QueryDef.catalogs.find(_.name == "j1_fk_join").get
-      Similarity.clearFeatureCache()
+      RunCaches.clearAll()
       val other = spark.newSession()
       assert(q.run(other, dir).count() > 0)
-      assert(Similarity.featureCacheSize === 1)
+      assert(RunCaches.memoSize === 1)
       // regenerate: both mtimes move forward → new per-pair key; the
       // abandoned session's old-key entry must be reclaimed, not pinned
       setTreeMtime("orders", t0 + 60000); setTreeMtime("lineitem", t0 + 60000)
       assert(q.run(spark, dir).count() > 0)
-      assert(Similarity.featureCacheSize === 1,
+      assert(RunCaches.memoSize === 1,
         "the other session's superseded j1 frame was stranded in the cache")
     } finally {
-      Similarity.clearFeatureCache()
+      RunCaches.clearAll()
       deleteAll(new java.io.File(dir))
     }
   }
@@ -545,29 +545,29 @@ class SemanticsSpec extends SparkSpec {
   }
 
   test("cachedFeature: a hit is served only for the exact requested fingerprint") {
-    import graft.operators.Similarity
+    import graft.operators.RunCaches
     import spark.implicits._
-    Similarity.clearFeatureCache()
+    RunCaches.clearAll()
     try {
       val key = "spec:verpin"
-      val v5 = Similarity.cachedFeature(spark, key, 5L)(Seq(5).toDF("v"))
+      val v5 = RunCaches.cachedFeature(spark, key, 5L)(Seq(5).toDF("v"))
       assert(v5.collect().map(_.getInt(0)).toSeq === Seq(5))
-      assert(Similarity.cachedFeature(spark, key, 5L)(Seq(99).toDF("v")) eq v5,
+      assert(RunCaches.cachedFeature(spark, key, 5L)(Seq(99).toDF("v")) eq v5,
         "same fingerprint must hit the memoized frame")
       // an OLDER fingerprint must NOT be served the newer cached frame
       // (version-torn read: newer candidates joined against older
       // uncached inputs) — it builds its own, un-memoized, and the
       // newer entry survives (ADVICE r14)
-      val v3 = Similarity.cachedFeature(spark, key, 3L)(Seq(3).toDF("v"))
+      val v3 = RunCaches.cachedFeature(spark, key, 3L)(Seq(3).toDF("v"))
       assert(v3.collect().map(_.getInt(0)).toSeq === Seq(3),
         "older-fingerprint caller was served the newer cached frame")
-      assert(Similarity.cachedFeature(spark, key, 5L)(Seq(99).toDF("v")) eq v5,
+      assert(RunCaches.cachedFeature(spark, key, 5L)(Seq(99).toDF("v")) eq v5,
         "an older caller must not evict or replace the newer entry")
       // a strictly NEWER fingerprint supersedes the stored entry
-      val v7 = Similarity.cachedFeature(spark, key, 7L)(Seq(7).toDF("v"))
+      val v7 = RunCaches.cachedFeature(spark, key, 7L)(Seq(7).toDF("v"))
       assert(v7.collect().map(_.getInt(0)).toSeq === Seq(7))
-      assert(Similarity.cachedFeature(spark, key, 7L)(Seq(99).toDF("v")) eq v7)
-    } finally Similarity.clearFeatureCache()
+      assert(RunCaches.cachedFeature(spark, key, 7L)(Seq(99).toDF("v")) eq v7)
+    } finally RunCaches.clearAll()
   }
 
   test("minhash index: a marker-less husk is reclaimed, never marker-blessed with nested junk") {
@@ -897,17 +897,17 @@ class SemanticsSpec extends SparkSpec {
   }
 
   test("featureMemoLevel=NONE disables the corpus-frame memo; a bogus level fails loudly") {
-    import graft.operators.Similarity
+    import graft.operators.{RunCaches, Similarity}
     // the 100 TB relief valve: with the memo off, dedup queries still
     // answer (build-per-call) and NOTHING lands in the cache manager —
     // a corpus-scale persist past the cluster's storage is the failure
     // the conf exists to avoid
-    Similarity.clearFeatureCache()
+    RunCaches.clearAll()
     spark.conf.set("spark.graft.featureMemoLevel", "NONE")
     try {
       val r = Similarity.ddMinhash.run(spark, sf001).collect()
       assert(r.nonEmpty)
-      assert(Similarity.featureCacheSize === 0,
+      assert(RunCaches.memoSize === 0,
         "memo must stay empty under featureMemoLevel=NONE")
     } finally spark.conf.unset("spark.graft.featureMemoLevel")
     // an unknown level is a conf typo — loud, not a silent default
@@ -917,7 +917,7 @@ class SemanticsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.featureMemoLevel")
     // default path restores memoization
     assert(Similarity.ddMinhash.run(spark, sf001).collect().nonEmpty)
-    assert(Similarity.featureCacheSize >= 1)
+    assert(RunCaches.memoSize >= 1)
   }
 
   test("JDBC timestamp-without-time-zone events arrive zone-free (preferTimestampNTZ)") {

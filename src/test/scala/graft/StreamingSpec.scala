@@ -1351,7 +1351,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("LIVE ingest admission: a re-delivered batch reuses no live memo from its first delivery (r20)") {
-    import graft.operators.{IngestIncr, Similarity}
+    import graft.operators.{IngestIncr, RunCaches}
     // VERDICT r19 #3: the memo stamp is keyed to (statePath, batchId)
     // with a per-delivery attempt — attributable (ver >>> 20 = batchId)
     // and strictly larger on re-delivery, so cachedFeature supersedes
@@ -1366,15 +1366,36 @@ class StreamingSpec extends SparkSpec {
     val df = docs.take(2).toDF("doc_id", "source", "lang", "text")
     IngestIncr.admitMicroBatch(spark, df, 0L, idx, split, statePath, outPath)
     val key = s"pipe_ingest_stream:$statePath:gate"
-    val v1 = Similarity.featureVersionOf(spark, key)
+    val v1 = RunCaches.versionOf(spark, key)
     assert(v1.nonEmpty, "gate memo not live after first delivery")
     assert((v1.get >>> 20) === 0L,
       s"stamp ${v1.get} does not attribute to batch 0")
     IngestIncr.admitMicroBatch(spark, df, 0L, idx, split, statePath, outPath)
-    val v2 = Similarity.featureVersionOf(spark, key)
+    val v2 = RunCaches.versionOf(spark, key)
     assert(v2.nonEmpty && v2.get > v1.get,
       s"re-delivery must mint a strictly larger stamp (got $v1 then $v2) " +
         "— a reused live memo would mask state drift between deliveries")
+  }
+
+  test("labeledJob restores the enclosing job description, nested or not") {
+    import graft.operators.IngestIncr
+    // the admission path nests labels (its stages reach the probe's
+    // labeled jobs): an inner call must hand the outer label back, and
+    // the outermost call the caller's own description
+    val sc = spark.sparkContext
+    def desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("prior")
+    try {
+      IngestIncr.labeledJob(spark, "outer") {
+        assert(desc === "outer")
+        IngestIncr.labeledJob(spark, "inner")(assert(desc === "inner"))
+        assert(desc === "outer", "the inner call did not restore the outer label")
+      }
+      assert(desc === "prior", "the outer call did not restore the prior label")
+      sc.setJobDescription(null)
+      IngestIncr.labeledJob(spark, "only")(())
+      assert(desc === null)
+    } finally sc.setJobDescription(null)
   }
 
   test("LIVE ingest admission: out-of-order batch ids are refused loudly (r19 review)") {
