@@ -15,9 +15,10 @@ package graft
   * }}}
   *
   * `family=` selects the index family (minhash default, simhash, phash,
-  * embedding) — all four ride the same [[operators.Similarity.writeIncrIndex]]/
-  * [[operators.Similarity.probeIncrIndex]] core, so this harness measures
-  * the shared machinery under each family's feature kernel.
+  * embedding) — all four are [[operators.VersionedIndex.IncrFamily]]
+  * declarations riding the same [[operators.VersionedIndex.write]]/
+  * [[operators.VersionedIndex.probe]] core, so this harness measures the
+  * shared machinery under each family's feature kernel.
   *
   * The increment is the FIRST tier's natural 20% id slice; the SAME id
   * count is carved off the top of every later tier's id range, so the
@@ -36,42 +37,24 @@ package graft
   * line to stdout. */
 object TimeIncr {
 
-  /** One family's harness surface: index write/probe, the corpus
-    * relation whose max id anchors the split, and the ROW-COUNTED frame
-    * — what the index actually fingerprints, which for phash is only
-    * the image third of the documents ids (counting the full relation
-    * would overstate the indexed/probed workload ~3×). */
-  private final case class Fam(
-      write: (org.apache.spark.sql.SparkSession, String, String, Long, Int) => Unit,
-      probe: (org.apache.spark.sql.SparkSession, String, String, Long, Int) =>
-        org.apache.spark.sql.DataFrame,
-      corpus: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame,
-      idCol: String,
-      counted: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)
+  private val fams = Map(
+    "minhash" -> operators.Similarity.minhashIncr,
+    "simhash" -> operators.Similarity.simhashIncr,
+    "phash" -> operators.Multimodal.phashIncr,
+    "embedding" -> operators.Similarity.embeddingIncr)
 
-  private val fams: Map[String, Fam] = {
+  /** The ROW-COUNTED frame — what the index actually fingerprints. For
+    * phash that is only the image third of the documents ids (doc_id %
+    * 3 == 0, Multimodal.media), minus NULL-text docs, which are never
+    * fingerprinted (phashFeatOf's payload guard) — counting the full
+    * relation would overstate the indexed/probed row basis the INCR line
+    * reports ~3× (r13 sweep). */
+  private def counted(family: String, src: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, pmod}
-    val docs = (s: org.apache.spark.sql.SparkSession, d: String) =>
-      Tables(s, d).documents
-    val embs = (s: org.apache.spark.sql.SparkSession, d: String) =>
-      Tables(s, d).embeddings
-    Map(
-      "minhash" -> Fam(operators.Similarity.writeMinhashIndex,
-        operators.Similarity.probeMinhashIndex, docs, "doc_id", docs),
-      "simhash" -> Fam(operators.Similarity.writeSimhashIndex,
-        operators.Similarity.probeSimhashIndex, docs, "doc_id", docs),
-      "phash" -> Fam(operators.Multimodal.writePhashIndex,
-        operators.Multimodal.probePhashIndex, docs, "doc_id",
-        // only doc_id % 3 == 0 ids are image media (Multimodal.media),
-        // and NULL-text docs are never fingerprinted (phashFeatOf's
-        // payload guard) — counting them would overstate the indexed/
-        // probed row basis the INCR line reports (r13 sweep)
-        (s, d) => docs(s, d).filter(
-          pmod(col("doc_id"), lit(3)) === lit(0) && col("text").isNotNull)),
-      "embedding" -> Fam(operators.Similarity.writeEmbeddingIndex,
-        operators.Similarity.probeEmbeddingIndex, embs, "vec_id", embs))
+    if (family == "phash")
+      src.filter(pmod(col("doc_id"), lit(3)) === lit(0) && col("text").isNotNull)
+    else src
   }
 
   def main(args: Array[String]): Unit = {
@@ -105,18 +88,18 @@ object TimeIncr {
     require(dirs.nonEmpty, usage)
     val spark = Engine.session(appName = "graft-time-incr")
     import org.apache.spark.sql.functions.{col, count, max, when}
+    def source(dir: String) = Tables(spark, dir).byName(fam.srcTable)
     val maxIds = dirs.map { dir =>
-      val r = fam.corpus(spark, dir).agg(max(col(fam.idCol))).head()
-      require(!r.isNullAt(0), s"empty ${fam.idCol} corpus at $dir")
+      val r = source(dir).agg(max(col(fam.srcIdCol))).head()
+      require(!r.isNullAt(0), s"empty ${fam.srcIdCol} corpus at $dir")
       dir -> r.getLong(0)
     }.toMap
     val spans = spansArg.getOrElse(Seq(maxIds(dirs.head) / 5)) // natural slice
     // honor the session's shard conf so the harness measures the layout a
-    // deployment actually configures (build and probe stay paired) — the
-    // FAMILY's conf, resolved exactly as the production ensure path
-    // resolves it (family name → minhash fallback → default), so a
-    // per-family override measures the layout that family actually uses
-    val shards = operators.Similarity.confShards(spark, family)
+    // deployment actually configures — read through the same resolver
+    // the production ensure path uses; the probe reads it back from the
+    // version name each pass builds under
+    val shards = operators.VersionedIndex.confShards(spark)
     val tiers = for (dir <- dirs; span <- spans) yield {
       val split = maxIds(dir) - span
       // the span must carve a real increment out of a real corpus: a
@@ -127,17 +110,18 @@ object TimeIncr {
       // silently-garbage O(increment) measurement instead of the loud
       // failure every other option here gets (r13 sweep)
       require(span > 0 && split > 0,
-        s"span $span must be in (0, max ${fam.idCol}=${maxIds(dir)}) for $dir")
-      val cnt = fam.counted(spark, dir).agg(
-        count(when(col(fam.idCol) >= split, 1)).as("incr"),
-        count(when(col(fam.idCol) < split, 1)).as("corpus")).head()
+        s"span $span must be in (0, max ${fam.srcIdCol}=${maxIds(dir)}) for $dir")
+      val cnt = counted(family, source(dir)).agg(
+        count(when(col(fam.srcIdCol) >= split, 1)).as("incr"),
+        count(when(col(fam.srcIdCol) < split, 1)).as("corpus")).head()
       (dir, split, cnt.getLong(0), cnt.getLong(1))
     }
     val samples = scala.collection.mutable.Map
       .empty[(String, String), List[Double]].withDefaultValue(Nil)
     for (pass <- 0 until 3; (dir, split, _, _) <- tiers) {
-      val idx = java.nio.file.Files
-        .createTempDirectory(s"graft-incr-idx").toString
+      val tmp = java.nio.file.Files.createTempDirectory("graft-incr-idx").toString
+      // a version-named directory: the probe reads the shard count from it
+      val idx = s"$tmp/${operators.VersionedIndex.Version(split, 0L, shards).name}"
       // each pass pays the full cold ingest; the finally keeps tier-scale
       // builds from accumulating in tmp even when a pass fails
       try {
@@ -148,11 +132,11 @@ object TimeIncr {
         // new registered cache (r13 sweep)
         operators.RunCaches.clearAll()
         val b0 = System.nanoTime()
-        fam.write(spark, dir, idx, split, shards)
+        operators.VersionedIndex.write(fam, spark, dir, idx, split, shards)
         val bSec = (System.nanoTime() - b0) / 1e9
         operators.RunCaches.clearAll()
         val p0 = System.nanoTime()
-        fam.probe(spark, dir, idx, split, shards)
+        operators.VersionedIndex.probe(fam, spark, dir, idx, split)
           .write.format("noop").mode("overwrite").save()
         val pSec = (System.nanoTime() - p0) / 1e9
         samples(("build", s"$dir@$split")) =
@@ -162,7 +146,7 @@ object TimeIncr {
         System.err.println(
           f"[incr] $family pass $pass $dir split=$split build=$bSec%.2f s probe=$pSec%.2f s")
       } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(idx))
+        .deleteDirectory(new java.io.File(tmp))
     }
     for ((dir, split, rows, corpus) <- tiers) {
       val b = samples(("build", s"$dir@$split")).min

@@ -4,6 +4,11 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.TimeoutException
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+import scala.util.{Failure, Try}
+
 /** The composed pipeline's INGEST path — admission of a new corpus
   * increment against PERSISTED state, never a corpus re-scan.
   *
@@ -23,10 +28,10 @@ import org.apache.spark.sql.functions._
   *    declared semantics freeze it at the base slice's `src0` stratum;
   *    incoming `src0` rows are simply never admitted to training);
   *  - near-dup: the minhash (bands, toks) index of
-  *    [[Similarity.writeIncrIndex]] built over the base slice's
+  *    [[VersionedIndex.writeIncrIndex]] built over the base slice's
   *    PIPELINE SURVIVORS (stages 1–2 output, the election population
   *    the batch flow uses), probed with the family's partition-pruned
-  *    least-merge ([[Similarity.probeIncrIndex]]) so intra-increment
+  *    least-merge ([[VersionedIndex.probeIncrIndex]]) so intra-increment
   *    duplicates and increment-vs-corpus duplicates fall out of one
   *    election.
   *
@@ -80,7 +85,7 @@ object IngestIncr {
     Similarity.kernelFp(pipeIngestKernelId: _*)
 
   /** Builds/adopts the composed-ingest index for `dir`'s base slice and
-    * returns (versionPath, split) — [[Similarity.ensureVersionedIndex]]
+    * returns (versionPath, split) — [[VersionedIndex.ensureVersioned]]
     * with this family's four layout parts. famPrefix "mhp1" + the
     * KERNEL FINGERPRINT (r19): the version identity does not cover the
     * PIPELINE kernels (gates, shingle rule, banding), so a kernel knob
@@ -89,10 +94,9 @@ object IngestIncr {
     * lossy-token hazard), now folded in mechanically via
     * [[pipeIngestKernelFp]]. */
   def ensurePipeIngestIndex(s: SparkSession, dir: String): (String, Long) =
-    Similarity.ensureVersionedIndex(s, dir, s"mhp1-$pipeIngestKernelFp",
-      "minhash", Seq("bands", "toks", "fps", "bsh"),
-      (staging, split, shards) =>
-        buildPipeIngestIndex(s, dir, staging, split, shards))
+    VersionedIndex.ensureVersioned(s, dir, s"mhp1-$pipeIngestKernelFp",
+      Seq("bands", "toks", "fps", "bsh"))((staging, split, shards) =>
+      buildPipeIngestIndex(s, dir, staging, split, shards))
 
   /** Marker file naming an index part that is legitimately EMPTY.
     * A 0-row partitionBy parquet write produces NO data files and the
@@ -117,7 +121,7 @@ object IngestIncr {
     * admission path runs 30+ jobs per trigger, and floor-hunting needs
     * each attributable in the UI / job listeners. Thread-local; the
     * previous description is restored after, so a nested call (the
-    * admission stages reach [[Similarity.probeIncrIndex]]'s labeled
+    * admission stages reach [[VersionedIndex.probeIncrIndex]]'s labeled
     * jobs) hands the outer label back instead of clearing it. */
   private[graft] def labeledJob[A](s: SparkSession, what: String)(body: => A): A = {
     val prev = s.sparkContext.getLocalProperty("spark.job.description")
@@ -167,8 +171,6 @@ object IngestIncr {
     }
   }
 
-  /** Ingest-time half: ONE scan of the base corpus slice (`doc_id <
-    * split`, pushed) feeds all four persisted parts. */
   /** Dead-key reclaim for this family's memo entries (ADVICE r18): the
     * keys embed `split`, so a corpus regeneration that moves maxId mints
     * NEW keys and would strand every old-split persisted frame until a
@@ -179,6 +181,10 @@ object IngestIncr {
     RunCaches.evictPrefix(s"pipe_ingest:$dir:",
       spare = _.startsWith(s"pipe_ingest:$dir:$split:"))
 
+  /** Ingest-time half: ONE scan of the base corpus slice (`doc_id <
+    * split`, pushed) feeds all four persisted parts — `fps`, `bsh` and
+    * the minhash (`bands`, `toks`) index over the base slice's pipeline
+    * survivors. */
   private def buildPipeIngestIndex(s: SparkSession, dir: String,
       staging: String, split: Long, shards: Int): Unit = {
     reclaimStaleSplit(dir, split)
@@ -231,7 +237,8 @@ object IngestIncr {
     }
     if (feat.filter(size(col("bands")) > lit(0)).isEmpty) {
       markEmpty(s, s"$staging/bands"); markEmpty(s, s"$staging/toks")
-    } else Similarity.writeMinhashIndexOf(s, staging, shards, feat)
+    } else VersionedIndex.writeIncrIndex(s, staging, shards,
+      Similarity.minhashIncr, feat)
   }
 
   /** Pruned-or-empty index-part read — `writeOrMark`'s probe-side half.
@@ -257,17 +264,16 @@ object IngestIncr {
   private[graft] final case class IngestState(
       fps: DataFrame, bands: DataFrame, toks: DataFrame)
 
+  /** `marks` — the (doc_id, mk) label union the verdict assembly joins
+    * (exposed so specs can check its disjointness contract). */
   private[graft] final case class IngestAdmitResult(
-      verdicts: DataFrame, deltas: Option[IngestState])
+      verdicts: DataFrame, marks: DataFrame, deltas: Option[IngestState])
 
   /** Query-time half: verdicts for every `doc_id >= split` document.
     * See the object doc for the per-stage probe discipline. */
-  def probePipeIngest(s: SparkSession, dir: String, idx: String,
-      split: Long): DataFrame = {
+  private[graft] def probePipeIngest(s: SparkSession, dir: String,
+      idx: String, split: Long): IngestAdmitResult = {
     reclaimStaleSplit(dir, split)
-    val shards =
-      Similarity.effShardsOf(idx, Similarity.minhashIndexShards,
-        "probePipeIngest")
     val ver = RunCaches.srcVersion(s, dir, "documents.parquet")
     // increment-only scan (doc_id >= split pushed); memoized — it feeds
     // the gate projection and the final verdict assembly
@@ -276,8 +282,8 @@ object IngestIncr {
       T(s, dir).documents.filter(col("doc_id") >= lit(split))
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
     }
-    admitAgainst(s, idx, split, shards, incoming,
-      name => s"pipe_ingest:$dir:$split:$name", ver, None).verdicts
+    admitAgainst(s, idx, split, incoming,
+      name => s"pipe_ingest:$dir:$split:$name", ver, None)
   }
 
   /** The admission CORE shared by the batch probe ([[probePipeIngest]],
@@ -302,9 +308,11 @@ object IngestIncr {
     * unpersist) the previous batch's — bounded memo, no per-batch key
     * growth. */
   private[graft] def admitAgainst(s: SparkSession, idx: String,
-      split: Long, shards: Int, incoming: DataFrame,
+      split: Long, incoming: DataFrame,
       memoKey: String => String, ver: Long,
       state: Option[IngestState], ordered: Boolean = true): IngestAdmitResult = {
+    // the fps layout's shard modulus, recorded in the version name
+    val shards = VersionedIndex.shardsOf(idx, "pipe-ingest admission")
     // Empty-band-state fast path (r21, measured on the 100-trigger
     // protocol): a stream whose survivors rarely band (the natural
     // moderation shape — most docs gate out or hit decontamination)
@@ -411,9 +419,11 @@ object IngestIncr {
         case None =>
           if (isMarkedEmpty(s, s"$idx/bands"))
             Similarity.minhashDedupOf(feat)
-          else Similarity.probeMinhashIndexOf(s, idx, split, shards, feat, ver)
+          else VersionedIndex.probeIncrIndex(s, idx, split,
+            Similarity.minhashIncr, feat, ver)
         case Some(st) =>
-          Similarity.probeMinhashIndexOf(s, idx, split, shards, feat, ver,
+          VersionedIndex.probeIncrIndex(s, idx, split,
+            Similarity.minhashIncr, feat, ver,
             readPart = (p, ddl) => probeRead(s, p, ddl),
             extra = if (stateBandsEmpty) None else Some((st.bands, st.toks)),
             memoSuffix = ":stream")
@@ -428,7 +438,9 @@ object IngestIncr {
     // their disjoint label union: one shuffle-free union + TWO joins
     // compute the identical verdict column (held_out still wins on
     // source, gate on gatePop absence — unchanged). Oracle twin
-    // untouched; hashes identical.
+    // untouched; hashes identical. The planted-fixture and stream≡batch
+    // specs assert the disjointness on `marks` (returned for them): a
+    // marker set that broke it would duplicate verdict rows below.
     val marks = exactDup.select(col("doc_id"), lit("exact_dup").as("mk"))
       .unionByName(contaminated.select(col("doc_id"), lit("contaminated").as("mk")))
       .unionByName(nearDup.select(col("doc_id"), lit("near_dup").as("mk")))
@@ -486,7 +498,7 @@ object IngestIncr {
           Seq("doc_id"), "left_semi")
       IngestState(deltaFps, deltaBands, deltaToks)
     }
-    IngestAdmitResult(verdicts, deltas)
+    IngestAdmitResult(verdicts, marks, deltas)
   }
 
   // ---------- LIVE streaming admission (r19) ----------
@@ -730,8 +742,6 @@ object IngestIncr {
   private[graft] def admitMicroBatch(s: SparkSession, batch: DataFrame,
       batchId: Long, idx: String, split: Long, statePath: String,
       outPath: String): Unit = {
-    val shards = Similarity.effShardsOf(idx, Similarity.minhashIndexShards,
-      "ingestAdmission")
     val loc0 = listState(s, statePath, batchId)
     // compact BEFORE processing, folding only deltas strictly below
     // THIS batch — so a generation can never contain the processing
@@ -795,7 +805,7 @@ object IngestIncr {
           "stateful elections would silently diverge from the batch " +
           "pipeline, refusing the batch instead")
     }
-    val res = admitAgainst(s, idx, split, shards, incoming,
+    val res = admitAgainst(s, idx, split, incoming,
       name => s"pipe_ingest_stream:$statePath:$name", ver, Some(state),
       ordered = false)
     val d = res.deltas.get
@@ -808,26 +818,26 @@ object IngestIncr {
     // per-job scheduling latency — not data — dominated the trigger
     // floor when paid 4× sequentially. bands→toks stay sequenced in one
     // task (toks consumes the memoized bands frame). Crash-safety is
-    // unchanged: ALL writes settle before any failure is rethrown, and
-    // the commit marker still goes strictly after the data — a failure
-    // anywhere leaves an uncommitted husk the next delivery overwrites.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    // unchanged: ALL writes settle (or time out) before any failure is
+    // rethrown, and the commit marker still goes strictly after the data
+    // — a failure anywhere leaves an uncommitted husk the next delivery
+    // overwrites.
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.global
     // job descriptions are thread-local (guide §1.5) — set per task
-    def labeled[A](what: String)(body: => A): A =
-      labeledJob(s, s"ingestAdmission b$batchId: $what")(body)
-    val writes = Seq(
-      Future(labeled("verdicts")(
-        res.verdicts.write.mode("overwrite").parquet(s"$outPath/batch=$batchId"))),
-      Future(labeled("delta fps")(
-        d.fps.write.mode("overwrite").parquet(s"$bDir/fps"))),
-      Future(labeled("delta bands+toks") {
+    def write(what: String)(body: => Unit): (String, Future[Unit]) = {
+      val label = s"ingestAdmission b$batchId: $what"
+      label -> Future(labeledJob(s, label)(body))
+    }
+    settleAll(Seq(
+      write("verdicts")(
+        res.verdicts.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")),
+      write("delta fps")(
+        d.fps.write.mode("overwrite").parquet(s"$bDir/fps")),
+      write("delta bands+toks") {
         d.bands.write.mode("overwrite").parquet(s"$bDir/bands")
         d.toks.write.mode("overwrite").parquet(s"$bDir/toks")
-      }))
-    val settled = writes.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    settled.foreach(_.get) // rethrow the first failure only after all settle
+      }), admissionWriteBound)
     // commit marker strictly after the data — a crash mid-write leaves
     // an uncommitted husk the next run overwrites, never half-reads.
     // Content = the running max doc_id through this batch (carried
@@ -835,6 +845,29 @@ object IngestIncr {
     val runningMax = (priorMax.toSeq ++
       (if (nB > 0) Seq(bk.getLong(2)) else Seq.empty)).maxOption
     writeMarker(s, bDir, runningMax)
+  }
+
+  /** Bound on settling one trigger's output writes. They are
+    * increment-sized, so a write still running after this is stuck (a
+    * hung store or executor): the trigger then fails, uncommitted,
+    * instead of blocking the stream forever. */
+  private[graft] val admissionWriteBound: FiniteDuration = 10.minutes
+
+  /** Waits for every named write against ONE shared deadline, then
+    * rethrows the first failure in `writes` order — so every write has
+    * settled (or timed out) before anything is rethrown. A write still
+    * running at the deadline fails with a TimeoutException naming it. */
+  private[graft] def settleAll(writes: Seq[(String, Future[Unit])],
+      bound: FiniteDuration): Unit = {
+    val deadline = bound.fromNow
+    val settled = writes.map { case (what, f) =>
+      Try(Await.result(f, deadline.timeLeft max Duration.Zero)).recoverWith {
+        case _: TimeoutException => Failure(new TimeoutException(
+          s"$what: the write did not settle within $bound — failing the " +
+            "trigger uncommitted"))
+      }
+    }
+    settled.foreach(_.get)
   }
 
   /** Memo version stamps for the stream path, keyed to (statePath,
@@ -911,7 +944,7 @@ object IngestIncr {
     "pipe_ingest_incr",
     (s, dir) => {
       val (idx, split) = ensurePipeIngestIndex(s, dir)
-      probePipeIngest(s, dir, idx, split)
+      probePipeIngest(s, dir, idx, split).verdicts
     },
     oracle = Some(s"""
       WITH sp AS (

@@ -520,7 +520,7 @@ object Multimodal {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The 64-bit hamming verify tail shared by [[phashDedupOf]] and
-    * [[probePhashIndex]] — ONE definition, so the probe==batch equality
+    * the [[phashIncr]] probe — ONE definition, so the probe==batch equality
     * contract cannot drift on the distance or threshold. */
   private def phashVerify(cand: DataFrame, dPh: DataFrame,
       kPh: DataFrame): DataFrame =
@@ -632,17 +632,17 @@ object Multimodal {
       WITH $phashOracleCtes
       ${phashOracleTail("")}"""))
 
-  /** Ingest-time half of INCREMENTAL image dedup — the third
-    * instantiation of [[Similarity.ensureVersionedIndex]] (after
-    * MinHash and SimHash), closing the image modality's re-scan gap:
-    * persists the corpus images' (band, bucket, keeper) frame
-    * partitioned by (band, bshard) plus a (media_id, ph) side table for
-    * exactly the bucket keepers, partitioned by pshard. The corpus is
-    * hashed ONCE here, at ingest. */
-  /** pHash family shape for the shared
-    * [[Similarity.writeIncrIndex]]/[[Similarity.probeIncrIndex]] core. */
-  private val phFamily = Similarity.IncrFamily(
-    what = "probePhashIndex",
+  /** pHash family — incremental image dedup, closing the image
+    * modality's re-scan gap: the corpus images' (band, bucket, keeper)
+    * frame plus a (media_id, ph) side table for exactly the bucket
+    * keepers, partitioned by pshard. Images are the `doc_id % 3 == 0`
+    * documents, so the split is read off the documents table's doc_id —
+    * the same `max id − max id / 5` the oracle states. */
+  private[graft] val phashIncr = VersionedIndex.IncrFamily(
+    name = "phash", query = "mm_phash_incr",
+    kernelPrefix = s"ph-$phashKernelFp",
+    srcTable = "documents", srcIdCol = "doc_id",
+    featOf = (s, dir, keep) => phashFeatOf(media(s, dir).filter(keep)),
     idCol = "media_id", featSubdir = "phs", featShardCol = "pshard",
     sideDdl = "media_id BIGINT, ph ARRAY<INT>, pshard BIGINT",
     bandedOf = phashBandedOf,
@@ -651,35 +651,6 @@ object Multimodal {
     verify = (cand, feat, kSide) =>
       phashVerify(cand,
         feat.select(col("media_id"), col("ph").as("d_ph")), kSide))
-
-  def writePhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = Similarity.minhashIndexShards): Unit =
-    Similarity.writeIncrIndex(s, indexPath, shards, phFamily,
-      RunCaches.cachedFeature(s, s"mm_phash_incr:$dir:corpus$split", RunCaches.srcVersion(s, dir, "documents.parquet")) {
-        phashFeatOf(media(s, dir).filter(col("media_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment's images (media_id >= split)
-    * against the persisted index WITHOUT re-hashing the corpus — same
-    * probe discipline as [[Similarity.probeMinhashIndex]]: pruned bands
-    * read (bounded collect, ≤ 8 × shards partition keys), least-merge
-    * of per-bucket keepers (with append-only ids that IS the bucket
-    * minimum over corpus ∪ increment), pruned keeper-hash read. Output
-    * equals the full [[mmPhashDedup]] restricted to the increment. */
-  def probePhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = Similarity.minhashIndexShards): DataFrame = {
-    val srcVer = RunCaches.srcVersion(s, dir, "documents.parquet")
-    Similarity.probeIncrIndex(s, indexPath, split, shards, phFamily,
-      RunCaches.cachedFeature(s, s"mm_phash_incr:$dir:incr$split", srcVer) {
-        phashFeatOf(media(s, dir).filter(col("media_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** pHash instantiation of [[Similarity.ensureVersionedIndex]]. */
-  def ensurePhashIndex(s: SparkSession, dir: String): (String, Long) =
-    Similarity.ensureVersionedIndex(s, dir, s"ph-$phashKernelFp", "phash",
-      Seq("bands", "phs"),
-      (staging, split, shards) => writePhashIndex(s, dir, staging, split, shards))
 
   /** mm_phash_incr: incremental image dedup against the persisted phash
     * index. ORACLE-EXACT — the first `_incr` query to be (r11): the
@@ -691,13 +662,7 @@ object Multimodal {
     * the SemanticsSpec equality additionally pins). The minhash/simhash
     * twins followed in r15 once their kernels moved to md5-derived
     * portable hashes. */
-  val mmPhashIncr = QueryDef(
-    "mm_phash_incr",
-    (s, dir) => {
-      val (idx, split) = ensurePhashIndex(s, dir)
-      // no shards argument: the path's -sN suffix is authoritative
-      probePhashIndex(s, dir, idx, split)
-    },
+  val mmPhashIncr = VersionedIndex.incrQuery(phashIncr,
     oracle = Some(s"""
       WITH sp AS (
         SELECT MAX(doc_id) - MAX(doc_id) // 5 AS split FROM documents),

@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.functions.{Scored, TopKAggregator}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import RunCaches.{cachedFeature, evictPrefix, srcVersion}
+import RunCaches.{cachedFeature, srcVersion}
 
 /** Similarity search over the `embeddings` table (driver-requested
   * training-data-pipeline surface) plus MinHash/SimHash near-dup over
@@ -551,7 +551,7 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The exact-Jaccard verify tail shared by [[minhashDedupOf]] and
-    * [[probeMinhashIndex]]: join (doc_id, keeper) candidates to both
+    * the [[minhashIncr]] probe: join (doc_id, keeper) candidates to both
     * token sides and keep pairs at ≥ 50% Jaccard. ONE definition — the
     * probe==batch equality contract rests on the threshold and the
     * integer-div expression never diverging between the two callers. */
@@ -863,7 +863,7 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The hamming verify tail shared by [[simhashDedupOf]] and
-    * [[probeSimhashIndex]] — ONE definition, so the probe==batch
+    * the [[simhashIncr]] probe — ONE definition, so the probe==batch
     * equality contract cannot drift on the distance or threshold. */
   private def hammingVerify(cand: DataFrame, dSim: DataFrame,
       kSim: DataFrame): DataFrame =
@@ -985,7 +985,7 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
 
   /** The exact-cosine verify tail shared by [[embDedupOf]] and
-    * [[probeEmbeddingIndex]] — ONE definition, so the probe==batch
+    * the [[embeddingIncr]] probe — ONE definition, so the probe==batch
     * equality contract cannot drift on the score or threshold.
     * Degenerate pairs are EXCLUDED like [[rankTop5]]'s guard, not
     * emitted: a zero-norm side would make cos 0/0 = NaN — which
@@ -1227,338 +1227,27 @@ object Similarity {
     ivfRerank(corpusCells, queryCells)
   }
 
-  // --- incremental dedup against a persisted band index ---
+  // --- incremental dedup families (declarations; VersionedIndex runs them) ---
 
-  /** Bucket shards per band in the persisted MinHash band index. The
-    * pruning axis is the BUCKET, not the band (an increment bands into
-    * all 8 bands), and raw 64-bit buckets are far too many partition
-    * directories — so buckets shard by `pmod(bucket, 32)` and the index
-    * partitions by (band, bshard): 256 directories total, each a
-    * prunable unit. A probe touches at most min(increment banded rows,
-    * 8 × 32) of them — real pruning for the steady-state ingest case
-    * (increment ≪ corpus); a large increment degrades gracefully to
-    * reading the whole bands index, which is still the narrow
-    * (band, bucket, keeper) triples, never the corpus bytes. The same
-    * shard count partitions the keeper-tokens side table by
-    * `pmod(doc_id, 32)`, pruned at probe time by the shards the
-    * elected corpus keepers actually occupy.
-    *
-    * DEFAULT shard count only: the session conf
-    * `spark.graft.minhash.indexShards` wins when set — 32×8 = 256
-    * prunable units fit the test tiers, while a 100 TB corpus wants
-    * thousands (pruning granularity AND per-partition size both scale
-    * with it). The shard count is baked into the published version
-    * directory's NAME, so an index built under one setting can never be
-    * probed under another — a conf change simply versions a new index
-    * and the old one ages out through the reap pass. */
-  val minhashIndexShards = 32
-
-  /** Shard count a published version path was built with, parsed from
-    * its name. Matches ONLY the full `v<split>-<mtime>-s<N>` version
-    * shape [[ensureMinhashIndex]] itself publishes — a custom index
-    * location that merely happens to end in `-s<digits>` is the
-    * caller's own layout, governed by their explicit argument. */
-  private[graft] def indexShardsOf(indexPath: String): Option[Int] =
-    "(^|/)v\\d+-\\d+-s(\\d{1,9})/*$".r
-      .findFirstMatchIn(indexPath).map(_.group(2).toInt)
-
-  /** Session shard count: the family's own conf first, then the
-    * `minhash` name (the subsystem default under its historical name),
-    * then [[minhashIndexShards]] — the SAME resolution order as
-    * [[ensureVersionedIndex]], and its single reader, so build, probe,
-    * version-name and any measurement harness can never disagree
-    * within a session. */
-  private[graft] def confShards(
-      s: SparkSession, confFamily: String = "minhash"): Int = {
-    val n = s.conf.getOption(s"spark.graft.$confFamily.indexShards")
-      .orElse(s.conf.getOption("spark.graft.minhash.indexShards"))
-      .getOrElse(minhashIndexShards.toString).toInt
-    // upper bound = what indexShardsOf's 9-digit parse can read back: a
-    // 10-digit count would publish a version name the probe CANNOT
-    // parse, silently falling back to the caller's default modulus and
-    // mis-pruning — refuse here, where the layout is named
-    require(n > 0 && n <= 999999999,
-      s"spark.graft.$confFamily.indexShards must be in [1, 999999999], got $n")
-    n
-  }
-
-  /** The shard modulus a probe must prune with. The version path's -sN
-    * suffix is AUTHORITATIVE when present: pruning with any other
-    * modulus than the layout was written with silently misses
-    * duplicates, so the layout's own record beats both the argument and
-    * any conf re-read (which could race a conf change between ensure
-    * and probe). The argument governs only pathless custom index
-    * locations, where the caller owns both halves — an EXPLICIT
-    * argument that disagrees with a version-shaped path is a caller
-    * error and fails loudly rather than silently mis-pruning (the
-    * default-valued argument carries no intent and defers). */
-  private[operators] def effShardsOf(indexPath: String, passed: Int, what: String): Int =
-    indexShardsOf(indexPath) match {
-      case Some(fromPath) =>
-        require(passed == minhashIndexShards || passed == fromPath,
-          s"$what: explicit shards=$passed disagrees with the index " +
-            s"path's own -s$fromPath layout suffix ($indexPath) — " +
-            "pruning under the wrong modulus would silently miss duplicates")
-        fromPath
-      case None => passed
-    }
-
-  /** Combined (band, bshard) partition key as one long — the single
-    * expression both the probe's bounded collect and the index-read
-    * filter use, so the pruning predicate can never drift from the
-    * layout. Partition-column-only, hence pushed as a PartitionFilter. */
-  private[operators] def mhPartKey(band: org.apache.spark.sql.Column,
-      bshard: org.apache.spark.sql.Column,
-      shards: Int): org.apache.spark.sql.Column =
-    band.cast("long") * lit(shards.toLong) + bshard.cast("long")
-
-  /** The column-level shape of one incremental index family — the
-    * second axis of genericity next to [[ensureVersionedIndex]] (which
-    * owns versioning/publish): everything the shared
-    * [[writeIncrIndex]]/[[probeIncrIndex]] bodies need to serve
-    * MinHash, SimHash, image pHash and embedding LSH from ONE
-    * implementation, so a pruning or merge fix can never land in one
-    * family and drift from the others.
-    *
-    * `idCol` — the corpus id (doc_id/media_id/vec_id; ids are
-    * append-only, which is what makes least-merge the true bucket
-    * minimum). `featSubdir`/`featShardCol` — the keeper side table's
-    * layout. `bandedOf` — feature frame → (id, band, bucket).
-    * `sideOf` — feature frame → the keeper side projection (id +
-    * verify features), applied identically at build and probe time so
-    * both paths drop degenerate rows at the SAME stage. `kRename` — a
-    * side frame → keeper-join names (keeper, k_*). `verify` —
-    * (candidates, increment feature frame, keeper side) → result.
-    * `bandsDdl`/`sideDdl` — the DATA schemas of the two persisted parts
-    * (partition column included), what an injected part reader must
-    * expose when it substitutes an empty frame for a legitimately-empty
-    * part ([[IngestIncr]]'s marker protocol; unused under the default
-    * parquet reader). */
-  private[operators] final case class IncrFamily(
-      what: String,
-      idCol: String,
-      featSubdir: String,
-      featShardCol: String,
-      bandedOf: DataFrame => DataFrame,
-      sideOf: DataFrame => DataFrame,
-      kRename: DataFrame => DataFrame,
-      verify: (DataFrame, DataFrame, DataFrame) => DataFrame,
-      // sideDdl has NO default (second r19 review): the probe builds
-      // the empty-candShards frame from it, so a family without one is
-      // wrong by construction — a compile error beats the mid-probe
-      // require the first fix used
-      sideDdl: String,
-      bandsDdl: String = "band INT, bucket BIGINT, keeper BIGINT, bshard BIGINT")
-
-  /** Ingest-time half shared by every family: persists the corpus's
-    * (band, bucket, keeper) frame partitioned by (band, bshard), plus
-    * the keeper side table (only bucket keepers can be elected by a
-    * probe — verify needs no other corpus features). The corpus is
-    * scanned ONCE here, at ingest; every later increment dedups against
-    * these files without touching the corpus again — the append-only
-    * ingest pattern of the reference's identity stream
-    * (merkle.ts:116-125), applied to the dedup family the way
-    * [[writeIvfIndex]] applies it to ANN cells. */
-  private[operators] def writeIncrIndex(s: SparkSession, indexPath: String,
-      shards: Int, fam: IncrFamily, feat: DataFrame): Unit = {
-    // the SAME path-suffix resolution the probe half runs: a custom
-    // indexPath that matches the version shape carries an authoritative
-    // -sN, and writing under any other modulus would make the probe's
-    // pruning silently miss duplicates (the write half used to apply
-    // the argument raw — the one place the layout rule didn't reach)
-    val effShards = effShardsOf(indexPath, shards, fam.what)
-    // a 0-row partitioned parquet write produces NO data files and the
-    // probe's later read fails with an opaque schema-inference error —
-    // name the cause instead. The guard must test the BANDED frame, not
-    // the feature frame: a slice can hold rows yet band to nothing
-    // (minhash emits no bands for a doc with no >3-char tokens), and
-    // only "zero bands" produces the fileless write. Cheap: limit-1.
-    val bands = fam.bandedOf(feat)
-    require(!bands.isEmpty,
-      s"${fam.what}: corpus slice below the split produced no index " +
-        "bands (the slice is empty, or every row in it is " +
-        "band-degenerate) — an incremental index needs at least one " +
-        "banded corpus row")
-    bands.groupBy(col("band"), col("bucket"))
-      .agg(min(col(fam.idCol)).as("keeper"))
-      .withColumn("bshard", pmod(col("bucket"), lit(effShards.toLong)))
-      .write.mode("overwrite").partitionBy("band", "bshard")
-      .parquet(s"$indexPath/bands")
-    // keeper ids come from the JUST-WRITTEN bands files, not a second
-    // evaluation of the keepers frame — the banding + election shuffle
-    // (the dominant ingest cost) runs exactly once per index build
-    val storedKeepers = s.read.parquet(s"$indexPath/bands")
-      .select(col("keeper").as(fam.idCol)).distinct()
-    fam.sideOf(feat)
-      .join(storedKeepers, Seq(fam.idCol))
-      .withColumn(fam.featShardCol, pmod(col(fam.idCol), lit(effShards.toLong)))
-      .write.mode("overwrite").partitionBy(fam.featShardCol)
-      .parquet(s"$indexPath/${fam.featSubdir}")
-  }
-
-  /** Query-time half shared by every family: dedups the increment
-    * (id >= split) against the persisted index WITHOUT re-scanning the
-    * corpus. The bands read is pruned to the (band, bshard) partitions
-    * the increment's own banding touches (bounded collect, ≤ nBands ×
-    * shards values no matter the corpus size); per-bucket keepers merge
-    * as `least(index keeper, increment min)` — with append-only ids
-    * that IS the bucket minimum over corpus ∪ increment, so the output
-    * equals the full batch recompute restricted to the increment, a
-    * property each family's equality spec asserts literally. Verify
-    * features come from the increment frame plus the index's keeper
-    * side table, the latter pruned to the shards the elected CORPUS
-    * keepers occupy (a second bounded collect — candidates are ≤ one
-    * per increment row). Both prunings are real when the increment is
-    * small next to the corpus — the steady-state ingest case — and
-    * degrade to full index reads (never corpus reads) for bulk
-    * increments like the test's 20% slice. */
-  private[operators] def probeIncrIndex(s: SparkSession, indexPath: String,
-      split: Long, shards: Int, fam: IncrFamily, feat: DataFrame,
-      srcVer: Long = 0L,
-      readPart: (String, String) => DataFrame = null,
-      extra: Option[(DataFrame, DataFrame)] = None,
-      memoSuffix: String = ""): DataFrame = {
-    // `readPart(path, ddl)` — injectable part reader (r19): the default
-    // is a plain parquet read; IngestIncr injects its empty-marker-aware
-    // reader so a legitimately-empty part substitutes an empty frame of
-    // the part's declared schema instead of dying on schema inference.
-    // `extra` — an OPTIONAL second election source next to the persisted
-    // index: (bands frame (band, bucket, keeper), side feature frame in
-    // this family's feature shape). The LIVE admission stream passes its
-    // accumulated stream-state here, so the three-way election
-    // least(corpus, stream state, this increment) runs through this ONE
-    // shared body — the same no-drift rule as the batch/probe halves.
-    // `memoSuffix` discriminates the candidate memo key for callers that
-    // probe the same index repeatedly with DIFFERENT feature frames
-    // (per-micro-batch probes): same suffix + newer srcVer supersedes,
-    // so at most one candidate frame per caller stream stays live.
-    val rp: (String, String) => DataFrame =
-      if (readPart == null) (p, _) => s.read.parquet(p) else readPart
-    def emptyOf(ddl: String): DataFrame = emptyFromDdl(s, ddl)
-    val effShards = effShardsOf(indexPath, shards, fam.what)
-    val banded = fam.bandedOf(feat)
-    val incrKeepers = banded.groupBy(col("band"), col("bucket"))
-      .agg(min(col(fam.idCol)).as("ikeeper"))
-    val touched = IngestIncr.labeledJob(s, s"${fam.what}: band prune")(banded
-      .select(mhPartKey(col("band"),
-        pmod(col("bucket"), lit(effShards.toLong)), effShards).as("pk"))
-      .distinct().collect()).map(_.getLong(0)) // bounded: ≤ nBands × shards
-    // an increment that bands to NOTHING (every row band-degenerate —
-    // reachable per micro-batch on the streaming path) must not build
-    // an empty `isin()` filter; the index contributes nothing anyway
-    val idx = (if (touched.isEmpty) emptyOf(fam.bandsDdl)
-      else rp(s"$indexPath/bands", fam.bandsDdl)
-        .filter(mhPartKey(col("band"), col("bshard"), effShards)
-          .isin(touched.map(x => x: Any): _*)))
-      .select(col("band").cast("int").as("band"), col("bucket"), col("keeper"))
-    // least() skips nulls: unseen-by-corpus buckets fall to the
-    // increment's own minimum, known buckets to the true merged min —
-    // and with `extra` state, to the three-way minimum (stream ids sit
-    // between corpus ids and this increment's, so least() IS the bucket
-    // minimum over corpus ∪ state ∪ increment under append-only ids)
-    val mergedBase = incrKeepers.join(idx, Seq("band", "bucket"), "left")
-    val merged = extra match {
-      case None =>
-        mergedBase.select(col("band"), col("bucket"),
-          least(col("keeper"), col("ikeeper")).as("keeper"))
-      case Some((xBands, _)) =>
-        mergedBase.join(
-          xBands.select(col("band").cast("int").as("band"), col("bucket"),
-            col("keeper").as("xkeeper")),
-          Seq("band", "bucket"), "left")
-          .select(col("band"), col("bucket"),
-            least(col("keeper"), col("xkeeper"), col("ikeeper")).as("keeper"))
-    }
-    // registered in the shared feature memo: the candidate frame feeds
-    // TWO consumers — the bounded candShards collect below and the
-    // returned verify plan — and its lineage (banding, pruned index
-    // read, two shuffles) is the probe's dominant cost; unpersisted,
-    // the whole chain would run twice per probe. Version = the caller's
-    // CORPUS fingerprint (srcVer — the increment feat frame's identity)
-    // PLUS the index's bands mtime: the managed ensureVersionedIndex
-    // path also bakes identity into the indexPath name, but the public
-    // probe*Index API accepts a CUSTOM fixed path, where an in-place
-    // mode("overwrite") rebuild or a corpus regeneration would
-    // otherwise serve this persisted frame stale. The sum, NOT an xor:
-    // cachedFeature's eviction/publish contract is ORDERED (strictly
-    // newer supersedes), and an xor of two timestamps is not monotone —
-    // a rebuild's fresher mix could compare BELOW the stored one and
-    // the stale frame would keep being served (r13 third sweep).
-    // Saturating: a pathological nanoTime-fallback component must not
-    // wrap the sum negative.
-    val idxVer = srcVersion(s, indexPath, "bands")
-    val mixedVer =
-      try Math.addExact(srcVer, idxVer)
-      catch { case _: ArithmeticException => Long.MaxValue }
-    // a regeneration/tier change mints a NEW cache key (the versioned
-    // path and split move), so the superseded entry under the OLD key
-    // could never be matched again — evict this family's other probe
-    // entries first or each regeneration strands one persisted frame
-    // until a harness clear (one live candidate frame per family is
-    // the steady state)
-    val candKey = s"incrcand:${fam.what}:$indexPath:$split$memoSuffix"
-    // the dead-key reclaim is scoped to SIBLINGS of this index location
-    // (same parent dir = superseded versions under the managed base),
-    // not the whole family: evicting family-wide unpersisted every
-    // OTHER live index's candidate frame on each probe, so a session
-    // legitimately probing two indexes of one family (multi-corpus or
-    // multi-tier) recomputed the full candidate chain per call — thrash,
-    // not incorrectness (ADVICE r13). A custom fixed path's in-place
-    // rebuild is superseded via mixedVer's ordered publish instead.
-    // The sibling prefix is derived from the RAW indexPath string, never
-    // from hadoop Path(indexPath).getParent: Path NORMALIZES (scheme
-    // 'file:///a/b' renders as 'file:/a/b', '//' collapses, trailing
-    // slashes drop) while the cache keys embed the raw string — for any
-    // non-normalized locator the normalized prefix matched no key and
-    // the dead-sibling reclaim silently never fired (ADVICE r14).
-    val idxTrim = indexPath.stripSuffix("/")
-    val idxCut = idxTrim.lastIndexOf('/')
-    evictPrefix(
-      if (idxCut >= 0) s"incrcand:${fam.what}:${idxTrim.substring(0, idxCut + 1)}"
-      else s"incrcand:${fam.what}:",
-      spare = _ == candKey)
-    val cand = cachedFeature(s, candKey, mixedVer) {
-      banded.join(merged, Seq("band", "bucket"))
-        .filter(col("keeper") < col(fam.idCol))
-        .groupBy(col(fam.idCol)).agg(min(col("keeper")).as("keeper"))
-    }
-    // prune the keeper side-table read to the shards the elected CORPUS
-    // keepers live in (increment keepers' features come from `feat`,
-    // not the index) — without this the verify join would re-read
-    // features for ~every corpus row, and the probe would be
-    // corpus-scale I/O after all
-    val candShards = IngestIncr.labeledJob(s, s"${fam.what}: cand shard prune")(
-      cand.filter(col("keeper") < lit(split))
-        .select(pmod(col("keeper"), lit(effShards.toLong)).as("cs"))
-        .distinct().collect()).map(_.getLong(0)) // bounded: ≤ shards
-    // sideDdl is a hard family contract (review r19): the old
-    // shard-col-only fallback built a ZERO-column frame after the drop
-    // below whenever candShards was empty, and kRename then failed on
-    // it — silently wrong for exactly the families it claimed to
-    // cover. The case class now has no default, so a family without a
-    // ddl is a compile error, not a mid-probe failure.
-    val sideDdl = fam.sideDdl
-    val idxSide = (if (candShards.isEmpty) emptyOf(sideDdl)
-      else rp(s"$indexPath/${fam.featSubdir}", sideDdl)
-        .filter(col(fam.featShardCol).isin(candShards.map(x => x: Any): _*)))
-      .drop(fam.featShardCol)
-    // stream-state keepers (split ≤ keeper < this increment) verify from
-    // the extra side frame — state-sized, never pruned (it is the
-    // stream's own accumulated survivors, already in memory)
-    val kSide0 = fam.kRename(fam.sideOf(feat))
-      .unionByName(fam.kRename(idxSide))
-    val kSide = extra.fold(kSide0) { case (_, xSide) =>
-      kSide0.unionByName(fam.kRename(fam.sideOf(xSide)))
-    }
-    fam.verify(cand, feat, kSide)
-  }
-
-  /** MinHash family shape. The size(toks) > 0 guard lives in `sideOf`,
+  /** MinHash family. The size(toks) > 0 guard lives in `sideOf`,
     * applied identically at build and probe, so probe ≡ batch equality
     * never depends on the Jaccard threshold happening to discard
-    * empty-k_toks pairs. */
-  private val mhFamily = IncrFamily(
-    what = "probeMinhashIndex",
+    * empty-k_toks pairs. Prefix "mh2" + the KERNEL FINGERPRINT (r19):
+    * the version identity (split, source token, shards) does NOT cover
+    * the banding kernel — r15 replaced the seeded-fmix kernel with the
+    * md5-window family, and a pre-switch index under the old base would
+    * otherwise version-match a post-switch probe and serve bands the
+    * probe's banding can never hit (silent empty dedup). That bump used
+    * to be a hand discipline; [[minhashKernelFp]] now folds the defining
+    * constants into the prefix, so a knob change moves the base
+    * automatically and the old base simply ages out (tmpdir locally;
+    * one dead tree on a shared store, reclaimed by pointing a cleanup
+    * at the old prefix). */
+  private[graft] val minhashIncr = VersionedIndex.IncrFamily(
+    name = "minhash", query = "dd_minhash_incr",
+    kernelPrefix = s"mh2-$minhashKernelFp",
+    srcTable = "documents", srcIdCol = "doc_id",
+    featOf = (s, dir, keep) => minhashFeatOf(T(s, dir).documents.filter(keep)),
     idCol = "doc_id", featSubdir = "toks", featShardCol = "tshard",
     sideDdl = "doc_id BIGINT, toks ARRAY<STRING>, tshard BIGINT",
     bandedOf = bandedOf,
@@ -1570,458 +1259,23 @@ object Similarity {
         feat.select(col("doc_id"), col("toks"))
           .filter(size(col("toks")) > lit(0)), kSide))
 
-  def writeMinhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): Unit =
-    // a direct filtered scan (doc_id pushed to parquet), NOT the
-    // full-corpus cache: ingest reads the corpus slice once, and the
-    // cache serves the build's two write branches
-    writeIncrIndex(s, indexPath, shards, mhFamily,
-      cachedFeature(s, s"dd_minhash_incr:$dir:corpus$split", srcVersion(s, dir, "documents.parquet")) {
-        minhashFeatOf(T(s, dir).documents.filter(col("doc_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment (doc_id >= split) against the
-    * persisted index WITHOUT re-scanning the corpus. The increment is
-    * banded with the shared kernel; the bands-index read is pruned to
-    * the (band, bshard) partitions the increment actually touches
-    * (bounded collect, ≤ 8 × [[minhashIndexShards]] values no matter
-    * the corpus size); per-bucket keepers merge as `least(index keeper,
-    * increment min)` — with append-only ids (every increment id > every
-    * corpus id) that IS the bucket minimum over corpus ∪ increment, so
-    * the output equals the full [[ddMinhash]] recompute restricted to
-    * the increment, a property the equality spec asserts literally.
-    * Verify tokens come from the increment frame plus the index's
-    * keeper side table, the latter read pruned to the `tshard`
-    * partitions the elected corpus keepers occupy (a second bounded
-    * collect over the candidate frame — candidates are ≤ one per
-    * increment doc, so both collects are increment-bounded; the corpus
-    * proper is never read). Both prunings are real when the increment
-    * is small next to the corpus — the steady-state ingest case — and
-    * degrade to full index reads (never corpus reads) for bulk
-    * increments like the test's 20% slice. */
-  def probeMinhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): DataFrame =
-    // increment-only scan (doc_id >= split pushed into the parquet
-    // read): at probe time the corpus proper is never touched — only
-    // the increment rows and the index files. Cached: the frame feeds
-    // banding, the verify side and the candidate-shard collect
-    {
-    val srcVer = srcVersion(s, dir, "documents.parquet")
-    probeIncrIndex(s, indexPath, split, shards, mhFamily,
-      cachedFeature(s, s"dd_minhash_incr:$dir:incr$split", srcVer) {
-        minhashFeatOf(T(s, dir).documents.filter(col("doc_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** [[writeIncrIndex]] over the minhash family with a CALLER-OWNED
-    * feature frame — the composed ingest pipeline ([[IngestIncr]])
-    * builds its index over the pipeline's own survivor population, not
-    * the raw corpus slice, so the population is a parameter while the
-    * banding / election / verify kernels stay this family's single
-    * definitions (the probe≡batch equality rests on that sharing). */
-  private[operators] def writeMinhashIndexOf(s: SparkSession,
-      indexPath: String, shards: Int, feat: DataFrame): Unit =
-    writeIncrIndex(s, indexPath, shards, mhFamily, feat)
-
-  /** [[probeIncrIndex]] over the minhash family with a caller-owned
-    * increment feature frame — the probe half of
-    * [[writeMinhashIndexOf]]. `srcVer` is the caller's corpus
-    * fingerprint (see probeIncrIndex's memo-version contract). */
-  private[operators] def probeMinhashIndexOf(s: SparkSession,
-      indexPath: String, split: Long, shards: Int, feat: DataFrame,
-      srcVer: Long,
-      readPart: (String, String) => DataFrame = null,
-      extra: Option[(DataFrame, DataFrame)] = None,
-      memoSuffix: String = ""): DataFrame =
-    probeIncrIndex(s, indexPath, split, shards, mhFamily, feat, srcVer,
-      readPart, extra, memoSuffix)
-
-  /** Root under which versioned index directories are published.
-    * Defaults to the local tmpdir; a production deploy points it at a
-    * shared `hdfs:`/`s3a:` prefix — every filesystem touch below goes
-    * through the Hadoop [[org.apache.hadoop.fs.FileSystem]] resolved
-    * from this path's scheme, never `java.io.File` (which on a remote
-    * scheme silently reports nothing-exists and would rebuild + leak an
-    * index per query — the bug class the round-6 Bloom-fingerprint fix
-    * caught). JVM-wide DEFAULT only: the per-session Spark conf
-    * `spark.graft.minhash.indexBase` wins when set, so two sessions in
-    * one JVM (a driver session next to a test session) can point at
-    * different bases without racing on a global. */
-  private[graft] var minhashIndexBase: String = sys.props("java.io.tmpdir")
-
-  /** Grace age for reaping: version/staging directories younger than
-    * this survive a reap pass, so a concurrent JVM that resolved an
-    * older (split, mtime) version moments ago — or is mid-build in a
-    * `.build-*` staging dir — doesn't have files deleted out from under
-    * its scan (ADVICE r8). Older-than-grace directories are either dead
-    * versions of a regenerated source tier or staging leaked by a
-    * crashed build; both are reclaimed. JVM-wide DEFAULT; the session
-    * conf `spark.graft.minhash.reapGraceMs` wins when set. SAFE LOWER
-    * BOUND: at least the largest expected single-object copy time on
-    * the index store — quiet-gating ages by newest visible file, and a
-    * live copy stalled on one huge object must never read as quiet. On
-    * non-local schemes the effective window is floored at 5 minutes
-    * (see [[ensureMinhashIndex]]); local/test runs keep the raw conf. */
-  private[graft] var minhashReapGraceMs: Long = 15 * 60 * 1000L
-
-  /** One lock PER INDEX BASE directory, not one global: the publish
-    * loop deliberately polls (up to grace + 30 s) while holding its
-    * lock, and a single shared lock would convoy every other family's
-    * — and every other corpus's — ensure behind one slow cross-JVM
-    * marker wait. Serializing builders per base is the whole invariant;
-    * distinct bases cannot race each other's publishes. The map is
-    * bounded by the number of distinct (family, corpus) bases a JVM
-    * ever touches. */
-  private val idxLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def idxLockFor(base: String): Object =
-    idxLocks.computeIfAbsent(base, _ => new Object)
-
-  /** Default corpus-identity reader: max doc_id of the documents table.
-    * A single-column bounded agg, not the feature cache — warming the
-    * full-corpus frame here would undo the probe's increment-only read. */
-  private def documentsMaxId(s: SparkSession, dir: String): Long = {
-    val maxRow = T(s, dir).documents.agg(max(col("doc_id"))).head()
-    require(!maxRow.isNullAt(0),
-      s"index build: documents corpus at $dir is empty — nothing to index")
-    maxRow.getLong(0)
-  }
-
-  /** The versioned-publish machinery shared by every incremental index
-    * family (MinHash and SimHash today — any future pHash/embedding
-    * tier plugs in the same way): builds `dir`'s corpus-slice index
-    * once and returns (versionPath, split). Split = the last 20% of the
-    * id range is "the increment": ids above it play the newly-ingested
-    * docs, everything below is the already-indexed corpus.
-    *
-    * The index lives in a VERSIONED directory named by (split,
-    * source mtime, shards) — a driver-regenerated source tier changes
-    * the name, invalidating stale indexes the way Bench.ensureSf1's
-    * mtime check does. `build(stagingPath, split, shards)` stages into
-    * a fresh temp dir; publish is directory rename + a `_PUBLISHED`
-    * marker: on rename-atomic filesystems (local, HDFS) a reader can
-    * never see a half-written index, and the marker additionally covers
-    * stores WITHOUT atomic rename — S3's "rename" is a non-atomic
-    * copy+delete, so there a directory can exist mid-copy; readers here
-    * require the marker, which is written strictly after the data is
-    * fully in place, making the publish scale-safe on object stores
-    * too. When two JVMs race (e.g. a Verify run next to a test suite)
-    * the rename loser discards its staging and adopts the winner's
-    * byte-equivalent index; a leftover marker-less version directory (a
-    * publish crashed mid-copy) is reclaimed once quiet and republished.
-    * The base directory name includes a hash of the RAW corpus path
-    * next to the sanitized form, so two distinct corpora whose
-    * sanitized names collide (`/a/b` vs `/a_b`) can never reap or serve
-    * each other's indexes (ADVICE r8).
-    *
-    * `famPrefix` names the base directory (`graft-<famPrefix>-idx-…`);
-    * `confFamily` namespaces the session confs
-    * (`spark.graft.<confFamily>.indexBase`/`.reapGraceMs`/
-    * `.indexShards`), each falling back to the `spark.graft.minhash.*`
-    * name — the subsystem-wide default under its historical name — then
-    * to the JVM-wide default vars; `parts` are the layout subdirs that
-    * must exist before the marker may bless a version. */
-  private[graft] def ensureVersionedIndex(
-      s: SparkSession, dir: String, famPrefix: String, confFamily: String,
-      parts: Seq[String], build: (String, Long, Int) => Unit,
-      srcFile: String = "documents.parquet",
-      maxIdOf: (SparkSession, String) => Long = documentsMaxId): (String, Long) =
-    {
-      import org.apache.hadoop.fs.Path
-      def conf(key: String, dflt: String): String =
-        s.conf.getOption(s"spark.graft.$confFamily.$key")
-          .orElse(s.conf.getOption(s"spark.graft.minhash.$key"))
-          .getOrElse(dflt)
-      val maxId = maxIdOf(s, dir)
-      val split = maxId - maxId / 5
-      val hconf = s.sparkContext.hadoopConfiguration
-      // Source-version token, the second component of the version name
-      // (the split — max id — is the first). Filesystem store: the
-      // source's max mtime, so a driver-regenerated tier changes the
-      // name. A store with NO mtime surface (the `jdbc:` table-set
-      // locator): an EXPLICIT token — the corpus row count, one pushed
-      // count(*) per ensure. (split, count) together pin every identity
-      // change an append-only ingest corpus makes: appends move both,
-      // deletes move the count; a same-cardinality in-place mutation is
-      // outside the contract, the same granularity limit a
-      // timestamp-coalescing filesystem has. The staleness contract
-      // either way: a token mismatch mints a DIFFERENT version
-      // directory, so a stale index can never version-match a fresher
-      // corpus' probe and silently serve bands the corpus no longer
-      // implies — and the token is monotone under append-only growth,
-      // which the reap pass's current-or-newer ordering relies on.
-      val srcMtime: Long =
-        if (dir.startsWith("jdbc:"))
-          T(s, dir).byName(srcFile.stripSuffix(".parquet")).count()
-        else {
-          val src = new Path(s"$dir/$srcFile")
-          val srcFs = src.getFileSystem(hconf)
-          val srcSt = srcFs.getFileStatus(src) // loud FileNotFound on a bad dir
-          if (srcSt.isDirectory)
-            (srcSt.getModificationTime +:
-              srcFs.listStatus(src).map(_.getModificationTime).toSeq).max
-          else srcSt.getModificationTime
-        }
-      val dirHash = // collision-proof component alongside the sanitized name
-        f"${scala.util.hashing.MurmurHash3.stringHash(dir) & 0xffffffffL}%08x"
-      // session conf wins over the JVM-wide default vars: "where do the
-      // 100 TB indexes live" is deployment config, and two sessions in
-      // one JVM may legitimately differ
-      val idxBase = conf("indexBase", minhashIndexBase)
-      val confGraceMs = conf("reapGraceMs", minhashReapGraceMs.toString).toLong
-      val shards = confShards(s, confFamily)
-      val base = new Path(idxBase,
-        s"graft-$famPrefix-idx-" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "-" + dirHash)
-      val fs = base.getFileSystem(hconf)
-      // Quiet-gating judges liveness by newest-visible-file age, which on
-      // an OBJECT STORE can under-read a live cross-JVM copy: one huge
-      // object uploading for longer than the grace window leaves the dir
-      // looking quiet, and reaping it then interleaves two publishers'
-      // part-files — the corruption the gate exists to prevent. So on
-      // non-rename-atomic-posture schemes (anything but file:) the
-      // effective window is floored at 5 minutes regardless of how low a
-      // deployment sets spark.graft.minhash.reapGraceMs; the conf's safe
-      // lower bound is the largest expected single-object copy time.
-      // Local runs (tests) keep the raw conf — rename there is atomic and
-      // the husk/racer specs rely on sub-second windows.
-      val graceMs =
-        if (fs.getScheme == "file") confGraceMs
-        else math.max(confGraceMs, 5 * 60 * 1000L)
-      // shard count is part of the version identity: a layout built
-      // under one shard setting must never serve a probe pruning under
-      // another (the pmod assignments would disagree silently). The
-      // tier prefix is shared with the reap pass's sibling-spare check
-      // below so the two can never drift apart.
-      val tierPrefix = s"v$split-$srcMtime-"
-      val ver = new Path(base, tierPrefix + s"s$shards")
-      val marker = new Path(ver, "_PUBLISHED")
-      // fast path outside the lock (published is the steady state);
-      // re-checked under the base's lock before building
-      if (!fs.exists(marker)) idxLockFor(base.toString).synchronized {
-        if (!fs.exists(marker)) {
-        fs.mkdirs(base)
-        // var: the photo-finish unwind below may relocate the build to a
-        // fresh staging name when the original cannot be renamed back
-        var staging = new Path(base,
-          ".build-" + java.util.UUID.randomUUID().toString)
-        build(staging.toString, split, shards)
-        def bless(): Unit = {
-          // the marker is the read gate — never bless a layout the probe
-          // cannot serve (belt over the nesting unwind in tryPublish)
-          require(parts.forall(p => fs.exists(new Path(ver, p))),
-            s"$confFamily index publish incomplete at $ver: " +
-              s"${parts.mkString("/")} missing")
-          fs.create(marker, true).close()
-        }
-        // Hadoop rename is NOT rename-if-absent: given an EXISTING
-        // destination directory, HDFS moves the source INTO it and
-        // RawLocalFileSystem's copy fallback nests it the same way —
-        // both report success. An unguarded rename against a ver created
-        // by a racing publisher (or a crashed publish's marker-less
-        // husk) would therefore "succeed" by leaking this build nested
-        // at ver/.build-*, and a husk could then be marker-blessed with
-        // incomplete top-level data. So: attempt the rename only when
-        // ver is absent, and detect the photo-finish case (ver appeared
-        // inside the check→rename window, nesting us) by looking for our
-        // own staging name under ver — unwound LOSSLESSLY back to
-        // staging, so a later reclaim can still publish this build.
-        def tryPublish(): Boolean =
-          !fs.exists(ver) && fs.rename(staging, ver) && {
-            val nested = new Path(ver, staging.getName)
-            !fs.exists(nested) || {
-              // unwind LOSSLESSLY: `nested` IS this JVM's whole build. A
-              // transiently failed unwind rename must not fall through to
-              // delete (that destroys a corpus-scale build and leaves the
-              // reclaim loop retrying against a staging dir that no longer
-              // exists) — retry to a FRESH .build-* name, and if the build
-              // is truly unrecoverable fail NOW with the race diagnosis.
-              val unwound = fs.rename(nested, staging) || {
-                val fresh = new Path(base,
-                  ".build-" + java.util.UUID.randomUUID().toString)
-                fs.rename(nested, fresh) && { staging = fresh; true }
-              }
-              require(unwound,
-                s"$confFamily index publish: build nested under $ver by a " +
-                  "racing publisher and could not be unwound to staging — " +
-                  "lost to a nesting race")
-              false
-            }
-          }
-        // Age of the newest FILE under p (recursively), or the dir's own
-        // mtime if greater; -1 ⇒ p is gone, 0 ⇒ nothing datable. File
-        // mtimes are the only reliable ager: object-store pseudo-dirs
-        // report mtime 0, and a local/HDFS dir's mtime tracks only its
-        // DIRECT children — a deep layout (bands/band=N/bshard=M/part-*)
-        // keeps gaining young files levels below a stale top. Only rare
-        // contended/reap paths pay the recursive listing.
-        def newestIn(p: Path): Long =
-          try {
-            var m = fs.getFileStatus(p).getModificationTime
-            val it = fs.listFiles(p, true)
-            while (it.hasNext) m = math.max(m, it.next().getModificationTime)
-            m
-          } catch { case _: java.io.FileNotFoundException => -1L }
-        // Publish-or-adopt loop. Husk-vs-LIVE discrimination: on a
-        // non-atomic store (S3) a racing publisher's "rename" is a long
-        // client-side copy — ver can sit marker-less for MINUTES while
-        // very much alive, and deleting it then would interleave two
-        // publishers' distinct part-files in one directory, corrupt and
-        // marker-blessed by whichever finishes last. A marker-less ver
-        // is a reclaimable husk only once it has gone QUIET (newest file
-        // older than the grace window; a file-less shell must stay empty
-        // for 5 s). Until then we poll for the racer's marker, bounded
-        // by grace + 30 s — a fresh husk ages into quiet before that
-        // deadline, so the timeout only fires on clock skew (future
-        // mtimes) or a pathologically slow live copy, and then we fail
-        // LOUDLY rather than delete data we cannot prove dead. On
-        // atomic-rename stores the racer's rename→marker window is
-        // milliseconds, so the poll exits almost immediately.
-        //
-        // INVARIANT: this polls while holding this BASE's lock
-        // ([[idxLockFor]]) — correct, not a hazard to "fix". The lock
-        // is per-JVM, per-base, and serializes only this JVM's builders
-        // of THIS index; the publisher being waited on is a DIFFERENT
-        // JVM (a Verify run next to a test suite), which does not
-        // contend on this lock, and other families/corpora hold other
-        // locks. Releasing it here would let a second local builder
-        // start a redundant full build behind the wait.
-        val deadline = System.currentTimeMillis() + graceMs + 30000L
-        var emptySince = 0L
-        var reclaims = 0
-        var done = false
-        while (!done) {
-          if (tryPublish()) { bless(); done = true }
-          else if (fs.exists(marker)) { fs.delete(staging, true); done = true }
-          else {
-            val now = System.currentTimeMillis()
-            val quiet = newestIn(ver) match {
-              case -1L => emptySince = 0L; true // ver gone — retry publish
-              case 0L =>
-                if (emptySince == 0L) { emptySince = now; false }
-                else now - emptySince > 5000L
-              case m => emptySince = 0L; now - m > graceMs
-            }
-            if (quiet) {
-              reclaims += 1
-              require(reclaims <= 3,
-                s"$confFamily index publish failed after ${reclaims - 1} reclaim " +
-                  s"attempts: rename into $ver keeps failing or the dir " +
-                  "keeps reappearing marker-less (staging " +
-                  s"${if (fs.exists(staging)) "intact" else "lost to a nesting race"})")
-              fs.delete(ver, true) // quiet husk — reclaim, loop republishes
-              Thread.sleep(500L) // let a transient rename failure clear
-            } else {
-              require(now < deadline,
-                s"$confFamily index publish timed out after ${graceMs + 30000L} ms " +
-                  s"waiting on marker-less $ver (a publisher may be live, or " +
-                  "the store reports future mtimes) — retry, raise " +
-                  "spark.graft.minhash.reapGraceMs, or remove the dir manually")
-              Thread.sleep(500L)
-            }
-          }
-        }
-        // stale versions (older source tiers) and staging leaked by
-        // crashed builds are dead — reap them so the base doesn't
-        // accumulate one full index copy per regeneration/crash.
-        // Age-gated on the same newest-file metric as the husk loop
-        // (never on the dir's own depth-1 view alone): young content may
-        // still be scanned (or written) by a concurrent JVM, and an age
-        // of 0/unknown is never reaped.
-        val now = System.currentTimeMillis()
-        fs.listStatus(base)
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isDirectory && (n.startsWith("v") || n.startsWith(".build-"))
-          }
-          .filter { st =>
-            // a PUBLISHED shard layout of the CURRENT tier — or of a
-            // NEWER one — is potentially live and never reaped: another
-            // session with a different indexShards conf probes its own
-            // current-tier sibling, and a builder holding a STALE
-            // srcMtime whose corpus-scale build outlasted the grace
-            // window would otherwise delete the newer tier's live index
-            // out from under the sessions probing it (a published
-            // version goes mtime-quiet the moment it lands — reads
-            // never touch it, so age proves nothing for published
-            // dirs). The tier ordering comes from the version name's
-            // own mtime component. Marker-less siblings of ANY tier are
-            // crashed publishes and age out like any husk (else each
-            // abandoned shard setting would pin a corpus-scale copy).
-            val publishedCurrentOrNewer = {
-              val n = st.getPath.getName
-              fs.exists(new Path(st.getPath, "_PUBLISHED")) && (
-                n.startsWith(tierPrefix) ||
-                  "^v\\d+-(\\d+)-s\\d{1,9}$".r.findFirstMatchIn(n)
-                    // Try-guarded like Bench's record-listing sort: an
-                    // mtime component past Long range (a hostile or
-                    // corrupted sibling name) must read as
-                    // current-or-newer — never reaped, never a
-                    // NumberFormatException aborting the caller's own
-                    // build/probe (ADVICE r13)
-                    .exists(m => scala.util.Try(m.group(1).toLong)
-                      .map(_ >= srcMtime).getOrElse(true)))
-            }
-            // LIST-cost short-circuit: newestIn is a full recursive
-            // listing per sibling, a large object-store LIST bill inside
-            // the base's lock on every rebuild. A dir young at depth 1 can only
-            // get YOUNGER with children, so only depth-1-old candidates
-            // (and mtime-0 pseudo-dirs, age unknown) pay the recursion.
-            !publishedCurrentOrNewer &&
-              now - st.getModificationTime > graceMs && {
-                val eff = newestIn(st.getPath)
-                eff > 0L && now - eff > graceMs
-              }
-          }
-          .foreach(st => fs.delete(st.getPath, true))
-      } }
-      (ver.toString, split)
-    }
-
-  /** MinHash instantiation of [[ensureVersionedIndex]]: builds/adopts
-    * the (bands, toks) layout for `dir`'s corpus slice and returns
-    * (versionPath, split). */
-  def ensureMinhashIndex(s: SparkSession, dir: String): (String, Long) =
-    // famPrefix "mh2" + the KERNEL FINGERPRINT (r19): the version
-    // identity (split, src mtime, shards) does NOT cover the banding
-    // kernel — r15 replaced the seeded-fmix kernel with the md5-window
-    // family, and a pre-switch index under the old base would otherwise
-    // version-match a post-switch probe and serve bands the probe's
-    // banding can never hit (silent empty dedup). That bump used to be
-    // a hand discipline; [[minhashKernelFp]] now folds the defining
-    // constants into the prefix, so a knob change moves the base
-    // automatically and the old base simply ages out (tmpdir locally;
-    // one dead tree on a shared store, reclaimed by pointing a cleanup
-    // at the old prefix).
-    ensureVersionedIndex(s, dir, s"mh2-$minhashKernelFp", "minhash",
-      Seq("bands", "toks"),
-      (staging, split, shards) =>
-        writeMinhashIndex(s, dir, staging, split, shards))
-
   /** dd_minhash_incr: INCREMENTAL near-dup dedup — the missing 100 TB
     * ingest pattern. Every other dedup query re-scans the whole corpus;
     * a production ingest pipeline dedups each new increment against a
-    * PERSISTED index of what it already holds ([[writeMinhashIndex]] /
-    * [[probeMinhashIndex]]). Here the index covers doc_id < split (built
-    * once, reused across runs) and the query dedups the remaining ids
-    * against it; output = [[ddMinhash]] over the full corpus restricted
-    * to the increment (exact equality, spec-asserted); probe-time reads
-    * are the increment slice (doc_id filter pushed to parquet) plus the
-    * pruned index partitions — never the corpus proper. ORACLE-EXACT
-    * (r15, the mm_phash_incr treatment): the md5-window banding is
-    * SQL-expressible and the split is `max id − max id / 5`, so DuckDB
-    * recomputes the FULL election from the same text and restricts it
-    * to the increment — the incremental machinery is checked against an
-    * independent engine, on top of the probe≡batch equality spec and
-    * the PartitionFilters plan lock. */
-  val ddMinhashIncr = QueryDef(
-    "dd_minhash_incr",
-    (s, dir) => {
-      val (idx, split) = ensureMinhashIndex(s, dir)
-      // no shards argument: the probe reads the layout's shard count
-      // from the returned version path's -sN suffix, so the pairing is
-      // structural (immune to a conf change between ensure and probe)
-      probeMinhashIndex(s, dir, idx, split)
-    },
+    * PERSISTED index of what it already holds ([[VersionedIndex.write]] /
+    * [[VersionedIndex.probe]]). Here the index covers doc_id < split
+    * (built once, reused across runs) and the query dedups the remaining
+    * ids against it; output = [[ddMinhash]] over the full corpus
+    * restricted to the increment (exact equality, spec-asserted);
+    * probe-time reads are the increment slice (doc_id filter pushed to
+    * parquet) plus the pruned index partitions — never the corpus
+    * proper. ORACLE-EXACT (r15, the mm_phash_incr treatment): the
+    * md5-window banding is SQL-expressible and the split is
+    * `max id − max id / 5`, so DuckDB recomputes the FULL election from
+    * the same text and restricts it to the increment — the incremental
+    * machinery is checked against an independent engine, on top of the
+    * probe≡batch equality spec and the PartitionFilters plan lock. */
+  val ddMinhashIncr = VersionedIndex.incrQuery(minhashIncr,
     oracle = Some(s"""
       WITH sp AS (
         SELECT MAX(doc_id) - MAX(doc_id) // 5 AS split FROM documents),
@@ -2030,9 +1284,17 @@ object Similarity {
       WHERE doc_id >= (SELECT split FROM sp)
       ORDER BY doc_id"""))
 
-  /** SimHash family shape for [[writeIncrIndex]]/[[probeIncrIndex]]. */
-  private val shFamily = IncrFamily(
-    what = "probeSimhashIndex",
+  /** SimHash family: the corpus's (band, bucket, keeper) frame plus a
+    * (doc_id, simhash) side table for exactly the bucket keepers (the
+    * hamming verify needs no other corpus fingerprints), partitioned by
+    * sshard. "sh2", not "sh": the r15 md5 token hash changed the
+    * fingerprint kernel — the same prefix rule as [[minhashIncr]]'s
+    * mh2, automated by the kernel fingerprint (r19). */
+  private[graft] val simhashIncr = VersionedIndex.IncrFamily(
+    name = "simhash", query = "dd_simhash_incr",
+    kernelPrefix = s"sh2-$simhashKernelFp",
+    srcTable = "documents", srcIdCol = "doc_id",
+    featOf = (s, dir, keep) => simhashFeatOf(T(s, dir).documents.filter(keep)),
     idCol = "doc_id", featSubdir = "sims", featShardCol = "sshard",
     sideDdl = "doc_id BIGINT, simhash BIGINT, sshard BIGINT",
     bandedOf = simhashBandedOf,
@@ -2043,73 +1305,14 @@ object Similarity {
       hammingVerify(cand,
         feat.select(col("doc_id"), col("simhash").as("d_sim")), kSide))
 
-  /** Ingest-time half of INCREMENTAL SimHash dedup — the second
-    * instantiation of the versioned-index pattern ([[writeMinhashIndex]]
-    * is the first): persists the corpus's (band, bucket, keeper) frame
-    * partitioned by (band, bshard), plus a (doc_id, simhash) side table
-    * for exactly the docs that are bucket keepers (only they can be
-    * elected by a probe — the hamming verify needs no other corpus
-    * fingerprints), partitioned by sshard. The corpus is scanned ONCE
-    * here, at ingest. */
-  def writeSimhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): Unit =
-    writeIncrIndex(s, indexPath, shards, shFamily,
-      cachedFeature(s, s"dd_simhash_incr:$dir:corpus$split", srcVersion(s, dir, "documents.parquet")) {
-        simhashFeatOf(T(s, dir).documents.filter(col("doc_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment (doc_id >= split) against
-    * the persisted simhash index WITHOUT re-scanning the corpus — the
-    * same probe discipline as [[probeMinhashIndex]]: the bands read is
-    * pruned to the (band, bshard) partitions the increment's own
-    * banding touches (bounded collect, ≤ 8 × shards values); per-bucket
-    * keepers merge as `least(index keeper, increment min)`, which with
-    * append-only ids IS the bucket minimum over corpus ∪ increment, so
-    * the output equals the full [[ddSimhash]] recompute restricted to
-    * the increment (equality spec-asserted bit for bit); verify
-    * fingerprints come from the increment frame plus the index's keeper
-    * side table, the latter pruned to the sshard partitions the elected
-    * corpus keepers occupy. */
-  def probeSimhashIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): DataFrame =
-    {
-    val srcVer = srcVersion(s, dir, "documents.parquet")
-    probeIncrIndex(s, indexPath, split, shards, shFamily,
-      cachedFeature(s, s"dd_simhash_incr:$dir:incr$split", srcVer) {
-        simhashFeatOf(T(s, dir).documents.filter(col("doc_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** SimHash instantiation of [[ensureVersionedIndex]]: builds/adopts
-    * the (bands, sims) layout for `dir`'s corpus slice and returns
-    * (versionPath, split). */
-  def ensureSimhashIndex(s: SparkSession, dir: String): (String, Long) =
-    // "sh2", not "sh": the r15 md5 token hash changed the fingerprint
-    // kernel, and the version identity does not cover it — same
-    // prefix-bump rule as ensureMinhashIndex's mh2 — now automated: the
-    // kernel fingerprint is folded into the prefix (r19)
-    ensureVersionedIndex(s, dir, s"sh2-$simhashKernelFp", "simhash",
-      Seq("bands", "sims"),
-      (staging, split, shards) =>
-        writeSimhashIndex(s, dir, staging, split, shards))
-
   /** dd_simhash_incr: incremental SimHash dedup — [[ddMinhashIncr]]'s
-    * ingest pattern applied to the simhash family, proving the
-    * versioned-publish/probe machinery is generic across index tiers.
-    * Output = [[ddSimhash]] over the full corpus restricted to the
-    * increment (exact equality, spec-asserted); probe-time reads are
-    * the increment slice plus pruned index partitions — never the
-    * corpus proper. ORACLE-EXACT (r15): the md5 token hash made the
+    * ingest pattern applied to the simhash family. Output = [[ddSimhash]]
+    * over the full corpus restricted to the increment (exact equality,
+    * spec-asserted). ORACLE-EXACT (r15): the md5 token hash made the
     * fingerprint SQL-derivable, so DuckDB recomputes the full election
     * restricted to the increment (`max id − max id // 5`), on top of
     * the probe≡batch equality spec + the PartitionFilters plan lock. */
-  val ddSimhashIncr = QueryDef(
-    "dd_simhash_incr",
-    (s, dir) => {
-      val (idx, split) = ensureSimhashIndex(s, dir)
-      // no shards argument: the path's -sN suffix is authoritative
-      probeSimhashIndex(s, dir, idx, split)
-    },
+  val ddSimhashIncr = VersionedIndex.incrQuery(simhashIncr,
     oracle = Some(s"""
       WITH sp AS (
         SELECT MAX(doc_id) - MAX(doc_id) // 5 AS split FROM documents),
@@ -2118,9 +1321,16 @@ object Similarity {
       WHERE doc_id >= (SELECT split FROM sp)
       ORDER BY doc_id"""))
 
-  /** Embedding family shape for [[writeIncrIndex]]/[[probeIncrIndex]]. */
-  private val embFamily = IncrFamily(
-    what = "probeEmbeddingIndex",
+  /** Embedding family, over the EMBEDDINGS table (versioned by its max
+    * vec_id and mtime): the corpus vectors' (band, bucket, keeper) frame
+    * plus a (vec_id, v, norm) side table for exactly the bucket keepers
+    * (the cosine verify needs no other corpus vectors), partitioned by
+    * vshard. */
+  private[graft] val embeddingIncr = VersionedIndex.IncrFamily(
+    name = "embedding", query = "dd_embedding_incr",
+    kernelPrefix = s"emb-$embKernelFp",
+    srcTable = "embeddings", srcIdCol = "vec_id",
+    featOf = (s, dir, keep) => embFeatOf(T(s, dir).embeddings.filter(keep)),
     idCol = "vec_id", featSubdir = "vecs", featShardCol = "vshard",
     sideDdl = "vec_id BIGINT, v ARRAY<FLOAT>, norm DOUBLE, vshard BIGINT",
     bandedOf = embBandedOf,
@@ -2131,67 +1341,12 @@ object Similarity {
       cosineVerify(cand,
         feat.select(col("vec_id"), col("v"), col("norm")), kSide))
 
-  /** Ingest-time half of INCREMENTAL embedding dedup — the fourth
-    * [[ensureVersionedIndex]] instantiation, over the EMBEDDINGS table
-    * (the generic machinery's first non-documents corpus): persists the
-    * corpus vectors' (band, bucket, keeper) frame partitioned by
-    * (band, bshard), plus a (vec_id, v, norm) side table for exactly
-    * the bucket keepers (only they can be elected by a probe — the
-    * cosine verify needs no other corpus vectors), partitioned by
-    * vshard. The corpus is banded ONCE here, at ingest. */
-  def writeEmbeddingIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): Unit =
-    writeIncrIndex(s, indexPath, shards, embFamily,
-      cachedFeature(s, s"dd_embedding_incr:$dir:corpus$split", srcVersion(s, dir, "embeddings.parquet")) {
-        embFeatOf(T(s, dir).embeddings.filter(col("vec_id") < lit(split)))
-      })
-
-  /** Query-time half: dedups the increment's vectors (vec_id >= split)
-    * against the persisted index WITHOUT re-banding the corpus — the
-    * same probe discipline as the other three families: pruned bands
-    * read (bounded collect), least-merge of per-bucket keepers (with
-    * append-only ids that IS the bucket minimum over corpus ∪
-    * increment), pruned keeper-vector read, exact-cosine verify through
-    * the shared tail. Output equals the full [[ddEmbedding]] recompute
-    * restricted to the increment (bit-equal, spec-asserted). */
-  def probeEmbeddingIndex(s: SparkSession, dir: String, indexPath: String,
-      split: Long, shards: Int = minhashIndexShards): DataFrame =
-    {
-    val srcVer = srcVersion(s, dir, "embeddings.parquet")
-    probeIncrIndex(s, indexPath, split, shards, embFamily,
-      cachedFeature(s, s"dd_embedding_incr:$dir:incr$split", srcVer) {
-        embFeatOf(T(s, dir).embeddings.filter(col("vec_id") >= lit(split)))
-      }, srcVer)
-  }
-
-  /** Embedding instantiation of [[ensureVersionedIndex]] — versioned by
-    * the EMBEDDINGS table's max id and mtime. */
-  def ensureEmbeddingIndex(s: SparkSession, dir: String): (String, Long) =
-    ensureVersionedIndex(s, dir, s"emb-$embKernelFp", "embedding",
-      Seq("bands", "vecs"),
-      (staging, split, shards) =>
-        writeEmbeddingIndex(s, dir, staging, split, shards),
-      srcFile = "embeddings.parquet",
-      maxIdOf = (ss, d) => {
-        val r = T(ss, d).embeddings.agg(max(col("vec_id"))).head()
-        require(!r.isNullAt(0),
-          s"embedding index: embeddings corpus at $d is empty — nothing to index")
-        r.getLong(0)
-      })
-
   /** dd_embedding_incr: incremental embedding dedup — the fourth index
     * family, closing the last modality that still re-scanned its corpus
     * at ingest (text minhash/simhash and images already probe persisted
     * indexes). Rows-only check (float-dependent cosine); pinned by the
     * equality spec + the shared PartitionFilters plan lock. */
-  val ddEmbeddingIncr = QueryDef(
-    "dd_embedding_incr",
-    (s, dir) => {
-      val (idx, split) = ensureEmbeddingIndex(s, dir)
-      // no shards argument: the path's -sN suffix is authoritative
-      probeEmbeddingIndex(s, dir, idx, split)
-    },
-    oracle = None)
+  val ddEmbeddingIncr = VersionedIndex.incrQuery(embeddingIncr, oracle = None)
 
   val defs: Seq[QueryDef] = Seq(simTopkDot, simTopkCosine, simTopkCosineQ,
     simLshTopk, simIvfTopk, ddMinhash, ddMinhashCc, ddMinhashIncr,

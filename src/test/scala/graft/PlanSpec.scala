@@ -218,8 +218,8 @@ class PlanSpec extends SparkSpec {
     assertIncrProbePlan(plan("dd_embedding_incr"), "vshard", idCol = "vec_id")
   }
 
-  /** The incremental-probe plan contract every ensureVersionedIndex
-    * instantiation must carry: pruned bands read, pruned
+  /** The incremental-probe plan contract every VersionedIndex family
+    * must carry: pruned bands read, pruned
     * keeper-feature read, pushed increment id filter. */
   private def assertIncrProbePlan(p: String, featShard: String,
       idCol: String = "doc_id"): Unit = {

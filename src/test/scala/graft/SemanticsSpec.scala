@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.VersionedIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 
@@ -203,7 +204,7 @@ class SemanticsSpec extends SparkSpec {
     // stored for the corpus) ∪ (the probe's rows) must equal one batch
     // dd_minhash over corpus ∪ increment — bit for bit, not just counts
     val full = Similarity.ddMinhash.run(spark, sf001).collect().toSeq
-    val (_, split) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (_, split) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     val probe = Similarity.ddMinhashIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("doc_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no dup rows")
@@ -362,7 +363,7 @@ class SemanticsSpec extends SparkSpec {
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
-      val (_, split) = IngestIncr.ensurePipeIngestIndex(spark, dir)
+      val (idx, split) = IngestIncr.ensurePipeIngestIndex(spark, dir)
       assert(split === 40L, s"fixture split moved: $split")
       val got = IngestIncr.pipeIngestIncr.run(spark, dir).collect()
         .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict")).toSeq
@@ -371,6 +372,15 @@ class SemanticsSpec extends SparkSpec {
         46L -> "exact_dup", 47L -> "near_dup", 48L -> "admitted",
         49L -> "admitted")
       assert(got === want)
+      // the fused verdict assembly's contract: the exact_dup /
+      // contaminated / near_dup marker sets are pairwise disjoint, one
+      // row per doc_id — on a fixture where all three are populated
+      val marks = IngestIncr.probePipeIngest(spark, dir, idx, split).marks
+        .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("mk")).toSeq
+      assert(marks.map(_._1).distinct.size === marks.size,
+        s"a doc_id carries two admission marks: ${marks.sorted}")
+      assert(marks.map(_._2).toSet === Set("exact_dup", "contaminated", "near_dup"),
+        s"vacuous: a marker set is empty: ${marks.sorted}")
       // and the batch twin agrees on the same fixture (the equality
       // contract on a corpus where every rule is live)
       val batch = IngestIncr.batchVerdictsFor(spark, dir, split).collect()
@@ -426,7 +436,7 @@ class SemanticsSpec extends SparkSpec {
     // rows must equal one batch dd_simhash over corpus ∪ increment,
     // restricted to the increment — bit for bit (hamming + is_dup too)
     val full = Similarity.ddSimhash.run(spark, sf001).collect().toSeq
-    val (_, split) = Similarity.ensureSimhashIndex(spark, sf001)
+    val (_, split) = VersionedIndex.ensure(Similarity.simhashIncr, spark, sf001)
     val probe = Similarity.ddSimhashIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("doc_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
@@ -445,7 +455,7 @@ class SemanticsSpec extends SparkSpec {
     // third instantiation of the incremental contract, image modality;
     // this one is additionally oracle-checked (portable integer hash)
     val full = Multimodal.mmPhashDedup.run(spark, sf001).collect().toSeq
-    val (_, split) = Multimodal.ensurePhashIndex(spark, sf001)
+    val (_, split) = VersionedIndex.ensure(Multimodal.phashIncr, spark, sf001)
     val probe = Multimodal.mmPhashIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("media_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
@@ -465,7 +475,7 @@ class SemanticsSpec extends SparkSpec {
     // fourth instantiation, embeddings modality — the generic ensure's
     // first non-documents corpus (versioned by embeddings max id+mtime)
     val full = Similarity.ddEmbedding.run(spark, sf001).collect().toSeq
-    val (_, split) = Similarity.ensureEmbeddingIndex(spark, sf001)
+    val (_, split) = VersionedIndex.ensure(Similarity.embeddingIncr, spark, sf001)
     val probe = Similarity.ddEmbeddingIncr.run(spark, sf001).collect().toSeq
     assert(probe === full.filter(_.getAs[Long]("vec_id") >= split))
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
@@ -480,10 +490,10 @@ class SemanticsSpec extends SparkSpec {
     import graft.operators.Similarity
     // same source, same split → the SAME published version directory,
     // untouched (ingest must not re-run on every probe)
-    val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, split1) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     val ver = new java.io.File(p1)
     val m1 = ver.lastModified
-    val (p2, split2) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p2, split2) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     assert((p2, split2) === ((p1, split1)))
     assert(ver.lastModified === m1, "second ensure must reuse, not rebuild")
     // reaping is age-gated: a stale VERSION (older source tier) and a
@@ -522,7 +532,7 @@ class SemanticsSpec extends SparkSpec {
     // shard-count) list and reap — one assertion failure here must not
     // cascade into misleading failures downstream (r13 test sweep)
     try {
-      val (p3, _) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p3, _) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
       assert(p3 === p1, "same (split, mtime) must republish under the same version")
       assert(ver.isDirectory, "rebuild must publish the version directory")
       assert(new java.io.File(ver, "_PUBLISHED").isFile,
@@ -576,7 +586,7 @@ class SemanticsSpec extends SparkSpec {
     // holding (possibly incomplete) data with no marker. Hadoop rename
     // into an existing dir NESTS the source (it does not fail), so an
     // unguarded publish would bless the husk with a stray .build-* inside
-    val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, split1) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     val ver = new java.io.File(p1)
     assert(new java.io.File(ver, "_PUBLISHED").delete())
     deleteAll(new java.io.File(ver, "toks")) // structurally incomplete husk
@@ -586,7 +596,7 @@ class SemanticsSpec extends SparkSpec {
     // mid-flight) — shrink the window so the test pays ~2 s, not 15 min
     spark.conf.set("spark.graft.minhash.reapGraceMs", "1500")
     val (p2, split2) =
-      try Similarity.ensureMinhashIndex(spark, sf001)
+      try VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
       finally spark.conf.unset("spark.graft.minhash.reapGraceMs")
     assert((p2, split2) === ((p1, split1)))
     assert(new java.io.File(ver, "_PUBLISHED").isFile)
@@ -596,7 +606,7 @@ class SemanticsSpec extends SparkSpec {
       "husk remnants must not survive into the republished version")
     assert(!ver.listFiles.exists(_.getName.startsWith(".build-")),
       "no staging dir may end up nested under the published version")
-    val probed = Similarity.probeMinhashIndex(spark, sf001, p2, split2)
+    val probed = VersionedIndex.probe(Similarity.minhashIncr, spark, sf001, p2, split2)
     assert(probed.collect().nonEmpty, "republished index must serve the probe")
   }
 
@@ -606,7 +616,7 @@ class SemanticsSpec extends SparkSpec {
     // client-side copy, so ver exists marker-less with FRESH files. The
     // local publish must wait and adopt once the marker lands — deleting
     // the dir mid-copy would interleave two publishers' part-files
-    val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, split1) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     val ver = new java.io.File(p1)
     assert(new java.io.File(ver, "_PUBLISHED").delete())
     val sentinel = new java.io.File(ver, "racer-part-file.parquet")
@@ -617,7 +627,7 @@ class SemanticsSpec extends SparkSpec {
     })
     racer.start()
     try {
-      val (p2, split2) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p2, split2) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
       assert((p2, split2) === ((p1, split1)))
       assert(sentinel.exists,
         "a live publisher's files must never be deleted mid-copy — adopt, don't reclaim")
@@ -641,7 +651,7 @@ class SemanticsSpec extends SparkSpec {
     // under one setting can never serve pruning under another.
     val defaultProbe = Similarity.ddMinhashIncr.run(spark, sf001)
       .collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
-    val (pDef, _) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (pDef, _) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     spark.conf.set("spark.graft.minhash.indexShards", "8")
     // grace 1 ms makes EVERYTHING reapable — proving the sibling
     // current-tier layout below survives by name, not by youth
@@ -656,15 +666,15 @@ class SemanticsSpec extends SparkSpec {
     // of this suite published, so the ensure below actually rebuilds
     deleteAll(new java.io.File(pDef.stripSuffix("s32") + "s8"))
     try {
-      val (p8, split8) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p8, split8) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
       assert(p8.endsWith("-s8"), s"shard count must version the index, got $p8")
       assert(new java.io.File(pDef).isDirectory,
         "a PUBLISHED sibling shard layout of the CURRENT tier may be live in another session — reap must spare it")
       assert(!huskSibling.exists,
         "a marker-less quiet sibling is a crashed publish — reap must reclaim it")
-      // no shards argument on purpose: the path's -sN suffix is
-      // authoritative, so a default/wrong argument cannot mis-prune
-      val probed = Similarity.probeMinhashIndex(spark, sf001, p8, split8)
+      // the probe reads the layout's shard count from the path's -sN
+      // suffix, so it prunes with 8 here
+      val probed = VersionedIndex.probe(Similarity.minhashIncr, spark, sf001, p8, split8)
         .collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
       assert(probed === defaultProbe,
         "an 8-shard index must yield the identical probe result")
@@ -678,15 +688,22 @@ class SemanticsSpec extends SparkSpec {
     }
   }
 
-  test("minhash index: an explicit shards argument conflicting with the path suffix fails loudly") {
+  test("minhash index: probing a path that is not a published version name fails loudly") {
     import graft.operators.Similarity
-    // the path's -sN suffix is authoritative; an explicit DISAGREEING
-    // argument is a caller error that must not silently mis-prune
-    val (p, split) = Similarity.ensureMinhashIndex(spark, sf001)
-    val e = intercept[IllegalArgumentException] {
-      Similarity.probeMinhashIndex(spark, sf001, p, split, shards = 7)
+    // the probe reads its pruning modulus from the version name's -sN
+    // field; a path without one carries no record of the modulus the
+    // layout was written with, and a guessed one would silently miss
+    // duplicates. A byte-identical copy of a published layout under a
+    // plain name is refused, as is a path whose PARENT is version-named.
+    val (p, split) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
+    val copy = tempDir("graft-mh-unversioned").resolve("index").toFile
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(p), copy)
+    for (bad <- Seq(copy.toString, s"$p/bands")) {
+      val e = intercept[IllegalArgumentException] {
+        VersionedIndex.probe(Similarity.minhashIncr, spark, sf001, bad, split)
+      }
+      assert(e.getMessage.contains("not a published version name"), e.getMessage)
     }
-    assert(e.getMessage.contains("disagrees"), e.getMessage)
   }
 
   test("minhash index: spark.graft.minhash.indexBase is per-session Spark conf") {
@@ -695,10 +712,10 @@ class SemanticsSpec extends SparkSpec {
     graft.GraftExtensions.ensureRegistered(s2)
     val base2 = tempDir("graft-mh-conf").toString
     s2.conf.set("spark.graft.minhash.indexBase", base2)
-    val (p2, _) = Similarity.ensureMinhashIndex(s2, sf001)
+    val (p2, _) = VersionedIndex.ensure(Similarity.minhashIncr, s2, sf001)
     assert(p2.startsWith(base2),
       s"conf-set session must publish under its own base, got $p2")
-    val (p1, _) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (p1, _) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     assert(!p1.startsWith(base2),
       "a session without the conf must keep the JVM default base")
   }
@@ -710,16 +727,16 @@ class SemanticsSpec extends SparkSpec {
     // where any java.io.File touch would see a nonexistent path and
     // either crash or silently rebuild per call
     val localProbe = Similarity.ddMinhashIncr.run(spark, sf001).collect().toSeq
-    // per-session conf, not the JVM-global default var: concurrent
-    // ensureMinhashIndex callers in other sessions stay unaffected
+    // per-session conf: concurrent ensure callers in other sessions
+    // stay unaffected
     spark.conf.set("spark.graft.minhash.indexBase",
       "file:" + tempDir("graft-mh-fs").toString)
     try {
-      val (p1, split1) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p1, split1) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
       assert(p1.startsWith("file:"), s"index must publish under the file: base, got $p1")
-      val (p2, split2) = Similarity.ensureMinhashIndex(spark, sf001)
+      val (p2, split2) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
       assert((p2, split2) === ((p1, split1)), "scheme-qualified publish must be idempotent")
-      val probed = Similarity.probeMinhashIndex(spark, sf001, p1, split1).collect().toSeq
+      val probed = VersionedIndex.probe(Similarity.minhashIncr, spark, sf001, p1, split1).collect().toSeq
       assert(probed === localProbe,
         "probe against the file:-scheme index must equal the local-base probe")
     } finally spark.conf.unset("spark.graft.minhash.indexBase")
@@ -732,30 +749,30 @@ class SemanticsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalArgumentException] {
-      Similarity.ensureMinhashIndex(spark, dir)
+      VersionedIndex.ensure(Similarity.minhashIncr, spark, dir)
     }
     assert(e.getMessage.contains("empty"), s"message must name the cause: ${e.getMessage}")
   }
 
-  test("simhash index: husk reclaim works through the generic machinery with family parts and confs") {
+  test("simhash index: husk reclaim works through the generic machinery with the family's own parts") {
     import graft.operators.Similarity
     // the husk/racer discipline is shared code, but the parts gate
-    // ("bands","sims" here) and the family conf namespace are per-family
-    // surface — regress either and only a simhash-side spec catches it
-    val (p1, split1) = Similarity.ensureSimhashIndex(spark, sf001)
+    // ("bands","sims" here) is per-family surface — regress it and only
+    // a simhash-side spec catches it
+    val (p1, split1) = VersionedIndex.ensure(Similarity.simhashIncr, spark, sf001)
     val ver = new java.io.File(p1)
     assert(new java.io.File(ver, "_PUBLISHED").delete())
     deleteAll(new java.io.File(ver, "sims")) // structurally incomplete husk
-    // family-specific conf must govern (and fall back cleanly afterwards)
-    spark.conf.set("spark.graft.simhash.reapGraceMs", "1500")
+    // the one grace setting governs every family
+    spark.conf.set("spark.graft.minhash.reapGraceMs", "1500")
     val (p2, split2) =
-      try Similarity.ensureSimhashIndex(spark, sf001)
-      finally spark.conf.unset("spark.graft.simhash.reapGraceMs")
+      try VersionedIndex.ensure(Similarity.simhashIncr, spark, sf001)
+      finally spark.conf.unset("spark.graft.minhash.reapGraceMs")
     assert((p2, split2) === ((p1, split1)))
     assert(new java.io.File(ver, "_PUBLISHED").isFile)
     assert(new java.io.File(ver, "sims").isDirectory,
       "the husk must be rebuilt whole — the parts gate must check the FAMILY's subdirs")
-    val probed = Similarity.probeSimhashIndex(spark, sf001, p2, split2)
+    val probed = VersionedIndex.probe(Similarity.simhashIncr, spark, sf001, p2, split2)
     assert(probed.collect().nonEmpty, "republished simhash index must serve the probe")
   }
 
@@ -769,7 +786,7 @@ class SemanticsSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source")
       .write.parquet(s"$dir/documents.parquet")
     val e = intercept[IllegalArgumentException] {
-      Similarity.ensureMinhashIndex(spark, dir)
+      VersionedIndex.ensure(Similarity.minhashIncr, spark, dir)
     }
     assert(e.getMessage.contains("corpus slice"), e.getMessage)
   }
@@ -1327,7 +1344,7 @@ class SemanticsSpec extends SparkSpec {
     // editing a banding/gate/threshold constant changes the fp, which
     // moves the whole index base, so a stale-kernel index can never
     // version-match a post-change probe
-    val (pm, _) = Similarity.ensureMinhashIndex(spark, sf001)
+    val (pm, _) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
     assert(pm.contains(s"mh2-${Similarity.minhashKernelFp}"),
       s"minhash index path $pm must carry the kernel fp")
     val (pp, _) = IngestIncr.ensurePipeIngestIndex(spark, sf001)
@@ -1349,11 +1366,11 @@ class SemanticsSpec extends SparkSpec {
       tempDir("graft-kfp-itest").toString)
     var builds = 0
     def ensure(fp: String): (String, Long) =
-      Similarity.ensureVersionedIndex(s2, sf001, s"kfp-$fp", "minhash",
-        Seq("part"), (staging, _, _) => {
+      VersionedIndex.ensureVersioned(s2, sf001, s"kfp-$fp", Seq("part")) {
+        (staging, _, _) =>
           builds += 1
           s2.range(1).toDF("x").write.parquet(s"$staging/part")
-        })
+      }
     val fpA = Similarity.kernelFp("knob" -> 1)
     val fpB = Similarity.kernelFp("knob" -> 2)
     val (pa1, _) = ensure(fpA)

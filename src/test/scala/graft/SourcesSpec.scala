@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{Similarity, VersionedIndex}
 import graft.sources.RestSource
 import org.apache.spark.sql.functions._
 
@@ -243,7 +244,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("incremental indexes over a jdbc corpus: count-token versioning and the staleness contract") {
-    // a jdbc: locator has no mtime surface, so ensureVersionedIndex
+    // a jdbc: locator has no mtime surface, so VersionedIndex
     // versions the index by an EXPLICIT source token — the corpus row
     // count — next to the split (max id) already in the version name.
     // Contract under test: (1) the _incr families run at all against a
@@ -256,7 +257,7 @@ class SourcesSpec extends SparkSpec {
     val url = s"jdbc:derby:$db;create=true"
     try {
       JdbcLoad.load(spark, sf001, url)
-      val (v1, split1) = graft.operators.Similarity.ensureMinhashIndex(spark, url)
+      val (v1, split1) = VersionedIndex.ensure(Similarity.minhashIncr, spark, url)
       val n1 = Tables(spark, url).documents.count()
       assert(v1.contains(s"v$split1-$n1-s"),
         s"version name must carry the (split, count) token: $v1")
@@ -267,7 +268,7 @@ class SourcesSpec extends SparkSpec {
         full.run(spark, url).filter($"doc_id" >= split1)
           .orderBy($"doc_id").collect().toSeq)
       // the embedding family (BLOB-decoded vectors + vec_id token) too
-      val (ev1, esplit1) = graft.operators.Similarity.ensureEmbeddingIndex(spark, url)
+      val (ev1, esplit1) = VersionedIndex.ensure(Similarity.embeddingIncr, spark, url)
       val embIncr = QueryDef.catalogs.find(_.name == "dd_embedding_incr").get
       assert(embIncr.run(spark, url).collect().toSeq ===
         embIncr.run(spark, sf001).collect().toSeq)
@@ -283,7 +284,7 @@ class SourcesSpec extends SparkSpec {
         .withColumn("doc_id", $"doc_id" + 777L)
         .write.mode("append").format("jdbc")
         .option("url", url).option("dbtable", "documents").save()
-      val (v2, split2) = graft.operators.Similarity.ensureMinhashIndex(spark, url)
+      val (v2, split2) = VersionedIndex.ensure(Similarity.minhashIncr, spark, url)
       assert(v2 !== v1,
         s"a grown corpus re-served the stale index version: $v2")
       assert(split2 > split1)

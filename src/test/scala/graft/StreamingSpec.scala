@@ -1228,6 +1228,28 @@ class StreamingSpec extends SparkSpec {
     val bandsAll = spark.read.parquet((0 until 3).map(i => s"$statePath/b$i/bands"): _*)
     assert(bandsAll.count() === bandsAll.select($"band", $"bucket").distinct().count(),
       "a bucket landed in two batches' deltas — state is not append-only")
+    // the fused verdict assembly's contract on the STREAM path: replay
+    // the last trigger against the state batches 0–1 committed (what it
+    // ran against) — its exact_dup / contaminated / near_dup marks are
+    // pairwise disjoint, one row per doc_id, and its verdicts are the
+    // stream's own output for that batch
+    def committed(part: String) =
+      spark.read.parquet((0 until 2).map(i => s"$statePath/b$i/$part"): _*)
+    try {
+      val replay = IngestIncr.admitAgainst(spark, idx, split,
+        chunks.last.toDF("doc_id", "source", "lang", "text"),
+        name => s"spec_admit_replay:$name", 1L,
+        Some(IngestIncr.IngestState(committed("fps"), committed("bands"),
+          committed("toks"))), ordered = false)
+      val marked = replay.marks.collect().map(_.getAs[Long]("doc_id")).toSeq
+      assert(marked.nonEmpty, "vacuous: the last trigger marked no doc")
+      assert(marked.distinct.size === marked.size,
+        s"a doc_id carries two admission marks: ${marked.sorted}")
+      val cols = Seq($"doc_id", $"source", $"lang", $"verdict")
+      assert(replay.verdicts.select(cols: _*).orderBy($"doc_id").collect().toSeq ===
+        spark.read.parquet(s"$outPath/batch=2").select(cols: _*)
+          .orderBy($"doc_id").collect().toSeq)
+    } finally graft.operators.RunCaches.clearAll()
   }
 
   /** The planted all-verdicts fixture (SemanticsSpec's) written as a
@@ -1375,6 +1397,32 @@ class StreamingSpec extends SparkSpec {
     assert(v2.nonEmpty && v2.get > v1.get,
       s"re-delivery must mint a strictly larger stamp (got $v1 then $v2) " +
         "— a reused live memo would mask state drift between deliveries")
+  }
+
+  test("admission writes: all settle before a failure is rethrown; a stuck write fails by name") {
+    import graft.operators.IngestIncr
+    import scala.concurrent.{ExecutionContext, Future, Promise}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    @volatile var slowDone = false
+    def slow = Future { Thread.sleep(300L); slowDone = true }
+    // a failed write is rethrown only once the slower sibling settled
+    val boom = intercept[IllegalStateException] {
+      IngestIncr.settleAll(Seq(
+        "failing" -> Future.failed(new IllegalStateException("boom")),
+        "slow" -> slow), 1.minute)
+    }
+    assert(boom.getMessage === "boom")
+    assert(slowDone, "the failure was rethrown before the other write settled")
+    // a write that never completes fails the trigger at the bound,
+    // naming the write, after the others settled
+    slowDone = false
+    val stuck = intercept[java.util.concurrent.TimeoutException] {
+      IngestIncr.settleAll(Seq("ok" -> Future.unit, "slow" -> slow,
+        "stuck-write" -> Promise[Unit]().future), 1.second)
+    }
+    assert(stuck.getMessage.contains("stuck-write"), stuck.getMessage)
+    assert(slowDone)
   }
 
   test("labeledJob restores the enclosing job description, nested or not") {
