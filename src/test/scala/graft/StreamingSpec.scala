@@ -4,6 +4,7 @@ import graft.streaming.{Ev, StreamOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Streaming ⇔ batch-twin equivalence: replay the sf0.001 events through
   * MemoryStream in several micro-batches and assert the streaming result
@@ -1567,5 +1568,174 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id", $"source", $"lang", $"verdict")
       .orderBy($"doc_id").collect().toSeq
     assert(after === got, "a re-delivered micro-batch changed the verdict surface")
+  }
+
+  // ---- local commits (LocalCommit.scala) ----------------------------
+
+  /** Writes `evs` as one parquet file per chunk into a staging dir and
+    * returns the chunk dirs; moving one into a watched dir is atomic. */
+  private def stageEventChunks(evs: Seq[Ev], chunks: Int): Seq[java.nio.file.Path] = {
+    val stage = tempDir("graft-lc-stage")
+    evs.grouped((evs.size + chunks - 1) / chunks).toSeq.zipWithIndex.map { case (c, i) =>
+      val d = stage.resolve(f"c$i%02d.parquet")
+      c.toDS().coalesce(1).write.parquet(d.toString)
+      d
+    }
+  }
+
+  /** Output rows of a foreachBatch query, by batch id. */
+  private type Batches = collection.concurrent.TrieMap[Long, Seq[org.apache.spark.sql.Row]]
+
+  /** The live vote queries over a file source watching `in` (one file per
+    * trigger), checkpointed under `ck`; each batch's rows are kept by
+    * batch id, so a re-run batch replaces its own rows. */
+  private def startVoteQueries(in: String, ck: String, tally: Batches,
+      reversals: Batches): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
+    val src = spark.readStream.schema(Seq.empty[Ev].toDS().schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$in/*.parquet")
+    def sink(df: org.apache.spark.sql.DataFrame, mode: String, name: String, out: Batches) =
+      df.writeStream.outputMode(mode).option("checkpointLocation", s"$ck/$name")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          out(id) = b.collect().toSeq; () }
+        .start()
+    Seq(sink(StreamOps.deadlineTally(src), "update", "tally", tally),
+      sink(StreamOps.rapidReversal(src.as[Ev]).toDF(), "append", "reversal", reversals))
+  }
+
+  private def feed(chunks: Seq[java.nio.file.Path], in: String,
+      qs: Seq[org.apache.spark.sql.streaming.StreamingQuery]): Unit =
+    chunks.foreach { c =>
+      java.nio.file.Files.move(c, java.nio.file.Paths.get(in, c.getFileName.toString))
+      qs.foreach(_.processAllAvailable())
+    }
+
+  test("a checkpointed stateful trigger forks no process") {
+    // Engine.session set fs.file.impl on the context's conf before any
+    // `file:` filesystem existed; Hadoop's FileSystem cache is keyed
+    // without the conf, so the first instance of the JVM is the one
+    // every caller gets — it must be the engine's class
+    val fs = new org.apache.hadoop.fs.Path("file:/tmp")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getClass === classOf[LocalCommitFileSystem])
+    val chunks = stageEventChunks(allEvents.sortBy(e => (e.ts_ms, e.event_id)).take(600), 3)
+    val in = tempDir("graft-lc-fork-in").toString
+    val ck = tempDir("graft-lc-fork-ck").toString
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val (tally, reversals) = (new Batches, new Batches)
+    val qs = startVoteQueries(in, ck, tally, reversals)
+    val dump = tempDir("graft-lc-jfr").resolve("forks.jfr")
+    try feed(chunks, in, qs)
+    finally {
+      qs.foreach(_.stop())
+      rec.stop()
+      rec.dump(dump)
+      rec.close()
+    }
+    assert(qs.forall(_.exception.isEmpty) && tally.nonEmpty && reversals.nonEmpty)
+    // the stream really committed through the checkpoints: a commit-log
+    // entry (after offsets and state-store deltas) per data batch
+    for (q <- Seq("tally", "reversal"))
+      assert(new java.io.File(s"$ck/$q/commits").list().count(_.forall(_.isDigit)) >= 3, q)
+    val events = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+    val shellForks = events.filter(e => Option(e.getStackTrace).exists(
+      _.getFrames.asScala.exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
+    assert(shellForks.size === 0,
+      shellForks.map(_.getString("command")).take(5).mkString("; e.g. ", "; ", ""))
+  }
+
+  test("stateful restart from a file-source checkpoint resumes tally and reversals exactly") {
+    // ST1 runs on a MemoryStream without a checkpoint and ST10's restart
+    // is stateless: this one crosses the offset-log, commit-log and
+    // state-delta renames of both state-store operators on a restart
+    val ordered = allEvents.sortBy(e => (e.ts_ms, e.event_id))
+    val chunks = stageEventChunks(ordered, 6)
+    val in = tempDir("graft-lc-restart-in").toString
+    val ck = tempDir("graft-lc-restart-ck").toString
+    val (tally, reversals) = (new Batches, new Batches)
+    val first = startVoteQueries(in, ck, tally, reversals)
+    try feed(chunks.take(3), in, first) finally first.foreach(_.stop())
+    assert(first.forall(_.exception.isEmpty))
+    val batchesBefore = tally.keySet.max
+    val second = startVoteQueries(in, ck, tally, reversals) // same checkpoints
+    try feed(chunks.drop(3), in, second) finally second.foreach(_.stop())
+    assert(second.forall(_.exception.isEmpty))
+    assert(tally.keySet.min === 0L && tally.keySet.max > batchesBefore,
+      "the restarted tally did not continue the batch ids")
+    val cols = Seq("window_hour", "votes_for", "votes_against", "total",
+      "approval_pct", "passed")
+    // the last update per window, in batch order
+    val got = tally.toSeq.sortBy(_._1).flatMap(_._2)
+      .map(r => r.getAs[Long]("window_hour") -> cols.map(r.getAs[Any])).toMap
+      .toSeq.sortBy(_._1).map(_._2)
+    val want = graft.operators.StreamingTwins.st1DeadlineTally.run(spark, sf001)
+      .filter($"votes_for" + $"votes_against" > 0)
+      .select(cols.map(col): _*).orderBy($"window_hour")
+      .collect().toSeq.map(_.toSeq)
+    assert(got === want)
+    val gotR = reversals.values.flatten.toSeq.map(_.toSeq)
+      .sortBy(r => (r(0).asInstanceOf[Long], r(2).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+    val wantR = graft.operators.StreamingTwins.st12RapidReversal.run(spark, sf001)
+      .collect().toSeq.map(_.toSeq)
+    assert(gotR === wantR)
+  }
+
+  test("in-JVM chmod matches Hadoop's for plain modes; special bits and non-file schemes keep the stock path") {
+    import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    val hconf = spark.sessionState.newHadoopConf()
+    def raw(fs: RawLocalFileSystem) = { fs.initialize(java.net.URI.create("file:///"), hconf); fs }
+    val stock = raw(new RawLocalFileSystem)
+    val mine = raw(new LocalCommitFileSystem.Raw)
+    val dir = tempDir("graft-lc-chmod")
+    def mode(p: java.nio.file.Path) =
+      java.nio.file.Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    for (m <- Seq("600", "644", "700", "755", "777")) {
+      val perm = new FsPermission(m)
+      val (a, b) = (dir.resolve(s"stock-$m"), dir.resolve(s"mine-$m"))
+      Seq(a, b).foreach(java.nio.file.Files.createFile(_))
+      stock.setPermission(new Path(a.toUri), perm)
+      mine.setPermission(new Path(b.toUri), perm)
+      assert(java.nio.file.Files.getPosixFilePermissions(b) ===
+        java.nio.file.Files.getPosixFilePermissions(a), s"mode $m")
+      assert(mode(b) === Integer.parseInt(m, 8))
+    }
+    intercept[java.io.FileNotFoundException] {
+      mine.setPermission(new Path(dir.resolve("absent").toUri), new FsPermission("644"))
+    }
+    // a sticky bit is out of NIO's reach: the stock path sets it
+    assert(LocalCommitFileSystem.plainBits(Integer.parseInt("1755", 8)).isEmpty)
+    assert(LocalCommitFileSystem.plainBits(Integer.parseInt("4755", 8)).isEmpty)
+    assert(LocalCommitFileSystem.plainBits(Integer.parseInt("2755", 8)).isEmpty)
+    val sticky = java.nio.file.Files.createDirectory(dir.resolve("sticky"))
+    mine.setPermission(new Path(sticky.toUri), new FsPermission("1755"))
+    assert(mode(sticky) === Integer.parseInt("1755", 8))
+
+    // routing: the session's conf names the router, a `file:` location
+    // (qualified or not) goes to the FileSystem-based manager …
+    val ckDir = tempDir("graft-lc-route").toString
+    assert(CheckpointFileManager.create(new Path(ckDir), hconf)
+      .isInstanceOf[LocalCommitFileManager])
+    for (p <- Seq(s"file:$ckDir", ckDir))
+      assert(new LocalCommitFileManager(new Path(p), hconf).underlying
+        .isInstanceOf[FileSystemBasedCheckpointFileManager], p)
+    // … and any other scheme gets what Spark picks without the setting:
+    // FileContext where the scheme has one (viewfs over a local link),
+    // the FileSystem fallback where it has none
+    val other = new org.apache.hadoop.conf.Configuration(hconf)
+    other.set("fs.viewfs.mounttable.graft.link./ck", s"file://$ckDir")
+    other.set("fs.graftfs.impl", classOf[RawLocalFileSystem].getName)
+    other.setBoolean("fs.graftfs.impl.disable.cache", true)
+    val without = new org.apache.hadoop.conf.Configuration(other)
+    without.unset("spark.sql.streaming.checkpointFileManagerClass")
+    for ((p, want) <- Seq(
+        "viewfs://graft/ck" -> classOf[FileContextBasedCheckpointFileManager],
+        "graftfs:/tmp/ck" -> classOf[FileSystemBasedCheckpointFileManager])) {
+      val path = new Path(p)
+      assert(CheckpointFileManager.create(path, without).getClass === want, p)
+      assert(new LocalCommitFileManager(path, other).underlying.getClass === want, p)
+    }
   }
 }
