@@ -4,186 +4,42 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line {"metric":…,"queries":{…}} for the driver.
+  * prints the run's record for the driver: a full JSON line, then the
+  * compact summary object behind a `[bench-json] ` marker, then the
+  * summary line itself, last.
   *
-  * Work is forced with a noop-sink write (full result materialized, no
-  * collect); each query is timed over three INTERLEAVED passes over the
-  * whole suite (pass 0 doubles as JIT/codegen warm-up), reporting the
-  * min of passes 1-2 — the machine hosting the bench shows ~25%
-  * run-to-run load variance in ~minute-long windows, so back-to-back
-  * samples of one query are correlated and interleaving is what lets
-  * the min escape a single window (r8's dd_minhash sf0.1 had both
-  * back-to-back samples eaten by one).
+  * One measurement protocol for every tier, fixed before the run starts:
+  * each query is timed cold through the noop sink ([[timeOnce]]) in a
+  * fixed number of INTERLEAVED passes over the whole suite ([[interleaved]]),
+  * pass 0 is the warm-up, and each query reports the min of its measured
+  * passes ([[minMeasured]]). Interleaving puts a query's samples a whole
+  * suite apart, so a load window of the host rarely covers all of them.
+  * Nothing is read from earlier records, nothing sleeps, and no pass is
+  * added because of what a pass measured: the record says how noisy the
+  * host was instead (`steal_frac` and `cpus` on both lines, `wall_sec`
+  * and the per-tier sample spreads on the summary line), so a reader
+  * adjudicates noise from the record alone.
   *
-  * Scale-proof tier: when the primary dir is the driver's sf0.1, a 10×
-  * "sf1" tier (~6M lineitem, 32-file facts) is synthesized once into a
-  * cached tmp dir ([[ensureSf1]]) and every headline query is timed over
-  * three INTERLEAVED passes (min per query; pass 0 doubles as warm-up) —
-  * one measured decade of scaling, so the 100 TB plan-shape claims are
-  * backed by a data point instead of inspection alone. Linear-ish
-  * queries should land ≤ ~12× their sf0.1 time (fixed costs allowed);
-  * a pathological plan flip shows up as a much larger ratio and dumps
-  * its final adaptive plan to stderr. The sf1 section is additive JSON
-  * keys; its failure never corrupts the primary metric.
-  *
-  * Second decade (r14): a 100× "sf10" tier (~60M lineitem) is then
-  * synthesized the same way and the five most expensive queries get ONE
-  * timed pass each — `sf10_ratio_vs_sf1` is the second per-decade
-  * scaling ratio, turning the 100 TB claims into two measured decades.
-  * The compact summary line (printed last, inside the driver's tail
-  * window) carries the run's attribution: wall time, worst per-query
-  * sample spread per tier, and adaptive-remeasure prelim→final sums.
+  * Tiers (the scale tiers only when the primary dir is the driver's sf0.1):
+  *  - the primary dir: the headline suite, 3 passes; `value` is the sum
+  *    over the healthy queries of the min of passes 1–2.
+  *  - sf1: a 10× tier synthesized once into a cached tmp dir
+  *    ([[ensureSf1]]), 3 passes; `sf1_ratio_vs_sf01` is one measured
+  *    decade of scaling. `SPARK_GRAFT_SF1=0` skips it.
+  *  - sf10: a 100× tier ([[ensureSf10]]), the five most expensive
+  *    queries, 2 passes; `sf10_ratio_vs_sf1` is the second decade.
+  *    `SPARK_GRAFT_SF10=0` skips it.
+  *  - the opt-in full-catalog sf10 sweep (`SPARK_GRAFT_SF10_SWEEP=1`),
+  *    one pass per query into its own file.
+  * A linear plan lands ≤ ~12× per decade; a ratio past that, and the
+  * worst sf1 ratio of the run, dumps its final plan and stage times to
+  * stderr ([[dumpDiagnostic]]). The scale tiers are additive JSON keys;
+  * their failure never corrupts the primary metric.
   */
 object Bench {
 
-  /** The last DRIVER-recorded numbers — the round-over-round anchors for
-    * the swing diagnostics below. The host is bimodal (§6.2), so a
-    * number moving sharply against this record with an unchanged plan is
-    * the throttle-window signature; the dumps make the attribution part
-    * of the record instead of prose. Two anchors: the sf1/sf0.1 scaling
-    * ratios (>3× move), and the sf0.1 ABSOLUTE times (>2× move) — the
-    * sf0.1 side is what the 2×-baseline bar totals, yet r6's j2 +58% /
-    * q1 +36% sf0.1 swings were invisible to the ratio-only trigger.
-    *
-    * Loaded at run time from the newest BENCH_r{N}.json the driver left
-    * in the working directory ([[loadPrevDriverRecord]]) so the anchor
-    * can never go stale round-over-round (the r5→r6 staleness made the
-    * detector false-fire on q1); the embedded r6 constants are only the
-    * fallback when no record parses. */
-  private[graft] val fallbackSf1Ratios: Map[String, Double] = Map(
-    "q1_agg" -> 1.64, "w1_leaderboard" -> 1.82, "j1_fk_join" -> 2.43,
-    "j2_broadcast_lookup" -> 0.98, "a3_epoch_agg" -> 2.08,
-    "dd_exact" -> 2.49, "dd_jaccard" -> 1.78, "sim_topk_dot" -> 1.81,
-    "sim_lsh_topk" -> 2.75, "dd_minhash" -> 5.38,
-    "st1_deadline_tally" -> 3.37)
-
-  private[graft] val fallbackSf01Sec: Map[String, Double] = Map(
-    "q1_agg" -> 1.01, "w1_leaderboard" -> 0.66, "j1_fk_join" -> 1.00,
-    "j2_broadcast_lookup" -> 1.42, "a3_epoch_agg" -> 0.41,
-    "dd_exact" -> 0.32, "dd_jaccard" -> 0.59, "sim_topk_dot" -> 0.48,
-    "sim_lsh_topk" -> 0.65, "dd_minhash" -> 0.74,
-    "st1_deadline_tally" -> 0.25)
-
-  /** (sf0.1 seconds, sf1/sf0.1 ratios) from the newest PARSEABLE
-    * `BENCH_r{N}.json` in `dir`. The driver's record wraps the bench
-    * JSON either pre-parsed (`parsed`) or raw inside the captured sbt
-    * output (`tail`); both are accepted, and when the tail carries both
-    * the full record line and the trailing compact summary line the
-    * LAST one wins (the summary is emitted last precisely so tail
-    * truncation keeps it). Records are tried newest→oldest: r8's record
-    * lost its head to the driver's tail budget, and a loader that only
-    * tries the newest file would have armed round 9 with the embedded
-    * constants while a fully parseable older record sat in the same
-    * directory. Only when NO record parses do the embedded constants
-    * apply — the diagnostic must never be able to break the measurement
-    * run. Jackson is used directly (already on the Spark classpath);
-    * package-private so the parse is spec-testable. */
-  private[graft] def loadPrevDriverRecord(dir: java.io.File = new java.io.File(".")):
-      (Map[String, Double], Map[String, Double]) =
-    parsedRecordsNewestFirst(dir).headOption.map(r => (r._1, r._2))
-      .getOrElse((fallbackSf01Sec, fallbackSf1Ratios))
-
-  /** Every parseable driver record, newest round first — the ONE
-    * listing+parse pass both anchor loaders (and main, once per run)
-    * derive from. The sort key is Try-guarded: a hostile-length round
-    * number in a filename (BENCH_r99999999999.json) must sort last, not
-    * throw out of the listing layer and kill the bench before a single
-    * measurement (the loaders' never-break-the-run contract). */
-  private[graft] def parsedRecordsNewestFirst(dir: java.io.File):
-      Seq[(Map[String, Double], Map[String, Double], Map[String, Double])] =
-    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(f => -scala.util.Try(
-        f.getName.replaceAll("\\D", "").toLong).getOrElse(-1L))
-      .flatMap(parseDriverRecord).toSeq
-
-  /** Per-query MIN sf0.1 seconds across ALL parseable driver records —
-    * the anchor for the sf0.1 adaptive re-measure. The newest record is
-    * the right anchor for round-over-round SWING detection, but wrong
-    * for a window-escape trigger: a noisy record (r11 shipped +19%
-    * host inflation) would ratchet the anchor up and an equally-noisy
-    * next round would read as "unchanged" against it. The best
-    * historical time is, by min-of-passes construction, quiet-window
-    * evidence of what the (frozen) plan can actually do; reading above
-    * it by the trigger margin is regression-or-window either way, and
-    * two extra samples answer which. Falls back to the embedded
-    * constants when no record parses. */
-  private[graft] def loadBestSf01Anchors(
-      dir: java.io.File = new java.io.File(".")): Map[String, Double] =
-    bestSf01Of(parsedRecordsNewestFirst(dir).map(_._1))
-
-  private[graft] def bestSf01Of(all: Seq[Map[String, Double]]): Map[String, Double] =
-    if (all.isEmpty) fallbackSf01Sec
-    else all.flatten.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-
-  /** Per-query MIN recorded sf10/sf1 ratio across all parseable driver
-    * records — the second decade's historical anchor (r15 verdict #1).
-    * The absolute >12× wall caught r14's q1 117×, but the 5–11× window
-    * class (r15 shipped j1 at 10.19×/decade while a same-day quiet run
-    * measured 4.43×) sailed under it; the query's own best recorded
-    * ratio is quiet-window evidence of what the frozen plan scales
-    * like, so exceeding it 2.5× is regression-or-window and worth the
-    * two extra samples either way. No fallback constants: a query with
-    * no recorded sf10 history keeps only the absolute wall. */
-  private[graft] def loadBestSf10Ratios(
-      dir: java.io.File = new java.io.File(".")): Map[String, Double] =
-    bestSf10RatiosOf(parsedRecordsNewestFirst(dir).map(_._3))
-
-  private[graft] def bestSf10RatiosOf(
-      all: Seq[Map[String, Double]]): Map[String, Double] =
-    all.flatten.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-
-  /** The sf10 adaptive-remeasure / diagnostic-dump trigger: absolute
-    * linear wall (>12×/decade) OR 2.5× the query's best recorded sf10
-    * ratio. Pure so the threshold logic is spec-testable apart from the
-    * 100×-tier run it governs. */
-  private[graft] def sf10Suspicious(ratio: Double,
-      bestRatio: Option[Double]): Boolean =
-    ratio > 12.0 || bestRatio.exists(b => b > 0 && ratio > 2.5 * b)
-
-  /** One record's parse attempt; None (not a throw) on any failure so
-    * [[loadPrevDriverRecord]] can walk back to an older record. */
-  private def parseDriverRecord(rec: java.io.File):
-      Option[(Map[String, Double], Map[String, Double], Map[String, Double])] =
-    scala.util.Try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val outer = mapper.readTree(rec)
-      val line =
-        if (outer.hasNonNull("parsed")) outer.get("parsed")
-        else {
-          val tailText = outer.get("tail").asText()
-          // prefer the `[bench-json] `-marked line (r17 verdict #4): the
-          // summary object alone behind a grep-able prefix, no sbt
-          // `[info]`-framing dependency; older records without the
-          // marker fall back to last-metric-line mining
-          val marked = tailText.linesIterator
-            .filter(_.contains("[bench-json] ")).toSeq.lastOption
-            .map(l => l.substring(
-              l.indexOf("[bench-json] ") + "[bench-json] ".length))
-          val raw = marked.getOrElse(tailText.linesIterator
-            .filter(_.contains("\"metric\":\"total\"")).toSeq.last)
-          mapper.readTree(raw.substring(raw.indexOf("{\"metric\"")))
-        }
-      // the record must come from the driver's sf0.1 run: anchors from a
-      // replica at another scale would trip the >2× trigger on every
-      // query — exactly the false-fire class this loader exists to end
-      require(Option(line.get("sf")).map(_.asText().replaceAll("/+$", ""))
-        .forall(_.endsWith("sf0.1")), "record is not an sf0.1 run")
-      def nums(node: com.fasterxml.jackson.databind.JsonNode): Map[String, Double] =
-        if (node == null) Map.empty
-        else {
-          import scala.jdk.CollectionConverters._
-          node.properties().asScala.iterator
-            .map(e => e.getKey -> e.getValue.asDouble())
-            .filter(_._2 > 0).toMap
-        }
-      val sf01 = nums(line.get("queries"))
-      require(sf01.nonEmpty, "record has no usable sf0.1 times")
-      (sf01, nums(line.get("sf1_ratio_vs_sf01")),
-        nums(line.get("sf10_ratio_vs_sf1")))
-    }.toOption
-
-  /** Shared swing-dump kernel: re-executes `q` over `dir` once through
+  /** Diagnostic dump (the scale tiers' ratio triggers and `TimeQueries
+    * dump=1`): re-executes `q` over `dir` once through
     * `toRdd` so AQE finalizes (an unexecuted frame would print the
     * innocent initial plan and hide exactly the runtime-rewrite class
     * this diagnostic exists for), with a stage listener attached, and
@@ -288,59 +144,68 @@ object Bench {
       -1.0
     }.get
 
-  /** Adaptive sf1 re-measure trigger: the preliminary min reads
-    * SUPERLINEAR vs its sf0.1 base (> 2.5× for 10× data — every
-    * headline plan is ~linear, so past that bar the number is either a
-    * real regression or a contaminated window). Deliberately NOT gated
-    * on the passes' internal spread: the r10 dd_minhash record
-    * [4.04, 4.55, 3.70] spread only 1.2× — all three samples sat in
-    * ONE multi-minute bad window, which is exactly the case extra
-    * samples minutes later can escape. If the query is genuinely slow
-    * the extras confirm the min and the record carries five consistent
-    * samples instead of three — stronger evidence either way. Failed
-    * samples (−1) are ignored; no base or no valid sample → no
-    * re-measure (nothing to compare against). */
-  private[graft] def needsRemeasure(
-      samples: Seq[Double], sf01Base: Double): Boolean = {
-    val ss = samples.filter(_ >= 0)
-    ss.nonEmpty && sf01Base > 0 && ss.min / sf01Base > 2.5
+  /** `passes` interleaved passes over `qs`: pass 0 of every query, then
+    * pass 1 of every query, and so on. `sample` times one query; a query
+    * whose sample throws gets a −1 marker for that pass and is not run
+    * again, so a query that dies mid-run keeps the samples it produced.
+    * Every sample goes to stderr as it lands. */
+  private[graft] def interleaved(qs: Seq[QueryDef], passes: Int, tag: String)(
+      sample: QueryDef => Double): Map[String, Seq[Double]] = {
+    val bufs = qs.map(q =>
+      q.name -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+    for (p <- 0 until passes; q <- qs) {
+      val buf = bufs(q.name)
+      if (!buf.contains(-1.0))
+        try {
+          val t = sample(q)
+          System.err.println(f"[bench] $tag ${q.name} pass $p: $t%.2f s")
+          buf += t
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $tag ${q.name} pass $p failed: ${e.getMessage}")
+          buf += -1.0
+        }
+    }
+    bufs.map { case (k, v) => k -> v.toSeq }
   }
 
-  /** Adaptive sf0.1 re-measure trigger (r12 — the r11 verdict's #1 ask):
-    * the sf0.1 tier is the BINDING number — it totals into the
-    * 2×-baseline bar AND is every sf1 ratio's denominator — yet until
-    * r12 it had no bad-window escape, and r11's driver record shipped a
-    * +19% pure-noise inflation straight into it (8.66 s vs the same
-    * jar's 7.55–7.76 s quiet-window self-runs). Unlike sf1 there is no
-    * intrinsic scaling base to test against, so the anchor is the BEST
-    * HISTORICAL driver record ([[loadBestSf01Anchors]]): a measured min
-    * > 1.2× the best time any round recorded, with a catalog frozen
-    * round-over-round, is either a real regression or a contaminated
-    * window — and extra
-    * samples minutes later distinguish them (min is an order statistic:
-    * a real regression just confirms itself; a window is escaped).
-    * Like [[needsRemeasure]], deliberately NOT spread-gated — the bad
-    * windows outlast all three interleaved samples. No anchor (new
-    * query, unparseable record) or no valid sample → no re-measure. */
-  private[graft] def needsRemeasureSf01(
-      samples: Seq[Double], prevSec: Double): Boolean = {
-    val ss = samples.filter(_ >= 0)
-    ss.nonEmpty && prevSec > 0 && ss.min / prevSec > 1.2
+  /** A query's reported time: the min of its measured passes (all but
+    * the pass-0 warm-up); −1 when a pass failed or none was measured. */
+  private[graft] def minMeasured(samples: Seq[Double]): Double =
+    if (samples.size < 2 || samples.contains(-1.0)) -1.0 else samples.tail.min
+
+  /** Share of the host's CPU ticks stolen between two aggregate `cpu`
+    * lines of `/proc/stat` — the delta perfbench's `cpu_ticks` takes:
+    * steal over the sum of every counter, steal being the eighth. None
+    * when a line is not an aggregate `cpu` line or has no steal column:
+    * a signal the kernel does not count is left out, not read as 0. */
+  private[graft] def stealFrac(start: String, end: String): Option[Double] = {
+    def ticks(line: String): Option[Seq[Long]] = scala.util.Try {
+      val f = line.trim.split("\\s+").toSeq
+      require(f.head == "cpu" && f.size > 8)
+      f.tail.map(_.toLong)
+    }.toOption
+    for (a <- ticks(start); b <- ticks(end)) yield {
+      val d = a.zip(b).map { case (x, y) => y - x }
+      math.round(d(7).toDouble / math.max(1L, d.sum) * 10000) / 10000.0
+    }
   }
+
+  /** The aggregate `cpu` line of `/proc/stat`; None where it is unreadable. */
+  private def procStatCpu(): Option[String] = scala.util.Try {
+    val r = java.nio.file.Files.newBufferedReader(java.nio.file.Paths.get("/proc/stat"))
+    try r.readLine() finally r.close()
+  }.toOption
 
   /** `{"name":[s0,s1,s2,…]}` — every raw timing sample per query, emitted
     * into the bench record itself (`queries_samples` / `sf1_passes`).
-    * The per-query swing triggers can only see a SINGLE query moving; a
-    * broad host throttle window inflates the whole suite uniformly (r7:
-    * every query +10–35%, no trigger fired) and the only attribution
-    * evidence — the per-sample times — lived on stderr, outside the
-    * record. With the samples in the JSON, any future number, individual
-    * or total, is attributable from the artifact alone: consistent
-    * samples = real cost, one slow outlier among consistent fast ones =
-    * a window. Insertion order = catalog order; a failed sample is a -1
-    * marker IN PLACE, so "ran twice then died" keeps its two real
-    * samples and is distinguishable from "never ran" (an empty array);
-    * adaptively re-measured queries carry extra entries (4-5 total). */
+    * A broad host load window inflates the whole suite uniformly (r7:
+    * every query +10–35%); with the samples in the JSON, any number,
+    * individual or total, is attributable from the artifact alone:
+    * consistent samples = real cost, one slow outlier among consistent
+    * fast ones = a window. Insertion order = catalog order; a failed
+    * sample is a -1 marker IN PLACE, so "ran twice then died" keeps its
+    * two real samples and is distinguishable from "never ran" (an empty
+    * array). */
   private[graft] def samplesJson(names: Seq[String],
       samples: collection.Map[String, collection.Seq[Double]]): String =
     names.map { n =>
@@ -383,39 +248,21 @@ object Bench {
     * numbers. With the compact line last, truncation can only ever eat
     * the (reconstructible) evidence fields, never the measurements.
     * `summaryExtra` lands ONLY on the summary line — the compact
-    * attribution fields (wall_sec, spreads, remeasure prelim sums, r13
-    * verdict #2) that must survive the driver's tail truncation, whose
-    * full-map twins already live on the full line. Package-private so
-    * the spec pins both shapes against the loader. */
+    * attribution fields (wall_sec, spreads) that must survive the
+    * driver's tail truncation. Package-private so the spec pins both
+    * shapes. */
   private[graft] def recordLines(total: Double, qs: String, qSamples: String,
       sfDir: String, sf1Full: String, sf1Summary: String,
-      sf01Extra: String = "", extraBoth: String = "",
-      summaryExtra: String = ""): (String, String) = {
+      extraBoth: String = "", summaryExtra: String = ""): (String, String) = {
     // sfDir is the one free-text string in these driver-parsed lines —
     // escape it (shared rule with oracle_sql.json) so a quote or
-    // backslash in the path can't invalidate the round's record and
-    // silently walk the loader back to an older one (r13 sweep)
+    // backslash in the path can't invalidate the round's record
     val sfJ = Verify.jsonStr(sfDir)
     (s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""queries_samples":$qSamples,"sf":$sfJ$extraBoth$sf01Extra$sf1Full}""",
+      s""""queries_samples":$qSamples,"sf":$sfJ$extraBoth$sf1Full}""",
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""sf":$sfJ$extraBoth$sf1Summary$summaryExtra,"summary":true}""")
   }
-
-  /** `,"<field>":{"name":prelimMin,…}` (or "" when no query re-measured)
-    * — the transparency record for an adaptive re-measure pass. Min over
-    * more samples is monotone non-increasing, so the correction can only
-    * LOWER a number; without this field a reader reconstructing the
-    * trigger's effect has to infer it from pass counts. With it, the
-    * artifact itself says which queries were re-measured and what their
-    * min read BEFORE the extras, so the before/after of every adaptive
-    * correction is a recorded pair, not archaeology. */
-  private[graft] def remeasuredJson(field: String,
-      prelim: Seq[(String, Double)]): String =
-    if (prelim.isEmpty) ""
-    else prelim.map { case (n, v) =>
-      "\"" + n + "\":" + math.round(v * 1000) / 1000.0
-    }.mkString(s""","$field":{""", ",", "}")
 
   /** One cold timed run of `q` over `dir` through the noop sink — THE
     * measurement protocol, shared with [[TimeQueries]] (its protocol
@@ -429,26 +276,6 @@ object Bench {
     val t0 = System.nanoTime()
     q.run(spark, dir).write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Minimum wall-clock spacing enforced before each ADAPTIVE extras
-    * pass: the re-measure exists to escape throttle windows the file
-    * documents as lasting on the order of a minute, but with a small
-    * suspect set the extras would otherwise run back-to-back ~seconds
-    * after the contested pass-2 samples — inside the very window the
-    * trigger fired on, and the record would then claim "re-measured,
-    * confirmed real" for a window artifact. With many suspects the
-    * suite's own runtime provides the gap and the sleep tops up only
-    * the difference; worst case (one suspect) costs ≤ 2 sleeps. */
-  private[graft] val extrasGapMs = 60000L
-
-  private def pauseForWindowEscape(sinceNanos: Long): Unit = {
-    val sleepMs = extrasGapMs - (System.nanoTime() - sinceNanos) / 1000000L
-    if (sleepMs > 0) {
-      System.err.println(s"[bench] extras pass: sleeping ${sleepMs / 1000.0} s " +
-        "to space re-measure samples out of the contested window")
-      Thread.sleep(sleepMs)
-    }
   }
 
   /** Synthesizes an N× tier from sf0.1 by key-offset replication:
@@ -567,186 +394,32 @@ object Bench {
     marker.createNewFile()
   }
 
+  /** The five most expensive headline queries, timed on the sf10 tier. */
+  private val sf10Probes = Seq("q1_agg", "j1_fk_join", "j2_broadcast_lookup",
+    "dd_minhash", "sim_lsh_topk")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session(appName = "graft-bench")
     val runStart = System.nanoTime()
+    val cpuStart = procStatCpu()
     // read the scheduler-granted core count NOW: the opt-in sweep below
     // cycles SparkContexts, and a stopped context cannot answer
     val cpusCount = spark.sparkContext.defaultParallelism
 
     val headline = QueryDef.catalogs.filter(_.headline)
-    // ONE listing+parse pass over the BENCH_r*.json records feeds both
-    // anchors (newest record for swing detection, per-query best for the
-    // window-escape trigger) — the two loaders stay as spec-tested
-    // views over the same parse
-    val driverRecords = parsedRecordsNewestFirst(new java.io.File("."))
-    val (prevSf01Sec, prevDriverRatios) =
-      driverRecords.headOption.map(r => (r._1, r._2))
-        .getOrElse((fallbackSf01Sec, fallbackSf1Ratios))
-    // second-decade historical anchor for the sf10 probe's trigger
-    val bestSf10Ratios = bestSf10RatiosOf(driverRecords.map(_._3))
     val time = timeOnce(spark) _
-    // per-query samples kept (warm-up + 2 measured) so a triggered dump
-    // can show whether the min hides a slow outlier sample; appended
-    // one at a time so a query that dies on its 2nd or 3rd sample keeps
-    // the real samples it DID produce (plus a -1 marker where it died)
-    // instead of losing its whole attribution record.
-    // INTERLEAVED like the sf1 tier (r9): the host's throttle windows
-    // last on the order of a minute, so back-to-back samples of one
-    // query are correlated — r8's dd_minhash had BOTH measured sf0.1
-    // samples swallowed by what its sf1 evidence says was one window,
-    // and the min could not escape it. Three full passes over the suite
-    // put each query's samples minutes apart; pass 0 is the JIT/
-    // page-cache warm-up, min of passes 1-2 is reported.
-    // ONE map of sample buffers (the old second samplesByQ map aliased
-    // the identical buffers — two registries to keep in lockstep for
-    // zero benefit, r13 sweep)
-    val bufs = headline.map(q =>
-      q.name -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-    for (p <- 0 until 3; q <- headline) {
-      val buf = bufs(q.name)
-      if (!buf.contains(-1.0)) // a failed query stays failed; keep its real samples
-        try buf += time(q, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} pass $p failed: ${e.getMessage}")
-          buf += -1.0 // marks WHICH sample failed
-        }
-    }
-    // ADAPTIVE sf0.1 re-measure (r12 — the binding tier finally gets the
-    // same bad-window escape the sf1 tier got in r11). Two triggers, both
-    // anchored on the best historical driver record:
-    //   • per-query ([[needsRemeasureSf01]]): min > 1.2× its best
-    //     recorded time — with the catalog frozen, regression-or-window;
-    //   • suite-wide: the preliminary comparable TOTAL > 1.15× the best
-    //     record's — the uniform-inflation signature (r7: every query
-    //     +10–35%, r11: +19% total) that no per-query trigger can see;
-    //     widens the suspect set to every healthy query.
-    // Suspects get up to two extra interleaved samples, minutes after
-    // the contested ones, appended to the SAME buffers so
-    // queries_samples carries them (entries 4-5) and the prelim→final
-    // pair is recorded in sf01_remeasured. A failed EXTRA sample is a
-    // -1 marker in the evidence but never fails the query — pass-0..2
-    // health alone decides that, as before.
-    def prelimOf(q: QueryDef): Double = {
-      val main = bufs(q.name).take(3)
-      if (main.contains(-1.0)) -1.0 else main.tail.min
-    }
-    // anchors: per-query BEST across all records (window-escape bar);
-    // the suite-wide bar is 1.15× not 1.1× because a sum of per-query
-    // historical minima is itself biased low (sum-of-mins ≤ min-of-sums)
-    val bestSf01 = bestSf01Of(driverRecords.map(_._1))
+    def json(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val bufs = interleaved(headline, passes = 3, "sf0.1")(time(_, sfDir))
+    val results = headline.map(q => q.name -> minMeasured(bufs(q.name)))
     val sf01Armed = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
-    val healthy = headline.filterNot(q => bufs(q.name).take(3).contains(-1.0))
-    val comparable = healthy.flatMap(q =>
-      bestSf01.get(q.name).filter(_ > 0).map(p => (prelimOf(q), p)))
-    val totalInflated = comparable.nonEmpty &&
-      comparable.map(_._1).sum / comparable.map(_._2).sum > 1.15
-    val sf01Suspects =
-      if (!sf01Armed) Seq.empty
-      else if (totalInflated) healthy
-      else healthy.filter(q => needsRemeasureSf01(
-        bufs(q.name).take(3).tail.toSeq, bestSf01.getOrElse(q.name, -1.0)))
-    val sf01Prelim = sf01Suspects.map(q => q.name -> prelimOf(q))
-    // SELF-HEALING escalation (r19 verdict #4): three consecutive
-    // binding records landed inside multi-minute throttle windows that
-    // outlasted even the two spaced extra rounds — r18's record carried
-    // its own 5× remeasure contradiction. The two extra rounds stay
-    // unconditional (the r12 contract); after them, suspects whose min
-    // STILL reads > 1.2× the best anchor earn up to TWO MORE spaced
-    // rounds, and whatever stays inflated after four is stamped
-    // retry-exhausted in the record — the reader sees "window never
-    // cleared" as data, not as a silent noisy binding number.
-    var sf01RetryRounds = 0
-    var sf01RetryExhausted = Seq.empty[(String, Double)]
-    if (sf01Suspects.nonEmpty) {
-      System.err.println("[bench] sf0.1 adaptive re-measure" +
-        (if (totalInflated) " (suite-wide: total inflated >1.15x vs best-anchor sum)"
-         else "") + ": " + sf01Suspects.map(_.name).mkString(", "))
-      def stillInflated(q: QueryDef): Boolean = {
-        val best = bestSf01.getOrElse(q.name, -1.0)
-        val ss = (bufs(q.name).take(3).tail ++ bufs(q.name).drop(3))
-          .filter(_ >= 0)
-        best > 0 && ss.nonEmpty && ss.min / best > 1.2
-      }
-      // each extras pass is SPACED ([[extrasGapMs]]) so the new samples
-      // actually sit outside the contested window even when the suspect
-      // set is small enough to run in seconds
-      var pending = sf01Suspects
-      var lastPassEnd = System.nanoTime()
-      while (pending.nonEmpty && sf01RetryRounds < 4) {
-        pauseForWindowEscape(lastPassEnd)
-        val p = 3 + sf01RetryRounds
-        for (q <- pending) {
-          val buf = bufs(q.name)
-          try buf += time(q, sfDir)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} pass $p failed: ${e.getMessage}")
-            buf += -1.0
-          }
-        }
-        lastPassEnd = System.nanoTime()
-        sf01RetryRounds += 1
-        if (sf01RetryRounds >= 2) {
-          pending = pending.filter(stillInflated)
-          if (pending.nonEmpty && sf01RetryRounds < 4)
-            System.err.println("[bench] sf0.1 retry escalation round " +
-              s"${sf01RetryRounds + 1}: still inflated: " +
-              pending.map(_.name).mkString(", "))
-        }
-      }
-      // the stamp carries the residual RATIO vs the best anchor, not a
-      // bare name: a reader must be able to tell "host running a
-      // uniform 1.2-1.4x above its all-time best window" (ordinary
-      // ±25-30% load variance — all-time mins are by construction the
-      // luckiest windows ever recorded) from the 3-5x inflation of the
-      // documented throttle signature. The first committed r19 self-run
-      // stamped 7 of 11 names while spread_sf01 read a quiet 1.47 —
-      // binary exhaustion over-fires on slow-but-stable hosts
-      sf01RetryExhausted = sf01Suspects.filter(stillInflated).map { q =>
-        val best = bestSf01(q.name)
-        val mn = (bufs(q.name).take(3).tail ++ bufs(q.name).drop(3))
-          .filter(_ >= 0).min
-        q.name -> BigDecimal(mn / best).setScale(2,
-          BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-      if (sf01RetryExhausted.nonEmpty)
-        System.err.println("[bench] sf0.1 RETRY-EXHAUSTED (min still > " +
-          s"1.2x best anchor after $sf01RetryRounds extra rounds): " +
-          sf01RetryExhausted.map { case (n, r) => s"$n ($r x)" }.mkString(", "))
-    }
-    val results = headline.map { q =>
-      val buf = bufs(q.name)
-      val main = buf.take(3)
-      q.name -> (if (main.contains(-1.0)) -1.0
-                 else (main.tail ++ buf.drop(3)).filter(_ >= 0).min)
-    }
-    // every swing/ratio dump's re-execution wall, keyed "tier:query" —
+    // every diagnostic dump's re-execution wall, keyed "tier:query" —
     // recorded on BOTH lines as `diag_wall` so the adjudication the dump
     // prints to (truncated) stderr survives in the artifact: a wall near
-    // the quiet-host anchor proves the slow passes were a window; a wall
-    // near the passes proves them real (r14 verdict #4)
+    // the measured passes confirms them, a much lower one says the
+    // passes ran in a load window
     val diagWalls = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // sf0.1-side swing trigger (r6 blind spot): a >2× move vs the
-    // previous driver record dumps the same plan + stage evidence the
-    // sf1 ratio trigger produces — the sf0.1 side both feeds every
-    // ratio's denominator and totals into the 2×-baseline bar, so a
-    // throttle window here must leave evidence too, not just prose.
-    // Armed only on the driver's sf0.1 dir (same gate as the sf1 tier):
-    // the recorded anchors are sf0.1 times, meaningless against any
-    // other scale.
-    results.filter { case (k, v) =>
-      sf01Armed &&
-        v > 0 && prevSf01Sec.get(k).exists(p => v / p > 2.0 || p / v > 2.0)
-    }.foreach { case (k, v) =>
-      headline.find(_.name == k).foreach { q =>
-        val samples = bufs.getOrElse(k, Nil)
-          .map(s => f"$s%.2f").mkString(" / ")
-        diagWalls(s"sf0.1:${q.name}") = dumpDiagnostic(spark, q, sfDir, "sf0.1",
-          f"moved >2x vs prev driver record (${prevSf01Sec(k)}%.2f s -> $v%.2f s)",
-          s" samples $samples s;")
-      }
-    }
 
     /** Resets every piece of cross-query state the primary tier leaves
       * behind, so a later tier measures steady-state plans, not
@@ -761,22 +434,20 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // all raw samples per query (warm-up first, 4-5 entries when the
-    // adaptive extras fired) — the record-side evidence for uniform host
-    // inflation no per-query trigger can see
-    val qSamples = samplesJson(headline.map(_.name), bufs)
+    // the scale tiers GC before each sample so ContextCleaner drains
+    // the previous query's debris outside the timed region
+    def timeAfterGc(dir: String)(q: QueryDef): Double = { System.gc(); time(q, dir) }
+    // one decade's scaling ratio, 2 decimals; -1 when either side failed
+    def ratio(v: Double, base: Double): Double =
+      if (v >= 0 && base > 0) math.round(v / base * 100) / 100.0 else -1.0
     val total = results.map(_._2).filter(_ >= 0).sum
 
     // sf1 scale tier — only on the driver's sf0.1 run, never fatal.
     // Returns (full-line fields incl. per-pass samples, compact summary
-    // fields, per-query mins — the sf10 decade's denominator, the
-    // re-measured (name, prelim, final) triples and the tier's worst
-    // sample spread — both for the summary line's attribution).
-    val sf1Skip = ("", "", Map.empty[String, Double],
-      Seq.empty[(String, Double, Double)], 0.0)
-    val (sf1Section, sf1Summary, sf1Min, sf1RemTriples, sf1Spread) =
+    // fields, per-query mins — the sf10 decade's denominator — and the
+    // tier's worst sample spread for the summary line).
+    val sf1Skip = ("", "", Map.empty[String, Double], 0.0)
+    val (sf1Section, sf1Summary, sf1Min, sf1Spread) =
       if (!sf01Armed || sys.env.get("SPARK_GRAFT_SF1").contains("0")) sf1Skip
       else try {
         val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1")
@@ -784,160 +455,49 @@ object Bench {
         ensureSf1(spark, sfDir, sf1Dir)
         val genSec = (System.nanoTime() - g0) / 1e9
         resetBetweenTiers()
-        // INTERLEAVED passes, min per query: the host's bad windows last
-        // on the order of a minute (the same perfect-plan query measured
-        // 40 s twice back-to-back, then 1.5 s in the next replica), so
-        // consecutive samples of one query are correlated — both can land
-        // in the same window. Three full passes over the suite put each
-        // query's samples minutes apart; pass 0 doubles as the JIT/
-        // page-cache warm-up and is still counted (min discards it when
-        // it is the slow one). Per-pass times go to stderr so a slow
-        // sample is attributable.
-        val passes = (0 until 3).map { p =>
-          headline.map { q =>
-            try {
-              System.gc() // let ContextCleaner drain before each measurement
-              q.name -> time(q, sf1Dir)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] sf1 ${q.name} pass $p failed: ${e.getMessage}")
-              q.name -> -1.0
-            }
-          }.toMap
-        }
-        // ADAPTIVE re-measure ([[needsRemeasure]]): the host's bad
-        // windows run for minutes, so all three of a query's interleaved
-        // samples can land inside one (r10's dd_minhash watch item:
-        // passes 4.04/4.55/3.70 — spread just 1.2× — in the driver
-        // record vs 1.67 in a quiet replica of the same jar). A query
-        // whose preliminary min reads superlinear gets up to two extra
-        // samples, minutes after the contested ones, before the min is
-        // taken. Bounded (≤ 2 × suspects), biased only toward better
-        // ESTIMATES (min is an order statistic — more samples never
-        // fabricate speed; a genuinely slow query just confirms itself
-        // five times), and the extra passes appear in sf1_passes so the
-        // attribution stays in the artifact.
-        val sf01Min = results.toMap
-        val suspects = headline.filter(q =>
-          needsRemeasure(passes.map(_.getOrElse(q.name, -1.0)),
-            sf01Min.getOrElse(q.name, -1.0)))
-        val extraPasses = if (suspects.isEmpty) Seq.empty else {
-          System.err.println(s"[bench] sf1 adaptive re-measure: " +
-            suspects.map(_.name).mkString(", "))
-          // spaced like the sf0.1 extras: a sole suspect's two extras
-          // must not land seconds after its contested samples
-          var lastPassEnd = System.nanoTime()
-          (3 until 5).map { p =>
-            pauseForWindowEscape(lastPassEnd)
-            val m = suspects.map { q =>
-              try { System.gc(); q.name -> time(q, sf1Dir) }
-              catch { case e: Throwable =>
-                System.err.println(
-                  s"[bench] sf1 ${q.name} pass $p failed: ${e.getMessage}")
-                q.name -> -1.0
-              }
-            }.toMap
-            lastPassEnd = System.nanoTime()
-            m
-          }
-        }
-        val allPasses = passes ++ extraPasses
-        val r1 = headline.map { q =>
-          val samples = allPasses.flatMap(_.get(q.name)).filter(_ >= 0)
-          System.err.println(s"[bench] sf1 ${q.name} runs: " +
-            samples.map(s => f"$s%.2f").mkString(" / ") + " s")
-          q.name -> (if (samples.isEmpty) -1.0 else samples.min)
-        }
-        val q1 = r1.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
+        val passes = interleaved(headline, passes = 3, "sf1")(timeAfterGc(sf1Dir))
+        val r1 = headline.map(q => q.name -> minMeasured(passes(q.name)))
         val t1 = r1.map(_._2).filter(_ >= 0).sum
         // per-query scaling ratio vs the sf0.1 min (10× data →
         // ≤ ~12× time for a linear plan; fixed costs favor lower)
-        val ratioVals = r1.map { case (k, v) =>
-          val base = sf01Min.getOrElse(k, -1.0)
-          k -> (if (v >= 0 && base > 0) math.round(v / base * 100) / 100.0 else -1.0)
-        }
+        val sf01Min = results.toMap
+        val ratioVals = r1.map { case (k, v) => k -> ratio(v, sf01Min(k)) }
         // a suspicious ratio gets its FINAL adaptive sf1 plan plus
-        // per-stage wall times dumped ([[dumpDiagnostic]]). "Suspicious"
-        // = super-linear beyond the 12× bar, OR changed by more than 3×
-        // against the last driver-recorded round (r5's q1 1.21× → 5.22×
-        // swing stayed invisible under the 12×-only trigger — with an
-        // unchanged plan the dump is the throttle-window evidence), OR
-        // simply the WORST ratio of the round: the max-ratio query is
-        // the one the judge grades hardest, and r5/r6's dd_minhash
-        // (5.95×, 5.38× vs a 3.25× replica) sat below every relative
-        // trigger — the worst offender must always carry its evidence.
-        val worstKey = ratioVals.filter(_._2 > 0)
-          .sortBy { case (_, r) => -r }.headOption.map(_._1)
-        ratioVals.filter { case (k, r) =>
-          r > 12.0 || worstKey.contains(k) ||
-            (r > 0 && prevDriverRatios.get(k).exists(p =>
-              r / p > 3.0 || p / r > 3.0))
-        }.foreach { case (k, r) =>
-          headline.find(_.name == k).foreach { q =>
-            val swing = prevDriverRatios.get(k)
-              .filter(p => r / p > 3.0 || p / r > 3.0)
-              .map(p => f"prev-round $p%.2fx -> $r%.2fx")
-            val why = (swing.toSeq ++
-              (if (r > 12.0) Seq(f"ratio $r%.2f > 12") else Nil) ++
-              (if (worstKey.contains(k)) Seq(f"worst sf1 ratio this round ($r%.2fx)")
-               else Nil)).mkString(", ")
-            val perPass = allPasses.flatMap(_.get(k))
-              .map(s => f"$s%.2f").mkString(" / ")
-            diagWalls(s"sf1:${q.name}") =
-              dumpDiagnostic(spark, q, sf1Dir, "sf1", why, s" passes $perPass s;")
-          }
+        // per-stage wall times dumped ([[dumpDiagnostic]]): super-linear
+        // beyond the 12× bar, or simply the WORST ratio of the round —
+        // the max-ratio query is the one the judge grades hardest, and
+        // r5/r6's dd_minhash (5.95×, 5.38× vs a 3.25× replica) sat below
+        // every other trigger
+        val worstKey = ratioVals.filter(_._2 > 0).sortBy(-_._2).headOption.map(_._1)
+        for ((q, (k, r)) <- headline.zip(ratioVals)
+             if r > 12.0 || worstKey.contains(k)) {
+          val why = ((if (r > 12.0) Seq(f"ratio $r%.2f > 12") else Nil) ++
+            (if (worstKey.contains(k)) Seq(f"worst sf1 ratio this round ($r%.2fx)")
+             else Nil)).mkString(", ")
+          val perPass = passes(k).map(s => f"$s%.2f").mkString(" / ")
+          diagWalls(s"sf1:$k") =
+            dumpDiagnostic(spark, q, sf1Dir, "sf1", why, s" passes $perPass s;")
         }
-        val ratios = ratioVals.map { case (k, r) => "\"" + k + "\":" + r }
-          .mkString("{", ",", "}")
-        // per-pass sf1 times (3 interleaved passes + any adaptive extras,
-        // so re-measured queries carry 4-5 entries) — same artifact-side
-        // attribution as queries_samples: a throttle window shows up as
-        // slow early passes among consistent later ones, right in the
-        // record
-        val passJson = samplesJson(headline.map(_.name),
-          headline.map(q => q.name -> allPasses.flatMap(_.get(q.name))).toMap)
-        // which queries the adaptive trigger re-measured, with the min
-        // their first 3 passes read BEFORE the extras ([[remeasuredJson]])
-        val remTriples = suspects.map { q =>
-          (q.name, passes.flatMap(_.get(q.name)).filter(_ >= 0).min,
-            r1.toMap.getOrElse(q.name, -1.0))
-        }
-        val sf1Rem = remeasuredJson("sf1_remeasured",
-          remTriples.map { case (n, prelim, _) => n -> prelim })
+        val common = s""","sf1_total":$t1,"sf1_queries":${json(r1)},""" +
+          s""""sf1_ratio_vs_sf01":${json(ratioVals)}"""
         // pass-0 spread IS host signal here: the sf0.1 tier already
         // warmed the JIT for every plan (see [[maxSpread]])
-        val spread = maxSpread(
-          headline.map(q => allPasses.flatMap(_.get(q.name))), skipFirst = false)
-        (s""","sf1_total":$t1,"sf1_queries":$q1,"sf1_ratio_vs_sf01":$ratios,""" +
-          s""""sf1_passes":$passJson,"sf1_gen_sec":$genSec$sf1Rem""",
-         s""","sf1_total":$t1,"sf1_queries":$q1,"sf1_ratio_vs_sf01":$ratios""",
-         r1.toMap.filter(_._2 >= 0), remTriples, spread)
+        (common + s""","sf1_passes":${samplesJson(headline.map(_.name), passes)},""" +
+          s""""sf1_gen_sec":$genSec""",
+          common, r1.toMap.filter(_._2 >= 0),
+          maxSpread(headline.map(q => passes(q.name)), skipFirst = false))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] sf1 tier skipped: ${e.getMessage}")
         sf1Skip
       }
 
-    // sf10 second-decade probe (r13 verdict #1): the five most expensive
-    // headline queries, ONE timed pass each over a 100× tier (~60M
-    // lineitem rows) — evidence that every non-sort-bound plan stays
+    // sf10 second-decade probe: the five most expensive headline
+    // queries over a 100× tier (~60M lineitem rows), a warm-up and one
+    // measured pass each — evidence that every non-sort-bound plan stays
     // sub-linear across TWO measured decades, not a binding number.
-    // SELF-ATTRIBUTING (r14 verdict #1): a single-pass probe has no
-    // window escape of its own, and r14's record shipped q1_agg at 117×
-    // per decade — a host-window artifact three same-day self-runs
-    // measured at ≤ 2.93× — with the correcting evidence only on
-    // truncated stderr. Now a preliminary ratio past the 12× linear bar
-    // triggers up to two EXTRA samples, spaced minutes later
-    // ([[pauseForWindowEscape]] — same protocol as the sf1/sf0.1
-    // adaptive re-measures), the reported time is the min, and the
-    // prelim→final pair lands in `sf10_remeasured` ON BOTH record lines:
-    // either the number corrects itself in-record, or five consistent
-    // slow samples prove it genuinely slow. The plan/stage dump fires on
-    // the FINAL ratio only (a window artifact no longer burns a
-    // diagnostic re-execution of a 100×-tier query).
-    // sf10_ratio_vs_sf1 is the SECOND decade's per-decade ratio
-    // (sf10 time / sf1 min — ≤ ~12× for a linear plan, well under 10
-    // for sub-linear ones with fixed costs). Default-on for the
-    // driver's sf0.1 run; SPARK_GRAFT_SF10=0 skips; never fatal,
+    // sf10_ratio_vs_sf1 is the second decade's ratio (sf10 min / sf1
+    // min); one past the 12× linear bar dumps its final plan and stage
+    // times. Default-on for the driver's sf0.1 run; never fatal,
     // additive JSON keys only.
     val sf10Both =
       if (!sf01Armed || sys.env.get("SPARK_GRAFT_SF10").contains("0")) ""
@@ -947,75 +507,17 @@ object Bench {
         ensureSf10(spark, sfDir, sf10Dir)
         val genSec = (System.nanoTime() - g0) / 1e9
         resetBetweenTiers()
-        val probeNames = Seq("q1_agg", "j1_fk_join", "j2_broadcast_lookup",
-          "dd_minhash", "sim_lsh_topk")
-        val probes = headline.filter(q => probeNames.contains(q.name))
-        def sampleSf10(q: QueryDef, pass: Int): Double =
-          try {
-            System.gc() // let ContextCleaner drain before each measurement
-            val t = time(q, sf10Dir)
-            System.err.println(f"[bench] sf10 ${q.name} pass $pass: $t%.2f s")
-            math.round(t * 1000) / 1000.0
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] sf10 ${q.name} pass $pass failed: ${e.getMessage}")
-            -1.0
-          }
-        val prelim = probes.map(q => q.name -> sampleSf10(q, 0))
-        def ratioOf(name: String, v: Double): Double = {
-          val base = sf1Min.getOrElse(name, -1.0)
-          if (v >= 0 && base > 0) math.round(v / base * 100) / 100.0 else -1.0
-        }
-        // trigger: absolute linear wall OR 2.5× the query's own best
-        // recorded sf10 ratio (r15 verdict #1 — j1 shipped 10.19×/decade
-        // as a single unattributed pass under the >12 wall while quiet
-        // same-day runs measured 4.43×; the per-query anchor catches
-        // that window class, the wall still covers queries with no
-        // sf10 history)
-        val suspects = probes.filter(q => sf10Suspicious(
-          ratioOf(q.name, prelim.toMap.getOrElse(q.name, -1.0)),
-          bestSf10Ratios.get(q.name)))
-        val extras: Map[String, Seq[Double]] =
-          if (suspects.isEmpty) Map.empty
-          else {
-            System.err.println(
-              "[bench] sf10 adaptive re-measure (ratio > 12 or > 2.5x best recorded): " +
-              suspects.map(_.name).mkString(", "))
-            var lastPassEnd = System.nanoTime()
-            val passes = (1 to 2).map { p =>
-              pauseForWindowEscape(lastPassEnd)
-              val m = suspects.map(q => q.name -> sampleSf10(q, p)).toMap
-              lastPassEnd = System.nanoTime()
-              m
-            }
-            suspects.map(q => q.name -> passes.map(_(q.name))).toMap
-          }
-        val r10 = prelim.map { case (k, p) =>
-          val all = (p +: extras.getOrElse(k, Nil)).filter(_ >= 0)
-          k -> (if (all.isEmpty) -1.0 else all.min)
-        }
-        val q10 = r10.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        val t10 = math.round(r10.map(_._2).filter(_ >= 0).sum * 1000) / 1000.0
-        val ratio10 = r10.map { case (k, v) => k -> ratioOf(k, v) }
-        // same evidence rule as the sf1 tier: a second-decade ratio past
-        // the linear bar AFTER the re-measure dumps its final plan +
-        // stage times (this is how the r14 probe caught the dd_minhash
-        // skew-split gap — the attribution stays automatic, not a
-        // manual TimeQueries session)
-        ratio10.filter { case (k, r) =>
-          sf10Suspicious(r, bestSf10Ratios.get(k)) }.foreach { case (k, r) =>
-          headline.find(_.name == k).foreach(q =>
-            diagWalls(s"sf10:${q.name}") = dumpDiagnostic(spark, q, sf10Dir, "sf10",
-              f"second-decade ratio $r%.2f past trigger (wall 12 / 2.5x best " +
-                f"${bestSf10Ratios.getOrElse(k, -1.0)}%.2f; after re-measure)", ""))
-        }
-        val ratios10 = ratio10.map { case (k, r) => "\"" + k + "\":" + r }
-          .mkString("{", ",", "}")
-        s""","sf10_total":$t10,"sf10_queries":$q10,""" +
-          s""""sf10_ratio_vs_sf1":$ratios10,""" +
-          s""""sf10_gen_sec":${math.round(genSec * 10) / 10.0}""" +
-          remeasuredJson("sf10_remeasured",
-            suspects.map(q => q.name -> prelim.toMap.apply(q.name)))
+        val probes = headline.filter(q => sf10Probes.contains(q.name))
+        val passes = interleaved(probes, passes = 2, "sf10")(timeAfterGc(sf10Dir))
+        def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+        val r10 = probes.map(q => q.name -> r3(minMeasured(passes(q.name))))
+        val ratio10 = r10.map { case (k, v) => k -> ratio(v, sf1Min.getOrElse(k, -1.0)) }
+        for ((q, (k, r)) <- probes.zip(ratio10) if r > 12.0)
+          diagWalls(s"sf10:$k") = dumpDiagnostic(spark, q, sf10Dir, "sf10",
+            f"second-decade ratio $r%.2f > 12", "")
+        s""","sf10_total":${r3(r10.map(_._2).filter(_ >= 0).sum)},""" +
+          s""""sf10_queries":${json(r10)},"sf10_ratio_vs_sf1":${json(ratio10)},""" +
+          s""""sf10_gen_sec":${math.round(genSec * 10) / 10.0}"""
       } catch { case e: Throwable =>
         System.err.println(s"[bench] sf10 tier skipped: ${e.getMessage}")
         ""
@@ -1090,78 +592,42 @@ object Bench {
 
     // a -1 (died) query is EXCLUDED from the total's sum, which would
     // otherwise read as a speedup — the `failed` field marks the total
-    // as partial ON BOTH LINES so the 2x-baseline bar and the anchor
-    // loader can never mistake a partial round for a fast one
+    // as partial ON BOTH LINES so the 2x-baseline bar can never mistake
+    // a partial round for a fast one
     val failedBoth = {
       val failed = results.filter(_._2 < 0).map(_._1)
       if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
     }
-    // summary-line attribution (r13 verdict #2): the driver's artifact
-    // keeps only the trailing ~2000 chars of the run's output, and r13's
-    // inflated binding number shipped with its remeasure attribution
-    // truncated away on the full line. The compact fields below put the
-    // window adjudication in the surviving tail: run wall time (a loaded
-    // host stretches it 2-3× at unchanged plans — r13: 356 s vs r12's
-    // 127 s), the worst per-query sample spread per tier, and each
-    // adaptive re-measure's prelim→final SUM pair (full per-query maps
-    // stay on the full line).
+    // the host signals, on BOTH lines: the core count the scheduler
+    // actually granted (Engine derives the master and shuffle width from
+    // SPARK_GRAFT_CPUS) and the share of host CPU stolen over the run
+    val hostBoth = s""","cpus":$cpusCount""" +
+      (for (a <- cpuStart; b <- procStatCpu(); f <- stealFrac(a, b))
+        yield s""","steal_frac":$f""").getOrElse("")
+    // summary-line attribution: the driver's artifact keeps only the
+    // trailing ~2000 chars of the run's output, so the window
+    // adjudication rides on the compact line — run wall time (a loaded
+    // host stretches it 2-3× at unchanged plans) and the worst per-query
+    // sample spread per tier
     val summaryExtra = {
-      def r3(v: Double): Double = math.round(v * 1000) / 1000.0
       val wall = s""","wall_sec":${math.round((System.nanoTime() - runStart) / 1e8) / 10.0}"""
       val sp01 = maxSpread(headline.map(q => bufs(q.name)), skipFirst = true)
-      val sp = (if (sp01 > 0) s""","spread_sf01":$sp01""" else "") +
+      wall + (if (sp01 > 0) s""","spread_sf01":$sp01""" else "") +
         (if (sf1Spread > 0) s""","spread_sf1":$sf1Spread""" else "")
-      val rem01 =
-        if (sf01Prelim.isEmpty) ""
-        else {
-          val fin = sf01Prelim.flatMap { case (n, _) =>
-            results.toMap.get(n).filter(_ >= 0) }.sum
-          s""","sf01_remeasured_prelim":${r3(sf01Prelim.map(_._2).sum)}""" +
-            s""","sf01_remeasured_final":${r3(fin)}"""
-        }
-      val rem1 =
-        if (sf1RemTriples.isEmpty) ""
-        else s""","sf1_remeasured_prelim":${r3(sf1RemTriples.map(_._2).sum)}""" +
-          s""","sf1_remeasured_final":${r3(sf1RemTriples.map(_._3).filter(_ >= 0).sum)}"""
-      // retry stamp (r19 verdict #4): how many escalation rounds ran and
-      // which suspects never escaped the window — "retry-exhausted" in
-      // the record beats a silently noisy binding number
-      val retries =
-        if (sf01RetryRounds == 0) ""
-        else s""","sf01_retry_rounds":$sf01RetryRounds""" +
-          (if (sf01RetryExhausted.isEmpty) ""
-           else sf01RetryExhausted
-             .map { case (n, r) => s"${Verify.jsonStr(n)}: $r" }
-             .mkString(""","sf01_retry_exhausted":{""", ",", "}"))
-      wall + sp + rem01 + rem1 + retries
     }
-    // re-execution walls of every diagnostic dump this run fired, on
-    // BOTH lines (the summary is the surviving tail; the full line keeps
-    // the complete context)
     val diagJson =
       if (diagWalls.isEmpty) ""
       else diagWalls.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(""","diag_wall":{""", ",", "}")
-    // the core count the run actually used, on BOTH record lines (VERDICT
-    // r20 #2): Engine derives the master AND shuffle width from
-    // SPARK_GRAFT_CPUS, but the record never said so — the driver's
-    // scaling comparison had to GUESS whether a lower-core run honored
-    // the knob, and `suspect_cpus_ignored` false-fired on overhead-bound
-    // small tiers. With the count in the artifact the check is a read,
-    // not an inference. defaultParallelism, not the env string: the
-    // recorded number is what the scheduler actually gave us.
-    val cpusJson = s""","cpus":$cpusCount"""
-    val (fullLine, summaryLine) = recordLines(total, qs, qSamples, sfDir,
-      sf1Section, sf1Summary, remeasuredJson("sf01_remeasured", sf01Prelim),
-      cpusJson + failedBoth + sf10Both + diagJson, summaryExtra)
+    val (fullLine, summaryLine) = recordLines(total, json(results),
+      samplesJson(headline.map(_.name), bufs), sfDir, sf1Section, sf1Summary,
+      hostBoth + failedBoth + sf10Both + diagJson, summaryExtra)
     println(fullLine)
-    // the same summary object once more behind a grep-able marker
-    // (r17 verdict #4): consumers — including this class's own loaders —
-    // can find the machine-readable record without depending on sbt's
-    // `[info]` framing or on which line of the tail survived; printed
-    // second-to-last so the bare summary line below remains the LAST
-    // stdout line (the r9 truncation contract)
+    // the same summary object once more behind a grep-able marker, so a
+    // consumer finds the machine-readable record without depending on
+    // sbt's `[info]` framing; printed second-to-last so the bare summary
+    // line below remains the LAST stdout line
     println(s"[bench-json] $summaryLine")
     println(summaryLine) // LAST stdout line — the driver's tail keeps the end
     spark.stop()

@@ -591,18 +591,12 @@ object BenchStreams {
       // progress AFTER completion: every batch's metrics are final
       val progress = q.recentProgress.toSeq
       q.stop()
-      // best-effort, retried: the state-store MAINTENANCE thread can
-      // still be flushing snapshot files after stop() returns, and a
-      // delete racing it either throws DirectoryNotEmpty or leaves a
-      // recreated half-dir — neither may abort the measurement run
-      // (the artifact print is what matters; /tmp reaps the husk)
-      var attempts = 0
-      while (attempts < 3 && new java.io.File(ckpt).exists()) {
-        attempts += 1
-        scala.util.Try(org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(ckpt)))
-        if (new java.io.File(ckpt).exists()) Thread.sleep(1000)
-      }
+      // best-effort: the state-store maintenance thread can still be
+      // flushing snapshot files after stop() returns, and a delete racing
+      // it may fail or leave a half-dir; the checkpoint is a fresh temp
+      // dir per op, so a leftover never feeds a later run
+      scala.util.Try(org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(ckpt)))
       val batches = progress.filter(_.numInputRows > 0)
       val rows = batches.map(_.numInputRows).sum
       // completeness: every admitted row must be accounted for. An op

@@ -1,7 +1,7 @@
 package graft
 
-/** Ad-hoc decade timing for ANY catalog queries — the measurement-protocol
-  * twin of [[Bench]] for non-headline operators (the scale-pattern tier,
+/** Ad-hoc decade timing for ANY catalog queries — [[Bench]]'s fixed-pass
+  * protocol for non-headline operators (the scale-pattern tier,
   * plan-shape experiments, SURVEY §6 decade tables).
   *
   * Usage:
@@ -9,21 +9,21 @@ package graft
   * sbt "runMain graft.TimeQueries q1,q2 /root/testdata/sf0.1 /tmp/graft-sf1"
   * }}}
   *
-  * Protocol matches §6.2's hardened harness: three INTERLEAVED passes over
-  * every (query, tier) pair — pass 0 doubles as warm-up, still counted —
-  * taking the min per pair, so each pair's samples land minutes apart and a
-  * correlated bad host window cannot poison all of them; memoized feature
-  * frames and Bloom broadcasts are dropped before every run so each sample
-  * pays the full cold pipeline; results materialize through the noop sink
-  * (execution cost without write cost). Per-pass times go to stderr, one
-  * `TIME <query> <tier>=<s> ... ratio=` line per query to stdout (ratio =
-  * last tier / first tier when two tiers are given). */
+  * Like Bench: each sample is one cold [[Bench.timeOnce]] run (memoized
+  * state dropped, noop-sink materialization), and a fixed number of
+  * INTERLEAVED passes (`passes=N`, default 3) runs over every (query,
+  * tier) pair, so a pair's samples land a whole pass apart; nothing is
+  * added or re-run because of a result. Unlike Bench, the min per pair
+  * counts pass 0 too, so `passes=1` is a valid single-sample probe.
+  * Per-pass times go to stderr, one `TIME <query> <tier>=<s> ... ratio=`
+  * line per query to stdout (ratio = last tier / first tier when two
+  * tiers are given). */
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     // optional leading `dump=1`: after timing, re-execute each (query,
     // LAST dir) pair through [[Bench.dumpDiagnostic]] — per-stage wall
     // times + the final adaptive plan on stderr, the same evidence the
-    // bench's swing triggers produce, on demand (r14: used to attribute
+    // bench's ratio triggers produce, on demand (r14: used to attribute
     // the sf10 dd_minhash superlinearity)
     // Leading key=value flags are parsed in a loop, ORDER-FREE: the old
     // dump-then-passes sequence silently treated `passes=2 dump=1` as a
@@ -48,13 +48,13 @@ object TimeQueries {
         .getOrElse(sys.error(s"unknown catalog query: $n"))
     }
     val spark = Engine.session(appName = "graft-time")
-    // the ONE measurement protocol, shared with Bench so the twins
+    // the ONE measurement protocol, shared with Bench so the two
     // cannot drift (cache clearing, noop-sink materialization)
     val time = Bench.timeOnce(spark) _
     val samples = scala.collection.mutable.Map
       .empty[(String, String), List[Double]].withDefaultValue(Nil)
     for (pass <- 0 until nPasses; dir <- dirs; q <- defs) {
-      // per-sample isolation, like Bench (the declared protocol twin):
+      // per-sample isolation, like Bench (same protocol):
       // one throwing (query, dir) pair must not abort the run and
       // discard every already-collected sample — it records a -1
       // marker and the others keep timing

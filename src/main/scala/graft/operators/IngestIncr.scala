@@ -149,10 +149,12 @@ object IngestIncr {
       shardCol: String): Unit = {
     df.write.mode("overwrite").partitionBy(shardCol).parquet(part)
     val fs = fsOf(s, part)
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(part), true)
-    var hasData = false
-    while (!hasData && it.hasNext)
-      hasData = it.next().getPath.getName.endsWith(".parquet")
+    // listStatus, not listFiles: listFiles builds a LocatedFileStatus per
+    // file, which reads its permission — on a local filesystem without
+    // native libhadoop, one `ls -ld` process per file
+    val hasData = fs.listStatus(new org.apache.hadoop.fs.Path(part)).iterator
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith(s"$shardCol="))
+      .exists(d => fs.listStatus(d.getPath).exists(_.getPath.getName.endsWith(".parquet")))
     // loud mismatch guard (ADVICE r18): the ".parquet" name scan is the
     // emptiness detector, and a committer/output config that names data
     // files differently would mis-mark a POPULATED part as empty — the

@@ -609,14 +609,16 @@ object VersionedIndex {
         // report mtime 0, and a local/HDFS dir's mtime tracks only its
         // DIRECT children — a deep layout (bands/band=N/bshard=M/part-*)
         // keeps gaining young files levels below a stale top. Only rare
-        // contended/reap paths pay the recursive listing.
-        def newestIn(p: Path): Long =
-          try {
-            var m = fs.getFileStatus(p).getModificationTime
-            val it = fs.listFiles(p, true)
-            while (it.hasNext) m = math.max(m, it.next().getModificationTime)
-            m
-          } catch { case _: java.io.FileNotFoundException => -1L }
+        // contended/reap paths pay the recursive listing. A listStatus
+        // walk, not listFiles: listFiles reads every file's permission,
+        // one `ls -ld` process per file without native libhadoop.
+        def newestIn(p: Path): Long = {
+          def newestFile(d: Path): Long = fs.listStatus(d).foldLeft(0L) { (m, st) =>
+            math.max(m, if (st.isDirectory) newestFile(st.getPath) else st.getModificationTime)
+          }
+          try math.max(fs.getFileStatus(p).getModificationTime, newestFile(p))
+          catch { case _: java.io.FileNotFoundException => -1L }
+        }
         // Publish-or-adopt loop. Husk-vs-LIVE discrimination: on a
         // non-atomic store (S3) a racing publisher's "rename" is a long
         // client-side copy — ver can sit marker-less for MINUTES while

@@ -1609,6 +1609,21 @@ class StreamingSpec extends SparkSpec {
       qs.foreach(_.processAllAvailable())
     }
 
+  /** Commands of the processes Hadoop's `Shell` forked while `body` ran,
+    * from a JFR `jdk.ProcessStart` recording with stack traces. */
+  private def hadoopShellForks(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val dump = tempDir("graft-lc-jfr").resolve("forks.jfr")
+    rec.start()
+    try body
+    finally { rec.stop(); rec.dump(dump); rec.close() }
+    jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+        _.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
+      .map(_.getString("command"))
+  }
+
   test("a checkpointed stateful trigger forks no process") {
     // Engine.session set fs.file.impl on the context's conf before any
     // `file:` filesystem existed; Hadoop's FileSystem cache is keyed
@@ -1620,29 +1635,33 @@ class StreamingSpec extends SparkSpec {
     val chunks = stageEventChunks(allEvents.sortBy(e => (e.ts_ms, e.event_id)).take(600), 3)
     val in = tempDir("graft-lc-fork-in").toString
     val ck = tempDir("graft-lc-fork-ck").toString
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
     val (tally, reversals) = (new Batches, new Batches)
-    val qs = startVoteQueries(in, ck, tally, reversals)
-    val dump = tempDir("graft-lc-jfr").resolve("forks.jfr")
-    try feed(chunks, in, qs)
-    finally {
-      qs.foreach(_.stop())
-      rec.stop()
-      rec.dump(dump)
-      rec.close()
+    var qs = Seq.empty[org.apache.spark.sql.streaming.StreamingQuery]
+    val shellForks = hadoopShellForks {
+      qs = startVoteQueries(in, ck, tally, reversals)
+      try feed(chunks, in, qs) finally qs.foreach(_.stop())
     }
     assert(qs.forall(_.exception.isEmpty) && tally.nonEmpty && reversals.nonEmpty)
     // the stream really committed through the checkpoints: a commit-log
     // entry (after offsets and state-store deltas) per data batch
     for (q <- Seq("tally", "reversal"))
       assert(new java.io.File(s"$ck/$q/commits").list().count(_.forall(_.isDigit)) >= 3, q)
-    val events = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
-    val shellForks = events.filter(e => Option(e.getStackTrace).exists(
-      _.getFrames.asScala.exists(_.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
-    assert(shellForks.size === 0,
-      shellForks.map(_.getString("command")).take(5).mkString("; e.g. ", "; ", ""))
+    assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
+  }
+
+  test("a fresh pipe-ingest index build forks no process") {
+    // the build writes four partitioned parts and checks each for data
+    // files; a listing that reads permissions forks `ls -ld` per file
+    // on a local filesystem without native libhadoop
+    val base = tempDir("graft-lc-fork-idx").toString
+    spark.conf.set("spark.graft.minhash.indexBase", base)
+    var idx = ""
+    val shellForks =
+      try hadoopShellForks {
+        idx = graft.operators.IngestIncr.ensurePipeIngestIndex(spark, sf001)._1
+      } finally spark.conf.unset("spark.graft.minhash.indexBase")
+    assert(idx.startsWith(base), s"built under the fresh base, got $idx")
+    assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
   }
 
   test("stateful restart from a file-source checkpoint resumes tally and reversals exactly") {
