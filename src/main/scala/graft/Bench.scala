@@ -33,135 +33,52 @@ import org.apache.spark.sql.functions._
   *    one pass per query into its own file.
   * A linear plan lands ≤ ~12× per decade; a ratio past that, and the
   * worst sf1 ratio of the run, dumps its final plan and stage times to
-  * stderr ([[dumpDiagnostic]]). The scale tiers are additive JSON keys;
-  * their failure never corrupts the primary metric.
+  * stderr ([[dumpDiagnostic]], the same [[Explain.dump]] that
+  * `runMain graft.Explain` writes on demand). The scale tiers are
+  * additive JSON keys; their failure never corrupts the primary metric.
+  * [[TimeQueries]] runs this protocol ([[timeOnce]], [[interleaved]]) for
+  * any catalog queries over any tiers.
   */
 object Bench {
 
-  /** Diagnostic dump (the scale tiers' ratio triggers and `TimeQueries
-    * dump=1`): re-executes `q` over `dir` once through
-    * `toRdd` so AQE finalizes (an unexecuted frame would print the
-    * innocent initial plan and hide exactly the runtime-rewrite class
-    * this diagnostic exists for), with a stage listener attached, and
-    * dumps per-stage wall times + the final adaptive plan to stderr.
-    * Guarded: a diagnostic failure must never discard the measurements
-    * it annotates.
-    *
-    * Returns the re-execution's WALL seconds (-1 when the dump failed):
-    * the callers put it in the record as `diag_wall` (r14 verdict #4 —
-    * "plan/stage dump IN-RECORD"). The dump runs minutes after the
-    * contested samples, so when a window caused the slow passes this
-    * wall lands near the quiet-host time and the record self-adjudicates
-    * (r15's first use: j1_fk_join sf1 passes 33/29/12/6.5/6.1 s while
-    * the dump's re-execution ran the identical final plan in ~2.6 s —
-    * matching r13's quiet 2.53 s); a genuinely slow query simply
-    * confirms its passes one more time. Stderr keeps the full stage +
-    * plan evidence; the record keeps the number. */
-  private[graft] def dumpDiagnostic(spark: SparkSession, q: QueryDef, dir: String,
-      tag: String, why: String, samplesNote: String): Double =
+  /** Diagnostic dump for the scale tiers' ratio triggers: re-executes `q`
+    * over `dir` once through [[Explain.dump]] and prints its sections to
+    * stderr. Returns the re-execution's wall seconds, −1 when the dump
+    * failed; it goes in the record as `diag_wall`. The dump runs minutes
+    * after the contested samples, so when a load window caused the slow
+    * passes this wall lands near the quiet-host time, and a genuinely
+    * slow query confirms its passes once more. A diagnostic failure never
+    * discards the measurements it annotates. */
+  private def dumpDiagnostic(spark: SparkSession, q: QueryDef, dir: String,
+      tag: String, why: String): Double =
     scala.util.Try {
-      // the timed runs clear these caches up front, so the measurement is
-      // the cold pipeline; the diagnostic re-run must match, or a
-      // dedup-family dump shows warm-cache stage times that understate
-      // the very number it exists to attribute
-      graft.operators.RunCaches.clearAll()
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      // per-stage straggler evidence: max single-task wall and the
-      // stage's summed task time — a 7 s stage of 21 tasks reads as
-      // skew when max ≈ wall (one straggler) and as saturation when
-      // sum ≈ wall × cores (r14 sf10 attribution). Keyed by
-      // (stageId, attempt), not stageId alone: a retried stage attempt
-      // would otherwise merge into its predecessor's entry — sumTask
-      // double-counting and maxTask mixing attempts in the printed
-      // evidence (ADVICE r14).
-      val taskMax = new java.util.concurrent.ConcurrentHashMap[(Int, Int), Long]()
-      val taskSum = new java.util.concurrent.ConcurrentHashMap[(Int, Int), Long]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            ev: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          Option(ev.taskInfo).filter(_.finished).foreach { ti =>
-            taskMax.merge((ev.stageId, ev.stageAttemptId), ti.duration, math.max(_, _))
-            taskSum.merge((ev.stageId, ev.stageAttemptId), ti.duration, _ + _)
-          }
-        override def onStageCompleted(
-            ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = ev.stageInfo
-          val dur = for {
-            s <- i.submissionTime; e <- i.completionTime
-          } yield (e - s) / 1000.0
-          val mx = taskMax.getOrDefault((i.stageId, i.attemptNumber()), 0L) / 1000.0
-          val sm = taskSum.getOrDefault((i.stageId, i.attemptNumber()), 0L) / 1000.0
-          stages.add(f"    stage ${i.stageId}: ${dur.getOrElse(-1.0)}%.2f s, " +
-            f"${i.numTasks} tasks, maxTask $mx%.2f s, sumTask $sm%.1f s " +
-            s"(${i.name.linesIterator.next().take(70)})")
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val w0 = System.nanoTime()
-        val qe = q.run(spark, dir).queryExecution
-        qe.toRdd.count()
-        val wall = math.round((System.nanoTime() - w0) / 1e6) / 1000.0
-        // listener bus is async: drain it (bounded at 5 s) before reading
-        // the stage list. A fixed 500 ms could truncate the evidence
-        // exactly when it matters — this dump fires during loaded
-        // windows, when the bus drains slowest (r13 sweep).
-        if (!org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 5000L))
-          stages.add("    (listener bus not drained in 5 s; stage list may be short)")
-        // per-operator SQL metrics (output rows, op wall time) — the
-        // stage names alone cannot say WHICH operator a straggler stage
-        // was running (r14 sf10 attribution); walk the executed tree
-        // including materialized AQE query stages
-        def metricLines(p: org.apache.spark.sql.execution.SparkPlan,
-            depth: Int): Seq[String] = {
-          val keep = p.metrics.filter { case (k, m) =>
-            (k.contains("numOutputRows") || k.contains("time")) && m.value > 0
-          }.map { case (k, m) => s"$k=${m.value}" }
-          val self =
-            if (keep.isEmpty) Seq.empty
-            else Seq(s"    ${"  " * depth}${p.nodeName}: ${keep.mkString(", ")}")
-          val kids = p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-              Seq(a.executedPlan)
-            case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-              Seq(s.plan)
-            case other => other.children
-          }
-          self ++ kids.flatMap(metricLines(_, depth + 1))
-        }
-        val metricsDump = scala.util.Try(
-          metricLines(qe.executedPlan, 0).mkString("\n")).getOrElse("(unavailable)")
-        System.err.println(s"[bench] $tag ${q.name} $why;$samplesNote " +
-          f"diag re-execution wall $wall%.2f s; stage times:\n" +
-          stages.toArray.mkString("\n") +
-          s"\n[bench] $tag ${q.name} operator metrics:\n" + metricsDump +
-          s"\n[bench] $tag ${q.name} final plan:\n" +
-          qe.executedPlan.toString.linesIterator.take(40).mkString("\n"))
-        wall
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val d = Explain.dump(spark, q, dir)
+      System.err.println(f"[bench] $tag ${q.name} $why; diag re-execution wall ${d.wall}%.2f s\n" +
+        d.render(s"$tag ${q.name}"))
+      d.wall
     }.recover { case e =>
       System.err.println(s"[bench] $tag ${q.name} $why; plan dump failed: ${e.getMessage}")
       -1.0
     }.get
 
-  /** `passes` interleaved passes over `qs`: pass 0 of every query, then
-    * pass 1 of every query, and so on. `sample` times one query; a query
-    * whose sample throws gets a −1 marker for that pass and is not run
-    * again, so a query that dies mid-run keeps the samples it produced.
-    * Every sample goes to stderr as it lands. */
-  private[graft] def interleaved(qs: Seq[QueryDef], passes: Int, tag: String)(
-      sample: QueryDef => Double): Map[String, Seq[Double]] = {
-    val bufs = qs.map(q =>
-      q.name -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-    for (p <- 0 until passes; q <- qs) {
-      val buf = bufs(q.name)
+  /** `passes` interleaved passes over `keys`: pass 0 of every key, then
+    * pass 1 of every key, and so on. `sample` times one key; a key whose
+    * sample throws gets a −1 marker for that pass and is not run again,
+    * so a key that dies mid-run keeps the samples it produced. Samples
+    * are returned, and printed to stderr as they land, under `label`. */
+  private[graft] def interleaved[K](keys: Seq[K], passes: Int, tag: String)(
+      label: K => String)(sample: K => Double): Map[String, Seq[Double]] = {
+    val bufs = keys.map(k =>
+      label(k) -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
+    for (p <- 0 until passes; k <- keys) {
+      val buf = bufs(label(k))
       if (!buf.contains(-1.0))
         try {
-          val t = sample(q)
-          System.err.println(f"[bench] $tag ${q.name} pass $p: $t%.2f s")
+          val t = sample(k)
+          System.err.println(f"[bench] $tag ${label(k)} pass $p: $t%.2f s")
           buf += t
         } catch { case e: Throwable =>
-          System.err.println(s"[bench] $tag ${q.name} pass $p failed: ${e.getMessage}")
+          System.err.println(s"[bench] $tag ${label(k)} pass $p failed: ${e.getMessage}")
           buf += -1.0
         }
     }
@@ -213,7 +130,7 @@ object Bench {
       // values are quantized to 3 decimals (sub-ms noise is meaningless
       // here) and rendered via Double.toString — locale-proof, and the
       // -1 failure markers survive as-is
-      "\"" + n + "\":[" + vs.map(v => math.round(v * 1000) / 1000.0).mkString(",") + "]"
+      Verify.jsonStr(n) + ":[" + vs.map(v => math.round(v * 1000) / 1000.0).mkString(",") + "]"
     }.mkString("{", ",", "}")
 
   /** Worst per-query sample spread (max/min over valid samples) across
@@ -411,7 +328,7 @@ object Bench {
     val time = timeOnce(spark) _
     def json(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val bufs = interleaved(headline, passes = 3, "sf0.1")(time(_, sfDir))
+    val bufs = interleaved(headline, passes = 3, "sf0.1")(_.name)(time(_, sfDir))
     val results = headline.map(q => q.name -> minMeasured(bufs(q.name)))
     val sf01Armed = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
     // every diagnostic dump's re-execution wall, keyed "tier:query" —
@@ -455,7 +372,7 @@ object Bench {
         ensureSf1(spark, sfDir, sf1Dir)
         val genSec = (System.nanoTime() - g0) / 1e9
         resetBetweenTiers()
-        val passes = interleaved(headline, passes = 3, "sf1")(timeAfterGc(sf1Dir))
+        val passes = interleaved(headline, passes = 3, "sf1")(_.name)(timeAfterGc(sf1Dir))
         val r1 = headline.map(q => q.name -> minMeasured(passes(q.name)))
         val t1 = r1.map(_._2).filter(_ >= 0).sum
         // per-query scaling ratio vs the sf0.1 min (10× data →
@@ -476,7 +393,7 @@ object Bench {
              else Nil)).mkString(", ")
           val perPass = passes(k).map(s => f"$s%.2f").mkString(" / ")
           diagWalls(s"sf1:$k") =
-            dumpDiagnostic(spark, q, sf1Dir, "sf1", why, s" passes $perPass s;")
+            dumpDiagnostic(spark, q, sf1Dir, "sf1", s"$why; passes $perPass s")
         }
         val common = s""","sf1_total":$t1,"sf1_queries":${json(r1)},""" +
           s""""sf1_ratio_vs_sf01":${json(ratioVals)}"""
@@ -508,13 +425,13 @@ object Bench {
         val genSec = (System.nanoTime() - g0) / 1e9
         resetBetweenTiers()
         val probes = headline.filter(q => sf10Probes.contains(q.name))
-        val passes = interleaved(probes, passes = 2, "sf10")(timeAfterGc(sf10Dir))
+        val passes = interleaved(probes, passes = 2, "sf10")(_.name)(timeAfterGc(sf10Dir))
         def r3(v: Double): Double = math.round(v * 1000) / 1000.0
         val r10 = probes.map(q => q.name -> r3(minMeasured(passes(q.name))))
         val ratio10 = r10.map { case (k, v) => k -> ratio(v, sf1Min.getOrElse(k, -1.0)) }
         for ((q, (k, r)) <- probes.zip(ratio10) if r > 12.0)
           diagWalls(s"sf10:$k") = dumpDiagnostic(spark, q, sf10Dir, "sf10",
-            f"second-decade ratio $r%.2f > 12", "")
+            f"second-decade ratio $r%.2f > 12")
         s""","sf10_total":${r3(r10.map(_._2).filter(_ >= 0).sum)},""" +
           s""""sf10_queries":${json(r10)},"sf10_ratio_vs_sf1":${json(ratio10)},""" +
           s""""sf10_gen_sec":${math.round(genSec * 10) / 10.0}"""
@@ -561,21 +478,17 @@ object Bench {
         // work; nothing below needs a live context (record lines are
         // pre-rendered strings)
         try {
-          val secs = QueryDef.catalogs.zipWithIndex.map { case (q, i) =>
+          val swept = interleaved(QueryDef.catalogs.zipWithIndex, passes = 1,
+              "sf10 sweep")(_._1.name) { case (q, i) =>
             if (i > 0 && i % sweepCycle == 0) {
               sw.stop()
               sw = Engine.session(appName = "graft-bench-sweep")
             }
-            val t = try {
-              System.gc()
-              math.round(timeOnce(sw)(q, sf10Dir) * 1000) / 1000.0
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] sf10 sweep ${q.name} failed: ${e.getMessage}")
-              -1.0
-            }
-            System.err.println(f"[bench] sf10 sweep ${q.name}: $t%.2f s")
-            q.name -> t
+            System.gc()
+            timeOnce(sw)(q, sf10Dir)
           }
+          val secs = QueryDef.catalogs.map(q =>
+            q.name -> math.round(swept(q.name).head * 1000) / 1000.0)
           val failed = secs.filter(_._2 < 0).map(_._1)
           val body = s"""{"sweep":"sf10","dir":${Verify.jsonStr(sf10Dir)},""" +
             s""""fresh_session_every":$sweepCycle,""" +

@@ -1,7 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 /** Measured throughput/state harness for the STREAMING tier — the
   * missing twin of [[Bench]]/[[TimeQueries]] for `streaming.StreamOps`.
@@ -24,9 +27,11 @@ import org.apache.spark.sql.functions._
   * the operator under test, into the noop sink (execution cost without
   * write cost — the [[Bench.timeOnce]] discipline). Metrics come from the
   * engine's own `StreamingQueryProgress` (input rows, trigger wall,
-  * state-operator row counts), not wall-clock guesswork around the whole
-  * run; the reported wall additionally includes stream startup, so
-  * rows/s here is the conservative end-to-end number.
+  * state-operator row counts) and the run's [[Profile]] (Spark jobs and
+  * stages, per batch and, for the admission stream, per job label), not
+  * wall-clock guesswork around the whole run; every op runs through the
+  * one [[runStream]] loop. The reported wall additionally includes stream
+  * startup, so rows/s here is the conservative end-to-end number.
   *
   * Usage:
   * {{{
@@ -41,10 +46,15 @@ object BenchStreams {
 
   /** One operator under measurement: name, output mode, and the
     * stream-plan constructor from the staged source. */
-  private final case class StreamOp(
-      name: String, mode: String, build: DataFrame => DataFrame)
+  private[graft] final case class StreamOp(
+      name: String, mode: String, build: DataFrame => DataFrame) {
+    /** Starts the operator over `src` into the noop sink. */
+    def start(src: DataFrame, ckpt: String): StreamingQuery =
+      build(src).writeStream.format("noop").outputMode(mode)
+        .option("checkpointLocation", ckpt).start()
+  }
 
-  private def ops(spark: SparkSession): Seq[StreamOp] = {
+  private[graft] def ops(spark: SparkSession): Seq[StreamOp] = {
     import spark.implicits._
     Seq(
       // windowed agg state: one row per open 1 h window
@@ -156,6 +166,61 @@ object BenchStreams {
     if (xs.isEmpty) 0.0
     else xs.sorted.apply(math.min(xs.size - 1, (q * xs.size).toInt))
 
+  /** One measured stream run: wall from start until every staged file was
+    * processed (stream startup included, so rows/s is the conservative
+    * end-to-end number), every progress entry, and the [[Profile]] of the
+    * run's Spark jobs. */
+  private[graft] final case class StreamRun(wall: Double,
+      progress: Seq[StreamingQueryProgress], profile: Profile) {
+    val batches: Seq[StreamingQueryProgress] = progress.filter(_.numInputRows > 0)
+    val rows: Long = batches.map(_.numInputRows).sum
+    val trigSec: Seq[Double] = batches.map(_.durationMs.asScala
+      .getOrElse("triggerExecution", java.lang.Long.valueOf(0L)).longValue() / 1e3)
+
+    /** The fields of every op record; `perRow` names the µs-per-row key.
+      * The job counts are the admission floor's evidence: a fixed count
+      * of Spark jobs per micro-batch, which a floor optimization must
+      * move. */
+    def fields(perRow: String): String =
+      s""""rows": $rows, "batches": ${batches.size}, """ +
+        f""""wall_sec": $wall%.3f, """ +
+        f""""rows_per_sec": ${if (wall > 0) rows / wall else 0.0}%.0f, """ +
+        f""""trigger_sec_p50": ${pct(trigSec, 0.50)}%.3f, """ +
+        f""""trigger_sec_p95": ${pct(trigSec, 0.95)}%.3f, """ +
+        f""""$perRow": ${if (rows > 0) trigSec.sum * 1e6 / rows else 0.0}%.2f, """ +
+        s""""jobs_total": ${profile.jobs}, "stages_total": ${profile.stages}, """ +
+        f""""jobs_per_batch": ${
+          if (batches.nonEmpty) profile.jobs.toDouble / batches.size else 0.0}%.1f"""
+  }
+
+  /** The one run loop of every op: `start` starts a stream from the
+    * staged files (`filesPerTrigger` per trigger) and a fresh checkpoint
+    * dir; its `query` runs under [[Profile.during]] until every file is
+    * processed, then stops. The checkpoint delete is best effort: the
+    * state-store maintenance thread can still be flushing after stop()
+    * returns, and a leftover fresh temp dir never feeds a later run. */
+  private[graft] def runStream[H](spark: SparkSession, stage: String,
+      filesPerTrigger: Int, tag: String)(start: (DataFrame, String) => H)(
+      query: H => StreamingQuery): (H, StreamRun) = {
+    val src = spark.readStream.schema(spark.read.parquet(stage).schema)
+      .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-stream-ckpt-$tag").toString
+    try {
+      val ((h, wall, progress), prof) = Profile.during(spark) {
+        val t0 = System.nanoTime()
+        val h = start(src, ckpt)
+        val q = query(h)
+        try {
+          q.processAllAvailable()
+          // progress AFTER completion: every batch's metrics are final
+          (h, (System.nanoTime() - t0) / 1e9, q.recentProgress.toSeq)
+        } finally q.stop()
+      }
+      (h, StreamRun(wall, progress, prof))
+    } finally scala.util.Try(
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt)))
+  }
+
   /** Stages the tier's events as an ordered (leaf_index, leaf)
     * commitment stream for the [[graft.streaming.StreamOps.merkleAppend]]
     * measurement: leaf_index = the event's dense position in event_id
@@ -206,72 +271,41 @@ object BenchStreams {
     * before rows land on the driver. */
   private def measureMerkle(spark: SparkSession, sfDir: String,
       nChunks: Int, filesPerTrigger: Int): (Seq[String], Long) = {
-    import scala.jdk.CollectionConverters._
     val (stage, total) = stageMerkleLeaves(spark, sfDir, nChunks)
     val depth = math.max(20,
       64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, total - 1)))
-    val schema = spark.read.parquet(stage).schema
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt-merkle").toString
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
-    // the throughput run's cap is SIZED TO THE STAGE (2× the worst-case
-    // trigger: filesPerTrigger one-chunk files), not merkleAppend's
-    // default — a tier past ~12.6M rows at default args exceeds the
-    // default 2^20 and the measurement would die in its own guard
-    // (r18 review #1); the deliberate cap-trip run below is where the
-    // guard is exercised
+    // the throughput run's cap is sized to the stage (2× the worst-case
+    // trigger), not merkleAppend's 2^20 default, which a tier past ~12.6M
+    // rows exceeds; the cap-trip run below exercises the guard
     val batchCap = math.min(Int.MaxValue.toLong,
       math.max(1L, 2L * filesPerTrigger * ((total + nChunks - 1) / nChunks))).toInt
-    val t0 = System.nanoTime()
-    val h = graft.streaming.StreamOps.merkleAppend(src, depth,
-      checkpoint = Some(ckpt), maxBatchLeaves = batchCap)
-    h.query.processAllAvailable()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val progress = h.query.recentProgress.toSeq
-    h.query.stop()
-    scala.util.Try(org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(ckpt)))
-    val batches = progress.filter(_.numInputRows > 0)
-    val rows = batches.map(_.numInputRows).sum
-    val trigSec = batches.map(_.durationMs.asScala
-      .getOrElse("triggerExecution", java.lang.Long.valueOf(0L))
-      .longValue() / 1e3)
+    val (h, run) = runStream(spark, stage, filesPerTrigger, "merkle")((src, ckpt) =>
+      graft.streaming.StreamOps.merkleAppend(src, depth,
+        checkpoint = Some(ckpt), maxBatchLeaves = batchCap))(_.query)
     require(h.tree.count == total,
       s"merkle bench integrity: folded ${h.tree.count} of $total leaves")
     val rootHex = graft.functions.Poseidon.toBytes32(h.tree.root)
       .map("%02x".format(_)).mkString
     val rec =
-      s"""{"op": "merkle_append", "rows": $rows, "batches": ${batches.size}, """ +
-        f""""wall_sec": $wall%.3f, """ +
-        f""""rows_per_sec": ${if (wall > 0) rows / wall else 0.0}%.0f, """ +
-        f""""trigger_sec_p50": ${pct(trigSec, 0.50)}%.3f, """ +
-        f""""trigger_sec_p95": ${pct(trigSec, 0.95)}%.3f, """ +
-        f""""us_per_append": ${if (rows > 0) trigSec.sum * 1e6 / rows else 0.0}%.2f, """ +
+      s"""{"op": "merkle_append", ${run.fields("us_per_append")}, """ +
         s""""depth": $depth, "tree_count": ${h.tree.count}, """ +
         s""""unchecked_replays": ${h.uncheckedReplays}, """ +
-        s""""root_prefix": "${rootHex.take(16)}", "complete": ${rows == total}}"""
+        s""""root_prefix": "${rootHex.take(16)}", "complete": ${run.rows == total}}"""
     System.err.println(s"[bench-stream] merkle_append: $rec")
 
     // cap-trip: a cap below the per-trigger row count must kill the
     // stream with the named guard, not collect rows to the driver
     val cap = math.max(1, (total / nChunks / 4).toInt)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft-stream-ckpt-merkletrip").toString
-    val src2 = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
     val trip = try {
-      val h2 = graft.streaming.StreamOps.merkleAppend(src2, depth,
-        checkpoint = Some(ckpt2), maxBatchLeaves = cap)
-      h2.query.processAllAvailable()
-      h2.query.stop()
+      runStream(spark, stage, filesPerTrigger, "merkletrip")((src, ckpt) =>
+        graft.streaming.StreamOps.merkleAppend(src, depth,
+          checkpoint = Some(ckpt), maxBatchLeaves = cap))(_.query)
       "NO-TRIP"
     } catch {
       case e: org.apache.spark.sql.streaming.StreamingQueryException =>
         val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
         if (msg != null && msg.contains("exceeds maxBatchLeaves")) "named-error"
         else s"WRONG-ERROR: ${Option(msg).getOrElse("null").take(80)}"
-    } finally {
-      scala.util.Try(org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(ckpt2)))
     }
     val tripRec = s"""{"op": "merkle_append_cap_trip", "max_batch_leaves": $cap, """ +
       s""""outcome": ${Verify.jsonStr(trip)}}"""
@@ -309,18 +343,6 @@ object BenchStreams {
         (acc, c) => acc + when(col(idCol) >= c, 1).otherwise(0))), cuts.length)
   }
 
-  /** Measures the LIVE composed-admission stream
-    * ([[graft.streaming.StreamOps.ingestAdmission]], r19) — the
-    * continuous form of `pipe_ingest_incr`: the tier's documents
-    * INCREMENT (doc_id ≥ split) staged as id-ordered chunk files (the
-    * replay contract: ids ascend across micro-batches), streamed through
-    * the shared admission core against the persisted mhp1 index + the
-    * stream's own accumulated delta state. Reported next to rows/s and
-    * per-trigger wall: the one-time index-build seconds (adopt = ~0),
-    * the final verdict distribution (read back from the batch outputs —
-    * also the completeness check), and the accumulated STATE size in
-    * rows (fps/bands/toks deltas summed) — the number that must scale
-    * with the stream's survivors, never the corpus. */
   /** Deterministic synthetic near-dup corpus (VERDICT r19 #2): no
     * measured admission row had ever exercised the band/near-dup STATE
     * path — replica increments are all exact dups, and the natural
@@ -373,10 +395,23 @@ object BenchStreams {
     dir
   }
 
+  /** Measures the LIVE composed-admission stream
+    * ([[graft.streaming.StreamOps.ingestAdmission]], r19) — the
+    * continuous form of `pipe_ingest_incr`: the tier's documents
+    * INCREMENT (doc_id ≥ split) staged as id-ordered chunk files (the
+    * replay contract: ids ascend across micro-batches), streamed through
+    * the shared admission core against the persisted mhp1 index + the
+    * stream's own accumulated delta state. Reported next to rows/s and
+    * per-trigger wall: the one-time index-build seconds (adopt = ~0),
+    * the final verdict distribution (read back from the batch outputs —
+    * also the completeness check), and the accumulated STATE size in
+    * rows (fps/bands/toks deltas summed) — the number that must scale
+    * with the stream's survivors, never the corpus. The record adds
+    * `jobs_by_label`: the run's jobs and their summed wall per
+    * [[Profile.labeled]] label. */
   private def measureIngestAdmission(spark: SparkSession, sfDir: String,
       nChunks: Int, filesPerTrigger: Int,
       opName: String = "pipe_ingest_admission"): (Seq[String], Long) = {
-    import scala.jdk.CollectionConverters._
     val tIdx0 = System.nanoTime()
     val (idx, split) = graft.operators.IngestIncr.ensurePipeIngestIndex(spark, sfDir)
     val idxSec = (System.nanoTime() - tIdx0) / 1e9
@@ -396,70 +431,17 @@ object BenchStreams {
         .cast("decimal(38,0)"))).head()
     val total = tk.getLong(0)
     require(total > 0, s"BenchStreams: $sfDir documents increment is empty")
-    val (mn, mx) = (tk.getLong(2), tk.getLong(1))
     val (chunked, nCuts) = quantileChunks(docs, "doc_id", nChunks)
     val stage = ensureStaged(s"$sfDir#ing$nChunks",
-      s"_STAGED_Q${nCuts}_${total}_${mx}_${mn}_${tk.get(3)}_${split}_$nChunks",
+      s"_STAGED_Q${nCuts}_${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_${split}_$nChunks",
       nChunks, "doc_id") { chunked }
-    val stateRoot = java.nio.file.Files
-      .createTempDirectory("graft-ingadm-bench-state").toString
-    val outRoot = java.nio.file.Files
-      .createTempDirectory("graft-ingadm-bench-out").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-stream-ckpt-ingadm").toString
-    val statePath = s"$stateRoot/state"
-    val outPath = s"$outRoot/out"
-    val schema = spark.read.parquet(stage).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(stage)
-    // Spark-action evidence (VERDICT r20 #1): the admission trigger floor
-    // is a fixed count of jobs per micro-batch, so the record carries the
-    // run's total job/stage counts and the per-data-batch average — the
-    // "action count per trigger" a floor optimization must move. Counted
-    // from the scheduler's own events over exactly the streaming window.
-    val jobCount = new java.util.concurrent.atomic.AtomicLong()
-    val stageCount = new java.util.concurrent.atomic.AtomicLong()
-    // SPARK_GRAFT_STREAM_JOBS=1: per-job attribution to stderr (job
-    // description + wall) — the floor-hunting diagnostic behind the
-    // jobs_per_batch record field
-    val dumpJobs = sys.env.get("SPARK_GRAFT_STREAM_JOBS").contains("1")
-    val jobStarts =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet()
-        stageCount.addAndGet(ev.stageInfos.size.toLong)
-        if (dumpJobs) jobStarts.put(ev.jobId, (System.nanoTime(),
-          Option(ev.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("(unlabeled)")))
-      }
-      override def onJobEnd(
-          ev: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (dumpJobs) Option(jobStarts.remove(ev.jobId)).foreach {
-          case (t0, desc) => System.err.println(
-            f"[stream-job] ${(System.nanoTime() - t0) / 1e3}%9.0f us  job ${ev.jobId}  ${desc.take(90)}")
-        }
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    val t0 = System.nanoTime()
-    val q = graft.streaming.StreamOps.ingestAdmission(
-      src, idx, split, statePath, outPath, checkpoint = Some(ckpt))
-    q.processAllAvailable()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val progress = q.recentProgress.toSeq
-    q.stop()
-    // listener bus is async: drain it (bounded) before reading the counts
-    if (!org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 10000L))
-      System.err.println("[bench-stream] listener bus not drained in 10 s; " +
-        "job/stage counts may be short")
-    spark.sparkContext.removeSparkListener(jobListener)
-    val batches = progress.filter(_.numInputRows > 0)
-    val rows = batches.map(_.numInputRows).sum
-    val trigSec = batches.map(_.durationMs.asScala
-      .getOrElse("triggerExecution", java.lang.Long.valueOf(0L))
-      .longValue() / 1e3)
+    val Seq(stateRoot, outRoot) = Seq("state", "out").map(n =>
+      java.nio.file.Files.createTempDirectory(s"graft-ingadm-bench-$n").toString)
+    val (statePath, outPath) = (s"$stateRoot/state", s"$outRoot/out")
+    val (_, run) = runStream(spark, stage, filesPerTrigger, "ingadm")((src, ckpt) =>
+      graft.streaming.StreamOps.ingestAdmission(
+        src, idx, split, statePath, outPath, checkpoint = Some(ckpt)))(identity)
+    def mean(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else xs.sum / xs.size
     // verdict surface read back from the batch outputs — the
     // completeness check (every staged doc verdicted exactly once)
     val verdicts = spark.read.parquet(outPath)
@@ -473,37 +455,27 @@ object BenchStreams {
       graft.operators.IngestIncr.stateSnapshot(spark, statePath)
     val (stFps, stBands, stToks) =
       (stSnap.fps.count(), stSnap.bands.count(), stSnap.toks.count())
-    Seq(stateRoot, outRoot, ckpt).foreach(p => scala.util.Try(
+    Seq(stateRoot, outRoot).foreach(p => scala.util.Try(
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))))
     val rec =
-      s"""{"op": ${Verify.jsonStr(opName)}, "rows": $rows, """ +
-        s""""batches": ${batches.size}, """ +
-        f""""wall_sec": $wall%.3f, """ +
-        f""""rows_per_sec": ${if (wall > 0) rows / wall else 0.0}%.0f, """ +
-        f""""trigger_sec_p50": ${pct(trigSec, 0.50)}%.3f, """ +
-        f""""trigger_sec_p95": ${pct(trigSec, 0.95)}%.3f, """ +
-        f""""us_per_doc": ${if (rows > 0) trigSec.sum * 1e6 / rows else 0.0}%.2f, """ +
+      s"""{"op": ${Verify.jsonStr(opName)}, ${run.fields("us_per_doc")}, """ +
         // lifetime-flatness evidence (VERDICT r19 #1): mean trigger wall
         // over the first vs last 10 data batches — without compaction
         // the tail mean grows with the batch count, never the data
-        f""""trigger_sec_mean_head10": ${
-          if (trigSec.isEmpty) 0.0
-          else trigSec.take(10).sum / math.min(10, trigSec.size)}%.3f, """ +
-        f""""trigger_sec_mean_tail10": ${
-          if (trigSec.isEmpty) 0.0
-          else trigSec.takeRight(10).sum / math.min(10, trigSec.size)}%.3f, """ +
+        f""""trigger_sec_mean_head10": ${mean(run.trigSec.take(10))}%.3f, """ +
+        f""""trigger_sec_mean_tail10": ${mean(run.trigSec.takeRight(10))}%.3f, """ +
         f""""index_build_sec": $idxSec%.3f, """ +
-        s""""jobs_total": ${jobCount.get}, """ +
-        s""""stages_total": ${stageCount.get}, """ +
-        f""""jobs_per_batch": ${
-          if (batches.nonEmpty) jobCount.get.toDouble / batches.size else 0.0}%.1f, """ +
+        // per-label attribution of the jobs_total, over a bounded key set
+        s""""jobs_by_label": {${run.profile.byLabel.toSeq.sortBy(_._1).map {
+          case (k, (n, w)) => f"""${Verify.jsonStr(k)}: {"jobs": $n, "wall_sec": $w%.3f}"""
+        }.mkString(", ")}}, """ +
         s""""state_rows_fps": $stFps, "state_rows_bands": $stBands, """ +
         s""""state_rows_toks": $stToks, """ +
         s""""state_gen_through": ${stGen.getOrElse(-1L)}, """ +
         s""""state_delta_dirs": $stDeltaDirs, """ +
         s""""verdicts": {${verdicts.map { case (k, v) =>
           s"${Verify.jsonStr(k)}: $v" }.mkString(", ")}}, """ +
-        s""""complete": ${rows == total && verdictSum == total}}"""
+        s""""complete": ${run.rows == total && verdictSum == total}}"""
     System.err.println(s"[bench-stream] $opName: $rec")
     (Seq(rec), total)
   }
@@ -526,7 +498,6 @@ object BenchStreams {
     require(rest.length == 1, usage)
     val sfDir = rest(0)
     val spark = Engine.session(appName = "graft-bench-streams")
-    import scala.jdk.CollectionConverters._
     // recentProgress retains only the last N progress updates (default
     // 100) — a fine-cadence run (chunks/files > ~100 triggers) would
     // silently drop early batches from the rows/throughput sums while
@@ -535,18 +506,16 @@ object BenchStreams {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
       (nChunks + 64).toString)
 
-    // merkle_append is measured through its own harness (foreachBatch
-    // maintainer over its OWN staged leaf stream, not a DataFrame→noop
-    // transform) — an ops=merkle_append run therefore skips the events
-    // staging entirely (r18 review #4: it staged the whole tier for an
-    // unused schema). Included by default up to 20M rows; past that the
-    // serial fold dominates the run, so it wants an explicit ops=
-    // opt-in — logged, never silently dropped.
+    // merkle_append replays its OWN staged leaf stream into a foreachBatch
+    // maintainer, so an ops=merkle_append run skips the events staging.
+    // Included by default up to 20M rows; past that the serial fold
+    // dominates the run, so it wants an explicit ops= opt-in — logged,
+    // never silently dropped.
     val selected = ops(spark).filter(o => only.forall(_.contains(o.name)))
     val merkleExplicit = only.exists(_.contains("merkle_append"))
-    // the composed-admission stream has its own staging (documents
-    // increment, not events) and harness — default-on like the ST ops,
-    // explicit via ops=pipe_ingest_admission
+    // the composed-admission stream stages the documents increment, not
+    // events — default-on like the ST ops, explicit via
+    // ops=pipe_ingest_admission
     val wantIngest =
       only.isEmpty || only.exists(_.contains("pipe_ingest_admission"))
     // the synthetic near-dup tier (VERDICT r19 #2) is OPT-IN by size:
@@ -559,9 +528,8 @@ object BenchStreams {
       s"no ops matched; $usage")
     val staged =
       if (selected.nonEmpty) Some(stageEvents(spark, sfDir, nChunks)) else None
-    staged.foreach { case (stage, totalRows) =>
-      System.err.println(s"[bench-stream] staged $totalRows rows in $nChunks chunks at $stage")
-    }
+    staged.foreach { case (stage, n) =>
+      System.err.println(s"[bench-stream] staged $n rows in $nChunks chunks at $stage") }
     // "by default" means NO ops= filter: an explicit list that leaves
     // merkle_append out must not have the ~minute-scale serial fold (and
     // its whole-tier leaf staging) bolted onto it anyway (r18 review)
@@ -570,63 +538,24 @@ object BenchStreams {
     if (only.isEmpty && staged.exists(_._2 > 20_000_000L))
       System.err.println(s"[bench-stream] merkle_append SKIPPED at ${staged.get._2} rows " +
         "(serial fold; pass ops=merkle_append to force)")
-    lazy val (stage, schema) = {
-      val s0 = staged.get._1
-      (s0, spark.read.parquet(s0).schema)
-    }
     val evTotal = staged.map(_._2).getOrElse(0L)
     val records = selected.map { op =>
-      val ckpt = java.nio.file.Files
-        .createTempDirectory(s"graft-stream-ckpt-${op.name}").toString
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(stage)
-      val t0 = System.nanoTime()
-      val q = op.build(src).writeStream
-        .format("noop").outputMode(op.mode)
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.processAllAvailable()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // progress AFTER completion: every batch's metrics are final
-      val progress = q.recentProgress.toSeq
-      q.stop()
-      // best-effort: the state-store maintenance thread can still be
-      // flushing snapshot files after stop() returns, and a delete racing
-      // it may fail or leave a half-dir; the checkpoint is a fresh temp
-      // dir per op, so a leftover never feeds a later run
-      scala.util.Try(org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(ckpt)))
-      val batches = progress.filter(_.numInputRows > 0)
-      val rows = batches.map(_.numInputRows).sum
-      // completeness: every admitted row must be accounted for. An op
-      // may legitimately admit the input MORE than once (the interval
-      // join consumes the same file source on both sides — Spark
-      // reports ONE source entry whose rows count both admissions), so
-      // the invariant is "a positive whole multiple of the input":
-      // anything else means progress entries were dropped from the
-      // bounded buffer and the rates are wrong (r17 review, amended —
-      // sources.length undercounts a self-join on one path)
-      val complete = rows > 0 && rows % evTotal == 0
+      val (_, run) = runStream(spark, staged.get._1, filesPerTrigger, op.name)(op.start)(identity)
+      // completeness: a positive whole multiple of the input (the
+      // interval join admits the one file source on both sides, counted
+      // in ONE source entry); anything else means progress entries were
+      // dropped from the bounded buffer and the rates are wrong
+      val complete = run.rows > 0 && run.rows % evTotal == 0
       if (!complete)
         System.err.println(s"[bench-stream] WARNING ${op.name}: summed " +
-          s"$rows input rows, not a whole multiple of $evTotal — " +
+          s"${run.rows} input rows, not a whole multiple of $evTotal — " +
           "progress buffer too small or rows dropped; rates UNRELIABLE")
-      val trigSec = batches.map(_.durationMs.asScala
-        .getOrElse("triggerExecution", java.lang.Long.valueOf(0L))
-        .longValue() / 1e3)
-      val stateMax = progress.flatMap(_.stateOperators.toSeq
+      val stateMax = run.progress.flatMap(_.stateOperators.toSeq
         .map(_.numRowsTotal)).foldLeft(0L)(math.max)
       val rec =
-        s"""{"op": ${Verify.jsonStr(op.name)}, "rows": $rows, """ +
-          s""""batches": ${batches.size}, """ +
-          f""""wall_sec": $wall%.3f, """ +
-          f""""rows_per_sec": ${if (wall > 0) rows / wall else 0.0}%.0f, """ +
-          f""""trigger_sec_p50": ${pct(trigSec, 0.50)}%.3f, """ +
-          f""""trigger_sec_p95": ${pct(trigSec, 0.95)}%.3f, """ +
-          f""""us_per_event": ${if (rows > 0) trigSec.sum * 1e6 / rows else 0.0}%.2f, """ +
+        s"""{"op": ${Verify.jsonStr(op.name)}, ${run.fields("us_per_event")}, """ +
           s""""state_rows_max": $stateMax, """ +
-          s""""admission_multiple": ${if (evTotal > 0) rows / evTotal else 0}, """ +
+          s""""admission_multiple": ${if (evTotal > 0) run.rows / evTotal else 0}, """ +
           s""""complete": $complete}"""
       System.err.println(s"[bench-stream] ${op.name}: $rec")
       rec

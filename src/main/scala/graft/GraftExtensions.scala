@@ -18,81 +18,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def info(clazz: Class[_], name: String, usage: String) =
-    new ExpressionInfo(clazz.getName, null, name, usage, "", "", "", "", "", "", "built-in")
-
-  /** Analyzer-facing builder: a SQL call with the wrong argument count
-    * must surface as an AnalysisException naming the function, not a raw
-    * IndexOutOfBoundsException from `children(1)`. */
-  private def binary(name: String)(build: (Expression, Expression) => Expression)
+  /** Analyzer-facing builder for an `n`-argument function: a SQL call
+    * with the wrong argument count surfaces as an AnalysisException
+    * naming the function, not a raw IndexOutOfBoundsException from
+    * `children(1)`. */
+  private def arity(name: String, n: Int)(build: Seq[Expression] => Expression)
       : Seq[Expression] => Expression =
     children => {
-      if (children.length != 2)
+      if (children.length != n)
         throw new org.apache.spark.sql.AnalysisException(
           errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
           messageParameters = Map(
-            "functionName" -> name, "expectedNum" -> "2",
+            "functionName" -> name, "expectedNum" -> n.toString,
             "actualNum" -> children.length.toString, "docroot" -> ""))
-      build(children(0), children(1))
+      build(children)
     }
 
-  /** Unary twin of [[binary]] — same named-AnalysisException arity guard. */
-  private def unary(name: String)(build: Expression => Expression)
-      : Seq[Expression] => Expression =
-    children => {
-      if (children.length != 1)
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> name, "expectedNum" -> "1",
-            "actualNum" -> children.length.toString, "docroot" -> ""))
-      build(children(0))
-    }
+  /** One registered function: identifier, `DESCRIBE FUNCTION` info and
+    * its [[arity]] builder. */
+  private def fn(name: String, clazz: Class[_], n: Int, usage: String)(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(clazz.getName, null, name, usage, "", "", "", "", "", "", "built-in"),
+      arity(name, n)(build))
 
-  /** Ternary twin of [[binary]] — same named-AnalysisException arity guard. */
-  private def ternary(name: String)(
-      build: (Expression, Expression, Expression) => Expression)
-      : Seq[Expression] => Expression =
-    children => {
-      if (children.length != 3)
-        throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> name, "expectedNum" -> "3",
-            "actualNum" -> children.length.toString, "docroot" -> ""))
-      build(children(0), children(1), children(2))
-    }
-
-  private val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+  private val descriptions =
     Seq(
-      (FunctionIdentifier("dot_long"),
-        info(classOf[DotLong], "dot_long",
-          "dot_long(a, b) - exact integer inner product of two bigint arrays; null on null or ragged input"),
-        binary("dot_long")(DotLong(_, _))),
-      (FunctionIdentifier("dot_float"),
-        info(classOf[DotFloat], "dot_float",
-          "dot_float(a, b) - float inner product accumulated in double, left-to-right; null on null or ragged input"),
-        binary("dot_float")(DotFloat(_, _))),
-      (FunctionIdentifier("float_vec_to_binary"),
-        info(classOf[FloatsToBinary], "float_vec_to_binary",
-          "float_vec_to_binary(v) - fixed-width LE IEEE-754 encoding of a float array (the relational-store vector codec); null on null input or a null element"),
-        unary("float_vec_to_binary")(FloatsToBinary(_))),
-      (FunctionIdentifier("binary_to_float_vec"),
-        info(classOf[BinaryToFloats], "binary_to_float_vec",
-          "binary_to_float_vec(b) - decode the fixed-width LE float-vector codec; null on null input or a length not divisible by 4"),
-        unary("binary_to_float_vec")(BinaryToFloats(_))),
-      (FunctionIdentifier("pii_redact"),
-        info(classOf[PiiRedact], "pii_redact",
-          "pii_redact(s) - fused PII mask (emails -> <EMAIL>, 6+-digit runs -> <ID>, residual digits -> #) with match counts as struct<redacted, n_emails, n_ids>; null on null input"),
-        unary("pii_redact")(PiiRedact(_))),
-      (FunctionIdentifier("le_decode"),
-        info(classOf[LEDecode], "le_decode",
-          "le_decode(bin, off, n) - decode n little-endian bytes at 1-based off as bigint; null on null input, no byte in range, or an 8-byte value past bigint range"),
-        ternary("le_decode")(LEDecode(_, _, _))),
-      (FunctionIdentifier("le_encode"),
-        info(classOf[LEEncode], "le_encode",
-          "le_encode(v, n) - encode v's low n bytes little-endian as binary; null on null input"),
-        binary("le_encode")(LEEncode(_, _))))
+      fn("dot_long", classOf[DotLong], 2,
+          "dot_long(a, b) - exact integer inner product of two bigint arrays; null on null or ragged input")(
+        c => DotLong(c(0), c(1))),
+      fn("dot_float", classOf[DotFloat], 2,
+          "dot_float(a, b) - float inner product accumulated in double, left-to-right; null on null or ragged input")(
+        c => DotFloat(c(0), c(1))),
+      fn("float_vec_to_binary", classOf[FloatsToBinary], 1,
+          "float_vec_to_binary(v) - fixed-width LE IEEE-754 encoding of a float array (the relational-store vector codec); null on null input or a null element")(
+        c => FloatsToBinary(c(0))),
+      fn("binary_to_float_vec", classOf[BinaryToFloats], 1,
+          "binary_to_float_vec(b) - decode the fixed-width LE float-vector codec; null on null input or a length not divisible by 4")(
+        c => BinaryToFloats(c(0))),
+      fn("pii_redact", classOf[PiiRedact], 1,
+          "pii_redact(s) - fused PII mask (emails -> <EMAIL>, 6+-digit runs -> <ID>, residual digits -> #) with match counts as struct<redacted, n_emails, n_ids>; null on null input")(
+        c => PiiRedact(c(0))),
+      fn("le_decode", classOf[LEDecode], 3,
+          "le_decode(bin, off, n) - decode n little-endian bytes at 1-based off as bigint; null on null input, no byte in range, or an 8-byte value past bigint range")(
+        c => LEDecode(c(0), c(1), c(2))),
+      fn("le_encode", classOf[LEEncode], 2,
+          "le_encode(v, n) - encode v's low n bytes little-endian as binary; null on null input")(
+        c => LEEncode(c(0), c(1))))
 
   /** Registers the graft functions into an ALREADY-RUNNING session's
     * registry — the path for sessions the library does not own (the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Profile, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -116,18 +116,6 @@ object IngestIncr {
   private def fsOf(s: SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Runs `body` under a Spark job description (guide §1.5) — the
-    * admission path runs 30+ jobs per trigger, and floor-hunting needs
-    * each attributable in the UI / job listeners. Thread-local; the
-    * previous description is restored after, so a nested call (the
-    * admission stages reach [[VersionedIndex.probeIncrIndex]]'s labeled
-    * jobs) hands the outer label back instead of clearing it. */
-  private[graft] def labeledJob[A](s: SparkSession, what: String)(body: => A): A = {
-    val prev = s.sparkContext.getLocalProperty("spark.job.description")
-    s.sparkContext.setJobDescription(what)
-    try body finally s.sparkContext.setJobDescription(prev)
-  }
 
   private def markEmpty(s: SparkSession, part: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(part, emptyMarker)
@@ -331,7 +319,7 @@ object IngestIncr {
     // toks needs no separate probe: toks rows exist only for bands
     // keepers, so empty bands implies empty toks (the delta contract).
     val stateBandsEmpty = state.exists(st =>
-      labeledJob(s, "admission: state census")(st.bands.isEmpty))
+      Profile.labeled(s, "admission: state census")(st.bands.isEmpty))
     // memoized: the gate projection (split/regex-heavy per-row exprs)
     // feeds FOUR branches below (intra-increment election, fps probe,
     // train slice, verdict flag) and Spark shares no subplans across
@@ -349,7 +337,7 @@ object IngestIncr {
       if (isMarkedEmpty(s, s"$idx/fps"))
         probeRead(s, s"$idx/fps", "fp STRING, keeper BIGINT")
       else {
-        val touched = labeledJob(s, "admission: fps shard prune")(gatePop
+        val touched = Profile.labeled(s, "admission: fps shard prune")(gatePop
           .select(pmod(xxhash64(col("fp")), lit(shards.toLong)).as("fs"))
           .distinct().collect()).map(_.getLong(0)) // bounded: ≤ shards
         // a gate-empty batch (reachable per micro-batch on the stream
@@ -684,21 +672,16 @@ object IngestIncr {
     *
     * The rewrite is state-sized every `admissionCompactEvery` batches —
     * amortized O(state/K) per trigger, the standard LSM posture — and
-    * the folded parts are coalesced to `admissionGenFiles` files each
-    * (default 1: stream state is survivor-sized; a deploy whose state
-    * outgrows single-writer throughput raises it). */
+    * each folded part is written as one file: stream state is
+    * survivor-sized, so one writer keeps up with it. */
   private def compactState(s: SparkSession, statePath: String,
       loc: StateLoc): StateLoc = {
     val through = loc.deltas.max
     val st = loadState(s, statePath, loc)
-    val nFiles = s.conf.get("spark.graft.admissionGenFiles", "1").toInt
     val genDir = s"$statePath/gen$through"
     val bound = committedMaxId(s, statePath, loc)
-    st.fps.repartition(nFiles).write.mode("overwrite").parquet(s"$genDir/fps")
-    st.bands.repartition(nFiles).write.mode("overwrite")
-      .parquet(s"$genDir/bands")
-    st.toks.repartition(nFiles).write.mode("overwrite")
-      .parquet(s"$genDir/toks")
+    for ((part, df) <- Seq("fps" -> st.fps, "bands" -> st.bands, "toks" -> st.toks))
+      df.repartition(1).write.mode("overwrite").parquet(s"$genDir/$part")
     writeMarker(s, genDir, bound)
     // idempotent sweep AFTER the marker: everything the new generation
     // supersedes, including husks a crashed earlier compaction left
@@ -759,7 +742,7 @@ object IngestIncr {
       s"ingestAdmission: spark.graft.admissionCompactEvery must be >= 1")
     val loc =
       if (loc0.deltas.size >= compactEvery)
-        labeledJob(s, s"ingestAdmission b$batchId: state fold")(
+        Profile.labeled(s, "ingestAdmission: state fold")(
           compactState(s, statePath, loc0))
       else loc0
     val state = loadState(s, statePath, loc)
@@ -794,7 +777,7 @@ object IngestIncr {
     // doc_id, so the check is one tiny marker read per batch, and the
     // failure is loud and names the contract, matching the Merkle
     // left-filled / writeOrMark discipline.
-    val bk = labeledJob(s, s"ingestAdmission b$batchId: batch stats")(
+    val bk = Profile.labeled(s, "ingestAdmission: batch stats")(
       incoming.agg(count(lit(1)), min(col("doc_id")),
         max(col("doc_id"))).head())
     val nB = bk.getLong(0)
@@ -826,11 +809,11 @@ object IngestIncr {
     // overwrites.
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
-    // job descriptions are thread-local (guide §1.5) — set per task
-    def write(what: String)(body: => Unit): (String, Future[Unit]) = {
-      val label = s"ingestAdmission b$batchId: $what"
-      label -> Future(labeledJob(s, label)(body))
-    }
+    // job labels are thread-local (guide §1.5) — set per task; the
+    // batch id names the write for settleAll, never the label
+    def write(what: String)(body: => Unit): (String, Future[Unit]) =
+      s"ingestAdmission b$batchId: $what" ->
+        Future(Profile.labeled(s, s"ingestAdmission: $what")(body))
     settleAll(Seq(
       write("verdicts")(
         res.verdicts.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")),

@@ -303,7 +303,7 @@ object VersionedIndex {
     val banded = fam.bandedOf(feat)
     val incrKeepers = banded.groupBy(col("band"), col("bucket"))
       .agg(min(col(fam.idCol)).as("ikeeper"))
-    val touched = IngestIncr.labeledJob(s, s"${fam.name}: band prune")(banded
+    val touched = graft.Profile.labeled(s, s"${fam.name}: band prune")(banded
       .select(partKey(col("band"),
         pmod(col("bucket"), lit(shards.toLong)), shards).as("pk"))
       .distinct().collect()).map(_.getLong(0)) // bounded: ≤ nBands × shards
@@ -392,7 +392,7 @@ object VersionedIndex {
     // not the index) — without this the verify join would re-read
     // features for ~every corpus row, and the probe would be
     // corpus-scale I/O after all
-    val candShards = IngestIncr.labeledJob(s, s"${fam.name}: cand shard prune")(
+    val candShards = graft.Profile.labeled(s, s"${fam.name}: cand shard prune")(
       cand.filter(col("keeper") < lit(split))
         .select(pmod(col("keeper"), lit(shards.toLong)).as("cs"))
         .distinct().collect()).map(_.getLong(0)) // bounded: ≤ shards

@@ -115,7 +115,7 @@ class CatalogSpec extends SparkSpec {
   test("fixed interleaved passes: suite order, a failed query stops, min of measured passes") {
     val Seq(a, b) = QueryDef.catalogs.filter(_.headline).take(2)
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
-    val samples = Bench.interleaved(Seq(a, b), passes = 3, "spec") { q =>
+    val samples = Bench.interleaved(Seq(a, b), passes = 3, "spec")(_.name) { q =>
       calls += q.name
       if (q == b && calls.size > 2) sys.error("planted failure") else 0.5 * calls.size
     }
@@ -159,6 +159,20 @@ class CatalogSpec extends SparkSpec {
           .map(root.relativize(f).toString -> _)
       } finally files.close()
     assert(hits.sorted === allowed.sorted)
+  }
+
+  test("main code has one SparkListener: Profile's") {
+    // ROADMAP aim 2: one metrics collector. Another listener under
+    // src/main/scala/graft would be a second, ad-hoc one
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root.resolve("graft")),
+      s"no sources at ${root.toAbsolutePath}")
+    val files = java.nio.file.Files.walk(root.resolve("graft"))
+    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .filter(f => java.nio.file.Files.readAllLines(f).asScala
+        .exists(l => l.contains("SparkListener") || l.contains("addSparkListener")))
+      .map(root.relativize(_).toString) finally files.close()
+    assert(hits === Seq("graft/Profile.scala"))
   }
 
   test("Verify subset runs merge oracle entries, never dropping a prior failure") {

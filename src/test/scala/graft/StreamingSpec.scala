@@ -1087,6 +1087,23 @@ class StreamingSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage1))
   }
 
+  test("BenchStreams run loop: an ST op over staged chunks counts every row and its jobs") {
+    val dir = tempDir("graft-stage-run").toString
+    spark.read.parquet(s"$sf001/events.parquet").write.parquet(s"$dir/events.parquet")
+    val (stage, n) = graft.BenchStreams.stageEvents(spark, dir, 4)
+    try {
+      val op = graft.BenchStreams.ops(spark).find(_.name == "st1_deadline_tally").get
+      val (_, run) = graft.BenchStreams.runStream(spark, stage, 1, op.name)(op.start)(identity)
+      assert(run.rows === n, "every staged row admitted once")
+      assert(run.profile.jobs > 0 && run.profile.drained)
+      val rec = "{" + run.fields("us_per_event") + "}"
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(rec)
+      assert(node.get("rows").asLong() === n)
+      assert(node.get("jobs_total").asLong() === run.profile.jobs)
+      assert(node.get("jobs_per_batch").asDouble() > 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+  }
+
   test("BenchStreams quantile chunking: clustered ids still spread over chunks, boundaries monotone (r19)") {
     // the replica tiers cluster increment doc_ids into a few narrow
     // copy-offset bands; a value-RANGE slice collapsed 24 chunks into
@@ -1427,7 +1444,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("labeledJob restores the enclosing job description, nested or not") {
-    import graft.operators.IngestIncr
     // the admission path nests labels (its stages reach the probe's
     // labeled jobs): an inner call must hand the outer label back, and
     // the outermost call the caller's own description
@@ -1435,14 +1451,14 @@ class StreamingSpec extends SparkSpec {
     def desc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("prior")
     try {
-      IngestIncr.labeledJob(spark, "outer") {
+      Profile.labeled(spark, "outer") {
         assert(desc === "outer")
-        IngestIncr.labeledJob(spark, "inner")(assert(desc === "inner"))
+        Profile.labeled(spark, "inner")(assert(desc === "inner"))
         assert(desc === "outer", "the inner call did not restore the outer label")
       }
       assert(desc === "prior", "the outer call did not restore the prior label")
       sc.setJobDescription(null)
-      IngestIncr.labeledJob(spark, "only")(())
+      Profile.labeled(spark, "only")(())
       assert(desc === null)
     } finally sc.setJobDescription(null)
   }
