@@ -29,15 +29,17 @@ import org.apache.spark.sql.functions._
   *  - sf10: a 100× tier ([[ensureSf10]]), the five most expensive
   *    queries, 2 passes; `sf10_ratio_vs_sf1` is the second decade.
   *    `SPARK_GRAFT_SF10=0` skips it.
-  *  - the opt-in full-catalog sf10 sweep (`SPARK_GRAFT_SF10_SWEEP=1`),
-  *    one pass per query into its own file.
-  * A linear plan lands ≤ ~12× per decade; a ratio past that, and the
-  * worst sf1 ratio of the run, dumps its final plan and stage times to
-  * stderr ([[dumpDiagnostic]], the same [[Explain.dump]] that
+  * Both scale tiers run through one runner (`scaleTier` in [[main]]),
+  * which GCs before each sample ([[timeAfterGc]]). A linear plan lands
+  * ≤ ~12× per decade; a ratio past that, and the worst sf1 ratio of the
+  * run, dumps its final plan and stage times to stderr
+  * ([[dumpDiagnostic]], the same [[Explain.dump]] that
   * `runMain graft.Explain` writes on demand). The scale tiers are
   * additive JSON keys; their failure never corrupts the primary metric.
-  * [[TimeQueries]] runs this protocol ([[timeOnce]], [[interleaved]]) for
-  * any catalog queries over any tiers.
+  * [[TimeQueries]] runs this protocol ([[timeAfterGc]], [[interleaved]])
+  * for any catalog queries over any tiers — the full-catalog sf10 sweep
+  * is `TimeQueries passes=1 all <sf10Dir>` — and [[TimeIncr]] interleaves
+  * the incremental index build and probe the same way.
   */
 object Bench {
 
@@ -114,15 +116,12 @@ object Bench {
   }.toOption
 
   /** `{"name":[s0,s1,s2,…]}` — every raw timing sample per query, emitted
-    * into the bench record itself (`queries_samples` / `sf1_passes`).
-    * A broad host load window inflates the whole suite uniformly (r7:
-    * every query +10–35%); with the samples in the JSON, any number,
-    * individual or total, is attributable from the artifact alone:
-    * consistent samples = real cost, one slow outlier among consistent
-    * fast ones = a window. Insertion order = catalog order; a failed
-    * sample is a -1 marker IN PLACE, so "ran twice then died" keeps its
-    * two real samples and is distinguishable from "never ran" (an empty
-    * array). */
+    * into the bench record itself (`queries_samples` / `sf1_passes`), so
+    * any number is attributable from the artifact alone: consistent
+    * samples = real cost, one slow outlier among fast ones = a load
+    * window. Insertion order = the given order; a failed sample is a -1
+    * marker IN PLACE, so "ran twice then died" keeps its two real samples
+    * and differs from "never ran" (an empty array). */
   private[graft] def samplesJson(names: Seq[String],
       samples: collection.Map[String, collection.Seq[Double]]): String =
     names.map { n =>
@@ -134,16 +133,14 @@ object Bench {
     }.mkString("{", ",", "}")
 
   /** Worst per-query sample spread (max/min over valid samples) across
-    * the suite — the record's window-quality indicator (r13 verdict #2):
-    * interleaved samples of one query land minutes apart, so a healthy
-    * host reads ~1.0-1.3× while a load window shows up as a 3-18× spread
-    * (r13's sf1 j1 passes [44.63, 3.95, 2.53] = 17.6×). Emitted on the
-    * COMPACT summary line so a reader of the driver's truncated tail can
-    * apply the window adjudication from the artifact alone. `skipFirst`
-    * drops the warm-up sample where it measures JIT, not the host (the
-    * sf0.1 tier — the first execution of every plan); the sf1/sf10 tiers
-    * run after sf0.1 warmed the JIT, so their pass-0 spread IS host
-    * signal and is kept. 0.0 when no query has two valid samples. */
+    * the suite — the record's window-quality indicator, on the compact
+    * summary line: interleaved samples of one query land minutes apart,
+    * so a healthy host reads ~1.0-1.3× while a load window shows up as a
+    * 3-18× spread (r13's sf1 j1 passes [44.63, 3.95, 2.53] = 17.6×).
+    * `skipFirst` drops the warm-up sample where it measures JIT, not the
+    * host (sf0.1, the first execution of every plan); the sf1 tier runs
+    * after sf0.1 warmed the JIT, so its pass-0 spread IS host signal.
+    * 0.0 when no query has two valid samples. */
   private[graft] def maxSpread(samples: Iterable[collection.Seq[Double]],
       skipFirst: Boolean): Double = {
     val spreads = samples.iterator
@@ -155,19 +152,13 @@ object Bench {
 
   /** The two stdout record lines, built from pre-rendered JSON parts.
     * The FULL line carries everything including the per-sample evidence
-    * (`queries_samples`, `sf1_passes`); the COMPACT summary line
-    * repeats only the headline numbers (total, per-query sf0.1 times,
-    * sf1 totals/ratios) plus a `"summary":true` marker. The summary is
-    * printed LAST: the driver's artifact keeps the trailing bytes of
-    * the run's output, and r8's record grew past that window once the
-    * samples fields landed — the head (with `"metric":"total"` and the
-    * sf0.1 times) was truncated away and the round lost its headline
-    * numbers. With the compact line last, truncation can only ever eat
-    * the (reconstructible) evidence fields, never the measurements.
-    * `summaryExtra` lands ONLY on the summary line — the compact
-    * attribution fields (wall_sec, spreads) that must survive the
-    * driver's tail truncation. Package-private so the spec pins both
-    * shapes. */
+    * (`queries_samples`, `sf1_passes`); the COMPACT summary line repeats
+    * only the headline numbers plus a `"summary":true` marker and
+    * `summaryExtra` (wall_sec, spreads). The summary is printed LAST: the
+    * round's artifact keeps the trailing bytes of the run's output
+    * (r8's record outgrew it and lost its head), so truncation can only
+    * ever eat the reconstructible evidence fields, never the
+    * measurements. Package-private so the spec pins both shapes. */
   private[graft] def recordLines(total: Double, qs: String, qSamples: String,
       sfDir: String, sf1Full: String, sf1Summary: String,
       extraBoth: String = "", summaryExtra: String = ""): (String, String) = {
@@ -193,6 +184,14 @@ object Bench {
     val t0 = System.nanoTime()
     q.run(spark, dir).write.format("noop").mode("overwrite").save()
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** [[timeOnce]] after a System.gc(), so Spark's ContextCleaner drains
+    * the previous query's debris outside the timed region — the sample
+    * of the scale tiers and of [[TimeQueries]]. */
+  private[graft] def timeAfterGc(spark: SparkSession)(q: QueryDef, dir: String): Double = {
+    System.gc()
+    timeOnce(spark)(q, dir)
   }
 
   /** Synthesizes an N× tier from sf0.1 by key-offset replication:
@@ -227,8 +226,8 @@ object Bench {
     * so replica key ranges cannot collide — and 9 × 1e12 stays inside
     * every Long-keyed kernel's envelope. */
   def ensureSf100(spark: SparkSession, sf01Dir: String, outDir: String,
-      // same env the sf10 sweep honors — a host whose sf10 cache lives
-      // elsewhere must not get a drifting duplicate built under /tmp
+      // SPARK_GRAFT_SF10_DIR, as in Bench's sf10 tier — a host whose sf10
+      // cache lives elsewhere must not get a drifting duplicate under /tmp
       sf10Dir: String = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10")): Unit = {
     ensureSf10(spark, sf01Dir, sf10Dir)
     ensureScaled(spark, sf10Dir, outDir, copies = 10,
@@ -315,20 +314,25 @@ object Bench {
   private val sf10Probes = Seq("q1_agg", "j1_fk_join", "j2_broadcast_lookup",
     "dd_minhash", "sim_lsh_topk")
 
+  /** What one scale tier measured: each query's [[minMeasured]] time and
+    * its ratio to the tier below, every raw sample, and the seconds the
+    * tier's synthesis took (near 0 for a cached tier). */
+  private final case class ScaleTier(mins: Seq[(String, Double)],
+      ratios: Seq[(String, Double)], samples: Map[String, Seq[Double]],
+      genSec: Double) {
+    def total: Double = mins.map(_._2).filter(_ >= 0).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Engine.session(appName = "graft-bench")
     val runStart = System.nanoTime()
     val cpuStart = procStatCpu()
-    // read the scheduler-granted core count NOW: the opt-in sweep below
-    // cycles SparkContexts, and a stopped context cannot answer
-    val cpusCount = spark.sparkContext.defaultParallelism
 
     val headline = QueryDef.catalogs.filter(_.headline)
-    val time = timeOnce(spark) _
     def json(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val bufs = interleaved(headline, passes = 3, "sf0.1")(_.name)(time(_, sfDir))
+    val bufs = interleaved(headline, passes = 3, "sf0.1")(_.name)(timeOnce(spark)(_, sfDir))
     val results = headline.map(q => q.name -> minMeasured(bufs(q.name)))
     val sf01Armed = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
     // every diagnostic dump's re-execution wall, keyed "tier:query" —
@@ -351,157 +355,76 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
     }
-    // the scale tiers GC before each sample so ContextCleaner drains
-    // the previous query's debris outside the timed region
-    def timeAfterGc(dir: String)(q: QueryDef): Double = { System.gc(); time(q, dir) }
     // one decade's scaling ratio, 2 decimals; -1 when either side failed
     def ratio(v: Double, base: Double): Double =
       if (v >= 0 && base > 0) math.round(v / base * 100) / 100.0 else -1.0
     val total = results.map(_._2).filter(_ >= 0).sum
 
-    // sf1 scale tier — only on the driver's sf0.1 run, never fatal.
-    // Returns (full-line fields incl. per-pass samples, compact summary
-    // fields, per-query mins — the sf10 decade's denominator — and the
-    // tier's worst sample spread for the summary line).
-    val sf1Skip = ("", "", Map.empty[String, Double], 0.0)
-    val (sf1Section, sf1Summary, sf1Min, sf1Spread) =
-      if (!sf01Armed || sys.env.get("SPARK_GRAFT_SF1").contains("0")) sf1Skip
+    /** One scale tier, only when the primary dir is sf0.1 and skipped when
+      * `skip` is "0"; a failure prints and yields None. `ensure` caches
+      * the tier in `dir`, the cross-tier state is reset, and `queries`
+      * run `passes` interleaved passes of [[timeAfterGc]]; each ratio is
+      * one decade's min over `base`, the tier below (linear ≤ ~12×). A
+      * ratio past 12, and with `dumpWorst` the worst ratio (r5/r6's
+      * dd_minhash sat below every other trigger), gets a
+      * [[dumpDiagnostic]]. */
+    def scaleTier(tag: String, skip: Option[String], dir: String,
+        ensure: (SparkSession, String, String) => Unit, queries: Seq[QueryDef],
+        passes: Int, base: Map[String, Double], dumpWorst: Boolean): Option[ScaleTier] =
+      if (!sf01Armed || skip.contains("0")) None
       else try {
-        val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1")
         val g0 = System.nanoTime()
-        ensureSf1(spark, sfDir, sf1Dir)
+        ensure(spark, sfDir, dir)
         val genSec = (System.nanoTime() - g0) / 1e9
         resetBetweenTiers()
-        val passes = interleaved(headline, passes = 3, "sf1")(_.name)(timeAfterGc(sf1Dir))
-        val r1 = headline.map(q => q.name -> minMeasured(passes(q.name)))
-        val t1 = r1.map(_._2).filter(_ >= 0).sum
-        // per-query scaling ratio vs the sf0.1 min (10× data →
-        // ≤ ~12× time for a linear plan; fixed costs favor lower)
-        val sf01Min = results.toMap
-        val ratioVals = r1.map { case (k, v) => k -> ratio(v, sf01Min(k)) }
-        // a suspicious ratio gets its FINAL adaptive sf1 plan plus
-        // per-stage wall times dumped ([[dumpDiagnostic]]): super-linear
-        // beyond the 12× bar, or simply the WORST ratio of the round —
-        // the max-ratio query is the one the judge grades hardest, and
-        // r5/r6's dd_minhash (5.95×, 5.38× vs a 3.25× replica) sat below
-        // every other trigger
-        val worstKey = ratioVals.filter(_._2 > 0).sortBy(-_._2).headOption.map(_._1)
-        for ((q, (k, r)) <- headline.zip(ratioVals)
-             if r > 12.0 || worstKey.contains(k)) {
+        val samples = interleaved(queries, passes, tag)(_.name)(timeAfterGc(spark)(_, dir))
+        val mins = queries.map(q => q.name -> minMeasured(samples(q.name)))
+        val ratios = mins.map { case (k, v) => k -> ratio(v, base.getOrElse(k, -1.0)) }
+        val worstKey =
+          if (dumpWorst) ratios.filter(_._2 > 0).sortBy(-_._2).headOption.map(_._1)
+          else None
+        for ((q, (k, r)) <- queries.zip(ratios) if r > 12.0 || worstKey.contains(k)) {
           val why = ((if (r > 12.0) Seq(f"ratio $r%.2f > 12") else Nil) ++
-            (if (worstKey.contains(k)) Seq(f"worst sf1 ratio this round ($r%.2fx)")
+            (if (worstKey.contains(k)) Seq(f"worst $tag ratio this round ($r%.2fx)")
              else Nil)).mkString(", ")
-          val perPass = passes(k).map(s => f"$s%.2f").mkString(" / ")
-          diagWalls(s"sf1:$k") =
-            dumpDiagnostic(spark, q, sf1Dir, "sf1", s"$why; passes $perPass s")
+          val perPass = samples(k).map(s => f"$s%.2f").mkString(" / ")
+          diagWalls(s"$tag:$k") =
+            dumpDiagnostic(spark, q, dir, tag, s"$why; passes $perPass s")
         }
-        val common = s""","sf1_total":$t1,"sf1_queries":${json(r1)},""" +
-          s""""sf1_ratio_vs_sf01":${json(ratioVals)}"""
-        // pass-0 spread IS host signal here: the sf0.1 tier already
-        // warmed the JIT for every plan (see [[maxSpread]])
-        (common + s""","sf1_passes":${samplesJson(headline.map(_.name), passes)},""" +
-          s""""sf1_gen_sec":$genSec""",
-          common, r1.toMap.filter(_._2 >= 0),
-          maxSpread(headline.map(q => passes(q.name)), skipFirst = false))
+        Some(ScaleTier(mins, ratios, samples, genSec))
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] sf1 tier skipped: ${e.getMessage}")
-        sf1Skip
+        System.err.println(s"[bench] $tag tier skipped: ${e.getMessage}")
+        None
       }
 
-    // sf10 second-decade probe: the five most expensive headline
-    // queries over a 100× tier (~60M lineitem rows), a warm-up and one
-    // measured pass each — evidence that every non-sort-bound plan stays
-    // sub-linear across TWO measured decades, not a binding number.
-    // sf10_ratio_vs_sf1 is the second decade's ratio (sf10 min / sf1
-    // min); one past the 12× linear bar dumps its final plan and stage
-    // times. Default-on for the driver's sf0.1 run; never fatal,
-    // additive JSON keys only.
-    val sf10Both =
-      if (!sf01Armed || sys.env.get("SPARK_GRAFT_SF10").contains("0")) ""
-      else try {
-        val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10")
-        val g0 = System.nanoTime()
-        ensureSf10(spark, sfDir, sf10Dir)
-        val genSec = (System.nanoTime() - g0) / 1e9
-        resetBetweenTiers()
-        val probes = headline.filter(q => sf10Probes.contains(q.name))
-        val passes = interleaved(probes, passes = 2, "sf10")(_.name)(timeAfterGc(sf10Dir))
-        def r3(v: Double): Double = math.round(v * 1000) / 1000.0
-        val r10 = probes.map(q => q.name -> r3(minMeasured(passes(q.name))))
-        val ratio10 = r10.map { case (k, v) => k -> ratio(v, sf1Min.getOrElse(k, -1.0)) }
-        for ((q, (k, r)) <- probes.zip(ratio10) if r > 12.0)
-          diagWalls(s"sf10:$k") = dumpDiagnostic(spark, q, sf10Dir, "sf10",
-            f"second-decade ratio $r%.2f > 12")
-        s""","sf10_total":${r3(r10.map(_._2).filter(_ >= 0).sum)},""" +
-          s""""sf10_queries":${json(r10)},"sf10_ratio_vs_sf1":${json(ratio10)},""" +
-          s""""sf10_gen_sec":${math.round(genSec * 10) / 10.0}"""
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sf10 tier skipped: ${e.getMessage}")
-        ""
-      }
-
-    // Opt-in recorded full-catalog sf10 sweep (r14 verdict #5): the r14
-    // performance wave came from a MANUAL TimeQueries session whose
-    // ranking lived only in SURVEY prose. SPARK_GRAFT_SF10_SWEEP=1 runs
-    // EVERY catalog query once over the sf10 tier after the probes and
-    // writes `{"sweep":"sf10","sec":{name:sec|-1,…},"failed":[…]}` to
-    // SPARK_GRAFT_SF10_SWEEP_OUT (default SF10_SWEEP.json, cwd) — a
-    // committed, diffable round-over-round record of the non-headline
-    // catalog at 100×. One pass per query (the sweep hunts
-    // order-of-magnitude offenders, not binding numbers); a failing
-    // query records -1 and the sweep continues; never fatal to the
-    // bench record. Opt-in because the full catalog at 100× costs
-    // ~10 min the driver's per-round run should not pay.
-    if (sf01Armed && sys.env.get("SPARK_GRAFT_SF10_SWEEP").contains("1"))
-      try {
-        val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10")
-        ensureSf10(spark, sfDir, sf10Dir)
-        resetBetweenTiers()
-        val out = sys.env.getOrElse("SPARK_GRAFT_SF10_SWEEP_OUT", "SF10_SWEEP.json")
-        // FRESH SESSION every `sweepCycle` queries (VERDICT r20 #3): the
-        // sweep's long-lived local-mode JVM accumulates block-manager /
-        // ContextCleaner debris across 140 queries, and iteration-heavy
-        // LATE entries paid for it — g1_components read 99.7 s at sweep
-        // position 124 vs 64.2 s isolated (r20), a 55% position-dependent
-        // error that generated fake regressions to adjudicate every
-        // round. A per-query System.gc() doesn't clear it (the cleaner
-        // drains asynchronously while the next query runs); cycling the
-        // SparkContext does — a cluster's per-query-driver posture,
-        // reproduced in the sweep. ~2 s per cycle, 7 cycles: noise
-        // against a ~450 s sweep. The per-query caches are already
-        // session-safe (timeOnce clears RunCaches, which drops stopped
-        // sessions' entries).
-        val sweepCycle = 20
-        var sw = spark
-        // stopped in a finally: a failure after the first cycle must not
-        // leak the replacement session. The sweep is the run's last Spark
-        // work; nothing below needs a live context (record lines are
-        // pre-rendered strings)
-        try {
-          val swept = interleaved(QueryDef.catalogs.zipWithIndex, passes = 1,
-              "sf10 sweep")(_._1.name) { case (q, i) =>
-            if (i > 0 && i % sweepCycle == 0) {
-              sw.stop()
-              sw = Engine.session(appName = "graft-bench-sweep")
-            }
-            System.gc()
-            timeOnce(sw)(q, sf10Dir)
-          }
-          val secs = QueryDef.catalogs.map(q =>
-            q.name -> math.round(swept(q.name).head * 1000) / 1000.0)
-          val failed = secs.filter(_._2 < 0).map(_._1)
-          val body = s"""{"sweep":"sf10","dir":${Verify.jsonStr(sf10Dir)},""" +
-            s""""fresh_session_every":$sweepCycle,""" +
-            secs.map { case (k, v) => "\"" + k + "\":" + v }
-              .mkString(""""sec":{""", ",", "},") +
-            failed.map("\"" + _ + "\"").mkString(""""failed":[""", ",", "]}")
-          java.nio.file.Files.writeString(java.nio.file.Paths.get(out), body)
-          System.err.println(s"[bench] sf10 sweep written to $out " +
-            s"(${secs.count(_._2 >= 0)} timed, ${failed.size} failed)")
-        } finally sw.stop()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sf10 sweep skipped: ${e.getMessage}")
-      }
+    // sf1: a 10× tier, the headline suite. sf10: a 100× tier (~60M
+    // lineitem rows), the five most expensive headline queries, a warm-up
+    // and one measured pass — evidence that every non-sort-bound plan
+    // stays sub-linear across TWO measured decades, not a binding number
+    val sf1 = scaleTier("sf1", sys.env.get("SPARK_GRAFT_SF1"),
+      sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft-sf1"), ensureSf1,
+      headline, passes = 3, base = results.toMap, dumpWorst = true)
+    val sf10 = scaleTier("sf10", sys.env.get("SPARK_GRAFT_SF10"),
+      sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10"), ensureSf10,
+      headline.filter(q => sf10Probes.contains(q.name)), passes = 2,
+      base = sf1.fold(Map.empty[String, Double])(_.mins.toMap), dumpWorst = false)
+    // sf1's totals and ratios go on both lines, its per-pass samples and
+    // synthesis time on the full line only; sf10's fields, rounded, on both
+    val sf1Summary = sf1.fold("")(t =>
+      s""","sf1_total":${t.total},"sf1_queries":${json(t.mins)},""" +
+        s""""sf1_ratio_vs_sf01":${json(t.ratios)}""")
+    val sf1Section = sf1.fold("")(t => sf1Summary +
+      s""","sf1_passes":${samplesJson(headline.map(_.name), t.samples)},""" +
+      s""""sf1_gen_sec":${t.genSec}""")
+    def r3(v: Double): Double = math.round(v * 1000) / 1000.0
+    val sf10Both = sf10.fold("")(t =>
+      s""","sf10_total":${r3(t.total)},""" +
+        s""""sf10_queries":${json(t.mins.map { case (k, v) => k -> r3(v) })},""" +
+        s""""sf10_ratio_vs_sf1":${json(t.ratios)},""" +
+        s""""sf10_gen_sec":${math.round(t.genSec * 10) / 10.0}""")
+    // pass-0 spread IS host signal on sf1: the sf0.1 tier already warmed
+    // the JIT for every plan (see [[maxSpread]])
+    val sf1Spread = sf1.fold(0.0)(t => maxSpread(t.samples.values, skipFirst = false))
 
     // a -1 (died) query is EXCLUDED from the total's sum, which would
     // otherwise read as a speedup — the `failed` field marks the total
@@ -514,8 +437,9 @@ object Bench {
     }
     // the host signals, on BOTH lines: the core count the scheduler
     // actually granted (Engine derives the master and shuffle width from
-    // SPARK_GRAFT_CPUS) and the share of host CPU stolen over the run
-    val hostBoth = s""","cpus":$cpusCount""" +
+    // SPARK_GRAFT_CPUS, else the host's cores) and the share of host CPU
+    // stolen over the run
+    val hostBoth = s""","cpus":${spark.sparkContext.defaultParallelism}""" +
       (for (a <- cpuStart; b <- procStatCpu(); f <- stealFrac(a, b))
         yield s""","steal_frac":$f""").getOrElse("")
     // summary-line attribution: the driver's artifact keeps only the

@@ -17,9 +17,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
+  /** The core count a session runs with: `SPARK_GRAFT_CPUS` when set
+    * (`env` is its value), else the host's. */
+  private[graft] def cpus(env: Option[String]): Int =
+    env.fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
+
+  private lazy val defaultCpus = cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
   def session(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      master: String = s"local[$defaultCpus]",
+      shufflePartitions: Int = defaultCpus,
       appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()

@@ -28,13 +28,16 @@ package graft
   * at each tier — the complementary curve (probe cost vs increment size
   * at a ~fixed corpus); each span builds its own index, since the
   * corpus/increment boundary moves with the span.
-  * Protocol matches [[TimeQueries]] §6.2: three INTERLEAVED passes per
-  * (stage, tier) with min, so one bad host window cannot poison a pair;
-  * memoized feature frames are dropped before every sample; probes
-  * materialize through the noop sink. Each pass builds into a fresh
-  * staging dir (full cold ingest cost) and probes against that build;
-  * per-pass times go to stderr, one `INCR` line per tier plus a `RATIO`
-  * line to stdout. */
+  * Protocol as in [[Bench]] and [[TimeQueries]]: [[Bench.interleaved]]
+  * runs three passes over every (stage, tier) pair, each tier's build
+  * then its probe, so one bad host window cannot poison a pair; memoized
+  * feature frames are dropped before every sample; probes materialize
+  * through the noop sink. Each pass builds into a fresh staging dir (full
+  * cold ingest cost) and probes against that build. A failed sample is a
+  * −1 marker and its pair is not run again (a failed build leaves its
+  * probes nothing to read); the other tiers go on. Per-pass times go to
+  * stderr, one `INCR` line per tier plus a `RATIO` line to stdout
+  * ([[report]]). */
 object TimeIncr {
 
   private val fams = Map(
@@ -55,6 +58,33 @@ object TimeIncr {
     if (family == "phash")
       src.filter(pmod(col("doc_id"), lit(3)) === lit(0) && col("text").isNotNull)
     else src
+  }
+
+  /** One tier of the run: the increment is every id ≥ `split`. */
+  private[graft] final case class Tier(dir: String, split: Long, incrRows: Long,
+      corpus: Long) {
+    def key: String = s"$dir@$split"
+  }
+
+  /** The stdout lines: one `INCR` per tier, a stage with no valid sample
+    * reading `FAILED`, then, when `ratio`, a `RATIO` of the last tier over
+    * the first unless a stage failed at either end — as [[TimeQueries]]
+    * prints a pair. `samples` are keyed `"<stage> <tier key>"`. */
+  private[graft] def report(family: String, shards: Int, tiers: Seq[Tier],
+      samples: Map[String, Seq[Double]], ratio: Boolean): Seq[String] = {
+    def min(stage: String, t: Tier) =
+      TimeQueries.minValid(samples.getOrElse(s"$stage ${t.key}", Nil))
+    val incr = tiers.map(t =>
+      s"INCR family=$family ${t.dir} corpus=${t.corpus} incrRows=${t.incrRows} " +
+        s"split=${t.split} shards=$shards ${TimeQueries.cell("build", min("build", t))} " +
+        TimeQueries.cell("probe", min("probe", t)))
+    val (first, last) = (tiers.head, tiers.last)
+    val ratioLine = for {
+      b <- TimeQueries.ratioOf(min("build", first), min("build", last)) if ratio
+      p <- TimeQueries.ratioOf(min("probe", first), min("probe", last))
+    } yield f"RATIO family=$family corpus=${last.corpus.toDouble / first.corpus}%.2f " +
+      f"build=$b%.2f probe=$p%.2f"
+    incr ++ ratioLine
   }
 
   def main(args: Array[String]): Unit = {
@@ -114,53 +144,44 @@ object TimeIncr {
       val cnt = counted(family, source(dir)).agg(
         count(when(col(fam.srcIdCol) >= split, 1)).as("incr"),
         count(when(col(fam.srcIdCol) < split, 1)).as("corpus")).head()
-      (dir, split, cnt.getLong(0), cnt.getLong(1))
+      Tier(dir, split, cnt.getLong(0), cnt.getLong(1))
     }
-    val samples = scala.collection.mutable.Map
-      .empty[(String, String), List[Double]].withDefaultValue(Nil)
-    for (pass <- 0 until 3; (dir, split, _, _) <- tiers) {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-incr-idx").toString
-      // a version-named directory: the probe reads the shard count from it
-      val idx = s"$tmp/${operators.VersionedIndex.Version(split, 0L, shards).name}"
-      // each pass pays the full cold ingest; the finally keeps tier-scale
-      // builds from accumulating in tmp even when a pass fails
-      try {
-        // the FULL registry, not a hand-picked cache: TimeIncr is a
-        // cold-measurement harness, and the RunCaches contract is that
-        // clearing anything less silently lets a warm survivor deflate
-        // the next pass's samples the moment a probed pipeline adopts a
-        // new registered cache (r13 sweep)
-        operators.RunCaches.clearAll()
-        val b0 = System.nanoTime()
-        operators.VersionedIndex.write(fam, spark, dir, idx, split, shards)
-        val bSec = (System.nanoTime() - b0) / 1e9
-        operators.RunCaches.clearAll()
-        val p0 = System.nanoTime()
-        operators.VersionedIndex.probe(fam, spark, dir, idx, split)
-          .write.format("noop").mode("overwrite").save()
-        val pSec = (System.nanoTime() - p0) / 1e9
-        samples(("build", s"$dir@$split")) =
-          bSec :: samples(("build", s"$dir@$split"))
-        samples(("probe", s"$dir@$split")) =
-          pSec :: samples(("probe", s"$dir@$split"))
-        System.err.println(
-          f"[incr] $family pass $pass $dir split=$split build=$bSec%.2f s probe=$pSec%.2f s")
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(tmp))
+    // each tier's staging dir of the current pass: its build creates it,
+    // its probe deletes it, and the finally deletes what a failure left
+    val staged = scala.collection.mutable.Map.empty[Tier, java.io.File]
+    def unstage(t: Tier): Unit =
+      staged.remove(t).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    // a version-named directory: the probe reads the shard count from it
+    def index(t: Tier): String = {
+      val tmp = staged.getOrElse(t, sys.error(s"no index built for ${t.key} this pass"))
+      s"$tmp/${operators.VersionedIndex.Version(t.split, 0L, shards).name}"
     }
-    for ((dir, split, rows, corpus) <- tiers) {
-      val b = samples(("build", s"$dir@$split")).min
-      val p = samples(("probe", s"$dir@$split")).min
-      println(f"INCR family=$family $dir corpus=$corpus incrRows=$rows split=$split " +
-        f"shards=$shards build=$b%.3f probe=$p%.3f")
+    // the FULL registry, not a hand-picked cache: TimeIncr is a
+    // cold-measurement harness, and the RunCaches contract is that
+    // clearing anything less silently lets a warm survivor deflate the
+    // next pass's samples the moment a probed pipeline adopts a new
+    // registered cache (r13 sweep)
+    def timed(body: => Unit): Double = {
+      operators.RunCaches.clearAll()
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e9
     }
-    if (spans.length == 1 && dirs.length >= 2) {
-      val k0 = s"${tiers.head._1}@${tiers.head._2}"
-      val kN = s"${tiers.last._1}@${tiers.last._2}"
-      println(f"RATIO family=$family corpus=${tiers.last._4.toDouble / tiers.head._4}%.2f " +
-        f"build=${samples(("build", kN)).min / samples(("build", k0)).min}%.2f " +
-        f"probe=${samples(("probe", kN)).min / samples(("probe", k0)).min}%.2f")
-    }
+    val samples = try Bench.interleaved(
+        for (t <- tiers; stage <- Seq("build", "probe")) yield (stage, t),
+        passes = 3, s"incr $family") { case (stage, t) => s"$stage ${t.key}" } {
+      case ("build", t) =>
+        unstage(t) // the last pass's build, when its probe no longer runs
+        staged(t) = java.nio.file.Files.createTempDirectory("graft-incr-idx").toFile
+        try timed(operators.VersionedIndex.write(fam, spark, t.dir, index(t), t.split, shards))
+        catch { case e: Throwable => unstage(t); throw e }
+      case (_, t) =>
+        try timed(operators.VersionedIndex.probe(fam, spark, t.dir, index(t), t.split)
+          .write.format("noop").mode("overwrite").save())
+        finally unstage(t)
+    } finally staged.keys.toSeq.foreach(unstage)
+    report(family, shards, tiers, samples, ratio = spans.length == 1 && dirs.length >= 2)
+      .foreach(println)
     spark.stop()
   }
 }

@@ -175,6 +175,61 @@ class CatalogSpec extends SparkSpec {
     assert(hits === Seq("graft/Profile.scala"))
   }
 
+  test("main code reads only the pinned SPARK_GRAFT_* variables") {
+    // every new variable is one more untested way to run the engine;
+    // this list may only shrink. SPARK_GRAFT_JDBC_ is the prefix Tables
+    // completes with PARTCOL/LOWER/UPPER/NUM
+    val allowed = Seq("SPARK_GRAFT_CKPT_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_JDBC_",
+      "SPARK_GRAFT_JDBC_PARTTABLE", "SPARK_GRAFT_SF1", "SPARK_GRAFT_SF10",
+      "SPARK_GRAFT_SF10_DIR", "SPARK_GRAFT_SF1_DIR", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_STREAM_OUT", "SPARK_GRAFT_TIME_OUT")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
+    val name = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val files = java.nio.file.Files.walk(root)
+    val found = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(f => name.findAllIn(java.nio.file.Files.readString(f)).toSeq)
+      .distinct.sorted finally files.close()
+    assert(found === allowed.sorted)
+  }
+
+  test("Engine's core count: SPARK_GRAFT_CPUS when set, else the host's") {
+    assert(Engine.cpus(Some("8")) === 8)
+    assert(Engine.cpus(None) === Runtime.getRuntime.availableProcessors)
+  }
+
+  test("TimeQueries: `all` is the whole catalog; an unknown name fails before any query runs") {
+    assert(TimeQueries.resolve("all") === QueryDef.catalogs)
+    assert(TimeQueries.resolve("j1_fk_join, q1_agg").map(_.name) === Seq("j1_fk_join", "q1_agg"))
+    val e = intercept[RuntimeException](
+      TimeQueries.main(Array("passes=1", "q1_agg,no_such_query", sf001)))
+    assert(e.getMessage.contains("unknown catalog query: no_such_query"))
+    assert(!spark.sparkContext.isStopped, "main failed before it took or stopped a session")
+  }
+
+  test("TimeQueries and TimeIncr print a pair with no valid sample as FAILED, with no ratio") {
+    assert(TimeQueries.minValid(Seq(1.2, 1.5, -1.0)) === 1.2, "pass 0 counts; a −1 does not")
+    assert(TimeQueries.minValid(Seq(-1.0)) === -1.0)
+    assert(TimeQueries.timeLine("q", Seq("a" -> 0.5, "b" -> 2.0)) === "TIME q a=0.500 b=2.000 ratio=4.00")
+    assert(TimeQueries.timeLine("q", Seq("a" -> 0.5, "b" -> -1.0)) === "TIME q a=0.500 b=FAILED")
+    assert(TimeQueries.timeLine("q", Seq("a" -> -1.0, "b" -> 2.0)) === "TIME q a=FAILED b=2.000")
+    val tiers = Seq(TimeIncr.Tier("d1", 80L, 20L, 80L), TimeIncr.Tier("d2", 980L, 20L, 980L))
+    val good = Map("build d1@80" -> Seq(2.0, 1.0), "probe d1@80" -> Seq(0.5, 0.4),
+      "build d2@980" -> Seq(10.0, 9.0), "probe d2@980" -> Seq(0.6, 0.8))
+    assert(TimeIncr.report("minhash", 4, tiers, good, ratio = true) === Seq(
+      "INCR family=minhash d1 corpus=80 incrRows=20 split=80 shards=4 build=1.000 probe=0.400",
+      "INCR family=minhash d2 corpus=980 incrRows=20 split=980 shards=4 build=9.000 probe=0.600",
+      "RATIO family=minhash corpus=12.25 build=9.00 probe=1.50"))
+    // a failed build leaves its probe nothing to read: both cells FAILED
+    val failed = good ++ Map("build d2@980" -> Seq(-1.0), "probe d2@980" -> Seq(-1.0))
+    assert(TimeIncr.report("minhash", 4, tiers, failed, ratio = true) === Seq(
+      "INCR family=minhash d1 corpus=80 incrRows=20 split=80 shards=4 build=1.000 probe=0.400",
+      "INCR family=minhash d2 corpus=980 incrRows=20 split=980 shards=4 build=FAILED probe=FAILED"))
+    // a probe that failed on its own still drops the ratio
+    assert(TimeIncr.report("minhash", 4, tiers, good + ("probe d2@980" -> Seq(-1.0)),
+      ratio = true).size === 2)
+  }
+
   test("Verify subset runs merge oracle entries, never dropping a prior failure") {
     // advice r15: a query that FAILED in a prior full run has an oracle
     // entry but no result dir; a subset refresh into the reused dir must
