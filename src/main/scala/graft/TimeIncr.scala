@@ -7,12 +7,14 @@ package graft
   * ~flat (it reads the increment slice plus pruned index partitions,
   * never the corpus).
   *
-  * Usage:
+  * Usage, over tiers a decade apart (`/tmp/graft-sf1` is what
+  * `runMain graft.MakeTier <sf0.1> /tmp/graft-sf1 10` writes):
   * {{{
   * sbt "runMain graft.TimeIncr /root/testdata/sf0.1 /tmp/graft-sf1"
   * sbt "runMain graft.TimeIncr family=phash /root/testdata/sf0.1 /tmp/graft-sf1"
   * sbt "runMain graft.TimeIncr spans=500,1000,2000,4000 /tmp/graft-sf1"
   * }}}
+  * A ratio run refuses tiers whose corpus does not grow ([[requireGrowing]]).
   *
   * `family=` selects the index family (minhash default, simhash, phash,
   * embedding) — all four are [[operators.VersionedIndex.IncrFamily]]
@@ -87,6 +89,16 @@ object TimeIncr {
     incr ++ ratioLine
   }
 
+  /** A ratio over tiers needs each tier's corpus larger than the one
+    * before it; a flat pair would print `RATIO … corpus=1.00` and claim
+    * nothing. Fails naming both tiers. */
+  private[graft] def requireGrowing(tiers: Seq[Tier]): Unit =
+    tiers.zip(tiers.drop(1)).foreach { case (a, b) =>
+      require(b.corpus > a.corpus,
+        s"tier ${b.dir} (corpus=${b.corpus}) is no larger than ${a.dir} " +
+          s"(corpus=${a.corpus}): a ratio needs growing tiers, e.g. from graft.MakeTier")
+    }
+
   def main(args: Array[String]): Unit = {
     val usage = "usage: TimeIncr [family=minhash|simhash|phash|embedding] " +
       "[spans=a,b,...] <dir> [dir2 ...]"
@@ -146,6 +158,8 @@ object TimeIncr {
         count(when(col(fam.srcIdCol) < split, 1)).as("corpus")).head()
       Tier(dir, split, cnt.getLong(0), cnt.getLong(1))
     }
+    val ratio = spans.length == 1 && dirs.length >= 2
+    if (ratio) requireGrowing(tiers)
     // each tier's staging dir of the current pass: its build creates it,
     // its probe deletes it, and the finally deletes what a failure left
     val staged = scala.collection.mutable.Map.empty[Tier, java.io.File]
@@ -180,7 +194,7 @@ object TimeIncr {
           .write.format("noop").mode("overwrite").save())
         finally unstage(t)
     } finally staged.keys.toSeq.foreach(unstage)
-    report(family, shards, tiers, samples, ratio = spans.length == 1 && dirs.length >= 2)
+    report(family, shards, tiers, samples, ratio)
       .foreach(println)
     spark.stop()
   }

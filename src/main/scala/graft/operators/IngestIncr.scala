@@ -408,7 +408,7 @@ object IngestIncr {
       (state match {
         case None =>
           if (isMarkedEmpty(s, s"$idx/bands"))
-            Similarity.minhashDedupOf(feat)
+            VersionedIndex.dedup(Similarity.minhashIncr, feat)
           else VersionedIndex.probeIncrIndex(s, idx, split,
             Similarity.minhashIncr, feat, ver)
         case Some(st) =>
@@ -474,9 +474,8 @@ object IngestIncr {
       // election + anti-join lineage ran twice per trigger. Same
       // supersede-per-batch stamp as the other stream memos.
       val deltaBands = RunCaches.cachedFeature(s, memoKey("deltabands"), ver) {
-        val newBuckets = Similarity.bandedOf(feat)
-          .groupBy(col("band"), col("bucket"))
-          .agg(min(col("doc_id")).as("keeper"))
+        val newBuckets = VersionedIndex.keepersOf(
+          VersionedIndex.bandedOf(Similarity.minhashIncr, feat), "doc_id")
         // anti-join against nothing is identity — the empty-state fast
         // path skips the exchange (see stateBandsEmpty above)
         if (stateBandsEmpty) newBuckets
@@ -883,7 +882,7 @@ object IngestIncr {
     * through the SAME shared kernels, no index — restricted to
     * `doc_id >= split`. Exists so the equality spec can state the
     * incremental contract (probe ≡ batch, bit for bit) through the
-    * exact code the catalog query runs, the [[Similarity.minhashDedupOf]]
+    * exact code the catalog query runs, the [[VersionedIndex.dedup]]
     * discipline (a test-side copy would test itself). */
   private[graft] def batchVerdictsFor(s: SparkSession, dir: String,
       split: Long): DataFrame = {
@@ -898,7 +897,7 @@ object IngestIncr {
       .select(col("doc_id"), col("text"))
     val flagged = Text.decontamFlagged(train, bench, decontamMinHits)
     val surv1 = train.join(flagged, Seq("doc_id"), "left_anti")
-    val ve = Similarity.minhashDedupOf(Similarity.minhashFeatOf(surv1))
+    val ve = VersionedIndex.dedup(Similarity.minhashIncr, Similarity.minhashFeatOf(surv1))
       .select(col("doc_id"))
     docs.filter(col("doc_id") >= lit(split))
       .select(col("doc_id"), col("source"), col("lang"))

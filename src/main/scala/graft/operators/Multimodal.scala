@@ -461,31 +461,6 @@ object Multimodal {
       FROM documents WHERE n_chars // 100 > 0
       ORDER BY media_id, frame_idx"""))
 
-  /** mm_phash_dedup: perceptual-hash near-dup detection over the IMAGE
-    * media — the missing multimodal member of the dedup family (text
-    * has dd_exact/minhash/simhash, embeddings dd_embedding; images had
-    * decode but no dedup). Each image renders through the real PPM
-    * encode→parse path ([[ppmEncode]] → [[ppmAvgHash]]) into an 8×8
-    * average-hash, banded into its 8 row bands; candidates come from
-    * the linear keeper-election shape shared with `dd_simhash` (min
-    * media_id per (band, bucket) — a partial agg — then one verified
-    * candidate per image), hamming distance over the full 64 bits
-    * verifies, `is_dup` thresholds at ≤ 6 — NEVER an all-pairs join.
-    * Like dd_simhash the full candidate report is emitted (a
-    * filtered-only result is vacuous on a corpus without planted dups);
-    * unlike it the hash is portable integer math, so the whole pipeline
-    * — hash bits included — is recomputed independently by DuckDB from
-    * the same source bytes and the check is oracle-exact, not
-    * rows-only. At 100 TB the 8-bit buckets would collide heavily; the
-    * band width grows with the corpus (16-bit bands of a 256-bit hash),
-    * which changes constants, not this shape. The narrow hash frame is
-    * persisted through the same feature-cache registry the text dedup
-    * family uses ([[RunCaches.cachedFeature]]) — it is consumed by
-    * three plan branches (banding + two hash join-backs), and at 100 TB
-    * re-reading and re-hashing the media bytes per branch is the
-    * expensive part; the cache makes the PPM encode + kernel a
-    * once-per-execution cost and is cleared by the same Bench/harness
-    * resets as the text family. */
   /** (media_id, ph) — the 8-band average-hash frame over image media,
     * through the real PPM encode→parse path. The ONE hashing rule
     * shared by the batch dedup, the index build and the increment
@@ -513,15 +488,9 @@ object Multimodal {
       }(enc)
   }
 
-  /** (media_id, band, bucket) banding of a phash frame — one 8-bit row
-    * band per array element, shared by batch, build and probe. */
-  private def phashBandedOf(hashed: DataFrame): DataFrame =
-    hashed.select(col("media_id"), posexplode(col("ph")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-
-  /** The 64-bit hamming verify tail shared by [[phashDedupOf]] and
-    * the [[phashIncr]] probe — ONE definition, so the probe==batch equality
-    * contract cannot drift on the distance or threshold. */
+  /** The 64-bit hamming verify tail of the [[phashIncr]] family — ONE
+    * definition, so the probe==batch equality contract cannot drift on
+    * the distance or threshold. */
   private def phashVerify(cand: DataFrame, dPh: DataFrame,
       kPh: DataFrame): DataFrame =
     cand.join(dPh, Seq("media_id")).join(kPh, Seq("keeper"))
@@ -542,22 +511,6 @@ object Multimodal {
     "verify" -> s"hamming<=$phHamMax")
   private[operators] def phashKernelFp: String =
     Similarity.kernelFp(phashKernelId: _*)
-
-  /** [[mmPhashDedup]]'s whole election + verify pipeline over a
-    * (media_id, ph) frame — factored so the incremental probe's
-    * equality spec can recompute the batch answer over any corpus slice
-    * through the exact code the catalog query runs. */
-  private[graft] def phashDedupOf(hashed: DataFrame): DataFrame = {
-    val banded = phashBandedOf(hashed)
-    val keepers = banded.groupBy(col("band"), col("bucket"))
-      .agg(min(col("media_id")).as("keeper"))
-    val cand = banded.join(keepers, Seq("band", "bucket"))
-      .filter(col("keeper") < col("media_id"))
-      .groupBy(col("media_id")).agg(min(col("keeper")).as("keeper"))
-    phashVerify(cand,
-      hashed.select(col("media_id"), col("ph").as("d_ph")),
-      hashed.select(col("media_id").as("keeper"), col("ph").as("k_ph")))
-  }
 
   /** The full-corpus phash feature frame, persisted through the shared
     * feature-cache registry (three plan branches consume it). */
@@ -625,9 +578,34 @@ object Multimodal {
       ${where}GROUP BY c.media_id, c.keeper
       ORDER BY c.media_id"""
 
+  /** mm_phash_dedup: perceptual-hash near-dup detection over the IMAGE
+    * media — the missing multimodal member of the dedup family (text
+    * has dd_exact/minhash/simhash, embeddings dd_embedding; images had
+    * decode but no dedup). Each image renders through the real PPM
+    * encode→parse path ([[ppmEncode]] → [[ppmAvgHash]]) into an 8×8
+    * average-hash, banded into its 8 row bands; candidates come from
+    * the linear keeper-election shape shared with `dd_simhash` (min
+    * media_id per (band, bucket) — a partial agg — then one verified
+    * candidate per image), hamming distance over the full 64 bits
+    * verifies, `is_dup` thresholds at ≤ 6 — NEVER an all-pairs join.
+    * Like dd_simhash the full candidate report is emitted (a
+    * filtered-only result is vacuous on a corpus without planted dups);
+    * unlike it the hash is portable integer math, so the whole pipeline
+    * — hash bits included — is recomputed independently by DuckDB from
+    * the same source bytes and the check is oracle-exact, not
+    * rows-only. At 100 TB the 8-bit buckets would collide heavily; the
+    * band width grows with the corpus (16-bit bands of a 256-bit hash),
+    * which changes constants, not this shape. The narrow hash frame is
+    * persisted through the same feature-cache registry the text dedup
+    * family uses ([[RunCaches.cachedFeature]]) — it is consumed by
+    * three plan branches (banding + two hash join-backs), and at 100 TB
+    * re-reading and re-hashing the media bytes per branch is the
+    * expensive part; the cache makes the PPM encode + kernel a
+    * once-per-execution cost and is cleared by the same Bench/harness
+    * resets as the text family. */
   val mmPhashDedup = QueryDef(
     "mm_phash_dedup",
-    (s, dir) => phashDedupOf(phashFeat(s, dir)),
+    (s, dir) => VersionedIndex.dedup(phashIncr, phashFeat(s, dir)),
     oracle = Some(s"""
       WITH $phashOracleCtes
       ${phashOracleTail("")}"""))
@@ -645,7 +623,8 @@ object Multimodal {
     featOf = (s, dir, keep) => phashFeatOf(media(s, dir).filter(keep)),
     idCol = "media_id", featSubdir = "phs", featShardCol = "pshard",
     sideDdl = "media_id BIGINT, ph ARRAY<INT>, pshard BIGINT",
-    bandedOf = phashBandedOf,
+    // one 8-bit row band per array element
+    bands = col("ph"),
     sideOf = identity,
     kRename = d => d.select(col("media_id").as("keeper"), col("ph").as("k_ph")),
     verify = (cand, feat, kSide) =>

@@ -140,7 +140,8 @@ object PipelineE2E {
     val feat = RunCaches.cachedFeature(s, s"pipe_e2e_mhfeat:$dir$w", ver) {
       Similarity.minhashFeatOf(surv1.select(col("doc_id"), col("text")))
     }
-    val nearDup = Similarity.minhashDedupOf(feat, cfg.jaccardMinPct)
+    val nearDup = VersionedIndex.dedup(Similarity.minhashIncr, feat,
+        verify = Some(Similarity.minhashVerify(cfg.jaccardMinPct)))
       .select(col("doc_id"))
     // memoized (r17 review): surv2 feeds TWO plan branches inside the
     // median gate (thresholds + join-back), and Spark shares no subplans

@@ -90,6 +90,47 @@ object ScaleOps {
       .drop("__asof_t", "__asof_tag", "__asof_r")
   }
 
+  /** True when the session sets `spark.graft.checkpointDir`, which then
+    * becomes the context's checkpoint dir (first set wins per
+    * SparkContext). A forked sbt run takes the conf as a
+    * `-Dspark.graft.checkpointDir=<dir>` JVM option (build.sbt forwards
+    * extra JVM options): Spark copies `-Dspark.*` system properties into
+    * the session conf. */
+  private def reliableCkpt(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.graft.checkpointDir").exists { d =>
+      if (spark.sparkContext.getCheckpointDir.isEmpty)
+        spark.sparkContext.setCheckpointDir(d)
+      true
+    }
+
+  /** Eager checkpoint of a frame whose source is ALREADY cached by the
+    * caller — skips [[iterCkpt]]'s internal persist (which would double-
+    * cache) while keeping the reliable/local routing. */
+  private def ckptCached(spark: SparkSession, df: DataFrame): DataFrame =
+    if (reliableCkpt(spark)) df.checkpoint() else df.localCheckpoint()
+
+  /** Per-iteration checkpoint for the [[connectedComponents]] fixpoint.
+    * Reliable-checkpoint option: localCheckpoint blocks die with their
+    * executor, which kills the whole fixpoint at cluster scale. When the
+    * caller sets spark.graft.checkpointDir, iteration state goes through
+    * the fault-tolerant checkpoint path instead (files under the dir;
+    * first set wins per SparkContext). Locally the default stays
+    * localCheckpoint — no filesystem churn in tests/bench. */
+  private def iterCkpt(spark: SparkSession): DataFrame => DataFrame = {
+    val reliable = reliableCkpt(spark)
+    df =>
+      if (reliable) {
+        // persist before checkpointing: Dataset.checkpoint runs an eager
+        // count AND a separate checkpoint-write job — without a cache the
+        // whole join/agg pipeline executes twice per iteration (the
+        // classic checkpoint-without-cache gotcha)
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val out = df.checkpoint()
+        df.unpersist(blocking = false)
+        out
+      } else df.localCheckpoint()
+  }
+
   /** Distributed connected components over an undirected edge list:
     * returns (node, component) where `component` is the minimum node id
     * reachable from `node`. This is the clustering primitive transitive
@@ -126,54 +167,6 @@ object ScaleOps {
     * posture as the IVF centroid build. Throws if `maxIter` is hit
     * before the fixpoint rather than returning a half-merged
     * clustering. */
-  /** Per-iteration checkpoint for the [[connectedComponents]] fixpoint.
-    * Reliable-checkpoint option: localCheckpoint blocks die with their
-    * executor, which kills the whole fixpoint at cluster scale. When the
-    * caller sets spark.graft.checkpointDir, iteration state goes through
-    * the fault-tolerant checkpoint path instead (files under the dir;
-    * first set wins per SparkContext). Locally the default stays
-    * localCheckpoint — no filesystem churn in tests/bench. */
-  /** The fixpoint checkpoint-dir conf, with the forked-harness env
-    * fallback (sbt `run` forks, so a -D on the sbt command line never
-    * reaches the run JVM). */
-  private def ckptDirConf(spark: SparkSession): Option[String] =
-    spark.conf.getOption("spark.graft.checkpointDir")
-      .orElse(sys.env.get("SPARK_GRAFT_CKPT_DIR"))
-
-  private def reliableCkpt(spark: SparkSession): Boolean =
-    ckptDirConf(spark).isDefined
-
-  /** Eager checkpoint of a frame whose source is ALREADY cached by the
-    * caller — skips [[iterCkpt]]'s internal persist (which would double-
-    * cache) while keeping the reliable/local routing. */
-  private def ckptCached(spark: SparkSession, df: DataFrame): DataFrame =
-    if (reliableCkpt(spark)) {
-      ckptDirConf(spark).foreach { d =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(d)
-      }
-      df.checkpoint()
-    } else df.localCheckpoint()
-
-  private def iterCkpt(spark: SparkSession): DataFrame => DataFrame = {
-    val reliable = ckptDirConf(spark)
-    reliable.foreach { d =>
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(d)
-    }
-    df =>
-      if (reliable.isDefined) {
-        // persist before checkpointing: Dataset.checkpoint runs an eager
-        // count AND a separate checkpoint-write job — without a cache the
-        // whole join/agg pipeline executes twice per iteration (the
-        // classic checkpoint-without-cache gotcha)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val out = df.checkpoint()
-        df.unpersist(blocking = false)
-        out
-      } else df.localCheckpoint()
-  }
-
   def connectedComponents(edges: DataFrame, src: String, dst: String,
       maxIter: Int = 30): DataFrame = {
     val spark = edges.sparkSession

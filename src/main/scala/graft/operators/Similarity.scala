@@ -341,29 +341,6 @@ object Similarity {
     oracle = None,
     headline = true)
 
-  /** MinHash+LSH near-dup over documents: word shingles → 32 minhashes
-    * (one base hash per token + 32 keyed avalanche permutations) →
-    * 8 bands of 4 → per-bucket keeper assignment → exact Jaccard
-    * verify ≥ 50%.
-    *
-    * Scale design: the classic all-pairs-within-bucket join is quadratic
-    * in duplicate-cluster size (a 10k-copy boilerplate cluster → 10^8
-    * pairs). Instead each bucket elects a keeper (min doc_id) via a
-    * partial-aggregating groupBy — LINEAR in bucket size — and every doc
-    * is verified against only its best (lowest-id) candidate keeper: one
-    * output row per duplicate document, which is also the semantics a
-    * dedup pipeline actually wants (keep one, drop the rest).
-    *
-    * The per-doc feature frame (band buckets + token set) is computed in
-    * ONE scan of `documents` and persisted; the banded branch and both
-    * sides of the exact-verify join read the cache instead of re-scanning
-    * and re-tokenizing (Spark shares no subplans across DataFrame
-    * branches — at 100 TB this is the difference between one corpus read
-    * and three). Deterministic; ORACLE-EXACT since the md5-window hash
-    * family landed (r15): every hash in the pipeline is derivable by
-    * DuckDB from the same text, so the whole election is recomputed by
-    * an independent engine (the mm_phash_dedup treatment applied to the
-    * text family). */
   /** Shared MinHash feature frame for [[ddMinhash]] / [[ddMinhashCc]]:
     * one scan of `documents` → (doc_id, bands, toks), persisted.
     *
@@ -543,18 +520,11 @@ object Similarity {
       minhashFeatOf(T(s, dir).documents)
     }
 
-  /** (doc_id, band, bucket) exploded banding of a feature frame — the
-    * one banding expansion shared by the batch dedup, the index build
-    * and the increment probe. */
-  private[operators] def bandedOf(feat: DataFrame): DataFrame =
-    feat.select(col("doc_id"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-
-  /** The exact-Jaccard verify tail shared by [[minhashDedupOf]] and
-    * the [[minhashIncr]] probe: join (doc_id, keeper) candidates to both
-    * token sides and keep pairs at ≥ 50% Jaccard. ONE definition — the
-    * probe==batch equality contract rests on the threshold and the
-    * integer-div expression never diverging between the two callers. */
+  /** The exact-Jaccard verify tail of the minhash family and the cc
+    * query: join (doc_id, keeper) candidates to both token sides and keep
+    * pairs at ≥ `minPct` Jaccard. ONE definition — the probe==batch
+    * equality contract rests on the threshold and the integer-div
+    * expression never diverging between the paths. */
   private def jaccardVerifyRaw(cand: DataFrame, d: DataFrame,
       keeperToks: DataFrame, minPct: Long = mhVerifyPct): DataFrame =
     cand
@@ -579,36 +549,21 @@ object Similarity {
       .filter(col("uni") > lit(0L) && expr("(inter * 100) div uni") >= lit(minPct))
       .select(col("doc_id"), col("keeper"), expr("(inter * 100) div uni").as("jaccard_pct"))
 
-  /** Presentation form: the raw verify plus the catalog ordering. The
-    * cc query consumes [[jaccardVerifyRaw]] directly — its edges feed
-    * straight into connectedComponents' own repartitioning, and a
-    * global range-sort exchange of the edge set would be pure waste
-    * there (r13 third sweep). */
-  private def jaccardVerify(cand: DataFrame, d: DataFrame,
-      keeperToks: DataFrame, minPct: Long = mhVerifyPct): DataFrame =
-    jaccardVerifyRaw(cand, d, keeperToks, minPct).orderBy(col("doc_id"))
+  /** A minhash feature frame's verify side: (doc_id, toks), docs with
+    * at least one token. */
+  private def mhSide(feat: DataFrame): DataFrame =
+    feat.select(col("doc_id"), col("toks")).filter(size(col("toks")) > lit(0))
 
-  /** [[ddMinhash]]'s whole election + verify pipeline over a
-    * (doc_id, bands, toks) feature frame — factored so the incremental
-    * probe's equality spec can recompute the batch answer over any
-    * corpus slice through the exact code the catalog query runs. */
-  private[graft] def minhashDedupOf(feat: DataFrame, minPct: Long = mhVerifyPct): DataFrame = {
-    val d = feat.select(col("doc_id"), col("toks"))
-      .filter(size(col("toks")) > lit(0))
-    val banded = bandedOf(feat)
-    // keeper per (band, bucket) = min doc_id via a partial-aggregating
-    // groupBy (map-side combine + AQE skew splitting; the window-min
-    // alternative shuffles every banded row and lands each mega-bucket
-    // in a single task), then best (lowest) candidate keeper per doc
-    val keepers = banded.groupBy(col("band"), col("bucket"))
-      .agg(min(col("doc_id")).as("keeper"))
-    val cand = banded.join(keepers, Seq("band", "bucket"))
-      .filter(col("keeper") < col("doc_id"))
-      .groupBy(col("doc_id")).agg(min(col("keeper")).as("keeper"))
-    // exact verify: fetch token sets for both sides (linear joins on id)
-    jaccardVerify(cand, d,
-      d.select(col("doc_id").as("keeper"), col("toks").as("k_toks")), minPct)
-  }
+  /** The minhash family's verify at the Jaccard bar `minPct`, in catalog
+    * order: the family declares it at [[mhVerifyPct]], the composed
+    * pipeline's wide policy passes a higher bar to
+    * [[VersionedIndex.dedup]]. The cc query takes [[jaccardVerifyRaw]]
+    * unsorted — its edges feed straight into connectedComponents' own
+    * repartitioning, where a global range-sort exchange of the edge set
+    * would be pure waste (r13 third sweep). */
+  private[graft] def minhashVerify(minPct: Long): VersionedIndex.Verify =
+    (cand, feat, kSide) =>
+      jaccardVerifyRaw(cand, mhSide(feat), kSide, minPct).orderBy(col("doc_id"))
 
   /** Oracle-side exact-Jaccard verify tail — ONE definition for every
     * pair source, mirroring the Scala side's jaccardVerifyRaw
@@ -637,13 +592,6 @@ object Similarity {
         FROM $vrName
         WHERE sz - inter > 0 AND $mhJacPct >= $minPct)"""
 
-  /** DuckDB re-derivation of the ENTIRE minhash pipeline — tokenize,
-    * per-token md5, 32 circular 15-hex windows, per-window mins, band
-    * buckets, keeper election, candidate assignment, exact-Jaccard
-    * verify — shared by the three family oracles. Every expression is
-    * the SQL twin of the fused kernel above; the `ve` CTE is the
-    * verified (doc_id, keeper, jaccard_pct) row set the batch query
-    * returns, which the incr/cc variants filter or close over. */
   /** [[mhOracleCtes]] with the corpus source parameterized — the
     * composed-pipeline oracle (`pipe_e2e`) recomputes the SAME election
     * over its decontaminated survivor CTE instead of raw `documents`;
@@ -680,14 +628,44 @@ object Similarity {
         WHERE toks IS NOT NULL AND length(toks) > 0),
       """ + mhVerifyCtes("cand", "vr", "ve", withJaccardCol = true, minPct)
 
+  /** DuckDB re-derivation of the ENTIRE minhash pipeline — tokenize,
+    * per-token md5, 32 circular 15-hex windows, per-window mins, band
+    * buckets, keeper election, candidate assignment, exact-Jaccard
+    * verify — shared by the three family oracles. Every expression is
+    * the SQL twin of the fused kernel above; the `ve` CTE is the
+    * verified (doc_id, keeper, jaccard_pct) row set the batch query
+    * returns, which the incr/cc variants filter or close over. */
   private[operators] val mhOracleCtes = mhOracleCtesOver("documents")
 
+  /** MinHash+LSH near-dup over documents: word shingles → 32 minhashes
+    * (one base hash per token + 32 keyed avalanche permutations) →
+    * 8 bands of 4 → per-bucket keeper assignment → exact Jaccard
+    * verify ≥ 50%.
+    *
+    * Scale design: the classic all-pairs-within-bucket join is quadratic
+    * in duplicate-cluster size (a 10k-copy boilerplate cluster → 10^8
+    * pairs). Instead each bucket elects a keeper (min doc_id) via a
+    * partial-aggregating groupBy — LINEAR in bucket size — and every doc
+    * is verified against only its best (lowest-id) candidate keeper: one
+    * output row per duplicate document, which is also the semantics a
+    * dedup pipeline actually wants (keep one, drop the rest).
+    *
+    * The per-doc feature frame (band buckets + token set) is computed in
+    * ONE scan of `documents` and persisted; the banded branch and both
+    * sides of the exact-verify join read the cache instead of re-scanning
+    * and re-tokenizing (Spark shares no subplans across DataFrame
+    * branches — at 100 TB this is the difference between one corpus read
+    * and three). Deterministic; ORACLE-EXACT since the md5-window hash
+    * family landed (r15): every hash in the pipeline is derivable by
+    * DuckDB from the same text, so the whole election is recomputed by
+    * an independent engine (the mm_phash_dedup treatment applied to the
+    * text family). */
   val ddMinhash = QueryDef(
     "dd_minhash",
     // ONE pass over documents: band buckets + token set per doc, cached
     // for the three consumers inside (banding, verify doc side, verify
     // keeper side).
-    (s, dir) => minhashDedupOf(minhashFeat(s, dir)),
+    (s, dir) => VersionedIndex.dedup(minhashIncr, minhashFeat(s, dir)),
     oracle = Some(s"""
       WITH $mhOracleCtes
       SELECT doc_id, keeper, jaccard_pct FROM ve ORDER BY doc_id"""),
@@ -736,22 +714,18 @@ object Similarity {
     "dd_minhash_cc",
     (s, dir) => {
       val feat = minhashFeat(s, dir)
-      val d = feat.select(col("doc_id"), col("toks"))
-        .filter(size(col("toks")) > lit(0))
-      val banded = bandedOf(feat)
-      val keepers = banded.groupBy(col("band"), col("bucket"))
-        .agg(min(col("doc_id")).as("keeper"))
+      val d = mhSide(feat)
+      val banded = VersionedIndex.bandedOf(minhashIncr, feat)
       // distinct star edges (a doc pairs with ≤ nBands bucket-mins)
-      val candEdges = banded.join(keepers, Seq("band", "bucket"))
-        .filter(col("keeper") < col("doc_id"))
+      val candEdges = VersionedIndex.starEdges(banded,
+          VersionedIndex.keepersOf(banded, "doc_id"), "doc_id")
         .select(col("doc_id"), col("keeper"))
         .distinct()
       // exact verify every edge through the ONE shared Jaccard tail
-      // (threshold and integer-div expression live in jaccardVerify
+      // (threshold and integer-div expression live in jaccardVerifyRaw
       // alone — cc edges must merge under the same bar the keeper
       // dedup reports): only true near-dup links may merge
-      val verified = jaccardVerifyRaw(candEdges, d,
-          d.select(col("doc_id").as("keeper"), col("toks").as("k_toks")))
+      val verified = jaccardVerifyRaw(candEdges, d, minhashIncr.kRename(d))
         .select(col("doc_id").as("a"), col("keeper").as("b"))
       val comp = ScaleOps.connectedComponents(verified, "a", "b")
       comp
@@ -783,22 +757,6 @@ object Similarity {
       FROM lab l JOIN siz s USING (cluster_id)
       ORDER BY doc_id"""))
 
-  /** SimHash near-dup: 64-bit simhash from per-token avalanche hashes,
-    * banded by 8×8 bits, hamming distance verified against a ≤ 6
-    * duplicate threshold.
-    *
-    * Emits one row per document that has ANY keeper candidate — with its
-    * hamming distance and the `is_dup` verdict — rather than only the
-    * passing pairs: on a corpus with no near-dups a filtered result is
-    * empty and proves nothing, while the candidate report stays
-    * non-empty and checkable on any corpus (planted-dup fixture pins the
-    * verdict semantics). Deterministic; ORACLE-EXACT since the md5
-    * token hash landed (r15): the 64-bit per-token hash is the FIRST 16
-    * hex chars of md5(token), so DuckDB re-derives every bit with
-    * per-nibble arithmetic (`instr('0123456789abcdef', …) − 1` then
-    * shift/mask — no unsigned-64 type needed on either side) and
-    * recomputes the majority vote, the 8×8 banding, the election and
-    * the hamming verify from the same text. */
   /** Fused JVM simhash kernel from raw text (tokenize + set-dedupe +
     * 64-bit majority vote) — simhash bit counts DO depend on
     * multiplicity, so unlike minhash the distinct step is kept (hash
@@ -853,18 +811,14 @@ object Similarity {
       .filter(col("simhash").isNotNull)
       .select(col("doc_id"), col("simhash"))
 
-  /** (doc_id, band, bucket) banding of a simhash frame: 8 bands of 8
-    * bits — the one banding expansion shared by batch, build and probe. */
-  private def simhashBandedOf(withSim: DataFrame): DataFrame =
-    withSim.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(7)), b =>
-        call_function("shiftright", col("simhash"), b * lit(8))
-          .bitwiseAND(lit(255L)))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+  /** The simhash duplicate bar: hamming distance ≤ this many bits. Above
+    * [[simhashIncr]], whose kernel fingerprint reads it (object vals
+    * initialise in order). */
+  private[graft] val shHamMax = 6L
 
-  /** The hamming verify tail shared by [[simhashDedupOf]] and
-    * the [[simhashIncr]] probe — ONE definition, so the probe==batch
-    * equality contract cannot drift on the distance or threshold. */
+  /** The hamming verify tail of the [[simhashIncr]] family — ONE
+    * definition, so the probe==batch equality contract cannot drift on
+    * the distance or threshold. */
   private def hammingVerify(cand: DataFrame, dSim: DataFrame,
       kSim: DataFrame): DataFrame =
     cand.join(dSim, Seq("doc_id")).join(kSim, Seq("keeper"))
@@ -872,24 +826,6 @@ object Similarity {
       .withColumn("is_dup", col("hamming") <= lit(shHamMax))
       .select(col("doc_id"), col("keeper"), col("hamming"), col("is_dup"))
       .orderBy(col("doc_id"))
-
-  /** [[ddSimhash]]'s whole election + verify pipeline over a
-    * (doc_id, simhash) frame — factored so the incremental probe's
-    * equality spec can recompute the batch answer over any corpus slice
-    * through the exact code the catalog query runs. Same linear
-    * keeper-assignment shape as dd_minhash: partial-agg min per bucket,
-    * one verified candidate per doc — no all-pairs join. */
-  private[graft] def simhashDedupOf(withSim: DataFrame): DataFrame = {
-    val banded = simhashBandedOf(withSim)
-    val keepers = banded.groupBy(col("band"), col("bucket"))
-      .agg(min(col("doc_id")).as("keeper"))
-    val cand = banded.join(keepers, Seq("band", "bucket"))
-      .filter(col("keeper") < col("doc_id"))
-      .groupBy(col("doc_id")).agg(min(col("keeper")).as("keeper"))
-    hammingVerify(cand,
-      withSim.select(col("doc_id"), col("simhash").as("d_sim")),
-      withSim.select(col("doc_id").as("keeper"), col("simhash").as("k_sim")))
-  }
 
   /** DuckDB re-derivation of the ENTIRE simhash pipeline. Bit i of the
     * 64-bit token hash (first 16 hex chars of md5, unsigned) lives at
@@ -937,12 +873,28 @@ object Similarity {
         JOIN sb k ON k.doc_id = c.keeper AND k.i = d.i
         GROUP BY c.doc_id, c.keeper)"""
 
+  /** SimHash near-dup: 64-bit simhash from per-token avalanche hashes,
+    * banded by 8×8 bits, hamming distance verified against a ≤ 6
+    * duplicate threshold.
+    *
+    * Emits one row per document that has ANY keeper candidate — with its
+    * hamming distance and the `is_dup` verdict — rather than only the
+    * passing pairs: on a corpus with no near-dups a filtered result is
+    * empty and proves nothing, while the candidate report stays
+    * non-empty and checkable on any corpus (planted-dup fixture pins the
+    * verdict semantics). Deterministic; ORACLE-EXACT since the md5
+    * token hash landed (r15): the 64-bit per-token hash is the FIRST 16
+    * hex chars of md5(token), so DuckDB re-derives every bit with
+    * per-nibble arithmetic (`instr('0123456789abcdef', …) − 1` then
+    * shift/mask — no unsigned-64 type needed on either side) and
+    * recomputes the majority vote, the 8×8 banding, the election and
+    * the hamming verify from the same text. */
   val ddSimhash = QueryDef(
     "dd_simhash",
     // ONE kernel pass over documents, persisted: the banded branch and
     // both sides of the hamming verify read the narrow (doc_id, simhash)
     // cache instead of re-running the kernel per plan branch
-    (s, dir) => simhashDedupOf(cachedFeature(s, s"dd_simhash:$dir", srcVersion(s, dir, "documents.parquet")) {
+    (s, dir) => VersionedIndex.dedup(simhashIncr, cachedFeature(s, s"dd_simhash:$dir", srcVersion(s, dir, "documents.parquet")) {
       simhashFeatOf(T(s, dir).documents)
     }),
     oracle = Some(s"""
@@ -950,26 +902,15 @@ object Similarity {
       SELECT doc_id, keeper, hamming, hamming <= 6 AS is_dup FROM ve
       ORDER BY doc_id"""))
 
-  /** Embedding-cosine near-dup (driver brief's fifth dedup modality):
-    * LSH band buckets propose candidate pairs, exact cosine scores each
-    * doc against its best keeper candidate; `is_dup` marks cosine ≥ 0.40
-    * (the synthetic embeddings are near-orthogonal — max pairwise cosine
-    * ≈ 0.51 — so the production-style 0.95 threshold is tuned down; the
-    * shape is threshold-independent). Like dd_simhash, the full candidate
-    * report is emitted — a filtered-only result is vacuous on a corpus
-    * without planted dups. Candidate generation is the linear keeper
-    * shape: min vec_id per bucket, one verified candidate per vector —
-    * no all-pairs join. */
-  /** The one embedding-LSH banding rule (8 bands × 2 bits: high recall
-    * at low-cosine pairs) shared by the batch dedup, the index build
-    * and the increment probe. A stable val: the hyperplanes are drawn
-    * once from the fixed seed, so every consumer bands identically. */
-  private[graft] val shHamMax = 6L
   private val embDim = 64
   private val embPlanes = 16
   private val embBandsN = 8
   private val embSeed = 1337L
   private val embCosMin = 0.40
+  /** The one embedding-LSH banding rule (8 bands × 2 bits: high recall
+    * at low-cosine pairs) shared by the batch dedup, the index build
+    * and the increment probe. A stable val: the hyperplanes are drawn
+    * once from the fixed seed, so every consumer bands identically. */
   private val embBandsUdf =
     hyperplaneBandsUdf(dim = embDim, nPlanes = embPlanes,
       nBands = embBandsN, seed = embSeed)
@@ -980,13 +921,9 @@ object Similarity {
       .withColumn("bands", embBandsUdf(col("v")))
       .withColumn("norm", sqrt(dotDouble(col("v"), col("v"))))
 
-  private def embBandedOf(feat: DataFrame): DataFrame =
-    feat.select(col("vec_id"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-
-  /** The exact-cosine verify tail shared by [[embDedupOf]] and
-    * the [[embeddingIncr]] probe — ONE definition, so the probe==batch
-    * equality contract cannot drift on the score or threshold.
+  /** The exact-cosine verify tail of the [[embeddingIncr]] family — ONE
+    * definition, so the probe==batch equality contract cannot drift on
+    * the score or threshold.
     * Degenerate pairs are EXCLUDED like [[rankTop5]]'s guard, not
     * emitted: a zero-norm side would make cos 0/0 = NaN — which
     * `round(..).cast("long")` throws on under ANSI mode (this engine
@@ -1009,46 +946,25 @@ object Similarity {
         col("is_dup"))
       .orderBy(col("vec_id"))
 
-  /** [[ddEmbedding]]'s whole election + verify pipeline over a feature
-    * frame — factored so the incremental probe's equality spec can
-    * recompute the batch answer over any corpus slice through the exact
-    * code the catalog query runs. */
-  private[graft] def embDedupOf(feat: DataFrame): DataFrame = {
-    val banded = embBandedOf(feat)
-    val keepers = banded.groupBy(col("band"), col("bucket"))
-      .agg(min(col("vec_id")).as("keeper"))
-    val cand = banded.join(keepers, Seq("band", "bucket"))
-      .filter(col("keeper") < col("vec_id"))
-      .groupBy(col("vec_id")).agg(min(col("keeper")).as("keeper"))
-    val withNorm = feat.select(col("vec_id"), col("v"), col("norm"))
-    cosineVerify(cand, withNorm,
-      withNorm.select(col("vec_id").as("keeper"), col("v").as("kv"),
-        col("norm").as("kn")))
-  }
-
+  /** Embedding-cosine near-dup (the fifth dedup modality):
+    * LSH band buckets propose candidate pairs, exact cosine scores each
+    * doc against its best keeper candidate; `is_dup` marks cosine ≥ 0.40
+    * (the synthetic embeddings are near-orthogonal — max pairwise cosine
+    * ≈ 0.51 — so the production-style 0.95 threshold is tuned down; the
+    * shape is threshold-independent). Like dd_simhash, the full candidate
+    * report is emitted — a filtered-only result is vacuous on a corpus
+    * without planted dups. Candidate generation is the linear keeper
+    * shape: min vec_id per bucket, one verified candidate per vector —
+    * no all-pairs join. */
   val ddEmbedding = QueryDef(
     "dd_embedding",
     // ONE pass over embeddings: LSH bands + norm per vector, persisted
     // for the banding branch and both exact-verify join sides
-    (s, dir) => embDedupOf(cachedFeature(s, s"dd_embedding:$dir", srcVersion(s, dir, "embeddings.parquet")) {
+    (s, dir) => VersionedIndex.dedup(embeddingIncr, cachedFeature(s, s"dd_embedding:$dir", srcVersion(s, dir, "embeddings.parquet")) {
       embFeatOf(T(s, dir).embeddings)
     }),
     oracle = None)
 
-  /** IVF-style ANN top-k with a one-step Lloyd-refined coarse quantizer:
-    * seed centroids = the first nCells corpus vectors (deterministic),
-    * one assign → per-cell mean → re-assign refinement (the k-means
-    * iteration a real IVF index build runs to convergence; one step is
-    * the bench-scale stand-in with the identical dataflow). Queries probe
-    * their nProbe nearest cells and re-rank exactly inside them.
-    *
-    * The 100 TB shape: cell assignment is a PER-ROW argmax kernel over
-    * the centroid array (collected once — bounded at nCells rows — and
-    * closed over like a broadcast variable), so the corpus is never
-    * join-exploded or shuffled to pick its cell; centroid training
-    * touches only narrow (cell, pos, component) rows with partial
-    * aggregation; probes touch nProbe/nCells of the data and re-rank
-    * through the bounded top-k heap. */
   /** (cell, vector, norm) triples for the kernel closures. The collect
     * is the index-build step, bounded at nCells rows; norms are
     * recomputed driver-side with the same left-to-right accumulation
@@ -1164,6 +1080,20 @@ object Similarity {
       .orderBy(col("qid"), col("rank"))
   }
 
+  /** IVF-style ANN top-k with a one-step Lloyd-refined coarse quantizer:
+    * seed centroids = the first nCells corpus vectors (deterministic),
+    * one assign → per-cell mean → re-assign refinement (the k-means
+    * iteration a real IVF index build runs to convergence; one step is
+    * the bench-scale stand-in with the identical dataflow). Queries probe
+    * their nProbe nearest cells and re-rank exactly inside them.
+    *
+    * The 100 TB shape: cell assignment is a PER-ROW argmax kernel over
+    * the centroid array (collected once — bounded at nCells rows — and
+    * closed over like a broadcast variable), so the corpus is never
+    * join-exploded or shuffled to pick its cell; centroid training
+    * touches only narrow (cell, pos, component) rows with partial
+    * aggregation; probes touch nProbe/nCells of the data and re-rank
+    * through the bounded top-k heap. */
   val simIvfTopk = QueryDef(
     "sim_ivf_topk",
     (s, dir) => {
@@ -1227,7 +1157,7 @@ object Similarity {
     ivfRerank(corpusCells, queryCells)
   }
 
-  // --- incremental dedup families (declarations; VersionedIndex runs them) ---
+  // --- dedup families (declarations; VersionedIndex runs batch, build and probe) ---
 
   /** MinHash family. The size(toks) > 0 guard lives in `sideOf`,
     * applied identically at build and probe, so probe ≡ batch equality
@@ -1250,14 +1180,10 @@ object Similarity {
     featOf = (s, dir, keep) => minhashFeatOf(T(s, dir).documents.filter(keep)),
     idCol = "doc_id", featSubdir = "toks", featShardCol = "tshard",
     sideDdl = "doc_id BIGINT, toks ARRAY<STRING>, tshard BIGINT",
-    bandedOf = bandedOf,
-    sideOf = f => f.select(col("doc_id"), col("toks"))
-      .filter(size(col("toks")) > lit(0)),
+    bands = col("bands"),
+    sideOf = mhSide,
     kRename = d => d.select(col("doc_id").as("keeper"), col("toks").as("k_toks")),
-    verify = (cand, feat, kSide) =>
-      jaccardVerify(cand,
-        feat.select(col("doc_id"), col("toks"))
-          .filter(size(col("toks")) > lit(0)), kSide))
+    verify = minhashVerify(mhVerifyPct))
 
   /** dd_minhash_incr: INCREMENTAL near-dup dedup — the missing 100 TB
     * ingest pattern. Every other dedup query re-scans the whole corpus;
@@ -1297,7 +1223,9 @@ object Similarity {
     featOf = (s, dir, keep) => simhashFeatOf(T(s, dir).documents.filter(keep)),
     idCol = "doc_id", featSubdir = "sims", featShardCol = "sshard",
     sideDdl = "doc_id BIGINT, simhash BIGINT, sshard BIGINT",
-    bandedOf = simhashBandedOf,
+    // 8 bands of 8 bits
+    bands = transform(sequence(lit(0), lit(7)), b =>
+      call_function("shiftright", col("simhash"), b * lit(8)).bitwiseAND(lit(255L))),
     sideOf = identity,
     kRename = d => d.select(col("doc_id").as("keeper"),
       col("simhash").as("k_sim")),
@@ -1333,7 +1261,7 @@ object Similarity {
     featOf = (s, dir, keep) => embFeatOf(T(s, dir).embeddings.filter(keep)),
     idCol = "vec_id", featSubdir = "vecs", featShardCol = "vshard",
     sideDdl = "vec_id BIGINT, v ARRAY<FLOAT>, norm DOUBLE, vshard BIGINT",
-    bandedOf = embBandedOf,
+    bands = col("bands"),
     sideOf = f => f.select(col("vec_id"), col("v"), col("norm")),
     kRename = d => d.select(col("vec_id").as("keeper"), col("v").as("kv"),
       col("norm").as("kn")),

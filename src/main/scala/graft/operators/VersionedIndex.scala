@@ -5,14 +5,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import RunCaches.{cachedFeature, evictPrefix, srcVersion}
 
-/** The ONE versioned-index machinery behind every `_incr` query: an
-  * incremental dedup family is a declaration ([[IncrFamily]]), and this
-  * object owns everything else — the version-name codec ([[Version]]),
-  * the three index settings, publish/adopt/reap/husk-reclaim
-  * ([[ensureVersioned]]), and the shared build/probe halves
-  * ([[writeIncrIndex]]/[[probeIncrIndex]]) every family runs through,
-  * so a pruning, merge or publish fix can never land in one family and
-  * drift from the others.
+/** The ONE versioned-index machinery behind every dedup family: a
+  * family is a declaration ([[IncrFamily]]), and this object owns
+  * everything else — the one LSH election ([[bandedOf]], [[keepersOf]],
+  * [[starEdges]], [[candidatesOf]]), the batch dedup ([[dedup]]), the
+  * version-name codec ([[Version]]), the three index settings,
+  * publish/adopt/reap/husk-reclaim ([[ensureVersioned]]), and the
+  * build/probe halves ([[writeIncrIndex]]/[[probeIncrIndex]]). Batch,
+  * build and probe elect keepers through the same primitives, so the
+  * probe ≡ batch equality each family's spec asserts cannot drift, and
+  * a pruning, merge or publish fix can never land in one family alone.
   *
   * Settings (per-session Spark conf; they govern EVERY index family,
   * the composed ingest index included):
@@ -116,7 +118,10 @@ object VersionedIndex {
 
   // --- families ---
 
-  /** One incremental dedup family, declared as data. Source side:
+  /** (candidates, feature frame, keeper side) → a family's result. */
+  private[graft] type Verify = (DataFrame, DataFrame, DataFrame) => DataFrame
+
+  /** One dedup family, declared as data. Source side:
     * `srcTable`/`srcIdCol` — the table whose max id anchors the split
     * (`max id − max id / 5`, the same text the DuckDB oracles state) and
     * whose mtime/count versions the index; `featOf(s, dir, keep)` — the
@@ -126,15 +131,17 @@ object VersionedIndex {
     * threshold edit moves the base automatically); `query` is the catalog
     * query and the memo-key prefix.
     *
-    * Column-level shape, shared by [[writeIncrIndex]]/[[probeIncrIndex]]:
-    * `idCol` — the corpus id (ids are append-only, which is what makes
-    * least-merge the true bucket minimum). `featSubdir`/`featShardCol` —
-    * the keeper side table's layout. `bandedOf` — feature frame → (id,
-    * band, bucket). `sideOf` — feature frame → the keeper side projection
-    * (id + verify features), applied identically at build and probe time
-    * so both paths drop degenerate rows at the SAME stage. `kRename` — a
-    * side frame → keeper-join names (keeper, k_*). `verify` —
-    * (candidates, increment feature frame, keeper side) → result.
+    * Column-level shape, shared by batch ([[dedup]]), build
+    * ([[writeIncrIndex]]) and probe ([[probeIncrIndex]]): `idCol` — the
+    * corpus id (ids are append-only, which is what makes least-merge the
+    * true bucket minimum). `featSubdir`/`featShardCol` — the keeper side
+    * table's layout. `bands` — the feature frame's band-bucket array
+    * (element i = band i's bucket), exploded by [[bandedOf]]. `sideOf` —
+    * feature frame → the keeper side projection (id + verify features),
+    * applied identically in batch, build and probe so all three drop
+    * degenerate rows at the SAME stage. `kRename` — a side frame →
+    * keeper-join names (keeper, k_*). `verify` — (candidates, feature
+    * frame, keeper side) → result.
     * `bandsDdl`/`sideDdl` — the DATA schemas of the two persisted parts
     * (partition column included), what an injected part reader must
     * expose when it substitutes an empty frame for a legitimately-empty
@@ -150,10 +157,10 @@ object VersionedIndex {
       idCol: String,
       featSubdir: String,
       featShardCol: String,
-      bandedOf: DataFrame => DataFrame,
+      bands: Column,
       sideOf: DataFrame => DataFrame,
       kRename: DataFrame => DataFrame,
-      verify: (DataFrame, DataFrame, DataFrame) => DataFrame,
+      verify: Verify,
       // sideDdl has NO default (second r19 review): the probe builds
       // the empty-candShards frame from it, so a family without one is
       // wrong by construction — a compile error beats the mid-probe
@@ -208,7 +215,48 @@ object VersionedIndex {
       probe(fam, s, dir, idx, split)
     }, oracle = oracle)
 
-  // --- the shared build/probe halves ---
+  // --- the one LSH election ---
+
+  /** (id, band, bucket): `feat`'s band array exploded, one row per band. */
+  private[operators] def bandedOf(fam: IncrFamily, feat: DataFrame): DataFrame =
+    feat.select(col(fam.idCol), posexplode(fam.bands))
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+
+  /** (band, bucket, `as`): each bucket's keeper, its min id. A
+    * partial-aggregating groupBy (map-side combine + AQE skew splitting):
+    * the window-min alternative shuffles every banded row and lands each
+    * mega-bucket in a single task. */
+  private[operators] def keepersOf(banded: DataFrame, idCol: String,
+      as: String = "keeper"): DataFrame =
+    banded.groupBy(col("band"), col("bucket")).agg(min(col(idCol)).as(as))
+
+  /** Star edges: each banded row joined to its bucket's (band, bucket,
+    * keeper) row, kept where the keeper is below the row's id — linear in
+    * bucket size, never all pairs within a bucket. */
+  private[operators] def starEdges(banded: DataFrame, keepers: DataFrame,
+      idCol: String): DataFrame =
+    banded.join(keepers, Seq("band", "bucket")).filter(col("keeper") < col(idCol))
+
+  /** (id, keeper): each id's lowest keeper below it, one candidate per id. */
+  private[operators] def candidatesOf(banded: DataFrame, keepers: DataFrame,
+      idCol: String): DataFrame =
+    starEdges(banded, keepers, idCol)
+      .groupBy(col(idCol)).agg(min(col("keeper")).as("keeper"))
+
+  /** A family's batch dedup over a whole feature frame: band, elect,
+    * verify each id against its lowest keeper. A family's catalog dedup
+    * query is this over the full corpus, and its `_incr` query equals it
+    * restricted to the increment. `verify` replaces the family's verify
+    * tail (the composed pipeline's wide policy raises the Jaccard bar). */
+  private[graft] def dedup(fam: IncrFamily, feat: DataFrame,
+      verify: Option[Verify] = None): DataFrame = {
+    val banded = bandedOf(fam, feat)
+    verify.getOrElse(fam.verify)(
+      candidatesOf(banded, keepersOf(banded, fam.idCol), fam.idCol),
+      feat, fam.kRename(fam.sideOf(feat)))
+  }
+
+  // --- the build/probe halves ---
 
   /** Combined (band, bshard) partition key as one long — the single
     * expression both the probe's bounded collect and the index-read
@@ -236,14 +284,13 @@ object VersionedIndex {
     // the feature frame: a slice can hold rows yet band to nothing
     // (minhash emits no bands for a doc with no >3-char tokens), and
     // only "zero bands" produces the fileless write. Cheap: limit-1.
-    val bands = fam.bandedOf(feat)
+    val bands = bandedOf(fam, feat)
     require(!bands.isEmpty,
       s"${fam.name} index: corpus slice below the split produced no index " +
         "bands (the slice is empty, or every row in it is " +
         "band-degenerate) — an incremental index needs at least one " +
         "banded corpus row")
-    bands.groupBy(col("band"), col("bucket"))
-      .agg(min(col(fam.idCol)).as("keeper"))
+    keepersOf(bands, fam.idCol)
       .withColumn("bshard", pmod(col("bucket"), lit(shards.toLong)))
       .write.mode("overwrite").partitionBy("band", "bshard")
       .parquet(s"$indexPath/bands")
@@ -300,9 +347,8 @@ object VersionedIndex {
       if (readPart == null) (p, _) => s.read.parquet(p) else readPart
     def emptyOf(ddl: String): DataFrame = Similarity.emptyFromDdl(s, ddl)
     val shards = shardsOf(indexPath, s"${fam.name} probe")
-    val banded = fam.bandedOf(feat)
-    val incrKeepers = banded.groupBy(col("band"), col("bucket"))
-      .agg(min(col(fam.idCol)).as("ikeeper"))
+    val banded = bandedOf(fam, feat)
+    val incrKeepers = keepersOf(banded, fam.idCol, as = "ikeeper")
     val touched = graft.Profile.labeled(s, s"${fam.name}: band prune")(banded
       .select(partKey(col("band"),
         pmod(col("bucket"), lit(shards.toLong)), shards).as("pk"))
@@ -383,9 +429,7 @@ object VersionedIndex {
       else s"incrcand:${fam.name}:",
       spare = _ == candKey)
     val cand = cachedFeature(s, candKey, mixedVer) {
-      banded.join(merged, Seq("band", "bucket"))
-        .filter(col("keeper") < col(fam.idCol))
-        .groupBy(col(fam.idCol)).agg(min(col("keeper")).as("keeper"))
+      candidatesOf(banded, merged, fam.idCol)
     }
     // prune the keeper side-table read to the shards the elected CORPUS
     // keepers live in (increment keepers' features come from `feat`,

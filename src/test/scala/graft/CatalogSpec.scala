@@ -175,11 +175,27 @@ class CatalogSpec extends SparkSpec {
     assert(hits === Seq("graft/Profile.scala"))
   }
 
+  test("main code elects LSH bucket keepers in one place: VersionedIndex.keepersOf") {
+    // ROADMAP aim 2: one LSH election. Batch dedup, index build, probe,
+    // the cc query and the admission delta all call keepersOf; a second
+    // per-(band, bucket) min is a copy the probe ≡ batch specs rest on
+    val election = "groupBy(col(\"band\"), col(\"bucket\"))"
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root.resolve("graft")),
+      s"no sources at ${root.toAbsolutePath}")
+    val files = java.nio.file.Files.walk(root.resolve("graft"))
+    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(f => java.nio.file.Files.readAllLines(f).asScala
+        .filter(_.contains(election)).map(_ => root.relativize(f).toString))
+      finally files.close()
+    assert(hits === Seq("graft/operators/VersionedIndex.scala"))
+  }
+
   test("main code reads only the pinned SPARK_GRAFT_* variables") {
     // every new variable is one more untested way to run the engine;
     // this list may only shrink. SPARK_GRAFT_JDBC_ is the prefix Tables
     // completes with PARTCOL/LOWER/UPPER/NUM
-    val allowed = Seq("SPARK_GRAFT_CKPT_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_JDBC_",
+    val allowed = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_JDBC_",
       "SPARK_GRAFT_JDBC_PARTTABLE", "SPARK_GRAFT_SF1", "SPARK_GRAFT_SF10",
       "SPARK_GRAFT_SF10_DIR", "SPARK_GRAFT_SF1_DIR", "SPARK_GRAFT_SF_DIR",
       "SPARK_GRAFT_STREAM_OUT", "SPARK_GRAFT_TIME_OUT")
@@ -228,6 +244,15 @@ class CatalogSpec extends SparkSpec {
     // a probe that failed on its own still drops the ratio
     assert(TimeIncr.report("minhash", 4, tiers, good + ("probe d2@980" -> Seq(-1.0)),
       ratio = true).size === 2)
+  }
+
+  test("TimeIncr refuses a ratio over tiers whose corpus does not grow, naming both") {
+    val small = TimeIncr.Tier("/t/sf0.001", 400L, 100L, 400L)
+    TimeIncr.requireGrowing(Seq(small, TimeIncr.Tier("/t/sf1", 4000L, 100L, 4000L)))
+    val e = intercept[IllegalArgumentException](
+      TimeIncr.requireGrowing(Seq(small, TimeIncr.Tier("/t/sf0.01", 400L, 100L, 400L))))
+    assert(e.getMessage.contains("/t/sf0.01 (corpus=400)"))
+    assert(e.getMessage.contains("/t/sf0.001 (corpus=400)"))
   }
 
   test("Verify subset runs merge oracle entries, never dropping a prior failure") {

@@ -214,7 +214,7 @@ class SemanticsSpec extends SparkSpec {
     // ingest pipeline stored when it built the index) is the full
     // recompute's corpus rows — increment ids are all greater, so they
     // can never steal a corpus bucket minimum
-    val corpus = Similarity.minhashDedupOf(Similarity.minhashFeatOf(
+    val corpus = VersionedIndex.dedup(Similarity.minhashIncr, Similarity.minhashFeatOf(
       Tables(spark, sf001).documents.filter(col("doc_id") < split))).collect().toSeq
     assert(corpus === full.filter(_.getAs[Long]("doc_id") < split))
   }
@@ -445,7 +445,7 @@ class SemanticsSpec extends SparkSpec {
     // corpus side: the batch dedup over the corpus slice alone equals
     // the full recompute's corpus rows (append-only ids can never steal
     // a corpus bucket minimum)
-    val corpus = Similarity.simhashDedupOf(Similarity.simhashFeatOf(
+    val corpus = VersionedIndex.dedup(Similarity.simhashIncr, Similarity.simhashFeatOf(
       Tables(spark, sf001).documents.filter(col("doc_id") < split))).collect().toSeq
     assert(corpus === full.filter(_.getAs[Long]("doc_id") < split))
   }
@@ -464,7 +464,7 @@ class SemanticsSpec extends SparkSpec {
     // corpus side: the batch dedup over the corpus images alone equals
     // the full recompute's corpus rows (append-only ids can never steal
     // a corpus bucket minimum)
-    val corpus = Multimodal.phashDedupOf(
+    val corpus = VersionedIndex.dedup(Multimodal.phashIncr,
       Multimodal.phashFeat(spark, sf001).filter(col("media_id") < split))
       .collect().toSeq
     assert(corpus === full.filter(_.getAs[Long]("media_id") < split))
@@ -481,7 +481,7 @@ class SemanticsSpec extends SparkSpec {
     assert(probe.nonEmpty, "vacuous: the increment produced no candidate rows")
     assert(probe.exists(_.getAs[Long]("keeper") < split),
       "vacuous: no increment vector elected a CORPUS keeper — the index join was never exercised")
-    val corpus = Similarity.embDedupOf(Similarity.embFeatOf(
+    val corpus = VersionedIndex.dedup(Similarity.embeddingIncr, Similarity.embFeatOf(
       Tables(spark, sf001).embeddings.filter(col("vec_id") < split))).collect().toSeq
     assert(corpus === full.filter(_.getAs[Long]("vec_id") < split))
   }
