@@ -202,15 +202,16 @@ object Bench {
     * region, part, supplier) stay fixed, the realistic shape (dims grow
     * slower than facts) that also keeps broadcast dims broadcast-able.
     * Copy 0 keeps original ids, so id-anchored semantics (the 5 query
-    * vectors, keeper elections) still resolve. Idempotent via a marker
-    * file. sf1 (10×) backs the per-round scaling ratios; sf10 (100×,
-    * r14 verdict #1) adds the SECOND measured decade behind the 100 TB
-    * plan-shape claims. */
+    * vectors, keeper elections) still resolve. Idempotent: the tier is
+    * a [[Staged]] directory whose token is the generator version and the
+    * source tier's newest mtime. sf1 (10×) backs the per-round scaling
+    * ratios; sf10 (100×, r14 verdict #1) adds the SECOND measured decade
+    * behind the 100 TB plan-shape claims. */
   def ensureSf1(spark: SparkSession, sf01Dir: String, outDir: String): Unit =
-    ensureScaled(spark, sf01Dir, outDir, copies = 10, "_GRAFT_SF1_READY_v3")
+    ensureScaled(spark, sf01Dir, outDir, copies = 10, "v3")
 
   def ensureSf10(spark: SparkSession, sf01Dir: String, outDir: String): Unit =
-    ensureScaled(spark, sf01Dir, outDir, copies = 100, "_GRAFT_SF10_READY_v1")
+    ensureScaled(spark, sf01Dir, outDir, copies = 100, "v1")
 
   /** sf100 (1000×, ~600M lineitem rows, ~17 GB): the THIRD measured
     * decade. NEVER run by the per-round Bench (generation is minutes of
@@ -230,84 +231,75 @@ object Bench {
       // cache lives elsewhere must not get a drifting duplicate under /tmp
       sf10Dir: String = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "/tmp/graft-sf10")): Unit = {
     ensureSf10(spark, sf01Dir, sf10Dir)
-    ensureScaled(spark, sf10Dir, outDir, copies = 10,
-      "_GRAFT_SF100_READY_v2", off = 1000000000000L)
+    ensureScaled(spark, sf10Dir, outDir, copies = 10, "v2", off = 1000000000000L)
   }
 
   private def ensureScaled(spark: SparkSession, sf01Dir: String,
-      outDir: String, copies: Int, markerName: String,
+      outDir: String, copies: Int, version: String,
       off: Long = 10000000000L): Unit = {
-    // marker is generator-versioned: a layout change (v2 = 32-file facts,
-    // v3 = single-file dims)
-    // must invalidate a cached tier built by an older generator
-    val marker = new java.io.File(s"$outDir/$markerName")
-    // staleness guard: regenerate when the source tier is newer than the
-    // cached marker (driver may regenerate test data between rounds).
-    // Max over EVERY source table this tier copies — the six replicated
-    // facts AND the four copied dims: the driver has regenerated single
-    // tables before (events.ts encoding in r9), and a facts-only key
-    // would keep serving the OLD copy of a regenerated dim — sf1 ratios
-    // computed over mismatched tiers with no error (r13 sweeps).
+    // token = generator version (a layout change — v2 = 32-file facts,
+    // v3 = single-file dims — must invalidate a tier an older generator
+    // built) + the newest mtime over EVERY source table this tier copies,
+    // the six replicated facts AND the four copied dims: the driver has
+    // regenerated single tables before (events.ts encoding in r9), and a
+    // facts-only token would keep serving the OLD copy of a regenerated
+    // dim — sf1 ratios computed over mismatched tiers with no error (r13
+    // sweeps).
     val srcMtime = Seq("lineitem", "orders", "customer", "events",
-      "documents", "embeddings", "nation", "region", "part", "supplier").map { t =>
-      val d = new java.io.File(s"$sf01Dir/$t.parquet")
-      if (d.isDirectory)
-        (d.lastModified +: d.listFiles().map(_.lastModified).toSeq).max
-      else d.lastModified
-    }.max
-    if (marker.exists() && marker.lastModified() >= srcMtime) return
-    marker.delete()
-    val t = Tables(spark, sf01Dir)
-    // default off (1e10) sits far above any sf0.1 key (100 copies stay
-    // < 2^40); the sf100 derivation passes 1e12 — above the sf10 tier's
-    // own bumped-key ceiling (see ensureSf100)
-    def replicate(df: DataFrame): DataFrame =
-      df.withColumn("__c", explode(sequence(lit(0L), lit(copies - 1L))))
-    def bump(c: String): org.apache.spark.sql.Column =
-      (col(c) + col("__c") * lit(off)).as(c)
-    // facts are written as 32 files: the driver's source tier is a single
-    // one-row-group file, which caps every scan (and the whole codegen'd
-    // scan→filter→partial-agg map stage fused to it) at ONE task — at
-    // 10× the rows that serialized stage dominates wall-clock on a
-    // 32-core box and measures nothing about the plan. Real 100 TB
-    // tables are many-file; the scale tier should be too.
-    def write(df: DataFrame, name: String, numFiles: Int = 32): Unit =
-      df.drop("__c").repartition(numFiles)
-        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      "documents", "embeddings", "nation", "region", "part", "supplier")
+      .map(t => Tables.newestMtime(spark, s"$sf01Dir/$t.parquet")).max
+    Staged.ensure(outDir, s"$version:$srcMtime") {
+      val t = Tables(spark, sf01Dir)
+      // default off (1e10) sits far above any sf0.1 key (100 copies stay
+      // < 2^40); the sf100 derivation passes 1e12 — above the sf10 tier's
+      // own bumped-key ceiling (see ensureSf100)
+      def replicate(df: DataFrame): DataFrame =
+        df.withColumn("__c", explode(sequence(lit(0L), lit(copies - 1L))))
+      def bump(c: String): org.apache.spark.sql.Column =
+        (col(c) + col("__c") * lit(off)).as(c)
+      // facts are written as 32 files: the driver's source tier is a single
+      // one-row-group file, which caps every scan (and the whole codegen'd
+      // scan→filter→partial-agg map stage fused to it) at ONE task — at
+      // 10× the rows that serialized stage dominates wall-clock on a
+      // 32-core box and measures nothing about the plan. Real 100 TB
+      // tables are many-file; the scale tier should be too.
+      def write(df: DataFrame, name: String, numFiles: Int = 32): Unit =
+        df.drop("__c").repartition(numFiles)
+          .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
 
-    write(replicate(t.lineitem).select(
-      bump("l_orderkey") +: t.lineitem.columns.filterNot(_ == "l_orderkey")
-        .map(col).toIndexedSeq: _*), "lineitem")
-    write(replicate(t.orders).select(
-      bump("o_orderkey") +: bump("o_custkey") +:
-        t.orders.columns.filterNot(Set("o_orderkey", "o_custkey"))
-          .map(col).toIndexedSeq: _*), "orders")
-    write(replicate(t.customer).select(
-      bump("c_custkey") +: t.customer.columns.filterNot(_ == "c_custkey")
-        .map(col).toIndexedSeq: _*), "customer")
-    // events.ts is read as epoch-nanos Long (legacy nanosAsLong) and
-    // written back as PLAIN int64 (no TIMESTAMP(NANOS) annotation);
-    // Tables.events only ever does integer math on it, so the round-trip
-    // is transparent to every Spark consumer. It is NOT oracle-compatible:
-    // DuckDB would read this ts as BIGINT, so epoch_ms(ts)/CAST(ts AS DATE)
-    // oracle SQL must never run against the sf1 dir (Bench only times it)
-    val ev = spark.read.parquet(s"$sf01Dir/events.parquet")
-    write(replicate(ev).select(
-      bump("event_id") +: bump("user_id") +:
-        ev.columns.filterNot(Set("event_id", "user_id"))
-          .map(col).toIndexedSeq: _*), "events")
-    write(replicate(t.documents).select(
-      bump("doc_id") +: t.documents.columns.filterNot(_ == "doc_id")
-        .map(col).toIndexedSeq: _*), "documents")
-    write(replicate(t.embeddings).select(
-      bump("vec_id") +: t.embeddings.columns.filterNot(_ == "vec_id")
-        .map(col).toIndexedSeq: _*), "embeddings")
-    // dims stay ONE file each: they are broadcast, not scanned in
-    // parallel, and spraying 25 rows over 32 tiny files only adds
-    // fixed task/file-open noise to every query of the tier
-    for (dim <- Seq("nation", "region", "part", "supplier"))
-      write(spark.read.parquet(s"$sf01Dir/$dim.parquet"), dim, numFiles = 1)
-    marker.createNewFile()
+      write(replicate(t.lineitem).select(
+        bump("l_orderkey") +: t.lineitem.columns.filterNot(_ == "l_orderkey")
+          .map(col).toIndexedSeq: _*), "lineitem")
+      write(replicate(t.orders).select(
+        bump("o_orderkey") +: bump("o_custkey") +:
+          t.orders.columns.filterNot(Set("o_orderkey", "o_custkey"))
+            .map(col).toIndexedSeq: _*), "orders")
+      write(replicate(t.customer).select(
+        bump("c_custkey") +: t.customer.columns.filterNot(_ == "c_custkey")
+          .map(col).toIndexedSeq: _*), "customer")
+      // events.ts is read as epoch-nanos Long (legacy nanosAsLong) and
+      // written back as PLAIN int64 (no TIMESTAMP(NANOS) annotation);
+      // Tables.events only ever does integer math on it, so the round-trip
+      // is transparent to every Spark consumer. It is NOT oracle-compatible:
+      // DuckDB would read this ts as BIGINT, so epoch_ms(ts)/CAST(ts AS DATE)
+      // oracle SQL must never run against the sf1 dir (Bench only times it)
+      val ev = spark.read.parquet(s"$sf01Dir/events.parquet")
+      write(replicate(ev).select(
+        bump("event_id") +: bump("user_id") +:
+          ev.columns.filterNot(Set("event_id", "user_id"))
+            .map(col).toIndexedSeq: _*), "events")
+      write(replicate(t.documents).select(
+        bump("doc_id") +: t.documents.columns.filterNot(_ == "doc_id")
+          .map(col).toIndexedSeq: _*), "documents")
+      write(replicate(t.embeddings).select(
+        bump("vec_id") +: t.embeddings.columns.filterNot(_ == "vec_id")
+          .map(col).toIndexedSeq: _*), "embeddings")
+      // dims stay ONE file each: they are broadcast, not scanned in
+      // parallel, and spraying 25 rows over 32 tiny files only adds
+      // fixed task/file-open noise to every query of the tier
+      for (dim <- Seq("nation", "region", "part", "supplier"))
+        write(spark.read.parquet(s"$sf01Dir/$dim.parquet"), dim, numFiles = 1)
+    }
   }
 
   /** The five most expensive headline queries, timed on the sf10 tier. */

@@ -79,57 +79,47 @@ object BenchStreams {
         src => graft.streaming.StreamOps.gapSessions(src)))
   }
 
-  /** The ONE chunk-staging implementation both stagers run (r18 review:
-    * the merkle stager had copy-pasted this contract, and the two copies
-    * had already drifted on token strength). Resolves the stage dir for
-    * `tag`, and — unless `markerName` is already present — writes
-    * `chunked` (must carry a `chunk` column in [0, nChunks)) as one
-    * mtime-ascending parquet file ladder per chunk, then drops the
-    * marker. The marker name IS the freshness token: callers put every
-    * source-identity component in it. */
-  private def ensureStaged(tag: String, markerName: String, nChunks: Int,
+  /** The chunk ladder every stager builds: `chunked` (must carry a
+    * `chunk` column in [0, nChunks)) as one mtime-ascending parquet file
+    * per chunk under the [[Staged]] directory for `tag`, rebuilt only
+    * when `token` moved. Callers put every source-identity component in
+    * the token. */
+  private def stageChunks(tag: String, token: String, nChunks: Int,
       orderCol: String)(chunked: => org.apache.spark.sql.DataFrame): String = {
-    val key = tag.replaceAll("[^A-Za-z0-9._-]", "_") + "-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(tag.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-    val stage = s"${System.getProperty("java.io.tmpdir")}/graft-stream-stage/$key"
-    val marker = new java.io.File(s"$stage/$markerName")
-    if (marker.isFile) return stage
-    val tmp = s"$stage.build"
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
-    chunked
-      // one file per chunk: the trigger cadence is files, so each chunk
-      // must be exactly one admission unit
-      .repartition(col("chunk"))
-      .sortWithinPartitions(col(orderCol))
-      .write.partitionBy("chunk").mode("overwrite").parquet(tmp)
-    val out = new java.io.File(stage)
-    out.mkdirs()
-    val base = System.currentTimeMillis() - (nChunks + 1) * 60000L
-    for (i <- 0 until nChunks) {
-      val cdir = new java.io.File(s"$tmp/chunk=$i")
-      val parts = Option(cdir.listFiles()).toSeq.flatten
-        .filter(f => f.getName.endsWith(".parquet"))
-      parts.zipWithIndex.foreach { case (f, j) =>
-        val dest = new java.io.File(out, f"chunk-$i%04d-$j.parquet")
-        java.nio.file.Files.move(f.toPath, dest.toPath)
-        dest.setLastModified(base + i * 60000L)
+    val stage = Staged.dirFor("graft-stream-stage", tag)
+    Staged.ensure(stage, token) {
+      val tmp = s"$stage.build"
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
+      chunked
+        // one file per chunk: the trigger cadence is files, so each chunk
+        // must be exactly one admission unit
+        .repartition(col("chunk"))
+        .sortWithinPartitions(col(orderCol))
+        .write.partitionBy("chunk").mode("overwrite").parquet(tmp)
+      val out = new java.io.File(stage)
+      out.mkdirs()
+      val base = System.currentTimeMillis() - (nChunks + 1) * 60000L
+      for (i <- 0 until nChunks) {
+        val cdir = new java.io.File(s"$tmp/chunk=$i")
+        val parts = Option(cdir.listFiles()).toSeq.flatten
+          .filter(f => f.getName.endsWith(".parquet"))
+        parts.zipWithIndex.foreach { case (f, j) =>
+          val dest = new java.io.File(out, f"chunk-$i%04d-$j.parquet")
+          java.nio.file.Files.move(f.toPath, dest.toPath)
+          dest.setLastModified(base + i * 60000L)
+        }
       }
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    marker.createNewFile()
-    stage
   }
 
   /** Stages the tier's events as `nChunks` time-sliced parquet files with
-    * ascending mtimes under one flat dir; returns (dir, totalRows). A
-    * `_STAGED_<rows>_<maxId>_<maxTs>_<minTs>_<chunks>` marker memoizes
-    * the layout per (tier, chunk-count) so repeated harness runs
-    * re-stage whenever the source token moved — count alone would replay
-    * stale chunks after a same-cardinality regeneration (spec-pinned in
-    * StreamingSpec; the snapshot-token discipline). */
+    * ascending mtimes under one flat dir; returns (dir, totalRows). The
+    * stage token `<rows>_<maxId>_<maxTs>_<minTs>_<chunks>` memoizes the
+    * layout per (tier, chunk-count) so repeated harness runs re-stage
+    * whenever it moved — count alone would replay stale chunks after a
+    * same-cardinality regeneration (spec-pinned in StreamingSpec). */
   private[graft] def stageEvents(spark: SparkSession, sfDir: String,
       nChunks: Int): (String, Long) = {
     val ev = Tables(spark, sfDir).events
@@ -140,7 +130,7 @@ object BenchStreams {
     // regeneration (r17 review; the RestSource.snapshot token
     // discipline, for real). min(ts_ms) is in the TOKEN, not just the
     // slicing bounds (r17 advice): a regeneration that moves only the
-    // lower ts bound changes the chunk slicing this marker claims to
+    // lower ts bound changes the chunk slicing this token claims to
     // pin, and it is already computed in the same single-pass aggregate.
     val tk = ev.agg(count(lit(1)), max(col("event_id")),
       max(col("ts_ms")), min(col("ts_ms"))).head()
@@ -150,8 +140,8 @@ object BenchStreams {
     require(total > 0, s"BenchStreams: $sfDir/events is empty — nothing to replay")
     val (mn, mx) = (tk.getLong(3), tk.getLong(2))
     val span = math.max(1L, mx - mn + 1)
-    val stage = ensureStaged(s"$sfDir#$nChunks",
-      s"_STAGED_${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_$nChunks",
+    val stage = stageChunks(s"$sfDir#$nChunks",
+      s"${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_$nChunks",
       nChunks, "ts_ms") {
       // chunk = uniform ts slice
       ev.withColumn("chunk",
@@ -228,7 +218,7 @@ object BenchStreams {
     * derivation crypto_merkle_root uses — the maintainer's contiguity
     * contract wants positions, not keys), leaf = md5(event_id) bytes.
     * Chunked by index range with ascending mtimes so appends replay in
-    * order; same marker-token discipline as [[stageEvents]]. */
+    * order; staged through [[stageChunks]] like [[stageEvents]]. */
   private[graft] def stageMerkleLeaves(spark: SparkSession, sfDir: String,
       nChunks: Int): (String, Long) = {
     val ev = Tables(spark, sfDir).events.select(col("event_id"))
@@ -246,8 +236,8 @@ object BenchStreams {
       sum(xxhash64(col("event_id")).cast("decimal(38,0)"))).head()
     val total = tk.getLong(0)
     require(total > 0, s"BenchStreams: $sfDir/events is empty — nothing to replay")
-    val stage = ensureStaged(s"$sfDir#mk$nChunks",
-      s"_STAGED_${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_${tk.get(4)}_$nChunks",
+    val stage = stageChunks(s"$sfDir#mk$nChunks",
+      s"${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_${tk.get(4)}_$nChunks",
       nChunks, "leaf_index") {
       graft.operators.ScaleOps.strataPrefixSum(
           ev, Seq.empty, Seq("event_id"), lit(1L), "leaf_index")
@@ -324,7 +314,7 @@ object BenchStreams {
     * read (≤ nChunks−1 doubles over one increment-sized scan); the
     * chunk column is a codegen'd fold over that literal array — no
     * join, no window. Returns the chunked frame and the distinct cut
-    * count (embedded in the stage marker so a layout change
+    * count (part of the stage token, so a layout change
     * self-invalidates). */
   private[graft] def quantileChunks(df: org.apache.spark.sql.DataFrame,
       idCol: String, nChunks: Int):
@@ -355,44 +345,42 @@ object BenchStreams {
     * band/tok state when chunk-staged), and 5 fresh admitted docs (the
     * band-state producers). Near-dup = token multiset preserved, order
     * perturbed: jaccard 1.0 under the minhash kernel, distinct md5 —
-    * the planted-fixture trick at scale. Pure function of `total`; the
-    * staging marker makes re-runs adopt. */
+    * the planted-fixture trick at scale. Pure function of `total`, so
+    * the [[Staged]] token is the generator version: re-runs adopt. */
   private def ensureNearDupCorpus(spark: SparkSession, total: Int): String = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft-neardup-$total"
-    val marker = new java.io.File(dir, "_STAGED_ND1")
-    if (marker.isFile) return dir
-    val maxId = total - 1L
-    val split = maxId - maxId / 5
-    val stop = "the and of to a in is for the and of to"
-    def fresh(id: Long): String =
-      (0 until 12).map(j => s"w${id}x$j").mkString(" ") + " " + stop
-    def perm(t: String): String = {
-      val w = t.split(" "); val tmp = w(0); w(0) = w(1); w(1) = tmp
-      w.mkString(" ")
+    val dir = Staged.dirFor("graft-neardup", total.toString)
+    Staged.ensure(dir, "nd1") {
+      val maxId = total - 1L
+      val split = maxId - maxId / 5
+      val stop = "the and of to a in is for the and of to"
+      def fresh(id: Long): String =
+        (0 until 12).map(j => s"w${id}x$j").mkString(" ") + " " + stop
+      def perm(t: String): String = {
+        val w = t.split(" "); val tmp = w(0); w(0) = w(1); w(1) = tmp
+        w.mkString(" ")
+      }
+      val gap0 = math.max(50L, (total - split) / 20)
+      val rows = (0L to maxId).map { id =>
+        val text =
+          if (id < split) fresh(id)
+          else (id - split) % 10 match {
+            case 0 | 1 | 2 => perm(fresh((id * 2654435761L) % split))
+            case 3 => fresh((id * 40503L) % split)
+            case 4 =>
+              // nearest earlier FRESH-role increment doc ((k % 10) == 5)
+              // at ~2-chunk distance; below the floor, fall back to fresh
+              val t0 = id - gap0
+              val t = t0 - (((t0 - split - 5) % 10 + 10) % 10)
+              if (t >= split + 5) perm(fresh(t)) else fresh(id)
+            case _ => fresh(id)
+          }
+        (id, text, "en", s"src${1 + (id % 3)}", text.length.toLong)
+      }
+      import spark.implicits._
+      rows.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .repartition(8).write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
     }
-    val gap0 = math.max(50L, (total - split) / 20)
-    val rows = (0L to maxId).map { id =>
-      val text =
-        if (id < split) fresh(id)
-        else (id - split) % 10 match {
-          case 0 | 1 | 2 => perm(fresh((id * 2654435761L) % split))
-          case 3 => fresh((id * 40503L) % split)
-          case 4 =>
-            // nearest earlier FRESH-role increment doc ((k % 10) == 5)
-            // at ~2-chunk distance; below the floor, fall back to fresh
-            val t0 = id - gap0
-            val t = t0 - (((t0 - split - 5) % 10 + 10) % 10)
-            if (t >= split + 5) perm(fresh(t)) else fresh(id)
-          case _ => fresh(id)
-        }
-      (id, text, "en", s"src${1 + (id % 3)}", text.length.toLong)
-    }
-    import spark.implicits._
-    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .repartition(8).write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    new java.io.FileOutputStream(marker).close()
-    dir
   }
 
   /** Measures the LIVE composed-admission stream
@@ -432,8 +420,8 @@ object BenchStreams {
     val total = tk.getLong(0)
     require(total > 0, s"BenchStreams: $sfDir documents increment is empty")
     val (chunked, nCuts) = quantileChunks(docs, "doc_id", nChunks)
-    val stage = ensureStaged(s"$sfDir#ing$nChunks",
-      s"_STAGED_Q${nCuts}_${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_${split}_$nChunks",
+    val stage = stageChunks(s"$sfDir#ing$nChunks",
+      s"Q${nCuts}_${total}_${tk.get(1)}_${tk.get(2)}_${tk.get(3)}_${split}_$nChunks",
       nChunks, "doc_id") { chunked }
     val Seq(stateRoot, outRoot) = Seq("state", "out").map(n =>
       java.nio.file.Files.createTempDirectory(s"graft-ingadm-bench-$n").toString)

@@ -11,12 +11,21 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   *
   * Usage: runMain graft.Explain <sfDir> [q1,q2,…] [<outDir> <suffix>]
   *
-  * No names dumps the whole catalog; an unknown name fails before anything
-  * runs. With an out dir each query goes to `<outDir>/<q>_<suffix>.txt`,
-  * else to stdout, in four sections: the formatted plan before execution
+  * No names (or `all`) dumps the whole catalog; an unknown name fails
+  * before anything runs ([[QueryDef.resolve]]). With an out dir each
+  * query goes to `<outDir>/<q>_<suffix>.txt`, else to stdout, in four
+  * sections: the formatted plan before execution
   * (PushedFilters/ReadSchema per scan, join strategy, Exchange placement),
   * the stage times, the per-operator metrics, and the final adaptive plan
   * after execution, last, where `scripts/audit_plans.py` reads it.
+  *
+  * The final adaptive plan is run-time evidence, not a fixed function of
+  * the code: AQE picks some join sides from runtime statistics, and three
+  * runs of `dd_embedding` at sf0.01 on one 4-core host built the
+  * bands⨝keepers broadcast on the left once and on the right twice. A
+  * plan-equality check therefore compares operator trees regardless of
+  * the broadcast build side, or compares against several dumps of the
+  * parent.
   */
 object Explain {
 
@@ -79,13 +88,10 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     require(Set(1, 2, 4)(args.length), "usage: Explain <sfDir> [q1,q2,...] [<outDir> <suffix>]")
-    val names = args.lift(1).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val unknown = names.filterNot(QueryDef.catalogs.map(_.name).toSet)
-    require(unknown.isEmpty, s"unknown catalog queries: ${unknown.mkString(", ")}")
+    val defs = args.lift(1).fold(QueryDef.catalogs)(QueryDef.resolve)
     val out = Option.when(args.length == 4)((args(2), args(3)))
     val spark = Engine.session(appName = "graft-explain")
-    val failed = QueryDef.catalogs.filter(q => names.isEmpty || names.contains(q.name))
-      .filterNot(q => scala.util.Try(dump(spark, q, args(0))).fold(
+    val failed = defs.filterNot(q => scala.util.Try(dump(spark, q, args(0))).fold(
         e => { System.err.println(s"[explain] ${q.name} failed: ${e.getMessage}"); false },
         d => {
           val text = d.render(q.name + out.fold("")(o => s" (${o._2})"))

@@ -4,8 +4,9 @@ package graft
   * standalone main, for tiers the per-round bench must never pay for
   * inline (sf100 derives from the cached sf10 tier in ~5 min — 302 s
   * measured — but that is still far outside the driver's per-round
-  * wall budget). Idempotent via the generators' own marker/staleness
-  * discipline.
+  * wall budget). Idempotent: each tier is a [[Staged]] directory,
+  * rebuilt only when its generator version or its source's newest mtime
+  * moved.
   *
   * Usage:
   * {{{

@@ -79,4 +79,13 @@ object QueryDef {
       Seq(graft.operators.PipelineE2E.pipeE2e,
         graft.operators.PipelineE2E.pipeE2eWide,
         graft.operators.IngestIncr.pipeIngestIncr)
+
+  /** The catalog queries a comma list names, in its order; `all` is the
+    * whole catalog. An unknown name fails here, before any query runs:
+    * the one name check of TimeQueries, Explain and Verify. */
+  def resolve(arg: String): Seq[QueryDef] =
+    if (arg.trim == "all") catalogs
+    else arg.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { n =>
+      catalogs.find(_.name == n).getOrElse(sys.error(s"unknown catalog query: $n"))
+    }
 }

@@ -175,6 +175,23 @@ object Tables {
     "supplier", "part", "orders", "lineitem", "events", "documents",
     "embeddings")
 
+  /** The newest mtime of `path`: the max of its own mtime and its direct
+    * children's, read through the Hadoop FileSystem of the path's scheme,
+    * so a `file:`-qualified or remote path reads its real mtimes (a
+    * `java.io.File` read of such a path sees mtime 0 forever). The source
+    * identity every staged cache, index version and memo version compares.
+    * A missing path throws `FileNotFoundException`. A `listStatus` walk:
+    * `listFiles` reads each file's permission, which forks `ls -ld` per
+    * file without native libhadoop. */
+  def newestMtime(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) st.getModificationTime
+    else fs.listStatus(p).foldLeft(st.getModificationTime)((m, c) =>
+      math.max(m, c.getModificationTime))
+  }
+
   /** `ts` → epoch-nanos Long, shared by the batch facade and the streaming
     * file source so both read every store tier the same way. Accepted
     * arrivals: epoch-nanos BIGINT (parquet TIMESTAMP(NANOS) under

@@ -18,7 +18,9 @@ package graft
   * [[Bench.interleaved]] runs a fixed number of passes (`passes=N`,
   * default 3) over every (tier, query) pair, so a pair's samples land a
   * whole pass apart; a pair whose sample fails is marked −1 and not run
-  * again, and nothing is added because of a result. Unlike Bench, the min
+  * again, and nothing is added because of a result. One untimed warm-up
+  * sample of the first pair runs before pass 0 (stderr `[time] warm-up`),
+  * so no recorded sample pays the JVM's cold start. Unlike Bench, the min
   * per pair counts pass 0 too ([[minValid]]), so `passes=1` is a valid
   * single-sample probe. Every [[freshSessionEvery]] samples the session is
   * replaced by a fresh one. Per-pass times go to stderr, one
@@ -35,15 +37,6 @@ object TimeQueries {
     * run of at most 20 samples never cycles. [[Bench.timeOnce]] clears
     * RunCaches, which drops a stopped session's entries. */
   private[graft] val freshSessionEvery = 20
-
-  /** The catalog queries a comma list names, in its order; `all` is the
-    * whole catalog. An unknown name fails here, before any query runs. */
-  private[graft] def resolve(arg: String): Seq[QueryDef] =
-    if (arg.trim == "all") QueryDef.catalogs
-    else arg.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { n =>
-      QueryDef.catalogs.find(_.name == n)
-        .getOrElse(sys.error(s"unknown catalog query: $n"))
-    }
 
   /** A pair's reported time: the min of its valid samples, pass 0
     * included; −1 when no sample is valid. */
@@ -79,9 +72,16 @@ object TimeQueries {
       case _ => false
     }
     require(rest0.length >= 2 && nPasses >= 1, usage)
-    val defs = resolve(rest0(0))
+    val defs = QueryDef.resolve(rest0(0))
+    require(defs.nonEmpty, usage)
     val dirs = rest0.drop(1).toSeq
     var spark = Engine.session(appName = "graft-time")
+    // one untimed sample of the first pair before pass 0: with passes=1
+    // nothing else absorbs the JVM's cold start, which the first query
+    // would otherwise pay (q1_agg read 5.3 s cold at sf0.01, ~0.45 s warm)
+    val warm = scala.util.Try(Bench.timeAfterGc(spark)(defs.head, dirs.head))
+      .fold(e => s"failed: ${e.getMessage}", t => f"$t%.3f s")
+    System.err.println(s"[time] warm-up ${defs.head.name} ${dirs.head} (not recorded): $warm")
     var taken = 0
     def key(q: QueryDef, dir: String) = s"${q.name} $dir"
     // stopped in a finally: a failure after the first cycle must not leak

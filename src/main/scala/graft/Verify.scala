@@ -52,14 +52,10 @@ object Verify {
     // the complete catalog, unchanged.
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
     val (sfDir, outDir) = (args(0), args(1))
-    val only = args.drop(2).toSet
+    val only = QueryDef.resolve(args.drop(2).mkString(",")).map(_.name).toSet
     val selected =
       if (only.isEmpty) SparkEntry.queries
-      else {
-        val missing = only -- SparkEntry.queries.keySet
-        require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(only).toMap
-      }
+      else SparkEntry.queries.view.filterKeys(only).toMap
     val spark = Engine.session(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>

@@ -124,10 +124,10 @@ object RunCaches {
     }
   }
 
-  /** Max mtime of `dir/<file>` (a dir's own mtime and its children's) —
-    * the source fingerprint every memo version and the index versioning
-    * use. Without it an in-place corpus regeneration within one session
-    * would keep serving the pre-regeneration persisted frame.
+  /** [[graft.Tables.newestMtime]] of `dir/<file>` — the source
+    * fingerprint every memo version uses. Without it an in-place corpus
+    * regeneration within one session would keep serving the
+    * pre-regeneration persisted frame.
     *
     * A store with NO mtime surface — the `jdbc:` table-set locator, an
     * unparseable locator, or a vanished path (which still fails loudly
@@ -137,16 +137,8 @@ object RunCaches {
     * that HAS an mtime surface propagates (r13: never silently collapse
     * the memo into rebuild-per-call thrash). */
   private[operators] def srcVersion(s: SparkSession, dir: String, file: String): Long =
-    try {
-      import org.apache.hadoop.fs.Path
-      val src = new Path(s"$dir/$file")
-      val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(src)
-      if (st.isDirectory)
-        (st.getModificationTime +:
-          fs.listStatus(src).map(_.getModificationTime).toSeq).max
-      else st.getModificationTime
-    } catch {
+    try graft.Tables.newestMtime(s, s"$dir/$file")
+    catch {
       case _: java.io.FileNotFoundException => System.nanoTime()
       case _: org.apache.hadoop.fs.UnsupportedFileSystemException => System.nanoTime()
       case _: IllegalArgumentException => System.nanoTime()

@@ -479,8 +479,8 @@ object VersionedIndex {
     *
     * The index lives in a VERSIONED directory named by [[Version]] —
     * (split, source token, shards) — so a driver-regenerated source tier
-    * changes the name, invalidating stale indexes the way
-    * Bench.ensureSf1's mtime check does. `build(stagingPath, split,
+    * changes the name, invalidating stale indexes the way a changed token
+    * invalidates a [[graft.Staged]] directory. `build(stagingPath, split,
     * shards)` stages into a fresh temp dir; publish is directory rename +
     * a `_PUBLISHED` marker: on rename-atomic filesystems (local, HDFS) a
     * reader can never see a half-written index, and the marker
@@ -536,11 +536,10 @@ object VersionedIndex {
         s"index build: $srcTable corpus at $dir is empty — nothing to index")
       val maxId = maxRow.getLong(0)
       val split = maxId - maxId / 5
-      val hconf = s.sparkContext.hadoopConfiguration
       // Source-version token, the second component of the version name
       // (the split — max id — is the first). Filesystem store: the
-      // source's max mtime, so a driver-regenerated tier changes the
-      // name. A store with NO mtime surface (the `jdbc:` table-set
+      // source's Tables.newestMtime, so a driver-regenerated tier changes
+      // the name. A store with NO mtime surface (the `jdbc:` table-set
       // locator): an EXPLICIT token — the corpus row count, one pushed
       // count(*) per ensure. (split, count) together pin every identity
       // change an append-only ingest corpus makes: appends move both,
@@ -555,15 +554,7 @@ object VersionedIndex {
       val srcToken: Long =
         if (dir.startsWith("jdbc:"))
           Tables(s, dir).byName(srcTable).count()
-        else {
-          val src = new Path(s"$dir/$srcTable.parquet")
-          val srcFs = src.getFileSystem(hconf)
-          val srcSt = srcFs.getFileStatus(src) // loud FileNotFound on a bad dir
-          if (srcSt.isDirectory)
-            (srcSt.getModificationTime +:
-              srcFs.listStatus(src).map(_.getModificationTime).toSeq).max
-          else srcSt.getModificationTime
-        }
+        else Tables.newestMtime(s, s"$dir/$srcTable.parquet") // loud on a bad dir
       val dirHash = // collision-proof component alongside the sanitized name
         f"${scala.util.hashing.MurmurHash3.stringHash(dir) & 0xffffffffL}%08x"
       // "where do the 100 TB indexes live" is deployment config, and two
@@ -572,7 +563,7 @@ object VersionedIndex {
       val confGraceMs = conf(s, "reapGraceMs", (15 * 60 * 1000L).toString).toLong
       val base = new Path(idxBase,
         s"graft-$famPrefix-idx-" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "-" + dirHash)
-      val fs = base.getFileSystem(hconf)
+      val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
       // Quiet-gating judges liveness by newest-visible-file age, which on
       // an OBJECT STORE can under-read a live cross-JVM copy: one huge
       // object uploading for longer than the grace window leaves the dir
@@ -711,15 +702,13 @@ object VersionedIndex {
                   "keeps reappearing marker-less (staging " +
                   s"${if (fs.exists(staging)) "intact" else "lost to a nesting race"})")
               fs.delete(ver, true) // quiet husk — reclaim, loop republishes
-              Thread.sleep(500L) // let a transient rename failure clear
-            } else {
+            } else
               require(now < deadline,
                 s"$famPrefix index publish timed out after ${graceMs + 30000L} ms " +
                   s"waiting on marker-less $ver (a publisher may be live, or " +
                   "the store reports future mtimes) — retry, raise " +
                   "spark.graft.minhash.reapGraceMs, or remove the dir manually")
-              Thread.sleep(500L)
-            }
+            Thread.sleep(500L) // a racer's marker, or a transient rename failure to clear
           }
         }
         // stale versions (older source tiers) and staging leaked by

@@ -91,51 +91,18 @@ object RestSource {
   @volatile var lastPushed: Pushed = Pushed(Nil, Nil, Nil, None, None)
 
   /** Deterministic JSONL snapshot of a catalog table — the stand-in for
-    * the remote endpoint's dataset, cached per (sfDir, table). Staleness
-    * guard: a parquet source rebuilds the snapshot when it is newer than
-    * the cached one (test data regenerated between runs); a `jdbc:`
-    * table-set locator has no mtime surface, so there the freshness
-    * token is the corpus ROW COUNT stored in the marker file — the same
-    * explicit-token discipline as the versioned incremental indexes
-    * (round 16; this is what lets the two REST queries run against a
-    * relational primary, closing the jdbc artifact's last non-runners).
-    * Either way a stale snapshot would silently serve old data while
-    * the oracle reads the fresh store. */
-  /** The ONE marker-token discipline both snapshot branches share (r17
-    * review 2 — the triplet was duplicated verbatim per branch):
-    * staleness compares `token` against the marker's CONTENTS (the
-    * marker's own mtime is repurposed as reap-liveness and advances on
-    * every call), `build` runs only when the token moved (then the new
-    * token is committed strictly AFTER the data), and a cache hit
-    * touches the marker so the sibling reap's 7-day window means
-    * UNUSED, not merely old. A legacy/empty marker reads token-less →
-    * rebuild once. */
-  private def refreshIfTokenMoved(marker: java.io.File, token: String)(
-      build: => Unit): Unit = {
-    val prior =
-      if (!marker.isFile) ""
-      else scala.util.Try(java.nio.file.Files.readString(marker.toPath)
-        .trim).getOrElse("")
-    if (token != prior) {
-      build
-      java.nio.file.Files.writeString(marker.toPath, token)
-    } else {
-      marker.setLastModified(System.currentTimeMillis())
-    }
-  }
-
+    * the remote endpoint's dataset, one [[graft.Staged]] directory per
+    * (sfDir, table). The freshness token: a parquet source's
+    * [[graft.Tables.newestMtime]], so a snapshot rebuilds when its source
+    * is regenerated (test data regenerated between runs), whatever the
+    * sfDir's scheme; a `jdbc:` table-set locator has no mtime surface, so
+    * there the token is the corpus `count:maxId` — the same explicit-token
+    * discipline as the versioned incremental indexes (round 16; this is
+    * what lets the two REST queries run against a relational primary).
+    * Either way a stale snapshot would silently serve old data while the
+    * oracle reads the fresh store. */
   def snapshot(spark: SparkSession, sfDir: String, table: String): String = {
-    val raw = s"$sfDir/$table"
-    // readable sanitized prefix + an md5 of the RAW pair: sanitization
-    // alone is lossy ('/a/sf0.1' and '/a/sf0_1' both sanitize to the
-    // same key), and a collision silently serves the OTHER table's
-    // snapshot through the staleness guard (r13 sweep)
-    val key = raw.replaceAll("[^A-Za-z0-9._-]", "_") + "-" +
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(raw.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .take(8).map(b => f"$b%02x").mkString
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft-rest/$key"
-    val marker = new java.io.File(s"$dir/_GRAFT_READY")
+    val dir = graft.Staged.dirFor("graft-rest", s"$sfDir/$table")
     if (sfDir.startsWith("jdbc:")) {
       val t = graft.Tables(spark, sfDir).byName(table)
       // freshness token = (row count, max of the first integral column)
@@ -153,15 +120,15 @@ object RestSource {
       val r = t.agg(aggs.head, aggs.tail: _*).head()
       val token = s"${r.getLong(0)}:" +
         (if (idCol.isEmpty || r.isNullAt(1)) "-" else r.get(1).toString)
-      refreshIfTokenMoved(marker, token) {
+      graft.Staged.ensure(dir, token) {
         t.write.mode("overwrite").json(dir)
       }
       // each distinct jdbc URL mints its own snapshot key (test runs use
       // fresh per-run Derby paths), and nothing else ever deletes them —
       // reap SIBLING snapshot dirs UNUSED for > 7 days so /tmp cannot
-      // grow without bound across rounds (review r16; both branches
-      // touch their marker on every snapshot() call, so quiet == unused
-      // and a live session's snapshot can never age into the reap)
+      // grow without bound across rounds (review r16; a hit touches the
+      // marker on every snapshot() call, so quiet == unused and a live
+      // session's snapshot can never age into the reap)
       val parent = new java.io.File(dir).getParentFile
       Option(parent.listFiles()).toSeq.flatten
         .filter(d => d.isDirectory && d.getName != new java.io.File(dir).getName)
@@ -173,18 +140,8 @@ object RestSource {
         .foreach(d => scala.util.Try(
           org.apache.commons.io.FileUtils.deleteDirectory(d)))
     } else {
-      val src = new java.io.File(s"$sfDir/$table.parquet")
-      def newestMtime(f: java.io.File): Long =
-        if (f.isDirectory) (f.lastModified +: f.listFiles().map(_.lastModified).toSeq).max
-        else f.lastModified
-      // staleness compares the OBSERVED source mtime stored in the
-      // marker's CONTENTS, not the marker's own mtime (r17 review): the
-      // reap-liveness touch below advances the marker's mtime on every
-      // hit, and an mtime-preserving source replacement (Files.move,
-      // rsync -a) older than the last touch would otherwise serve the
-      // stale snapshot forever. Same explicit-token discipline as the
-      // jdbc branch; a legacy EMPTY marker reads as token-less → rebuild.
-      refreshIfTokenMoved(marker, newestMtime(src).toString) {
+      val src = s"$sfDir/$table.parquet"
+      graft.Staged.ensure(dir, graft.Tables.newestMtime(spark, src).toString) {
         // route CATALOG tables through the Tables facade (NOT a raw
         // parquet read) so both tiers snapshot the SAME schema: byName
         // applies the events ts-normalization and the embeddings vector
@@ -196,7 +153,7 @@ object RestSource {
         val t =
           if (graft.Tables.catalogTables.contains(table))
             graft.Tables(spark, sfDir).byName(table)
-          else spark.read.parquet(src.getPath)
+          else spark.read.parquet(src)
         t.write.mode("overwrite").json(dir)
       }
     }

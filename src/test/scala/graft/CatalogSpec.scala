@@ -143,12 +143,11 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("main code waits with bounds: no Duration.Inf, no Thread.sleep outside the allowlist") {
-    // ROADMAP aim 3. The two publish-loop polls are the known exceptions;
-    // they become a counted backoff bounded by the grace deadline
-    // (ROADMAP open item 5), and this list shrinks with them
-    val allowed = Seq(
-      "graft/operators/VersionedIndex.scala" -> "Thread.sleep(500L) // let a transient rename failure clear",
-      "graft/operators/VersionedIndex.scala" -> "Thread.sleep(500L)")
+    // ROADMAP aim 3. The publish loop's one poll is the known exception;
+    // it becomes a counted backoff bounded by the grace deadline
+    // (ROADMAP open item 5), and this list shrinks with it
+    val allowed = Seq("graft/operators/VersionedIndex.scala" ->
+      "Thread.sleep(500L) // a racer's marker, or a transient rename failure to clear")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
     val files = java.nio.file.Files.walk(root)
@@ -191,6 +190,29 @@ class CatalogSpec extends SparkSpec {
     assert(hits === Seq("graft/operators/VersionedIndex.scala"))
   }
 
+  test("main code stages derived directories through one cache: Staged") {
+    // ROADMAP aim 2: one staged-artifact cache. Its marker literal lives
+    // only in Staged.scala; IngestIncr's empty-delta marker is the one
+    // other _GRAFT_ marker, and no per-cache marker convention remains.
+    // (The index `_PUBLISHED` and admission `_COMMIT` markers keep their
+    // own publish policies and are not build-once caches.)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root.resolve("graft")),
+      s"no sources at ${root.toAbsolutePath}")
+    val graftMarker = "(?<![A-Z0-9])_GRAFT_[A-Z0-9_]+".r
+    val files = java.nio.file.Files.walk(root.resolve("graft"))
+    val (markers, legacy) = try {
+      val srcs = files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .map(f => root.relativize(f).toString -> java.nio.file.Files.readString(f))
+      (srcs.flatMap { case (f, text) => graftMarker.findAllIn(text).map(f -> _) }.distinct.sorted,
+        srcs.filter { case (_, text) => text.contains("_STAGED_") || text.contains("_READY_v") }
+          .map(_._1))
+    } finally files.close()
+    assert(markers === Seq("graft/Staged.scala" -> "_GRAFT_READY",
+      "graft/operators/IngestIncr.scala" -> "_GRAFT_EMPTY").sorted)
+    assert(legacy.isEmpty, s"a per-cache marker convention remains in ${legacy.mkString(", ")}")
+  }
+
   test("main code reads only the pinned SPARK_GRAFT_* variables") {
     // every new variable is one more untested way to run the engine;
     // this list may only shrink. SPARK_GRAFT_JDBC_ is the prefix Tables
@@ -215,8 +237,10 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("TimeQueries: `all` is the whole catalog; an unknown name fails before any query runs") {
-    assert(TimeQueries.resolve("all") === QueryDef.catalogs)
-    assert(TimeQueries.resolve("j1_fk_join, q1_agg").map(_.name) === Seq("j1_fk_join", "q1_agg"))
+    assert(QueryDef.resolve("all") === QueryDef.catalogs)
+    assert(QueryDef.resolve("j1_fk_join, q1_agg").map(_.name) === Seq("j1_fk_join", "q1_agg"))
+    assert(intercept[RuntimeException](QueryDef.resolve("q1_agg,no_such_query"))
+      .getMessage === "unknown catalog query: no_such_query")
     val e = intercept[RuntimeException](
       TimeQueries.main(Array("passes=1", "q1_agg,no_such_query", sf001)))
     assert(e.getMessage.contains("unknown catalog query: no_such_query"))

@@ -127,6 +127,23 @@ class SourcesSpec extends SparkSpec {
     assert(ra === a, "snapshot content must come from its own source dir")
   }
 
+  test("a snapshot over a file:-qualified sfDir refreshes after its source is regenerated") {
+    // the source's mtime is read through the Hadoop FileSystem of its
+    // scheme: a java.io.File read of "file:/…" sees mtime 0 forever, so
+    // the snapshot would never refresh
+    val d = tempDir("graft-snap-scheme").toString
+    native.write.parquet(s"$d/documents.parquet")
+    val sfDir = s"file:$d"
+    val snap = RestSource.snapshot(spark, sfDir, "documents")
+    try {
+      assert(spark.read.json(snap).count() === native.count())
+      native.limit(7).write.mode("overwrite").parquet(s"$d/documents.parquet")
+      assert(RestSource.snapshot(spark, sfDir, "documents") === snap)
+      assert(spark.read.json(snap).count() === 7,
+        "the snapshot still serves the pre-regeneration documents")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(snap))
+  }
+
   test("unsupported schema types are rejected at load, not mid-query") {
     val e = intercept[IllegalArgumentException] {
       spark.read.format("graft.sources.RestSource")

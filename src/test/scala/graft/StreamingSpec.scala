@@ -1031,8 +1031,8 @@ class StreamingSpec extends SparkSpec {
     val ev = spark.read.parquet(s"$sf001/events.parquet").limit(200).cache()
     ev.write.parquet(s"$dir/events.parquet")
     def markers(stage: String): Set[String] =
-      Option(new java.io.File(stage).listFiles()).toSeq.flatten
-        .map(_.getName).filter(_.startsWith("_STAGED_")).toSet
+      scala.util.Try(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(stage, graft.Staged.Marker))).toOption.toSet
     val (stage1, n1) = graft.BenchStreams.stageEvents(spark, dir, 4)
     val m1 = markers(stage1)
     assert(n1 === 200 && m1.size === 1)
@@ -1161,8 +1161,8 @@ class StreamingSpec extends SparkSpec {
       .localCheckpoint(true)
     ev.write.parquet(s"$dir/events.parquet")
     def markers(stage: String): Set[String] =
-      Option(new java.io.File(stage).listFiles()).toSeq.flatten
-        .map(_.getName).filter(_.startsWith("_STAGED_")).toSet
+      scala.util.Try(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(stage, graft.Staged.Marker))).toOption.toSet
     val (stage1, n1) = graft.BenchStreams.stageMerkleLeaves(spark, dir, 4)
     assert(n1 === 200)
     val m1 = markers(stage1)
