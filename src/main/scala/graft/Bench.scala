@@ -87,6 +87,37 @@ object Bench {
     bufs.map { case (k, v) => k -> v.toSeq }
   }
 
+  /** A timing main's arguments: its leading `key=value` options and the
+    * positional arguments after them (see [[mainArgs]]). Every failure
+    * names the main's `usage` line. */
+  private[graft] final case class MainArgs(opts: Map[String, String],
+      positional: Seq[String], usage: String) {
+    def fail(why: String): Nothing =
+      throw new IllegalArgumentException(s"$why; $usage")
+    /** Integer option `key`, or `dflt` when it is not given. */
+    def int(key: String, dflt: Int): Int = opts.get(key).fold(dflt)(v =>
+      v.toIntOption.getOrElse(fail(s"$key= wants an integer, got '$v'")))
+    /** Comma-separated option `key`, each item trimmed. */
+    def list(key: String): Option[Seq[String]] =
+      opts.get(key).map(_.split(",").toSeq.map(_.trim))
+  }
+
+  /** The one option reader of TimeQueries, TimeIncr and BenchStreams.
+    * Options are `key=value` with a bare identifier key, before the
+    * positional arguments; a key outside `known` fails, so a typo never
+    * silently runs a default. An argument holding a `:` is positional: a
+    * `jdbc:` locator contains `=` too (`…;user=graft`). */
+  private[graft] def mainArgs(args: Seq[String], known: Set[String],
+      usage: String): MainArgs = {
+    val (kv, positional) = args.span(a =>
+      a.matches("[A-Za-z][A-Za-z0-9_]*=.*") && !a.contains(":"))
+    val parsed = MainArgs(kv.map(_.split("=", 2) match {
+      case Array(k, v) => k -> v }).toMap, positional, usage)
+    parsed.opts.keys.toSeq.sorted.find(!known(_))
+      .foreach(k => parsed.fail(s"unknown option '$k'"))
+    parsed
+  }
+
   /** A query's reported time: the min of its measured passes (all but
     * the pass-0 warm-up); −1 when a pass failed or none was measured. */
   private[graft] def minMeasured(samples: Seq[Double]): Double =

@@ -54,30 +54,34 @@ object BenchStreams {
         .option("checkpointLocation", ckpt).start()
   }
 
-  private[graft] def ops(spark: SparkSession): Seq[StreamOp] = {
-    import spark.implicits._
-    Seq(
-      // windowed agg state: one row per open 1 h window
-      StreamOp("st1_deadline_tally", "update",
-        src => graft.streaming.StreamOps.deadlineTally(src)),
-      // per-key flatMapGroupsWithState: seven scalars per user
-      StreamOp("st12_rapid_reversal", "append",
-        src => graft.streaming.StreamOps.rapidReversal(
-          src.select($"event_id", $"user_id", $"event_type", $"value",
-            $"ts_ms").as[graft.streaming.Ev]).toDF()),
-      // stream-stream interval join: views retained for band + watermark
-      StreamOp("st_range_attr", "append",
-        src => graft.streaming.StreamOps.rangeAttr(src)),
-      // watermarked exact dedup: one state row per live event_id
-      StreamOp("st4_dedup", "append",
-        src => graft.streaming.StreamOps.dedup(src)),
-      // per-(user, day) windowed counters — the rolling-limit state shape
-      StreamOp("st9_daily_limit", "update",
-        src => graft.streaming.StreamOps.dailyLimit(src)),
-      // NATIVE session windows: merge-on-arrival state, evict-on-watermark
-      StreamOp("st11_gap_sessions", "append",
-        src => graft.streaming.StreamOps.gapSessions(src)))
-  }
+  private[graft] val ops: Seq[StreamOp] = Seq(
+    // windowed agg state: one row per open 1 h window
+    StreamOp("st1_deadline_tally", "update",
+      src => graft.streaming.StreamOps.deadlineTally(src)),
+    // per-key flatMapGroupsWithState: seven scalars per user
+    StreamOp("st12_rapid_reversal", "append", src => {
+      import src.sparkSession.implicits._
+      graft.streaming.StreamOps.rapidReversal(
+        src.select($"event_id", $"user_id", $"event_type", $"value",
+          $"ts_ms").as[graft.streaming.Ev]).toDF()
+    }),
+    // stream-stream interval join: views retained for band + watermark
+    StreamOp("st_range_attr", "append",
+      src => graft.streaming.StreamOps.rangeAttr(src)),
+    // watermarked exact dedup: one state row per live event_id
+    StreamOp("st4_dedup", "append",
+      src => graft.streaming.StreamOps.dedup(src)),
+    // per-(user, day) windowed counters — the rolling-limit state shape
+    StreamOp("st9_daily_limit", "update",
+      src => graft.streaming.StreamOps.dailyLimit(src)),
+    // NATIVE session windows: merge-on-arrival state, evict-on-watermark
+    StreamOp("st11_gap_sessions", "append",
+      src => graft.streaming.StreamOps.gapSessions(src)))
+
+  /** Every name `ops=` accepts: the [[ops]] plus the three ops measured
+    * by their own stagers. */
+  private[graft] val opNames: Set[String] = ops.map(_.name).toSet ++
+    Set("merkle_append", "pipe_ingest_admission", "pipe_ingest_admission_near")
 
   /** The chunk ladder every stager builds: `chunked` (must carry a
     * `chunk` column in [0, nChunks)) as one mtime-ascending parquet file
@@ -469,22 +473,17 @@ object BenchStreams {
   }
 
   def main(args: Array[String]): Unit = {
-    val usage =
-      "usage: BenchStreams [chunks=N] [files=K] [near=DOCS] [ops=a,b,...] <sfDir>"
-    var nChunks = 24
-    var filesPerTrigger = 2
-    var nearTotal = 0
-    var only: Option[Set[String]] = None
-    val rest = args.dropWhile {
-      case a if a.startsWith("chunks=") => nChunks = a.stripPrefix("chunks=").toInt; true
-      case a if a.startsWith("files=") => filesPerTrigger = a.stripPrefix("files=").toInt; true
-      case a if a.startsWith("near=") => nearTotal = a.stripPrefix("near=").toInt; true
-      case a if a.startsWith("ops=") =>
-        only = Some(a.stripPrefix("ops=").split(",").map(_.trim).toSet); true
-      case _ => false
-    }
-    require(rest.length == 1, usage)
-    val sfDir = rest(0)
+    val a = Bench.mainArgs(args.toSeq, Set("chunks", "files", "near", "ops"),
+      "usage: BenchStreams [chunks=N] [files=K] [near=DOCS] [ops=a,b,...] <sfDir>")
+    val nChunks = a.int("chunks", 24)
+    val filesPerTrigger = a.int("files", 2)
+    val nearTotal = a.int("near", 0)
+    val only = a.list("ops").map(_.toSet)
+    // a misspelled name fails the run rather than silently dropping its op
+    only.foreach(_.toSeq.sorted.find(n => !opNames.contains(n))
+      .foreach(n => a.fail(s"ops= names no op: '$n'")))
+    require(a.positional.length == 1, a.usage)
+    val sfDir = a.positional.head
     val spark = Engine.session(appName = "graft-bench-streams")
     // recentProgress retains only the last N progress updates (default
     // 100) — a fine-cadence run (chunks/files > ~100 triggers) would
@@ -499,7 +498,7 @@ object BenchStreams {
     // Included by default up to 20M rows; past that the serial fold
     // dominates the run, so it wants an explicit ops= opt-in — logged,
     // never silently dropped.
-    val selected = ops(spark).filter(o => only.forall(_.contains(o.name)))
+    val selected = ops.filter(o => only.forall(_.contains(o.name)))
     val merkleExplicit = only.exists(_.contains("merkle_append"))
     // the composed-admission stream stages the documents increment, not
     // events — default-on like the ST ops, explicit via
@@ -513,7 +512,7 @@ object BenchStreams {
     val wantNear = nearTotal > 0 &&
       (only.isEmpty || only.exists(_.contains("pipe_ingest_admission_near")))
     require(selected.nonEmpty || merkleExplicit || wantIngest || wantNear,
-      s"no ops matched; $usage")
+      s"no ops matched; ${a.usage}")
     val staged =
       if (selected.nonEmpty) Some(stageEvents(spark, sfDir, nChunks)) else None
     staged.foreach { case (stage, n) =>

@@ -10,14 +10,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** `q` on a session this library may not own: the graft SQL functions
+    * are registered first, since a session built without
+    * `spark.sql.extensions=graft.GraftExtensions` lacks them. */
+  private def registered(q: QueryDef): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      GraftExtensions.ensureRegistered(spark)
+      q.run(spark, dir)
+    }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    GraftExtensions.ensureRegistered(spark)
     QueryDef.catalogs.find(_.name == "q1_agg").get
       .run(spark, "/root/testdata/sf0.001")
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    QueryDef.catalogs.map(q => q.name -> q.run).toMap
+    QueryDef.catalogs.map(q => q.name -> registered(q)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -115,7 +115,6 @@ final case class Tables(spark: SparkSession, dir: String) {
       case org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType, _) => raw
       case org.apache.spark.sql.types.BinaryType =>
-        GraftExtensions.ensureRegistered(spark)
         raw.withColumn("embedding",
           call_function("binary_to_float_vec", col("embedding")))
       case other => sys.error(

@@ -100,34 +100,15 @@ object TimeIncr {
     }
 
   def main(args: Array[String]): Unit = {
-    val usage = "usage: TimeIncr [family=minhash|simhash|phash|embedding] " +
-      "[spans=a,b,...] <dir> [dir2 ...]"
-    // options are key=value and may appear in any order before the dirs;
-    // an unknown key fails loudly rather than silently benchmarking the
-    // default family under a typo
-    var rest = args.toSeq
-    var family = "minhash"
-    var spansArg: Option[Seq[Long]] = None
-    // an option is `key=value` with a bare identifier key — a jdbc:
-    // locator also contains '=' (…?user=graft) and must stay a DIR
-    // argument, or the harness can never measure the relational tier
-    // the whole stack otherwise supports (r13 sweep)
-    while (rest.headOption.exists(a =>
-        a.matches("[A-Za-z][A-Za-z0-9_]*=.*") && !a.contains(":"))) {
-      val a = rest.head
-      rest = rest.tail
-      a.split("=", 2) match {
-        case Array("family", v) => family = v
-        case Array("spans", v) =>
-          spansArg = Some(v.split(",").toSeq.map(_.trim.toLong))
-        case _ =>
-          throw new IllegalArgumentException(s"unknown option '$a'; $usage")
-      }
-    }
-    val fam = fams.getOrElse(family,
-      throw new IllegalArgumentException(s"unknown family '$family'; $usage"))
-    val dirs = rest
-    require(dirs.nonEmpty, usage)
+    val a = Bench.mainArgs(args.toSeq, Set("family", "spans"),
+      "usage: TimeIncr [family=minhash|simhash|phash|embedding] " +
+        "[spans=a,b,...] <dir> [dir2 ...]")
+    val family = a.opts.getOrElse("family", "minhash")
+    val spansArg = a.list("spans").map(_.map(v =>
+      v.toLongOption.getOrElse(a.fail(s"spans= wants integers, got '$v'"))))
+    val fam = fams.getOrElse(family, a.fail(s"unknown family '$family'"))
+    val dirs = a.positional
+    require(dirs.nonEmpty, a.usage)
     val spark = Engine.session(appName = "graft-time-incr")
     import org.apache.spark.sql.functions.{col, count, max, when}
     def source(dir: String) = Tables(spark, dir).byName(fam.srcTable)

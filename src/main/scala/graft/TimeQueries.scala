@@ -60,21 +60,13 @@ object TimeQueries {
   }
 
   def main(args: Array[String]): Unit = {
-    // a malformed passes value fails with the usage string, not a raw
-    // NumberFormatException
-    val usage = "usage: TimeQueries [passes=N] <q1,q2,...|all> <dir> [dir2 ...]"
-    var nPasses = 3
-    val rest0 = args.dropWhile {
-      case p if p.startsWith("passes=") =>
-        nPasses = scala.util.Try(p.stripPrefix("passes=").toInt)
-          .getOrElse(sys.error(s"passes= wants an integer; $usage"))
-        true
-      case _ => false
-    }
-    require(rest0.length >= 2 && nPasses >= 1, usage)
-    val defs = QueryDef.resolve(rest0(0))
-    require(defs.nonEmpty, usage)
-    val dirs = rest0.drop(1).toSeq
+    val a = Bench.mainArgs(args.toSeq, Set("passes"),
+      "usage: TimeQueries [passes=N] <q1,q2,...|all> <dir> [dir2 ...]")
+    val nPasses = a.int("passes", 3)
+    require(a.positional.length >= 2 && nPasses >= 1, a.usage)
+    val defs = QueryDef.resolve(a.positional(0))
+    require(defs.nonEmpty, a.usage)
+    val dirs = a.positional.drop(1)
     var spark = Engine.session(appName = "graft-time")
     // one untimed sample of the first pair before pass 0: with passes=1
     // nothing else absorbs the JVM's cold start, which the first query

@@ -98,68 +98,17 @@ object IngestIncr {
       Seq("bands", "toks", "fps", "bsh"))((staging, split, shards) =>
       buildPipeIngestIndex(s, dir, staging, split, shards))
 
-  /** Marker file naming an index part that is legitimately EMPTY.
-    * A 0-row partitionBy parquet write produces NO data files and the
-    * probe's later read dies on schema inference — but unlike the raw
-    * dedup families (where an empty corpus slice means the caller
-    * mis-split and the loud `writeIncrIndex` require is right), every
-    * part of THIS index can be empty on a legitimate corpus: a base
-    * slice whose train docs are all contaminated leaves no near-dup
-    * election population (the any-hit policy over a dense benchmark
-    * does exactly that at sf10), no src0 below the split leaves no
-    * benchmark set, and a gate-failing base slice leaves no
-    * fingerprints. Ingest must keep admitting increments against the
-    * state that IS there, so the build marks empty parts and the probe
-    * substitutes the matching empty frame / intra-increment election. */
-  private[graft] val emptyMarker = "_GRAFT_EMPTY"
-
-  private def fsOf(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def markEmpty(s: SparkSession, part: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(part, emptyMarker)
-    val fs = fsOf(s, part)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  private def isMarkedEmpty(s: SparkSession, part: String): Boolean =
-    fsOf(s, part)
-      .exists(new org.apache.hadoop.fs.Path(part, emptyMarker))
-
-  /** Partitioned write, marking the part empty when the write produced
-    * no data files — `probeRead`'s build-side half. Write-then-inspect,
-    * not isEmpty-then-write: a pre-probe would execute the frame's full
-    * lineage twice per build (r18 review), while the post-write file
-    * listing is metadata-only. */
-  private def writeOrMark(s: SparkSession, df: DataFrame, part: String,
-      shardCol: String): Unit = {
-    df.write.mode("overwrite").partitionBy(shardCol).parquet(part)
-    val fs = fsOf(s, part)
-    // listStatus, not listFiles: listFiles builds a LocatedFileStatus per
-    // file, which reads its permission — on a local filesystem without
-    // native libhadoop, one `ls -ld` process per file
-    val hasData = fs.listStatus(new org.apache.hadoop.fs.Path(part)).iterator
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith(s"$shardCol="))
-      .exists(d => fs.listStatus(d.getPath).exists(_.getPath.getName.endsWith(".parquet")))
-    // loud mismatch guard (ADVICE r18): the ".parquet" name scan is the
-    // emptiness detector, and a committer/output config that names data
-    // files differently would mis-mark a POPULATED part as empty — the
-    // probe would then silently substitute an empty frame (wrong
-    // verdicts, no error). Before marking, re-check the frame itself:
-    // isEmpty is a limit-1 action, cheap against the memoized build
-    // frames this path writes.
-    if (!hasData) {
-      require(df.isEmpty,
-        s"pipe-ingest index build: the write at $part produced no " +
-          "'.parquet'-named data files but the source frame is NOT empty " +
-          "— a committer or output-format config is naming data files " +
-          "this emptiness detector cannot see; refusing to mark the part " +
-          "empty (the probe would silently serve an empty frame)")
-      markEmpty(s, part)
-    }
-  }
+  /** Declared schemas of the two parts this index adds to the minhash
+    * family's `bands`/`toks`, partition column included. Every part can
+    * be legitimately empty on a real corpus — a gate-failing base slice
+    * leaves no fingerprints, no `src0` below the split leaves no
+    * benchmark set, and an all-contaminated base slice (the any-hit
+    * policy over a dense benchmark does that at sf10) leaves no near-dup
+    * election population — so every part is read through
+    * [[VersionedIndex.readPart]], where an empty part reads as an empty
+    * frame and ingest keeps admitting against the state that is there. */
+  private val fpsDdl = "fp STRING, keeper BIGINT, fshard BIGINT"
+  private val bshDdl = "shingle STRING, sshard BIGINT"
 
   /** Dead-key reclaim for this family's memo entries (ADVICE r18): the
     * keys embed `split`, so a corpus regeneration that moves maxId mints
@@ -190,25 +139,21 @@ object IngestIncr {
       Text.corpusGates(baseDocs)
         .select(col("doc_id"), col("source"), col("text"), col("fp"))
     }
-    writeOrMark(s,
-      gatedBase.groupBy(col("fp")).agg(min(col("doc_id")).as("keeper"))
-        .withColumn("fshard",
-          pmod(xxhash64(col("fp")), lit(shards.toLong))),
-      s"$staging/fps", "fshard")
+    gatedBase.groupBy(col("fp")).agg(min(col("doc_id")).as("keeper"))
+      .withColumn("fshard", pmod(xxhash64(col("fp")), lit(shards.toLong)))
+      .write.mode("overwrite").partitionBy("fshard").parquet(s"$staging/fps")
     // the pinned benchmark set: RAW base-slice src0 shingles (the batch
     // flow decontaminates against the raw held-out stratum, never the
     // cleaned one). sshard exists for layout symmetry; probes read the
     // whole set (it is suite-sized) and broadcast it.
-    writeOrMark(s,
-      Text.benchShinglesOf(baseDocs.filter(col("source") === "src0"))
-        .withColumn("sshard",
-          pmod(xxhash64(col("shingle")), lit(shards.toLong))),
-      s"$staging/bsh", "sshard")
+    Text.benchShinglesOf(baseDocs.filter(col("source") === "src0"))
+      .withColumn("sshard", pmod(xxhash64(col("shingle")), lit(shards.toLong)))
+      .write.mode("overwrite").partitionBy("sshard").parquet(s"$staging/bsh")
     // near-dup index over the base slice's PIPELINE SURVIVORS: cleaned
     // (keeper-elected) train docs not flagged against the pinned
     // benchmark — the stage-3 election population of the batch flow
-    val bench = probeRead(s, s"$staging/bsh",
-      "shingle STRING").select(col("shingle"))
+    val bench = VersionedIndex.readPart(s, s"$staging/bsh", bshDdl)
+      .select(col("shingle"))
     val trainBase = Text.keeperDedup(gatedBase)
       .filter(col("source") =!= "src0")
       .select(col("doc_id"), col("text"))
@@ -216,28 +161,15 @@ object IngestIncr {
       .join(Text.decontamFlagged(trainBase, bench, decontamMinHits),
         Seq("doc_id"), "left_anti")
     // memoized: the survivor-pipeline lineage (keeper election,
-    // decontam explode+join, minhash features) feeds the emptiness
-    // probe plus writeIncrIndex's three consumers (require, bands
-    // election write, keeper side join) — Spark shares no subplans
-    // across actions, so unmemoized it would execute up to 4× per
-    // build (r18 review)
+    // decontam explode+join, minhash features) feeds writeIncrIndex's
+    // two consumers (bands election write, keeper side join) — Spark
+    // shares no subplans across actions (r18 review)
     val feat = RunCaches.cachedFeature(s,
         s"pipe_ingest:$dir:$split:basemh", ver) {
       Similarity.minhashFeatOf(surv1Base)
     }
-    if (feat.filter(size(col("bands")) > lit(0)).isEmpty) {
-      markEmpty(s, s"$staging/bands"); markEmpty(s, s"$staging/toks")
-    } else VersionedIndex.writeIncrIndex(s, staging, shards,
-      Similarity.minhashIncr, feat)
+    VersionedIndex.writeIncrIndex(s, staging, shards, Similarity.minhashIncr, feat)
   }
-
-  /** Pruned-or-empty index-part read — `writeOrMark`'s probe-side half.
-    * `ddl` is the part's data schema (what an empty frame must expose;
-    * the partition column is layout-only and never consumed). */
-  private def probeRead(s: SparkSession, part: String, ddl: String)
-      : DataFrame =
-    if (isMarkedEmpty(s, part)) Similarity.emptyFromDdl(s, ddl)
-    else s.read.parquet(part)
 
   /** Stream-side admission state, accumulated across micro-batches by
     * the LIVE twin ([[graft.streaming.StreamOps.ingestAdmission]]):
@@ -331,22 +263,13 @@ object IngestIncr {
     // exact-dup: persisted keepers for the fingerprint shards this
     // increment touches (bounded collect, ≤ shards values) merged with
     // the intra-increment election — least() over append-only ids is
-    // the full-population keeper. An empty-marked fps (no base doc
-    // passed the gates) degrades to the intra-increment election alone.
-    val fps =
-      if (isMarkedEmpty(s, s"$idx/fps"))
-        probeRead(s, s"$idx/fps", "fp STRING, keeper BIGINT")
-      else {
-        val touched = Profile.labeled(s, "admission: fps shard prune")(gatePop
-          .select(pmod(xxhash64(col("fp")), lit(shards.toLong)).as("fs"))
-          .distinct().collect()).map(_.getLong(0)) // bounded: ≤ shards
-        // a gate-empty batch (reachable per micro-batch on the stream
-        // path) touches no shard — skip the read, not an empty isin()
-        if (touched.isEmpty) emptyDf(s, "fp STRING, keeper BIGINT")
-        else s.read.parquet(s"$idx/fps")
-          .filter(col("fshard").isin(touched.map(x => x: Any): _*))
-          .select(col("fp"), col("keeper"))
-      }
+    // the full-population keeper. An empty fps (no base doc passed the
+    // gates) or a gate-empty batch (reachable per micro-batch on the
+    // stream path) leaves the intra-increment election alone.
+    val fps = VersionedIndex.prunedPart(s, "admission: fps shard prune",
+      s"$idx/fps", fpsDdl, col("fshard"),
+      gatePop.select(pmod(xxhash64(col("fp")), lit(shards.toLong)).as("fs")))
+      .select(col("fp"), col("keeper"))
     // NOT memoized (r21, measured): wrapping iMin and the pruned fps
     // read in cachedFeature to save their second consumer's recompute
     // DOUBLED the per-trigger job time (12-trigger probe: 34.6 → 69.2
@@ -387,37 +310,28 @@ object IngestIncr {
     // verdict flag. Stateless vs the pinned set on both surfaces.
     val contaminated = RunCaches.cachedFeature(s, memoKey("flag"), ver) {
       Text.decontamFlagged(train,
-        probeRead(s, s"$idx/bsh", "shingle STRING")
+        VersionedIndex.readPart(s, s"$idx/bsh", bshDdl)
           .select(col("shingle")), decontamMinHits)
     }
     val survDecontam = train.join(contaminated, Seq("doc_id"), "left_anti")
     // near-dup: the family probe over the increment's own survivors —
     // intra-increment pairs and increment-vs-corpus pairs fall out of
-    // the one least-merged election
+    // the one least-merged election. Over an empty bands part (no
+    // base-slice pipeline survivor banded) every merged keeper is the
+    // increment's own minimum: the intra-increment election. The stream
+    // path's `extra` state frames join the three-way election inside
+    // the same probeIncrIndex definition.
     val feat = RunCaches.cachedFeature(s, memoKey("mhfeat"), ver) {
       Similarity.minhashFeatOf(survDecontam)
     }
-    // an empty-marked bands part (no base-slice pipeline survivor
-    // banded) leaves only intra-increment pairs — the batch election
-    // via the SAME kernel, restricted to the increment's own features.
-    // The stream path routes through the shared probe body always: the
-    // injected marker-aware reader substitutes the empty frame, and the
-    // `extra` state frames join the three-way election inside the ONE
-    // probeIncrIndex definition.
-    val nearDup =
-      (state match {
-        case None =>
-          if (isMarkedEmpty(s, s"$idx/bands"))
-            VersionedIndex.dedup(Similarity.minhashIncr, feat)
-          else VersionedIndex.probeIncrIndex(s, idx, split,
-            Similarity.minhashIncr, feat, ver)
-        case Some(st) =>
-          VersionedIndex.probeIncrIndex(s, idx, split,
-            Similarity.minhashIncr, feat, ver,
-            readPart = (p, ddl) => probeRead(s, p, ddl),
-            extra = if (stateBandsEmpty) None else Some((st.bands, st.toks)),
-            memoSuffix = ":stream")
-      }).select(col("doc_id"))
+    val nearDup = (state match {
+      case None =>
+        VersionedIndex.probeIncrIndex(s, idx, split, Similarity.minhashIncr, feat, ver)
+      case Some(st) =>
+        VersionedIndex.probeIncrIndex(s, idx, split, Similarity.minhashIncr, feat, ver,
+          extra = if (stateBandsEmpty) None else Some((st.bands, st.toks)),
+          memoSuffix = ":stream")
+    }).select(col("doc_id"))
     // verdict assembly, FUSED (r21, guide §3 join collapsing): the old
     // form ran four ordered left joins (gate, exact_dup, contaminated,
     // near_dup) — four exchanges/build sides per trigger. The three
@@ -492,9 +406,6 @@ object IngestIncr {
 
   // ---------- LIVE streaming admission (r19) ----------
 
-  private def emptyDf(s: SparkSession, ddl: String): DataFrame =
-    Similarity.emptyFromDdl(s, ddl)
-
   /** Where the stream's committed state lives at one instant: at most
     * one COMPACTED GENERATION (`gen<through>/` — every delta with id ≤
     * `through` folded into one bounded set of files, r20) plus the
@@ -513,6 +424,10 @@ object IngestIncr {
       deltas.lastOption.map(i => s"$statePath/b$i")
         .orElse(gen.map(g => s"$statePath/gen$g"))
   }
+
+  private def fsOf(s: SparkSession, path: String) =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** Marker I/O shared by delta (`b<id>/_COMMIT`) and generation
     * (`gen<through>/_COMMIT`) markers. Content is
@@ -641,7 +556,7 @@ object IngestIncr {
         case (Some(g), Some(d)) => g.unionByName(d)
         case (Some(g), None) => g
         case (None, Some(d)) => d
-        case (None, None) => emptyDf(s, ddl)
+        case (None, None) => VersionedIndex.emptyFromDdl(s, ddl)
       }
     }
     IngestState(
@@ -662,7 +577,7 @@ object IngestIncr {
     *  2. write the generation `_COMMIT` carrying the running-max bound
     *     copied from the newest folded marker (readers switch to the
     *     new generation atomically-by-marker, exactly the
-    *     writeOrMark / versioned-index publish-order rule);
+    *     versioned-index publish-order rule);
     *  3. delete the folded delta dirs and any superseded generation (a
     *     crash between 2 and 3 leaves stale dirs that [[listState]]
     *     already excludes by id — the next compaction's sweep reclaims
@@ -775,7 +690,7 @@ object IngestIncr {
     // state with no error. Each `_COMMIT` carries the running max
     // doc_id, so the check is one tiny marker read per batch, and the
     // failure is loud and names the contract, matching the Merkle
-    // left-filled / writeOrMark discipline.
+    // left-filled discipline.
     val bk = Profile.labeled(s, "ingestAdmission: batch stats")(
       incoming.agg(count(lit(1)), min(col("doc_id")),
         max(col("doc_id"))).head())

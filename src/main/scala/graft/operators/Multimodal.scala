@@ -623,6 +623,8 @@ object Multimodal {
     featOf = (s, dir, keep) => phashFeatOf(media(s, dir).filter(keep)),
     idCol = "media_id", featSubdir = "phs", featShardCol = "pshard",
     sideDdl = "media_id BIGINT, ph ARRAY<INT>, pshard BIGINT",
+    // a band's bucket is a ph element, so an INT
+    bandsDdl = "band INT, bucket INT, keeper BIGINT, bshard BIGINT",
     // one 8-bit row band per array element
     bands = col("ph"),
     sideOf = identity,

@@ -972,7 +972,6 @@ object ScaleOps {
   val txtRedactPii = QueryDef(
     "txt_redact_pii",
     (s, dir) => {
-      graft.GraftExtensions.ensureRegistered(s)
       val raw = concat(col("props"), lit(" contact user"),
         col("user_id").cast("string"), lit("@example.com ref "),
         lpad(col("event_id").cast("string"), 9, "0"))

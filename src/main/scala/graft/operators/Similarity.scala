@@ -41,11 +41,7 @@ import RunCaches.{cachedFeature, srcVersion}
   */
 object Similarity {
 
-  private def T(s: SparkSession, dir: String) = {
-    // driver-owned sessions may lack spark.sql.extensions; idempotent
-    graft.GraftExtensions.ensureRegistered(s)
-    Tables(s, dir)
-  }
+  private def T(s: SparkSession, dir: String) = Tables(s, dir)
 
   /** embedding: Array[Float] → integer grid (×1000, rounded). Exact both
     * engines; all downstream math is Long. A vector holding any
@@ -78,9 +74,9 @@ object Similarity {
     * surfaces as a null score instead of a wrong one (catalog vectors
     * are fixed-width, so no catalog result changes).
     *
-    * Registered on the session by [[graft.GraftExtensions]]; the
-    * ensureRegistered call covers driver-owned sessions that were not
-    * built with `spark.sql.extensions=graft.GraftExtensions`. */
+    * Registered on the session by [[graft.GraftExtensions]];
+    * [[graft.SparkEntry]] registers them on sessions the library does
+    * not own, which may lack `spark.sql.extensions=graft.GraftExtensions`. */
   private def dotLong(a: Column, b: Column): Column =
     call_function("dot_long", a, b)
 
@@ -94,16 +90,6 @@ object Similarity {
     implicit val bufEnc = Encoders.product[graft.functions.TopKBuf[Long]]
     udaf(new TopKAggregator[Long](5), Encoders.product[Scored[Long]])
   }
-
-  /** Schema-true empty frame from a DDL string — the ONE definition of
-    * the empty-part/empty-state substitution rule (probe-side empty
-    * markers, zero-delta stream state, band-degenerate increments).
-    * Review r19: three inline copies had grown across the probe and
-    * ingest paths; a drift in one (nullability, metadata) would have
-    * silently diverged the empty case from the populated one. */
-  private[operators] def emptyFromDdl(s: SparkSession, ddl: String): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Ranks a scored candidate frame — columns (qid, score, id, pay) — to
     * the top 5 per qid via the partial-aggregating bounded heap. Output:

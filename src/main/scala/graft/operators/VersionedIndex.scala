@@ -10,7 +10,8 @@ import RunCaches.{cachedFeature, evictPrefix, srcVersion}
   * everything else — the one LSH election ([[bandedOf]], [[keepersOf]],
   * [[starEdges]], [[candidatesOf]]), the batch dedup ([[dedup]]), the
   * version-name codec ([[Version]]), the three index settings,
-  * publish/adopt/reap/husk-reclaim ([[ensureVersioned]]), and the
+  * publish/adopt/reap/husk-reclaim ([[ensureVersioned]]), the one
+  * index-part reader ([[readPart]]/[[prunedPart]]), and the
   * build/probe halves ([[writeIncrIndex]]/[[probeIncrIndex]]). Batch,
   * build and probe elect keepers through the same primitives, so the
   * probe ≡ batch equality each family's spec asserts cannot drift, and
@@ -142,11 +143,10 @@ object VersionedIndex {
     * degenerate rows at the SAME stage. `kRename` — a side frame →
     * keeper-join names (keeper, k_*). `verify` — (candidates, feature
     * frame, keeper side) → result.
-    * `bandsDdl`/`sideDdl` — the DATA schemas of the two persisted parts
-    * (partition column included), what an injected part reader must
-    * expose when it substitutes an empty frame for a legitimately-empty
-    * part ([[IngestIncr]]'s marker protocol; unused under the default
-    * parquet reader). */
+    * `bandsDdl`/`sideDdl` — the schemas of the two persisted parts
+    * (partition column included): every read of a part declares them
+    * ([[readPart]]), so a part is typed by its family, never by
+    * inference from its files. */
   private[graft] final case class IncrFamily(
       name: String,
       query: String,
@@ -161,10 +161,7 @@ object VersionedIndex {
       sideOf: DataFrame => DataFrame,
       kRename: DataFrame => DataFrame,
       verify: Verify,
-      // sideDdl has NO default (second r19 review): the probe builds
-      // the empty-candShards frame from it, so a family without one is
-      // wrong by construction — a compile error beats the mid-probe
-      // require the first fix used
+      // sideDdl has NO default: every side-table read declares it
       sideDdl: String,
       bandsDdl: String = "band INT, bucket BIGINT, keeper BIGINT, bshard BIGINT") {
     def srcFile: String = s"$srcTable.parquet"
@@ -183,11 +180,23 @@ object VersionedIndex {
     * — ingest reads the corpus slice once, and the memo serves the
     * build's two write branches. */
   def write(fam: IncrFamily, s: SparkSession, dir: String,
-      indexPath: String, split: Long, shards: Int): Unit =
-    writeIncrIndex(s, indexPath, shards, fam,
-      cachedFeature(s, s"${fam.query}:$dir:corpus$split", srcVersion(s, dir, fam.srcFile)) {
-        fam.featOf(s, dir, col(fam.idCol) < lit(split))
-      })
+      indexPath: String, split: Long, shards: Int): Unit = {
+    val feat = cachedFeature(s, s"${fam.query}:$dir:corpus$split",
+        srcVersion(s, dir, fam.srcFile)) {
+      fam.featOf(s, dir, col(fam.idCol) < lit(split))
+    }
+    // a dedup family's corpus slice that bands to nothing means the
+    // caller mis-split: name it here rather than publish an index that
+    // dedups nothing. The guard tests the BANDED frame, not the feature
+    // frame: a slice can hold rows yet band to nothing (minhash emits no
+    // bands for a doc with no >3-char tokens). Cheap: limit-1.
+    require(!bandedOf(fam, feat).isEmpty,
+      s"${fam.name} index: corpus slice below the split produced no index " +
+        "bands (the slice is empty, or every row in it is " +
+        "band-degenerate) — an incremental index needs at least one " +
+        "banded corpus row")
+    writeIncrIndex(s, indexPath, shards, fam, feat)
+  }
 
   /** Query-time half over `dir`'s increment (id >= split) against the
     * published version at `indexPath`: an increment-only scan (the id
@@ -256,6 +265,38 @@ object VersionedIndex {
       feat, fam.kRename(fam.sideOf(feat)))
   }
 
+  // --- the one index-part reader ---
+
+  /** Schema-true empty frame from a DDL string: what a read that touches
+    * no partition returns, and the empty stream state. */
+  private[operators] def emptyFromDdl(s: SparkSession, ddl: String): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+
+  /** A persisted index part read with its declared schema `ddl`
+    * (partition column included), the way a table's definition types an
+    * empty partition. A legitimately empty part — a 0-row partitioned
+    * write leaves only `_SUCCESS`, from which Spark cannot infer a
+    * schema — reads as an empty frame, and a populated part keeps its
+    * partition pruning. Every index-part read goes through here. */
+  private[graft] def readPart(s: SparkSession, path: String,
+      ddl: String): DataFrame =
+    s.read.schema(ddl).parquet(path)
+
+  /** [[readPart]] pruned to the partitions `keys` touches. `keys` is a
+    * one-column frame of long partition keys, collected distinct under
+    * the Profile `label` (bounded by the part's partition count);
+    * `partCol` is the same key over the part's partition columns, so the
+    * filter is a PartitionFilter. No touched key reads nothing: an empty
+    * `isin()` is no filter. */
+  private[operators] def prunedPart(s: SparkSession, label: String,
+      path: String, ddl: String, partCol: Column, keys: DataFrame): DataFrame = {
+    val touched = graft.Profile.labeled(s, label)(keys.distinct().collect())
+      .map(_.getLong(0))
+    if (touched.isEmpty) emptyFromDdl(s, ddl)
+    else readPart(s, path, ddl).filter(partCol.isin(touched.map(x => x: Any): _*))
+  }
+
   // --- the build/probe halves ---
 
   /** Combined (band, bshard) partition key as one long — the single
@@ -275,29 +316,19 @@ object VersionedIndex {
     * (merkle.ts:116-125), applied to the dedup family the way
     * [[Similarity.writeIvfIndex]] applies it to ANN cells. `shards` is
     * explicit: the caller builds into a staging directory whose name
-    * carries no version, and names the version it publishes. */
+    * carries no version, and names the version it publishes. A slice
+    * that bands to nothing writes two empty parts, which read back empty
+    * through [[readPart]]. */
   private[operators] def writeIncrIndex(s: SparkSession, indexPath: String,
       shards: Int, fam: IncrFamily, feat: DataFrame): Unit = {
-    // a 0-row partitioned parquet write produces NO data files and the
-    // probe's later read fails with an opaque schema-inference error —
-    // name the cause instead. The guard must test the BANDED frame, not
-    // the feature frame: a slice can hold rows yet band to nothing
-    // (minhash emits no bands for a doc with no >3-char tokens), and
-    // only "zero bands" produces the fileless write. Cheap: limit-1.
-    val bands = bandedOf(fam, feat)
-    require(!bands.isEmpty,
-      s"${fam.name} index: corpus slice below the split produced no index " +
-        "bands (the slice is empty, or every row in it is " +
-        "band-degenerate) — an incremental index needs at least one " +
-        "banded corpus row")
-    keepersOf(bands, fam.idCol)
+    keepersOf(bandedOf(fam, feat), fam.idCol)
       .withColumn("bshard", pmod(col("bucket"), lit(shards.toLong)))
       .write.mode("overwrite").partitionBy("band", "bshard")
       .parquet(s"$indexPath/bands")
     // keeper ids come from the JUST-WRITTEN bands files, not a second
     // evaluation of the keepers frame — the banding + election shuffle
     // (the dominant ingest cost) runs exactly once per index build
-    val storedKeepers = s.read.parquet(s"$indexPath/bands")
+    val storedKeepers = readPart(s, s"$indexPath/bands", fam.bandsDdl)
       .select(col("keeper").as(fam.idCol)).distinct()
     fam.sideOf(feat)
       .join(storedKeepers, Seq(fam.idCol))
@@ -326,13 +357,8 @@ object VersionedIndex {
   private[operators] def probeIncrIndex(s: SparkSession, indexPath: String,
       split: Long, fam: IncrFamily, feat: DataFrame,
       srcVer: Long = 0L,
-      readPart: (String, String) => DataFrame = null,
       extra: Option[(DataFrame, DataFrame)] = None,
       memoSuffix: String = ""): DataFrame = {
-    // `readPart(path, ddl)` — injectable part reader (r19): the default
-    // is a plain parquet read; IngestIncr injects its empty-marker-aware
-    // reader so a legitimately-empty part substitutes an empty frame of
-    // the part's declared schema instead of dying on schema inference.
     // `extra` — an OPTIONAL second election source next to the persisted
     // index: (bands frame (band, bucket, keeper), side feature frame in
     // this family's feature shape). The LIVE admission stream passes its
@@ -343,23 +369,16 @@ object VersionedIndex {
     // probe the same index repeatedly with DIFFERENT feature frames
     // (per-micro-batch probes): same suffix + newer srcVer supersedes,
     // so at most one candidate frame per caller stream stays live.
-    val rp: (String, String) => DataFrame =
-      if (readPart == null) (p, _) => s.read.parquet(p) else readPart
-    def emptyOf(ddl: String): DataFrame = Similarity.emptyFromDdl(s, ddl)
     val shards = shardsOf(indexPath, s"${fam.name} probe")
     val banded = bandedOf(fam, feat)
     val incrKeepers = keepersOf(banded, fam.idCol, as = "ikeeper")
-    val touched = graft.Profile.labeled(s, s"${fam.name}: band prune")(banded
-      .select(partKey(col("band"),
-        pmod(col("bucket"), lit(shards.toLong)), shards).as("pk"))
-      .distinct().collect()).map(_.getLong(0)) // bounded: ≤ nBands × shards
-    // an increment that bands to NOTHING (every row band-degenerate —
-    // reachable per micro-batch on the streaming path) must not build
-    // an empty `isin()` filter; the index contributes nothing anyway
-    val idx = (if (touched.isEmpty) emptyOf(fam.bandsDdl)
-      else rp(s"$indexPath/bands", fam.bandsDdl)
-        .filter(partKey(col("band"), col("bshard"), shards)
-          .isin(touched.map(x => x: Any): _*)))
+    // bounded: ≤ nBands × shards keys. An increment that bands to
+    // NOTHING (reachable per micro-batch on the streaming path) reads no
+    // index; the index contributes nothing anyway
+    val idx = prunedPart(s, s"${fam.name}: band prune", s"$indexPath/bands",
+      fam.bandsDdl, partKey(col("band"), col("bshard"), shards),
+      banded.select(partKey(col("band"),
+        pmod(col("bucket"), lit(shards.toLong)), shards).as("pk")))
       .select(col("band").cast("int").as("band"), col("bucket"), col("keeper"))
     // least() skips nulls: unseen-by-corpus buckets fall to the
     // increment's own minimum, known buckets to the true merged min —
@@ -436,13 +455,10 @@ object VersionedIndex {
     // not the index) — without this the verify join would re-read
     // features for ~every corpus row, and the probe would be
     // corpus-scale I/O after all
-    val candShards = graft.Profile.labeled(s, s"${fam.name}: cand shard prune")(
-      cand.filter(col("keeper") < lit(split))
-        .select(pmod(col("keeper"), lit(shards.toLong)).as("cs"))
-        .distinct().collect()).map(_.getLong(0)) // bounded: ≤ shards
-    val idxSide = (if (candShards.isEmpty) emptyOf(fam.sideDdl)
-      else rp(s"$indexPath/${fam.featSubdir}", fam.sideDdl)
-        .filter(col(fam.featShardCol).isin(candShards.map(x => x: Any): _*)))
+    val idxSide = prunedPart(s, s"${fam.name}: cand shard prune",
+      s"$indexPath/${fam.featSubdir}", fam.sideDdl, col(fam.featShardCol),
+      cand.filter(col("keeper") < lit(split)) // bounded: ≤ shards keys
+        .select(pmod(col("keeper"), lit(shards.toLong)).as("cs")))
       .drop(fam.featShardCol)
     // stream-state keepers (split ≤ keeper < this increment) verify from
     // the extra side frame — state-sized, never pruned (it is the
@@ -525,9 +541,6 @@ object VersionedIndex {
       build: (String, Long, Int) => Unit): (String, Long) =
     {
       import org.apache.hadoop.fs.Path
-      // driver-owned sessions may lack spark.sql.extensions, and a jdbc:
-      // embeddings read decodes through a registered function; idempotent
-      graft.GraftExtensions.ensureRegistered(s)
       // corpus identity: a single-column bounded agg, not the feature
       // cache — warming the full-corpus frame here would undo the
       // probe's increment-only read

@@ -192,8 +192,8 @@ class CatalogSpec extends SparkSpec {
 
   test("main code stages derived directories through one cache: Staged") {
     // ROADMAP aim 2: one staged-artifact cache. Its marker literal lives
-    // only in Staged.scala; IngestIncr's empty-delta marker is the one
-    // other _GRAFT_ marker, and no per-cache marker convention remains.
+    // only in Staged.scala, it is the only _GRAFT_ marker, and no
+    // per-cache marker convention remains.
     // (The index `_PUBLISHED` and admission `_COMMIT` markers keep their
     // own publish policies and are not build-once caches.)
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -208,9 +208,26 @@ class CatalogSpec extends SparkSpec {
         srcs.filter { case (_, text) => text.contains("_STAGED_") || text.contains("_READY_v") }
           .map(_._1))
     } finally files.close()
-    assert(markers === Seq("graft/Staged.scala" -> "_GRAFT_READY",
-      "graft/operators/IngestIncr.scala" -> "_GRAFT_EMPTY").sorted)
+    assert(markers === Seq("graft/Staged.scala" -> "_GRAFT_READY"))
     assert(legacy.isEmpty, s"a per-cache marker convention remains in ${legacy.mkString(", ")}")
+  }
+
+  test("SparkEntry registers the graft SQL functions on a session built without the extension") {
+    // a caller's own session may lack spark.sql.extensions; the s2
+    // codecs call le_encode/le_decode, so without registration at the
+    // entry they resolve only when an earlier query happened to register
+    val bare = spark.newSession()
+    val registry = bare.sessionState.functionRegistry
+    for (f <- Seq("dot_long", "dot_float", "float_vec_to_binary",
+        "binary_to_float_vec", "pii_redact", "le_decode", "le_encode")) {
+      val id = org.apache.spark.sql.catalyst.FunctionIdentifier(f)
+      assert(registry.dropFunction(id) && !registry.functionExists(id), f)
+    }
+    val q = "s2_decode_fast_action"
+    operators.RunCaches.clearAll() // no frame analysed by another session
+    val got = SparkEntry.queries(q)(bare, sf001).collect().toSeq
+    assert(got.nonEmpty, s"$q is empty at $sf001")
+    assert(got === QueryDef.catalogs.find(_.name == q).get.run(spark, sf001).collect().toSeq)
   }
 
   test("main code reads only the pinned SPARK_GRAFT_* variables") {
@@ -245,6 +262,32 @@ class CatalogSpec extends SparkSpec {
       TimeQueries.main(Array("passes=1", "q1_agg,no_such_query", sf001)))
     assert(e.getMessage.contains("unknown catalog query: no_such_query"))
     assert(!spark.sparkContext.isStopped, "main failed before it took or stopped a session")
+  }
+
+  test("timing mains share one option reader: jdbc: stays positional; a bad option fails with the usage line") {
+    val jdbc = "jdbc:derby:memory:graft;user=graft"
+    val a = Bench.mainArgs(Seq("family=phash", "spans=4,8", jdbc, "d2"),
+      Set("family", "spans"), "usage: X")
+    assert(a.opts === Map("family" -> "phash", "spans" -> "4,8"))
+    assert(a.positional === Seq(jdbc, "d2"))
+    assert(a.list("spans") === Some(Seq("4", "8")))
+    assert(a.int("passes", 3) === 3)
+    def failure(main: Array[String] => Unit, args: String*): String =
+      intercept[IllegalArgumentException](main(args.toArray)).getMessage
+    // each fails before it takes a session
+    val bad = Seq(
+      failure(TimeQueries.main, "pases=1", "q1_agg", sf001) -> "unknown option 'pases'",
+      failure(TimeQueries.main, "passes=x", "q1_agg", sf001) -> "passes= wants an integer, got 'x'",
+      failure(TimeIncr.main, "famly=phash", sf001) -> "unknown option 'famly'",
+      failure(TimeIncr.main, "spans=1,b", sf001) -> "spans= wants integers, got 'b'",
+      failure(BenchStreams.main, "chunks=abc", sf001) -> "chunks= wants an integer, got 'abc'",
+      failure(BenchStreams.main, "ops=st1_tally,st12_rapid_reversal", sf001) ->
+        "ops= names no op: 'st1_tally'")
+    for ((msg, want) <- bad) {
+      assert(msg.contains(want), msg)
+      assert(msg.contains("; usage: "), msg)
+    }
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("TimeQueries and TimeIncr print a pair with no valid sample as FAILED, with no ratio") {

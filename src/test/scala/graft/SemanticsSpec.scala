@@ -389,14 +389,12 @@ class SemanticsSpec extends SparkSpec {
     } finally deleteAll(new java.io.File(dir))
   }
 
-  test("pipe_ingest_incr: an all-contaminated base slice (empty near-dup index) still admits") {
-    import graft.operators.IngestIncr
-    // at sf10 the any-hit decontam policy over a dense benchmark leaves
-    // ZERO base-slice pipeline survivors — a legitimate corpus state
-    // that must not crash the index build (a 0-row partitionBy write
-    // leaves an unreadable part): the build marks the part empty and
-    // the probe falls back to the intra-increment election through the
-    // same batch kernel
+  /** A corpus whose base-slice train docs ALL carry a benchmark shingle,
+    * so its pipe-ingest index has an empty near-dup part; written under
+    * a fresh dir, deleted after `body`. Verdicts for the increment
+    * (split 16): admitted, near_dup (intra-increment), contaminated,
+    * exact_dup of a base doc. */
+  private def withAllContaminatedBase(body: String => Unit): Unit = {
     val tail = "the a of to in is and for"
     val tail2 = "a the of to in is and for"
     val bench = "quixotic zephyr labyrinth"
@@ -415,19 +413,53 @@ class SemanticsSpec extends SparkSpec {
       rows.map { case (id, text, lang, src) => (id, text, lang, src, text.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      body(dir)
+    } finally deleteAll(new java.io.File(dir))
+  }
+
+  private val allContaminatedWant = Seq(16L -> "admitted", 17L -> "near_dup",
+    18L -> "contaminated", 19L -> "exact_dup")
+
+  private def verdictsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict")).toSeq
+
+  test("pipe_ingest_incr: an all-contaminated base slice (empty near-dup index) still admits") {
+    import graft.operators.IngestIncr
+    // at sf10 the any-hit decontam policy over a dense benchmark leaves
+    // ZERO base-slice pipeline survivors — a legitimate corpus state
+    // that must not crash the index build: the build writes an empty
+    // bands part, which reads back empty through its declared schema,
+    // and the probe's merged election is the intra-increment one
+    withAllContaminatedBase { dir =>
       val (idx, split) = IngestIncr.ensurePipeIngestIndex(spark, dir)
       assert(split === 16L, s"fixture split moved: $split")
-      assert(new java.io.File(s"$idx/bands/${IngestIncr.emptyMarker}").exists(),
+      assert(new java.io.File(s"$idx/bands").isDirectory, "no bands part")
+      assert(VersionedIndex.readPart(spark, s"$idx/bands",
+          graft.operators.Similarity.minhashIncr.bandsDdl).count() === 0L,
         "fixture did not produce an empty near-dup index — the fallback path is untested")
-      val got = IngestIncr.pipeIngestIncr.run(spark, dir).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict")).toSeq
-      val want = Seq(16L -> "admitted", 17L -> "near_dup",
-        18L -> "contaminated", 19L -> "exact_dup")
-      assert(got === want)
-      val batch = IngestIncr.batchVerdictsFor(spark, dir, split).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("verdict")).toSeq
-      assert(batch === want)
-    } finally deleteAll(new java.io.File(dir))
+      assert(verdictsOf(IngestIncr.pipeIngestIncr.run(spark, dir)) === allContaminatedWant)
+      assert(verdictsOf(IngestIncr.batchVerdictsFor(spark, dir, split)) === allContaminatedWant)
+    }
+  }
+
+  test("pipe_ingest_incr: an empty part holding a _GRAFT_EMPTY marker probes to the same verdicts") {
+    import graft.operators.{IngestIncr, RunCaches}
+    // an index published before the marker protocol was dropped holds
+    // its empty bands/toks parts as a directory with only a
+    // `_GRAFT_EMPTY` file; the version name is unchanged, so such an
+    // index is adopted and must probe exactly like a fresh one
+    withAllContaminatedBase { dir =>
+      val (idx, _) = IngestIncr.ensurePipeIngestIndex(spark, dir)
+      for (part <- Seq("bands", "toks")) {
+        val d = new java.io.File(s"$idx/$part")
+        deleteAll(d)
+        assert(d.mkdirs() && new java.io.File(d, "_GRAFT_EMPTY").createNewFile(), part)
+      }
+      RunCaches.clearAll()
+      assert(IngestIncr.ensurePipeIngestIndex(spark, dir)._1 === idx,
+        "the marked index was not adopted")
+      assert(verdictsOf(IngestIncr.pipeIngestIncr.run(spark, dir)) === allContaminatedWant)
+    }
   }
 
   test("dd_simhash_incr: index probe == full dd_simhash recompute restricted to the increment") {

@@ -1092,7 +1092,7 @@ class StreamingSpec extends SparkSpec {
     spark.read.parquet(s"$sf001/events.parquet").write.parquet(s"$dir/events.parquet")
     val (stage, n) = graft.BenchStreams.stageEvents(spark, dir, 4)
     try {
-      val op = graft.BenchStreams.ops(spark).find(_.name == "st1_deadline_tally").get
+      val op = graft.BenchStreams.ops.find(_.name == "st1_deadline_tally").get
       val (_, run) = graft.BenchStreams.runStream(spark, stage, 1, op.name)(op.start)(identity)
       assert(run.rows === n, "every staged row admitted once")
       assert(run.profile.jobs > 0 && run.profile.drained)
@@ -1677,6 +1677,43 @@ class StreamingSpec extends SparkSpec {
         idx = graft.operators.IngestIncr.ensurePipeIngestIndex(spark, sf001)._1
       } finally spark.conf.unset("spark.graft.minhash.indexBase")
     assert(idx.startsWith(base), s"built under the fresh base, got $idx")
+    assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
+  }
+
+  test("a checkpointed admission stream that folds its state forks no process") {
+    import graft.operators.IngestIncr
+    // the admission path's own commits: per-trigger delta writes and
+    // `_COMMIT` markers, a state fold at compactEvery=2, and the file
+    // source's offset and commit logs
+    val (dir, incr, want) = plantedAdmissionFixture("fork")
+    val (idx, split) = IngestIncr.ensurePipeIngestIndex(spark, dir)
+    val stage = tempDir("graft-ingadm-fork-stage")
+    val chunks = incr.grouped(2).toSeq.zipWithIndex.map { case (c, i) =>
+      val d = stage.resolve(f"c$i%02d.parquet")
+      c.toDF("doc_id", "source", "lang", "text").coalesce(1).write.parquet(d.toString)
+      d
+    }
+    assert(chunks.size >= 4, "too few triggers to fold the state")
+    val in = tempDir("graft-ingadm-fork-in").toString
+    val ck = tempDir("graft-ingadm-fork-ck").toString
+    val statePath = tempDir("graft-ingadm-fork-st").toString + "/state"
+    val outPath = tempDir("graft-ingadm-fork-out").toString + "/out"
+    spark.conf.set("spark.graft.admissionCompactEvery", "2")
+    val shellForks =
+      try hadoopShellForks {
+        val src = spark.readStream
+          .schema("doc_id BIGINT, source STRING, lang STRING, text STRING")
+          .option("maxFilesPerTrigger", "1").parquet(s"$in/*.parquet")
+        val q = StreamOps.ingestAdmission(src, idx, split, statePath, outPath,
+          checkpoint = Some(ck))
+        try feed(chunks, in, Seq(q)) finally q.stop()
+        assert(q.exception.isEmpty, q.exception)
+      } finally spark.conf.unset("spark.graft.admissionCompactEvery")
+    assert(new java.io.File(statePath).list().exists(_.matches("gen\\d+")),
+      "the stream never folded its state")
+    val got = spark.read.parquet(outPath).select($"doc_id", $"verdict")
+      .orderBy($"doc_id").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    assert(got === want)
     assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
   }
 
