@@ -90,6 +90,15 @@ object Engine {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[LocalCommitFileManager].getName)
       .config("spark.hadoop.fs.file.impl", classOf[LocalCommitFileSystem].getName)
+      // Spark's generated-class cache is JVM-global, sized once by the
+      // first session that generates code, and holds 100 classes by
+      // default. The 13-query perfbench sample compiles ~150 classes on
+      // an empty cache and one full sf0.01 catalog pass 1,260, so at 100
+      // the cache evicted in a cycle: a second full pass recompiled ~1,700
+      // classes (~14 ms each, 4-core host), against 22 with room for the
+      // whole working set. 4096 covers it with headroom; an entry is one
+      // loaded class, not data.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -26,9 +26,14 @@ final class Profile private () extends SparkListener {
   private val taskSum = new ConcurrentHashMap[(Int, Int), Long]()
   private val done = new ConcurrentLinkedQueue[StageStat]()
   @volatile private var drainedFlag = false
+  @volatile private var compileCount = 0L
 
   def jobs: Long = jobCount.get
   def stages: Long = stageCount.get
+
+  /** Classes Spark's code generator compiled while attached: every
+    * compile in the JVM, a generated-class cache hit compiles none. */
+  def compiles: Long = compileCount
 
   /** True when every event posted before detach reached the collector. */
   def drained: Boolean = drainedFlag
@@ -89,15 +94,19 @@ object Profile {
   final case class StageStat(stageId: Int, attempt: Int, wallSec: Double,
       tasks: Int, maxTaskSec: Double, sumTaskSec: Double, name: String)
 
-  /** Runs `body` with a fresh [[Profile]] attached to `spark`'s context.
-    * The listener bus is asynchronous, so before detaching it is drained,
-    * at most 10 s; `drained` says whether that finished. */
+  /** Runs `body` with a fresh [[Profile]] attached to `spark`'s context
+    * and counts the classes compiled meanwhile. The listener bus is
+    * asynchronous, so before detaching it is drained, at most 10 s;
+    * `drained` says whether that finished. */
   def during[A](spark: SparkSession)(body: => A): (A, Profile) = {
     val p = new Profile()
     val sc = spark.sparkContext
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val compiled0 = compiled.getCount
     sc.addSparkListener(p)
     try {
       val out = body
+      p.compileCount = compiled.getCount - compiled0
       p.drainedFlag = org.apache.spark.GraftListenerBus.drain(sc, 10000L)
       if (!p.drainedFlag)
         System.err.println("[profile] listener bus not drained in 10 s; counts may be short")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed access to the driver's test tables (TESTDATA.md).
   *
@@ -17,8 +18,14 @@ import org.apache.spark.sql.functions._
   *    `epoch_ms(ts)` / `CAST(ts AS DATE)` for the same values.
   *  - all other date columns arrive as `timestamp_ntz` and are used as-is.
   *
-  * At 100 TB these reads are partitioned parquet scans; nothing here caches
-  * or collects, every frame stays a lazy scan with pushdown intact.
+  * At 100 TB these reads are partitioned parquet scans; nothing here
+  * collects, and every frame stays a lazy scan with pushdown intact. The
+  * one thing kept across calls is each parquet table's schema
+  * ([[Tables.readParquet]]), the way a metastore keeps a table's
+  * definition: a query reads with the declared schema instead of running
+  * a footer-reading inference job during planning. The memo holds no
+  * file listing and no data, and `RunCaches.clearAll` leaves it alone: it
+  * is catalog metadata, not a run result.
   */
 final case class Tables(spark: SparkSession, dir: String) {
 
@@ -87,7 +94,7 @@ final case class Tables(spark: SparkSession, dir: String) {
             .option("upperBound", hi).option("numPartitions", n)
         }
       part.getOrElse(r).load()
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else Tables.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = load("region")
   def nation: DataFrame = load("nation")
@@ -189,6 +196,44 @@ object Tables {
     if (!st.isDirectory) st.getModificationTime
     else fs.listStatus(p).foldLeft(st.getModificationTime)((m, c) =>
       math.max(m, c.getModificationTime))
+  }
+
+  /** session -> path -> (newest mtime, schema) of [[readParquet]]. The
+    * session is held weakly, so a stopped session is not pinned. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, Map[String, (Long, StructType)]]()
+  private val memoHits, memoMisses = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Schema-memo lookups that were served from / missed the memo. */
+  def schemaMemoHits: Long = memoHits.get
+  def schemaMemoMisses: Long = memoMisses.get
+
+  /** The parquet file or directory `path`, read with the schema this
+    * session inferred for it before. Keyed by session, because inference
+    * follows the session's reader confs (`nanosAsLong`, NTZ inference),
+    * and by path; an entry holds only the schema and is inferred again
+    * once [[newestMtime]] of `path` moves. On a miss the inferring read's
+    * own frame is returned, so a first read costs what an unmemoized one
+    * does. `RunCaches.clearAll` leaves the memo alone: it is catalog
+    * metadata, not a run result. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    // the mtime is read BEFORE the inferring read: a replacement racing
+    // it is stored under the older mtime and inferred again next time
+    val mtime = newestMtime(spark, path)
+    val session = synchronized(Option(schemas.get(spark)).getOrElse(Map.empty))
+    session.get(path).collect { case (m, st) if m == mtime => st } match {
+      case Some(st) =>
+        memoHits.incrementAndGet()
+        spark.read.schema(st).parquet(path)
+      case None =>
+        memoMisses.incrementAndGet()
+        val df = spark.read.parquet(path)
+        synchronized {
+          val now = Option(schemas.get(spark)).getOrElse(Map.empty)
+          schemas.put(spark, now.updated(path, (mtime, df.schema)))
+        }
+        df
+    }
   }
 
   /** `ts` → epoch-nanos Long, shared by the batch facade and the streaming

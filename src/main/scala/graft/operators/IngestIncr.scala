@@ -152,7 +152,7 @@ object IngestIncr {
     // near-dup index over the base slice's PIPELINE SURVIVORS: cleaned
     // (keeper-elected) train docs not flagged against the pinned
     // benchmark — the stage-3 election population of the batch flow
-    val bench = VersionedIndex.readPart(s, s"$staging/bsh", bshDdl)
+    val bench = VersionedIndex.readPart(s, bshDdl, s"$staging/bsh")
       .select(col("shingle"))
     val trainBase = Text.keeperDedup(gatedBase)
       .filter(col("source") =!= "src0")
@@ -310,7 +310,7 @@ object IngestIncr {
     // verdict flag. Stateless vs the pinned set on both surfaces.
     val contaminated = RunCaches.cachedFeature(s, memoKey("flag"), ver) {
       Text.decontamFlagged(train,
-        VersionedIndex.readPart(s, s"$idx/bsh", bshDdl)
+        VersionedIndex.readPart(s, bshDdl, s"$idx/bsh")
           .select(col("shingle")), decontamMinHits)
     }
     val survDecontam = train.join(contaminated, Seq("doc_id"), "left_anti")
@@ -541,17 +541,17 @@ object IngestIncr {
     // it changes every batch — unioned above the cached generation
     // (disjoint by construction, and every consumer is an
     // order-insensitive election/join, so read order is immaterial).
-    def genPart(g: Long, part: String): DataFrame =
+    def genPart(g: Long, part: String, ddl: String): DataFrame =
       RunCaches.cachedFeature(s,
           s"pipe_ingest_stream:$statePath:gen:$part", g) {
-        s.read.parquet(s"$statePath/gen$g/$part")
+        VersionedIndex.readPart(s, ddl, s"$statePath/gen$g/$part")
       }
     val deltaDirs = loc.deltas.map(i => s"$statePath/b$i")
     def part(name: String, ddl: String): DataFrame = {
-      val genDf = loc.gen.map(g => genPart(g, name))
+      val genDf = loc.gen.map(g => genPart(g, name, ddl))
       val deltaDf =
         if (deltaDirs.isEmpty) None
-        else Some(s.read.parquet(deltaDirs.map(d => s"$d/$name"): _*))
+        else Some(VersionedIndex.readPart(s, ddl, deltaDirs.map(d => s"$d/$name"): _*))
       (genDf, deltaDf) match {
         case (Some(g), Some(d)) => g.unionByName(d)
         case (Some(g), None) => g

@@ -190,7 +190,10 @@ object RunCaches {
     synchronized(tracked.count(_._1 == label))
 
   /** Releases everything: every memo entry (final release) and every
-    * tracked release. One failure must not skip the rest — but it must
+    * tracked release. The table-schema memo of [[graft.Tables.readParquet]]
+    * stays: it is catalog metadata, not a run result, and a cold query
+    * still reads every table and generates its plan anew. One failure
+    * must not skip the rest — but it must
     * be LOUD: a silently-broken release leaves warm state, and the
     * cold-measurement harnesses would report deflated numbers
     * indistinguishable from a real speedup (r13 sweep). */

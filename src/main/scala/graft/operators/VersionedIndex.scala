@@ -278,10 +278,11 @@ object VersionedIndex {
     * empty partition. A legitimately empty part — a 0-row partitioned
     * write leaves only `_SUCCESS`, from which Spark cannot infer a
     * schema — reads as an empty frame, and a populated part keeps its
-    * partition pruning. Every index-part read goes through here. */
-  private[graft] def readPart(s: SparkSession, path: String,
-      ddl: String): DataFrame =
-    s.read.schema(ddl).parquet(path)
+    * partition pruning. Several `paths` read as one frame (the admission
+    * state's delta tail). Every index-part read goes through here. */
+  private[graft] def readPart(s: SparkSession, ddl: String,
+      paths: String*): DataFrame =
+    s.read.schema(ddl).parquet(paths: _*)
 
   /** [[readPart]] pruned to the partitions `keys` touches. `keys` is a
     * one-column frame of long partition keys, collected distinct under
@@ -294,7 +295,7 @@ object VersionedIndex {
     val touched = graft.Profile.labeled(s, label)(keys.distinct().collect())
       .map(_.getLong(0))
     if (touched.isEmpty) emptyFromDdl(s, ddl)
-    else readPart(s, path, ddl).filter(partCol.isin(touched.map(x => x: Any): _*))
+    else readPart(s, ddl, path).filter(partCol.isin(touched.map(x => x: Any): _*))
   }
 
   // --- the build/probe halves ---
@@ -328,7 +329,7 @@ object VersionedIndex {
     // keeper ids come from the JUST-WRITTEN bands files, not a second
     // evaluation of the keepers frame — the banding + election shuffle
     // (the dominant ingest cost) runs exactly once per index build
-    val storedKeepers = readPart(s, s"$indexPath/bands", fam.bandsDdl)
+    val storedKeepers = readPart(s, fam.bandsDdl, s"$indexPath/bands")
       .select(col("keeper").as(fam.idCol)).distinct()
     fam.sideOf(feat)
       .join(storedKeepers, Seq(fam.idCol))

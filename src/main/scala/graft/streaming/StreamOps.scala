@@ -1026,9 +1026,10 @@ object StreamOps {
 
   /** Convenience: the driver test `events` parquet as a typed stream via
     * a file source — replay = initial batch, increments = new files
-    * (useAgentStream.ts replay∪live, S4). */
+    * (useAgentStream.ts replay∪live, S4). The schema comes from the
+    * batch facade's schema memo ([[graft.Tables.readParquet]]). */
   def eventsFileStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.readParquet(spark, s"$dir/events.parquet").schema
     spark.readStream
       .schema(schema)
       .parquet(s"$dir/events.parquet")

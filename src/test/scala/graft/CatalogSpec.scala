@@ -349,6 +349,39 @@ class CatalogSpec extends SparkSpec {
     assert(degraded("selected") && degraded("prior_green") && !degraded("prior_failed"))
   }
 
+  test("a second cold pass of the perfbench catalog sample compiles no class") {
+    // the generated-class cache is JVM-global and sized by the first
+    // session that generates code; static confs are fixed by the first
+    // session of the context, so this reads what the cache was built with
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
+    // the sample of perfbench's catalog_sf01 workload
+    val sample = Seq("w5_before_cursor", "p4_range_pred", "a1_vote_tally",
+      "j5_identity_link", "dd_shingle_jaccard", "dd_embedding", "s2_decode_fixed",
+      "f_slash_refund", "mm_resize", "s3_rest_topn", "crypto_merkle_verify",
+      "st7_ttl_retention", "pipe_pack_tokens")
+    val queries = QueryDef.resolve(sample.mkString(","))
+    // start from an empty cache, whatever earlier suites compiled
+    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val cache = gen.getClass.getDeclaredMethod("cache")
+    cache.setAccessible(true)
+    val c = cache.invoke(gen)
+    c.getClass.getMethod("invalidateAll").invoke(c)
+    def pass(): Map[String, Long] = queries.map { q =>
+      operators.RunCaches.clearAll()
+      q.name -> Profile.during(spark)(
+        q.run(spark, sf01).write.format("noop").mode("overwrite").save())._2.compiles
+    }.toMap
+    val first = pass()
+    assert(first.values.sum > 100, s"the sample's working set outgrows the default cache: $first")
+    // dd_embedding's plans come in a bounded set of AQE variants: its
+    // whole-stage codegen ids follow the order in which concurrently
+    // materializing stages finish, and its join strategy is picked at
+    // run time, so repeat runs compile new variants until the set is
+    // cached (60 classes by the 10th of 14 runs)
+    val second = pass() - "dd_embedding"
+    assert(second.values.forall(_ == 0L), s"recompiled: ${second.filter(_._2 > 0)}")
+  }
+
   test("every query runs at sf0.001 with rows and unique column names") {
     val failures = QueryDef.catalogs.flatMap { q =>
       try {

@@ -434,8 +434,8 @@ class SemanticsSpec extends SparkSpec {
       val (idx, split) = IngestIncr.ensurePipeIngestIndex(spark, dir)
       assert(split === 16L, s"fixture split moved: $split")
       assert(new java.io.File(s"$idx/bands").isDirectory, "no bands part")
-      assert(VersionedIndex.readPart(spark, s"$idx/bands",
-          graft.operators.Similarity.minhashIncr.bandsDdl).count() === 0L,
+      assert(VersionedIndex.readPart(spark,
+          graft.operators.Similarity.minhashIncr.bandsDdl, s"$idx/bands").count() === 0L,
         "fixture did not produce an empty near-dup index — the fallback path is untested")
       assert(verdictsOf(IngestIncr.pipeIngestIncr.run(spark, dir)) === allContaminatedWant)
       assert(verdictsOf(IngestIncr.batchVerdictsFor(spark, dir, split)) === allContaminatedWant)

@@ -43,6 +43,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Tracked temp dir, recursively deleted at JVM exit. */
   def tempDir(prefix: String): java.nio.file.Path = SparkSpec.tempDir(prefix)
 
+  /** Commands of the processes Hadoop's `Shell` forked while `body` ran,
+    * from a JFR `jdk.ProcessStart` recording with stack traces. */
+  def hadoopShellForks(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val dump = tempDir("graft-lc-jfr").resolve("forks.jfr")
+    rec.start()
+    try body
+    finally { rec.stop(); rec.dump(dump); rec.close() }
+    jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+        _.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
+      .map(_.getString("command"))
+  }
+
   /** Shared events-parquet fixture writer: the table layout (TS column
     * in epoch-NANOS — an easy multiply to get wrong) lives in ONE place
     * instead of a copy per test (r13 test sweep). */

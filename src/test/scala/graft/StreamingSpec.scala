@@ -4,7 +4,6 @@ import graft.streaming.{Ev, StreamOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** Streaming ⇔ batch-twin equivalence: replay the sf0.001 events through
   * MemoryStream in several micro-batches and assert the streaming result
@@ -1624,21 +1623,6 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.move(c, java.nio.file.Paths.get(in, c.getFileName.toString))
       qs.foreach(_.processAllAvailable())
     }
-
-  /** Commands of the processes Hadoop's `Shell` forked while `body` ran,
-    * from a JFR `jdk.ProcessStart` recording with stack traces. */
-  private def hadoopShellForks(body: => Unit): Seq[String] = {
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    val dump = tempDir("graft-lc-jfr").resolve("forks.jfr")
-    rec.start()
-    try body
-    finally { rec.stop(); rec.dump(dump); rec.close() }
-    jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
-      .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
-        _.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
-      .map(_.getString("command"))
-  }
 
   test("a checkpointed stateful trigger forks no process") {
     // Engine.session set fs.file.impl on the context's conf before any
