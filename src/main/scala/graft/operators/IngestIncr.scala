@@ -1,6 +1,8 @@
 package graft.operators
 
-import graft.{Profile, QueryDef, Tables}
+import graft.{Profile, Published, QueryDef, Tables}
+import graft.Published.{StateDelta, StateGen, children, committedMax, fsOf, isCommitted, reap}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -421,44 +423,8 @@ object IngestIncr {
     def isEmpty: Boolean = gen.isEmpty && deltas.isEmpty
     /** The dir whose `_COMMIT` carries the newest running-max bound. */
     def newestMarkerDir(statePath: String): Option[String] =
-      deltas.lastOption.map(i => s"$statePath/b$i")
-        .orElse(gen.map(g => s"$statePath/gen$g"))
-  }
-
-  private def fsOf(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Marker I/O shared by delta (`b<id>/_COMMIT`) and generation
-    * (`gen<through>/_COMMIT`) markers. Content is
-    * `<running-max-digits>;` (empty body = no doc seen yet); the `;`
-    * terminator plus validation distinguish a complete marker from a
-    * torn one (ADVICE r19): the old bare-decimal read trusted content
-    * after an existence check, so a torn write whose truncated body
-    * still parsed ('12' of '1234') yielded a falsely LOW running max —
-    * quietly weakening the ascending-ids guard. A marker without its
-    * terminator, or with a non-numeric body, refuses the batch with a
-    * named error like the rest of the marker protocol. */
-  private def writeMarker(s: SparkSession, dir: String,
-      runningMax: Option[Long]): Unit = {
-    val out = fsOf(s, dir)
-      .create(new org.apache.hadoop.fs.Path(dir, "_COMMIT"), true)
-    try out.write(
-      (runningMax.map(_.toString).getOrElse("") + ";").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readMarker(s: SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_COMMIT")
-    val in = fsOf(s, dir).open(p)
-    val raw = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    require(raw.endsWith(";") && raw.dropRight(1).forall(_.isDigit),
-      s"ingestAdmission: commit marker $p failed validation " +
-        s"(content '${raw.take(32)}'): expected '<running-max-digits>;' " +
-        "or the bare ';' — a torn or foreign marker must refuse the " +
-        "batch, not silently weaken the ascending-ids bound")
-    val body = raw.dropRight(1)
-    if (body.isEmpty) None else Some(body.toLong)
+      deltas.lastOption.map(i => s"$statePath/${StateDelta(i)}")
+        .orElse(gen.map(g => s"$statePath/${StateGen(g)}"))
   }
 
   /** Committed state visible to batch `before`: the newest committed
@@ -474,36 +440,23 @@ object IngestIncr {
   private def listState(s: SparkSession, statePath: String,
       before: Long): StateLoc = {
     val fs = fsOf(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    if (!fs.exists(root)) StateLoc(None, Seq.empty)
-    else {
-      val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      def committed(dir: String): Boolean =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/$dir/_COMMIT"))
-      val gens = names
-        .collect { case n
-            if n.length > 3 && n.startsWith("gen") &&
-              n.drop(3).forall(_.isDigit) =>
-          n.drop(3).toLong }
-        .sorted.reverse
-        .filter(g => committed(s"gen$g"))
-      require(gens.headOption.forall(_ < before),
-        s"ingestAdmission: compacted generation gen${gens.head} under " +
-          s"$statePath folds batch $before's own horizon — compaction " +
-          "folds only deltas strictly below the batch being processed, " +
-          "so this generation was produced by a foreign writer or a " +
-          "corrupted layout; refusing the batch (the strictly-below " +
-          "replay rule would silently break)")
-      val floor = gens.headOption.getOrElse(-1L)
-      val deltas = names
-        .collect { case n
-            if n.length > 1 && n.startsWith("b") &&
-              n.drop(1).forall(_.isDigit) =>
-          n.drop(1).toLong }
-        .filter(id => id > floor && id < before && committed(s"b$id"))
-        .sorted
-      StateLoc(gens.headOption, deltas)
-    }
+    val names = children(fs, new Path(statePath)).map(_.getPath.getName)
+    def committed(name: String) = isCommitted(fs, new Path(statePath, name))
+    // a committed name past Long range is foreign too, and refused by name
+    val gens = names.filter(StateGen.matches).filter(committed)
+    val foreign = gens.filterNot(StateGen.idOf(_).exists(_ < before))
+    require(foreign.isEmpty,
+      s"ingestAdmission: compacted generation ${foreign.mkString(", ")} under " +
+        s"$statePath folds batch $before's own horizon — compaction " +
+        "folds only deltas strictly below the batch being processed, " +
+        "so this generation was produced by a foreign writer or a " +
+        "corrupted layout; refusing the batch (the strictly-below " +
+        "replay rule would silently break)")
+    val gen = gens.flatMap(StateGen.idOf).maxOption
+    val deltas = names.flatMap(StateDelta.idOf)
+      .filter(id => id > gen.getOrElse(-1L) && id < before && committed(StateDelta(id)))
+      .sorted
+    StateLoc(gen, deltas)
   }
 
   /** Highest doc_id admitted through the committed state — read from
@@ -518,7 +471,8 @@ object IngestIncr {
     * implies nothing older either, so newest-only is exact. */
   private def committedMaxId(s: SparkSession, statePath: String,
       loc: StateLoc): Option[Long] =
-    loc.newestMarkerDir(statePath).flatMap(dir => readMarker(s, dir))
+    loc.newestMarkerDir(statePath).flatMap(dir =>
+      committedMax(fsOf(s, dir), new Path(dir)))
 
   /** The accumulated stream state = the compacted generation (if any)
     * unioned with the committed per-batch deltas above it (disjoint by
@@ -544,9 +498,9 @@ object IngestIncr {
     def genPart(g: Long, part: String, ddl: String): DataFrame =
       RunCaches.cachedFeature(s,
           s"pipe_ingest_stream:$statePath:gen:$part", g) {
-        VersionedIndex.readPart(s, ddl, s"$statePath/gen$g/$part")
+        VersionedIndex.readPart(s, ddl, s"$statePath/${StateGen(g)}/$part")
       }
-    val deltaDirs = loc.deltas.map(i => s"$statePath/b$i")
+    val deltaDirs = loc.deltas.map(i => s"$statePath/${StateDelta(i)}")
     def part(name: String, ddl: String): DataFrame = {
       val genDf = loc.gen.map(g => genPart(g, name, ddl))
       val deltaDf =
@@ -572,12 +526,10 @@ object IngestIncr {
     * production stream at one trigger/30 s piles ~8,700 delta dirs/day
     * on an object store). Protocol, crash-safe at every boundary:
     *
-    *  1. write the folded parts under `gen<through>/` (a crash here
-    *     leaves a marker-less husk the next compaction overwrites);
-    *  2. write the generation `_COMMIT` carrying the running-max bound
-    *     copied from the newest folded marker (readers switch to the
-    *     new generation atomically-by-marker, exactly the
-    *     versioned-index publish-order rule);
+    *  1-2. [[Published.write]] the folded parts under `gen<through>/`,
+    *     committed with the running-max bound of the newest folded
+    *     marker (a crash before the commit leaves a husk the next
+    *     compaction overwrites; readers switch by marker);
     *  3. delete the folded delta dirs and any superseded generation (a
     *     crash between 2 and 3 leaves stale dirs that [[listState]]
     *     already excludes by id — the next compaction's sweep reclaims
@@ -592,24 +544,17 @@ object IngestIncr {
       loc: StateLoc): StateLoc = {
     val through = loc.deltas.max
     val st = loadState(s, statePath, loc)
-    val genDir = s"$statePath/gen$through"
-    val bound = committedMaxId(s, statePath, loc)
-    for ((part, df) <- Seq("fps" -> st.fps, "bands" -> st.bands, "toks" -> st.toks))
-      df.repartition(1).write.mode("overwrite").parquet(s"$genDir/$part")
-    writeMarker(s, genDir, bound)
+    val genDir = s"$statePath/${StateGen(through)}"
+    val fs = fsOf(s, statePath)
+    Published.write(fs, new Path(genDir), committedMaxId(s, statePath, loc)) {
+      for ((part, df) <- Seq("fps" -> st.fps, "bands" -> st.bands, "toks" -> st.toks))
+        df.repartition(1).write.mode("overwrite").parquet(s"$genDir/$part")
+    }
     // idempotent sweep AFTER the marker: everything the new generation
     // supersedes, including husks a crashed earlier compaction left
-    val fs = fsOf(s, statePath)
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(statePath))
-      .toSeq.map(_.getPath.getName)
-    names.foreach {
-      case n if n.startsWith("b") && n.drop(1).nonEmpty &&
-          n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= through =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/$n"), true)
-      case n if n.startsWith("gen") && n.drop(3).nonEmpty &&
-          n.drop(3).forall(_.isDigit) && n.drop(3).toLong < through =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/$n"), true)
-      case _ => ()
+    reap(fs, new Path(statePath)) { st =>
+      val n = st.getPath.getName
+      StateDelta.idOf(n).exists(_ <= through) || StateGen.idOf(n).exists(_ < through)
     }
     StateLoc(Some(through), Seq.empty)
   }
@@ -708,7 +653,7 @@ object IngestIncr {
       name => s"pipe_ingest_stream:$statePath:$name", ver, Some(state),
       ordered = false)
     val d = res.deltas.get
-    val bDir = s"$statePath/b$batchId"
+    val bDir = s"$statePath/${StateDelta(batchId)}"
     // The four per-trigger output writes run CONCURRENTLY from a small
     // pool (r21, guide §2.6 overlap independent jobs): by this point
     // every shared upstream frame (gate population, elections, features,
@@ -716,11 +661,8 @@ object IngestIncr {
     // collects, so the writes are independent short tails whose fixed
     // per-job scheduling latency — not data — dominated the trigger
     // floor when paid 4× sequentially. bands→toks stay sequenced in one
-    // task (toks consumes the memoized bands frame). Crash-safety is
-    // unchanged: ALL writes settle (or time out) before any failure is
-    // rethrown, and the commit marker still goes strictly after the data
-    // — a failure anywhere leaves an uncommitted husk the next delivery
-    // overwrites.
+    // task (toks consumes the memoized bands frame). ALL writes settle
+    // (or time out) before any failure is rethrown.
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     // job labels are thread-local (guide §1.5) — set per task; the
@@ -728,22 +670,25 @@ object IngestIncr {
     def write(what: String)(body: => Unit): (String, Future[Unit]) =
       s"ingestAdmission b$batchId: $what" ->
         Future(Profile.labeled(s, s"ingestAdmission: $what")(body))
-    settleAll(Seq(
-      write("verdicts")(
-        res.verdicts.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")),
-      write("delta fps")(
-        d.fps.write.mode("overwrite").parquet(s"$bDir/fps")),
-      write("delta bands+toks") {
-        d.bands.write.mode("overwrite").parquet(s"$bDir/bands")
-        d.toks.write.mode("overwrite").parquet(s"$bDir/toks")
-      }), admissionWriteBound)
-    // commit marker strictly after the data — a crash mid-write leaves
-    // an uncommitted husk the next run overwrites, never half-reads.
-    // Content = the running max doc_id through this batch (carried
-    // forward over empty/gate-only batches so the bound never regresses)
+    // Published.write uncommits `bDir` first and commits strictly after
+    // the data, so a failure anywhere — a re-delivery over a committed
+    // dir included — leaves an uncommitted husk the next delivery
+    // overwrites, never half-reads. The marker carries the running max
+    // doc_id through this batch (carried forward over empty/gate-only
+    // batches so the bound never regresses)
     val runningMax = (priorMax.toSeq ++
       (if (nB > 0) Seq(bk.getLong(2)) else Seq.empty)).maxOption
-    writeMarker(s, bDir, runningMax)
+    Published.write(fsOf(s, bDir), new Path(bDir), runningMax) {
+      settleAll(Seq(
+        write("verdicts")(
+          res.verdicts.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")),
+        write("delta fps")(
+          d.fps.write.mode("overwrite").parquet(s"$bDir/fps")),
+        write("delta bands+toks") {
+          d.bands.write.mode("overwrite").parquet(s"$bDir/bands")
+          d.toks.write.mode("overwrite").parquet(s"$bDir/toks")
+        }), admissionWriteBound)
+    }
   }
 
   /** Bound on settling one trigger's output writes. They are

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Published, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import RunCaches.{cachedFeature, evictPrefix, srcVersion}
@@ -498,21 +498,16 @@ object VersionedIndex {
     * (split, source token, shards) — so a driver-regenerated source tier
     * changes the name, invalidating stale indexes the way a changed token
     * invalidates a [[graft.Staged]] directory. `build(stagingPath, split,
-    * shards)` stages into a fresh temp dir; publish is directory rename +
-    * a `_PUBLISHED` marker: on rename-atomic filesystems (local, HDFS) a
-    * reader can never see a half-written index, and the marker
-    * additionally covers stores WITHOUT atomic rename — S3's "rename" is
-    * a non-atomic copy+delete, so there a directory can exist mid-copy;
-    * readers here require the marker, which is written strictly after
-    * the data is fully in place, making the publish scale-safe on object
-    * stores too. When two JVMs race (e.g. a Verify run next to a test
-    * suite) the rename loser discards its staging and adopts the
-    * winner's byte-equivalent index; a leftover marker-less version
-    * directory (a publish crashed mid-copy) is reclaimed once quiet and
-    * republished. The base directory name includes a hash of the RAW
-    * corpus path next to the sanitized form, so two distinct corpora
-    * whose sanitized names collide (`/a/b` vs `/a_b`) can never reap or
-    * serve each other's indexes (ADVICE r8).
+    * shards)` stages into a fresh temp dir, renamed to the version and
+    * then marked published ([[graft.Published.renameOrAdopt]]): readers
+    * require the marker, written strictly after the data is in place, so
+    * even a store whose "rename" is a non-atomic copy (S3) never serves a
+    * half-written index. A racing publisher's loser adopts the winner's
+    * byte-equivalent index; a marker-less version left by a crashed
+    * publish is reclaimed once quiet and republished. The base directory
+    * name includes a hash of the RAW corpus path next to the sanitized
+    * form, so two distinct corpora whose sanitized names collide (`/a/b`
+    * vs `/a_b`) can never reap or serve each other's indexes (ADVICE r8).
     *
     * `famPrefix` names the base directory (`graft-<famPrefix>-idx-…`);
     * `parts` are the layout subdirs that must exist before the marker
@@ -599,25 +594,16 @@ object VersionedIndex {
       // sibling-spare check below so the two can never drift apart.
       val version = Version(split, srcToken, confShards(s))
       val ver = new Path(base, version.name)
-      val marker = new Path(ver, "_PUBLISHED")
       // fast path outside the lock (published is the steady state);
       // re-checked under the base's lock before building
-      if (!fs.exists(marker)) idxLockFor(base.toString).synchronized {
-        if (!fs.exists(marker)) {
+      if (!Published.isPublished(fs, ver)) idxLockFor(base.toString).synchronized {
+        if (!Published.isPublished(fs, ver)) {
         fs.mkdirs(base)
         // var: the photo-finish unwind below may relocate the build to a
         // fresh staging name when the original cannot be renamed back
         var staging = new Path(base,
           ".build-" + java.util.UUID.randomUUID().toString)
         build(staging.toString, split, version.shards)
-        def bless(): Unit = {
-          // the marker is the read gate — never bless a layout the probe
-          // cannot serve (belt over the nesting unwind in tryPublish)
-          require(parts.forall(p => fs.exists(new Path(ver, p))),
-            s"$famPrefix index publish incomplete at $ver: " +
-              s"${parts.mkString("/")} missing")
-          fs.create(marker, true).close()
-        }
         // Hadoop rename is NOT rename-if-absent: given an EXISTING
         // destination directory, HDFS moves the source INTO it and
         // RawLocalFileSystem's copy fallback nests it the same way —
@@ -652,132 +638,51 @@ object VersionedIndex {
               false
             }
           }
-        // Age of the newest FILE under p (recursively), or the dir's own
-        // mtime if greater; -1 ⇒ p is gone, 0 ⇒ nothing datable. File
-        // mtimes are the only reliable ager: object-store pseudo-dirs
-        // report mtime 0, and a local/HDFS dir's mtime tracks only its
-        // DIRECT children — a deep layout (bands/band=N/bshard=M/part-*)
-        // keeps gaining young files levels below a stale top. Only rare
-        // contended/reap paths pay the recursive listing. A listStatus
-        // walk, not listFiles: listFiles reads every file's permission,
-        // one `ls -ld` process per file without native libhadoop.
-        def newestIn(p: Path): Long = {
-          def newestFile(d: Path): Long = fs.listStatus(d).foldLeft(0L) { (m, st) =>
-            math.max(m, if (st.isDirectory) newestFile(st.getPath) else st.getModificationTime)
-          }
-          try math.max(fs.getFileStatus(p).getModificationTime, newestFile(p))
-          catch { case _: java.io.FileNotFoundException => -1L }
-        }
-        // Publish-or-adopt loop. Husk-vs-LIVE discrimination: on a
-        // non-atomic store (S3) a racing publisher's "rename" is a long
-        // client-side copy — ver can sit marker-less for MINUTES while
-        // very much alive, and deleting it then would interleave two
-        // publishers' distinct part-files in one directory, corrupt and
-        // marker-blessed by whichever finishes last. A marker-less ver
-        // is a reclaimable husk only once it has gone QUIET (newest file
-        // older than the grace window; a file-less shell must stay empty
-        // for 5 s). Until then we poll for the racer's marker, bounded
-        // by grace + 30 s — a fresh husk ages into quiet before that
-        // deadline, so the timeout only fires on clock skew (future
-        // mtimes) or a pathologically slow live copy, and then we fail
-        // LOUDLY rather than delete data we cannot prove dead. On
-        // atomic-rename stores the racer's rename→marker window is
-        // milliseconds, so the poll exits almost immediately.
-        //
-        // INVARIANT: this polls while holding this BASE's lock
-        // ([[idxLockFor]]) — correct, not a hazard to "fix". The lock
-        // is per-JVM, per-base, and serializes only this JVM's builders
-        // of THIS index; the publisher being waited on is a DIFFERENT
-        // JVM (a Verify run next to a test suite), which does not
-        // contend on this lock, and other families/corpora hold other
-        // locks. Releasing it here would let a second local builder
-        // start a redundant full build behind the wait.
-        val deadline = System.currentTimeMillis() + graceMs + 30000L
-        var emptySince = 0L
-        var reclaims = 0
-        var done = false
-        while (!done) {
-          if (tryPublish()) { bless(); done = true }
-          else if (fs.exists(marker)) { fs.delete(staging, true); done = true }
-          else {
-            val now = System.currentTimeMillis()
-            val quiet = newestIn(ver) match {
-              case -1L => emptySince = 0L; true // ver gone — retry publish
-              case 0L =>
-                if (emptySince == 0L) { emptySince = now; false }
-                else now - emptySince > 5000L
-              case m => emptySince = 0L; now - m > graceMs
-            }
-            if (quiet) {
-              reclaims += 1
-              require(reclaims <= 3,
-                s"$famPrefix index publish failed after ${reclaims - 1} reclaim " +
-                  s"attempts: rename into $ver keeps failing or the dir " +
-                  "keeps reappearing marker-less (staging " +
-                  s"${if (fs.exists(staging)) "intact" else "lost to a nesting race"})")
-              fs.delete(ver, true) // quiet husk — reclaim, loop republishes
-            } else
-              require(now < deadline,
-                s"$famPrefix index publish timed out after ${graceMs + 30000L} ms " +
-                  s"waiting on marker-less $ver (a publisher may be live, or " +
-                  "the store reports future mtimes) — retry, raise " +
-                  "spark.graft.minhash.reapGraceMs, or remove the dir manually")
-            Thread.sleep(500L) // a racer's marker, or a transient rename failure to clear
-          }
-        }
+        // INVARIANT: the publish-or-adopt wait polls while holding this
+        // BASE's lock ([[idxLockFor]]) — correct, not a hazard to "fix".
+        // The lock is per-JVM, per-base, and serializes only this JVM's
+        // builders of THIS index; the publisher being waited on is a
+        // DIFFERENT JVM (a Verify run next to a test suite), which does
+        // not contend on this lock, and other families/corpora hold
+        // other locks. Releasing it here would let a second local
+        // builder start a redundant full build behind the wait.
+        if (Published.renameOrAdopt(fs, ver, graceMs, s"$famPrefix index")(
+            tryPublish(), fs.exists(staging))) {
+          // the marker is the read gate — never bless a layout the probe
+          // cannot serve (belt over the nesting unwind in tryPublish)
+          require(parts.forall(p => fs.exists(new Path(ver, p))),
+            s"$famPrefix index publish incomplete at $ver: " +
+              s"${parts.mkString("/")} missing")
+          Published.publish(fs, ver)
+        } else fs.delete(staging, true)
         // stale versions (older source tiers) and staging leaked by
         // crashed builds are dead — reap them so the base doesn't
-        // accumulate one full index copy per regeneration/crash.
-        // Age-gated on the same newest-file metric as the husk loop
-        // (never on the dir's own depth-1 view alone): young content may
-        // still be scanned (or written) by a concurrent JVM, and an age
-        // of 0/unknown is never reaped.
+        // accumulate one full index copy per regeneration/crash, once
+        // past grace by the age rule: young content may still be
+        // scanned (or written) by a concurrent JVM.
+        // A PUBLISHED shard layout of the CURRENT tier — or of a NEWER
+        // one — is potentially live and never reaped: another session
+        // with a different indexShards conf probes its own current-tier
+        // sibling, and a builder holding a STALE source token whose
+        // corpus-scale build outlasted the grace window would otherwise
+        // delete the newer tier's live index out from under the
+        // sessions probing it (a published version goes mtime-quiet the
+        // moment it lands, so age proves nothing for published dirs).
+        // The tier ordering comes from the version name's own token
+        // component; a token past Long range (a hostile or corrupted
+        // sibling name) reads as current-or-newer, never as a
+        // NumberFormatException aborting this build (ADVICE r13).
+        // Marker-less siblings of ANY tier are crashed publishes and age
+        // out like any husk.
         val now = System.currentTimeMillis()
-        fs.listStatus(base)
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isDirectory && (n.startsWith("v") || n.startsWith(".build-"))
-          }
-          .filter { st =>
-            // a PUBLISHED shard layout of the CURRENT tier — or of a
-            // NEWER one — is potentially live and never reaped: another
-            // session with a different indexShards conf probes its own
-            // current-tier sibling, and a builder holding a STALE
-            // source token whose corpus-scale build outlasted the grace
-            // window would otherwise delete the newer tier's live index
-            // out from under the sessions probing it (a published
-            // version goes mtime-quiet the moment it lands — reads
-            // never touch it, so age proves nothing for published
-            // dirs). The tier ordering comes from the version name's
-            // own token component. Marker-less siblings of ANY tier are
-            // crashed publishes and age out like any husk (else each
-            // abandoned shard setting would pin a corpus-scale copy).
-            val publishedCurrentOrNewer = {
-              val n = st.getPath.getName
-              fs.exists(new Path(st.getPath, "_PUBLISHED")) && (
-                n.startsWith(version.tierPrefix) ||
-                  Version.Shape.findFirstMatchIn(n)
-                    // Try-guarded like Bench's record-listing sort: a
-                    // token component past Long range (a hostile or
-                    // corrupted sibling name) must read as
-                    // current-or-newer — never reaped, never a
-                    // NumberFormatException aborting the caller's own
-                    // build/probe (ADVICE r13)
-                    .exists(m => scala.util.Try(m.group(2).toLong)
-                      .map(_ >= srcToken).getOrElse(true)))
-            }
-            // LIST-cost short-circuit: newestIn is a full recursive
-            // listing per sibling, a large object-store LIST bill inside
-            // the base's lock on every rebuild. A dir young at depth 1 can only
-            // get YOUNGER with children, so only depth-1-old candidates
-            // (and mtime-0 pseudo-dirs, age unknown) pay the recursion.
-            !publishedCurrentOrNewer &&
-              now - st.getModificationTime > graceMs && {
-                val eff = newestIn(st.getPath)
-                eff > 0L && now - eff > graceMs
-              }
-          }
-          .foreach(st => fs.delete(st.getPath, true))
+        Published.reap(fs, base) { st =>
+          val n = st.getPath.getName
+          st.isDirectory && (n.startsWith("v") || n.startsWith(".build-")) &&
+            !(Published.isPublished(fs, st.getPath) && (n.startsWith(version.tierPrefix) ||
+              Version.Shape.findFirstMatchIn(n)
+                .exists(_.group(2).toLongOption.forall(_ >= srcToken)))) &&
+            Published.aged(fs, st, now, graceMs)
+        }
       } }
       (ver.toString, split)
     }

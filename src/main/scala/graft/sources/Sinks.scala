@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.hadoop.fs.Path
+import graft.Published
 
 /** Sink-side operators (SURVEY §2.1 S5/S6, §2.9 ST8).
   *
@@ -75,26 +76,13 @@ object Sinks {
     // batch id: a legal crash replay re-runs id == mark (accepted, the
     // guard is strictly <), while a regressed id < mark or a markless
     // non-empty dir fails loudly with the operator's next step named.
-    // The mark is a DIRECTORY of content-free per-batch files
-    // (_graft_fanout_marks/b-<id>, the id in the NAME), resolved as the
-    // max — never a single file rewritten in place, whose
-    // truncate-then-write window a crash could turn into an empty file
-    // that unparses forever, wedging the stream AND destroying the very
-    // value needed to recover. File creation is atomic; marks older
-    // than the previous batch are pruned on each write (≤ 2 retained).
-    // Single-writer per (table, checkpoint), like the upsert table.
+    // Marks are content-free files named by batch id
+    // ([[Published.mark]]; ≤ 2 retained), never one file rewritten in
+    // place, whose torn write would unparse forever and lose the value
+    // needed to recover. Single-writer per (table, checkpoint).
     val p = new Path(path)
-    val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val marksDir = new Path(p, "_graft_fanout_marks")
-    def markId(name: String): Option[Long] =
-      if (name.startsWith("b-")) name.drop(2).toLongOption else None
-    val hwm: Option[Long] =
-      if (!fs.exists(marksDir)) None
-      else fs.listStatus(marksDir).toSeq
-        .flatMap(st => markId(st.getPath.getName)) match {
-          case Nil => None
-          case ids => Some(ids.max)
-        }
+    val fs = Published.fsOf(batch.sparkSession, path)
+    val hwm = Published.highWaterMark(fs, p)
     hwm match {
       case Some(h) => require(batchId >= h,
         s"idempotentFanoutBatch: batch id $batchId regressed below the " +
@@ -106,24 +94,15 @@ object Sinks {
         // ignore the marks dir itself: a crash between its mkdirs and
         // the first mark's create must read as "fresh table", not as
         // foreign content that wedges the stream
-        val foreign = if (!fs.exists(p)) Array.empty[String]
-          else fs.listStatus(p).map(_.getPath.getName)
-            .filterNot(_ == "_graft_fanout_marks")
+        val foreign = Published.children(fs, p).map(_.getPath.getName)
+          .filterNot(_ == Published.marksDir(p).getName)
         require(foreign.isEmpty,
           s"idempotentFanoutBatch: $path holds data but no batch marks " +
             "— a pre-batch-layout (flat) fan-out table or a foreign " +
             "directory; migrate it (rewrite under __batch=<id> partitions " +
             "with marks) or fan out to a fresh path")
     }
-    if (hwm.forall(_ < batchId)) {
-      fs.mkdirs(marksDir)
-      fs.create(new Path(marksDir, s"b-$batchId"), true).close()
-      // prune: keep the current mark and its predecessor only
-      fs.listStatus(marksDir).toSeq
-        .flatMap(st => markId(st.getPath.getName).map(_ -> st.getPath))
-        .sortBy(-_._1).drop(2)
-        .foreach { case (_, old) => fs.delete(old, false) }
-    }
+    if (hwm.forall(_ < batchId)) Published.mark(fs, p, batchId, hwm)
     batch.withColumn("__batch", lit(batchId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
@@ -186,7 +165,7 @@ object Sinks {
     require(!updates.columns.exists(c =>
         c.equalsIgnoreCase("__rn") || c.equalsIgnoreCase("__b")),
       "upsertByKey reserves __rn and __b (any case); rename them on the input")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Published.fsOf(spark, path)
     val current = readManifest(spark, path)
     // a manifest-less path that nonetheless holds files is NOT an empty
     // table — it is either a legacy plain-parquet layout or a foreign
@@ -194,9 +173,9 @@ object Sinks {
     // previously acknowledged row from reads. Fail loudly; the one
     // benign shape (a crashed FIRST upsert that wrote data/ but died
     // before its manifest) is recovered by the gen-0 rewrite below.
-    if (current.isEmpty && fs.exists(new Path(path))) {
-      val foreign = fs.listStatus(new Path(path)).map(_.getPath.getName)
-        .filterNot(n => n == "_graft_manifest" || n == "data")
+    if (current.isEmpty) {
+      val foreign = Published.children(fs, new Path(path)).map(_.getPath.getName)
+        .filterNot(n => n == Published.manifestDir(path).getName || n == "data")
       require(foreign.isEmpty,
         s"upsertByKey: $path holds non-upsert-table content " +
           s"(${foreign.take(3).mkString(", ")}…) with no manifest — refusing " +
@@ -306,40 +285,30 @@ object Sinks {
       fs: org.apache.hadoop.fs.FileSystem,
       path: String, graceMs: Long): Unit = {
     val now = System.currentTimeMillis()
-    val mdir = manifestDir(path)
-    val manifests = fs.listStatus(mdir)
-      .filter(_.getPath.getName.matches("m-\\d{12}\\.json"))
-      .sortBy(_.getPath.getName)
-    manifests.dropRight(1).zip(manifests.drop(1))
-      .filter { case (_, successor) =>
-        now - successor.getModificationTime > graceMs }
-      .foreach { case (st, _) => fs.delete(st.getPath, false) }
-    fs.listStatus(mdir)
-      .filter(st => st.getPath.getName.startsWith(".m-tmp-") &&
-        now - st.getModificationTime > graceMs)
-      .foreach(st => fs.delete(st.getPath, false))
+    val mdir = Published.manifestDir(path)
+    val manifests = Published.generations(fs, mdir, Published.Manifests)
+    val superseded = manifests.zip(manifests.drop(1)).collect {
+      case (st, successor) if now - successor.getModificationTime > graceMs => st.getPath
+    }.toSet
+    // `.m-tmp-*`: staged manifests of the stage+rename writer this
+    // table format had before its create-exclusive publish
+    Published.reap(fs, mdir)(st => superseded(st.getPath) ||
+      st.getPath.getName.startsWith(".m-tmp-") && now - st.getModificationTime > graceMs)
     // every bucket generation referenced by a retained manifest is live
-    val liveSet = fs.listStatus(mdir)
-      .filter(_.getPath.getName.matches("m-\\d{12}\\.json"))
+    val liveSet = manifests.filterNot(st => superseded(st.getPath))
       .flatMap(st => scala.util.Try(parseManifest(fs, st)).toOption.toSeq
         .flatMap(_.map.map { case (b, dn) => s"$dn/__b=$b" }))
       .toSet
-    val dataDir = new Path(s"$path/data")
-    if (fs.exists(dataDir))
-      fs.listStatus(dataDir).filter(_.getPath.getName.startsWith("g"))
-        .foreach { genSt =>
-          fs.listStatus(genSt.getPath)
-            .filter(_.getPath.getName.startsWith("__b="))
-            .foreach { st =>
-              val rel = s"${genSt.getPath.getName}/${st.getPath.getName}"
-              if (!liveSet.contains(rel)) fs.delete(st.getPath, true)
-            }
-          // gone when no bucket dirs remain — committer markers like
-          // _SUCCESS must not pin the husk (delete is recursive)
-          if (!fs.listStatus(genSt.getPath)
-              .exists(_.getPath.getName.startsWith("__b=")))
-            fs.delete(genSt.getPath, true)
-        }
+    def isBucket(st: org.apache.hadoop.fs.FileStatus) = st.getPath.getName.startsWith("__b=")
+    Published.reap(fs, new Path(s"$path/data")) { gen =>
+      val g = gen.getPath
+      g.getName.startsWith("g") && {
+        Published.reap(fs, g)(st => isBucket(st) && !liveSet(s"${g.getName}/${st.getPath.getName}"))
+        // gone when no bucket dirs remain — committer markers like
+        // _SUCCESS must not pin the husk (delete is recursive)
+        !Published.children(fs, g).exists(isBucket)
+      }
+    }
   }
 
   /** Re-buckets an upsert table to `newBuckets` — the GROWTH path.
@@ -369,7 +338,7 @@ object Sinks {
     val current = readManifest(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no upsert table at $path"))
     if (current.buckets == newBuckets) return
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Published.fsOf(spark, path)
     val gen = current.gen + 1
     val genDir = genDirName(gen)
     val bucketOf = bucketExpr(col(key), newBuckets)
@@ -419,19 +388,6 @@ object Sinks {
       keyCol: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(keyCol), lit(n.toLong)).cast("int")
 
-  /** Reads a small control file fully into memory — shared by the
-    * manifest parser (and previously duplicated inline); control files
-    * here are bytes-sized, never data. */
-  private def readFully(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Byte] = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-      out.toByteArray
-    } finally in.close()
-  }
-
   /** The manifest record: table generation, fixed bucket count, and the
     * bucket → data-dir-name map resolving each bucket's current data
     * dir under `path/data/` (writer-unique `g<gen>-<tok>` names). */
@@ -445,26 +401,13 @@ object Sinks {
   private[sources] final case class Manifest(
       gen: Long, buckets: Int, map: Map[Int, String], keyType: String = "")
 
-  private def manifestDir(path: String) = new Path(s"$path/_graft_manifest")
-
-  /** Newest complete manifest, or None for a not-yet-created table.
-    * Staged manifests are dot-prefixed and never match the m- pattern. */
+  /** Newest PARSEABLE manifest, or None for a not-yet-created table: a
+    * crashed writer's torn manifest is skipped for the previous
+    * generation, a complete table. */
   private[sources] def readManifest(
       spark: SparkSession, path: String): Option[Manifest] = {
-    val dir = manifestDir(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
-    val sts = fs.listStatus(dir)
-      .filter(_.getPath.getName.matches("m-\\d{12}\\.json"))
-    if (sts.isEmpty) return None
-    // zero-padded: lexicographic = numeric order. Newest PARSEABLE wins:
-    // with create-exclusive publishes a crashed writer can leave a TORN
-    // manifest at the final name — skipping it falls back to the
-    // previous generation, a complete table; the recovering writer
-    // replaces the torn file at its next publish.
-    sts.sortBy(_.getPath.getName).reverseIterator
-      .flatMap(st => scala.util.Try(parseManifest(fs, st)).toOption)
-      .nextOption()
+    val fs = Published.fsOf(spark, path)
+    Published.newest(fs, Published.manifestDir(path), Published.Manifests)(parseManifest(fs, _))
   }
 
   /** One manifest file's parse — shared by the newest-resolution read
@@ -491,8 +434,8 @@ object Sinks {
     val p = st.getPath
     val key = s"$p@${st.getModificationTime}:${st.getLen}"
     manifestCache.computeIfAbsent(key, _ => {
-      val bytes = readFully(fs, p)
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Published.readAll(fs, p))
       import scala.jdk.CollectionConverters._
       Manifest(
         node.get("gen").asLong(),
@@ -509,26 +452,14 @@ object Sinks {
   }
 
   /** Publishes the manifest by CREATE-EXCLUSIVE write at its final name
-    * — the table's one atomic race arbiter. The previous stage+rename
-    * design claimed "a lost rename race fails loudly", but Hadoop's
-    * LocalFileSystem rename delegates to File.renameTo, which on POSIX
-    * silently OVERWRITES an existing destination and returns true — the
-    * loud-failure guarantee was a no-op exactly where the specs run,
-    * and a racing loser would silently bury the winner's acknowledged
-    * generation. create(dest, overwrite = false) throws
-    * FileAlreadyExistsException atomically on local and HDFS instead.
-    * The trade: a crashed writer can leave a TORN manifest at the final
-    * name — so readers and the reaper skip unparseable manifests
-    * (previous generation = still a complete table), and the single
-    * recovering writer, finding its next generation's name occupied by
-    * an UNPARSEABLE file, replaces it; a PARSEABLE occupant is a
-    * genuine concurrent writer and fails loudly (single-writer
-    * contract). */
+    * ([[Published.commitExclusive]]), the table's one race arbiter: a
+    * stage+rename could not be, because LocalFileSystem's rename
+    * silently overwrites an existing destination on POSIX. A torn
+    * occupant is this writer's own crashed publish and is replaced; a
+    * PARSEABLE one is a concurrent writer and fails loudly. */
   private def publishManifest(
       spark: SparkSession, path: String, m: Manifest): Unit = {
-    val dir = manifestDir(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
+    val fs = Published.fsOf(spark, path)
     // keyType is ESCAPED (the one free-text field here — DataType.sql
     // can carry quotes/backslashes via struct field names), sharing
     // Verify.jsonStr, the same rule Bench.recordLines applies to its
@@ -540,41 +471,8 @@ object Sinks {
       m.map.toSeq.sortBy(_._1)
         .map { case (b, dn) => s""""$b":"$dn"""" }.mkString(",") + "}}")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val dest = new Path(dir, f"m-${m.gen}%012d.json")
-    def writeExclusive(): Boolean =
-      try {
-        if (fs.getScheme == "file") {
-          // RawLocalFileSystem.create(dest, overwrite=false) is
-          // exists()-then-open — CHECK-THEN-ACT, not O_EXCL — so two
-          // JVMs inside the race window would both "succeed" and the
-          // later close would silently bury the first writer's
-          // generation. NIO's createFile IS atomic exclusive create on
-          // POSIX; the write after it can still tear on a crash, which
-          // the torn-manifest recovery below already absorbs (r13 sweep)
-          val local = java.nio.file.Paths.get(dest.toUri.getPath)
-          java.nio.file.Files.createFile(local)
-          java.nio.file.Files.write(local, body)
-        } else {
-          val out = fs.create(dest, false)
-          try out.write(body) finally out.close()
-        }
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    if (!writeExclusive()) {
-      val occupantParses =
-        scala.util.Try(parseManifest(fs, fs.getFileStatus(dest))).isSuccess
-      require(!occupantParses,
-        s"upsert manifest publish lost a race at $dest — concurrent " +
-          "writer detected; this table is single-writer")
-      // torn leftover from this writer's own earlier crash: replace it
-      fs.delete(dest, false)
-      require(writeExclusive(),
-        s"upsert manifest publish raced twice at $dest — concurrent " +
-          "writer detected; this table is single-writer")
-    }
+    Published.commitExclusive(fs, Published.manifestDir(path), Published.Manifests,
+      m.gen, body, "upsert manifest")(st => scala.util.Try(parseManifest(fs, st)).isSuccess)
   }
 
   /** Read side of [[upsertByKey]]: resolves the newest manifest and

@@ -146,7 +146,7 @@ class CatalogSpec extends SparkSpec {
     // ROADMAP aim 3. The publish loop's one poll is the known exception;
     // it becomes a counted backoff bounded by the grace deadline
     // (ROADMAP open item 5), and this list shrinks with it
-    val allowed = Seq("graft/operators/VersionedIndex.scala" ->
+    val allowed = Seq("graft/Published.scala" ->
       "Thread.sleep(500L) // a racer's marker, or a transient rename failure to clear")
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
@@ -194,8 +194,9 @@ class CatalogSpec extends SparkSpec {
     // ROADMAP aim 2: one staged-artifact cache. Its marker literal lives
     // only in Staged.scala, it is the only _GRAFT_ marker, and no
     // per-cache marker convention remains.
-    // (The index `_PUBLISHED` and admission `_COMMIT` markers keep their
-    // own publish policies and are not build-once caches.)
+    // (Persisted generations — index versions, admission state, upsert
+    // manifests — commit through graft.Published, not a build-once
+    // cache; the next spec guards their markers.)
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root.resolve("graft")),
       s"no sources at ${root.toAbsolutePath}")
@@ -210,6 +211,24 @@ class CatalogSpec extends SparkSpec {
     } finally files.close()
     assert(markers === Seq("graft/Staged.scala" -> "_GRAFT_READY"))
     assert(legacy.isEmpty, s"a per-cache marker convention remains in ${legacy.mkString(", ")}")
+  }
+
+  test("persisted-state marker literals live only in Published.scala") {
+    // ROADMAP aim 2: one publish protocol. A string literal naming a
+    // marker elsewhere is a second writer or reader of it; comments may
+    // name them (LocalCommit.scala's do), so only literals are scanned
+    val markers = Seq("_PUBLISHED", "_COMMIT", "_graft_manifest", "_graft_fanout_marks")
+    val literal = "\"(?:[^\"\\\\]|\\\\.)*\"".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root.resolve("graft")),
+      s"no sources at ${root.toAbsolutePath}")
+    val files = java.nio.file.Files.walk(root.resolve("graft"))
+    val hits = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val lits = java.nio.file.Files.readAllLines(f).asScala.flatMap(literal.findAllIn(_))
+        markers.filter(m => lits.exists(_.contains(m))).map(root.relativize(f).toString -> _)
+      } finally files.close()
+    assert(hits.sorted === markers.map("graft/Published.scala" -> _).sorted)
   }
 
   test("SparkEntry registers the graft SQL functions on a session built without the extension") {

@@ -426,4 +426,22 @@ class SinksSpec extends SparkSpec {
       .select($"k", $"v").collect().map(r => (r.getInt(0), r.getString(1)))
     assert(rows.toSeq === Seq((1, "b")))
   }
+
+  test("upserts that reap a superseded manifest and its generation fork no process") {
+    // ROADMAP item 5's no-fork guard over the upsert reap: manifest
+    // listing, create-exclusive publish and the grace-0 delete pass
+    val path = tmp()
+    def upsert(v: Long) = Sinks.upsertByKey(spark, path,
+      Seq((1L, s"p$v", v)).toDF("id", "payload", "version"), "id", "version",
+      buckets = 4, graceMs = 0L)
+    upsert(0L)
+    val g0 = ls(s"$path/data").filter(_.matches(".*/g0-[0-9a-f]{8}$"))
+    assert(g0.length === 1)
+    val shellForks = hadoopShellForks { upsert(1L); Thread.sleep(5); upsert(2L) }
+    assert(!new java.io.File(s"$path/_graft_manifest/m-000000000000.json").exists,
+      "the superseded gen-0 manifest was not reaped")
+    assert(!new java.io.File(g0.head).exists, "the superseded gen-0 data was not reaped")
+    assert(Sinks.readUpserted(spark, path).select($"payload").as[String].collect().toSeq === Seq("p2"))
+    assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
+  }
 }

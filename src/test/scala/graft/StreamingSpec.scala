@@ -1531,6 +1531,94 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("failed validation"))
   }
 
+  /** sf0.001's pipe-ingest index, its increment documents in id order,
+    * and a frame builder for admission batches over them. */
+  private def admissionInputs() = {
+    val (idx, split) = graft.operators.IngestIncr.ensurePipeIngestIndex(spark, sf001)
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+      .filter($"doc_id" >= split)
+      .select($"doc_id", $"source", $"lang", $"text").orderBy($"doc_id")
+      .as[(Long, String, String, String)].collect().toSeq
+    (idx, split, docs)
+  }
+
+  private def admissionDf(rows: Seq[(Long, String, String, String)]) =
+    rows.toDF("doc_id", "source", "lang", "text")
+
+  /** A `_COMMIT` body rewritten out of band, with the local checksum
+    * sidecar removed so the next read does not trip on it. */
+  private def plantCommit(dir: String, body: String): Unit = {
+    val m = java.nio.file.Paths.get(dir, "_COMMIT")
+    java.nio.file.Files.createDirectories(m.getParent)
+    java.nio.file.Files.write(m, body.getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(m.getParent.resolve("._COMMIT.crc")): Unit
+  }
+
+  test("LIVE ingest admission: a re-delivered batch uncommits before it rewrites") {
+    import graft.operators.IngestIncr
+    // a re-delivery overwrites b<id>'s parts: while it writes, the first
+    // delivery's marker must not vouch for them, or a failed rewrite
+    // leaves a committed dir over partly rewritten data
+    val (idx, split, docs) = admissionInputs()
+    val statePath = tempDir("graft-ingadm-uncommit-st").toString + "/state"
+    val outPath = tempDir("graft-ingadm-uncommit-out").toString + "/out"
+    val marker = java.nio.file.Paths.get(s"$statePath/b0/_COMMIT")
+    def verdicts() = spark.read.parquet(s"$outPath/batch=0")
+      .select($"doc_id", $"verdict").orderBy($"doc_id").collect().toSeq
+    IngestIncr.admitMicroBatch(spark, admissionDf(docs.take(2)), 0L, idx, split,
+      statePath, outPath)
+    val first = verdicts()
+    val firstMarker = java.nio.file.Files.readString(marker)
+    assert(firstMarker === s"${docs(1)._1};")
+    // the verdict write of the re-delivery must fail: its output path
+    // is a regular file
+    val blocked = tempDir("graft-ingadm-uncommit-bad").resolve("out")
+    java.nio.file.Files.createFile(blocked)
+    intercept[Exception] {
+      IngestIncr.admitMicroBatch(spark, admissionDf(docs.take(2)), 0L, idx, split,
+        statePath, blocked.toString)
+    }
+    assert(new java.io.File(s"$statePath/b0").isDirectory)
+    assert(!java.nio.file.Files.exists(marker),
+      "a failed re-delivery left b0 committed over its rewritten parts")
+    IngestIncr.admitMicroBatch(spark, admissionDf(docs.take(2)), 0L, idx, split,
+      statePath, outPath)
+    assert(java.nio.file.Files.readString(marker) === firstMarker)
+    assert(verdicts() === first)
+  }
+
+  test("LIVE ingest admission: state names and a marker body past Long range are refused by name or ignored") {
+    import graft.operators.IngestIncr
+    val (idx, split, docs) = admissionInputs()
+    val huge = "99999999999999999999" // 20 digits, past Long range
+    def paths(tag: String) = (tempDir(s"graft-ingadm-range-$tag-st").toString + "/state",
+      tempDir(s"graft-ingadm-range-$tag-out").toString + "/out")
+    // uncommitted past-range dirs are husks like any other: ignored
+    val (st1, out1) = paths("husk")
+    new java.io.File(s"$st1/gen$huge").mkdirs()
+    new java.io.File(s"$st1/b$huge").mkdirs()
+    IngestIncr.admitMicroBatch(spark, admissionDf(docs.take(2)), 0L, idx, split, st1, out1)
+    assert(new java.io.File(s"$st1/b0/_COMMIT").isFile)
+    assert(IngestIncr.stateSnapshot(spark, st1)._2 === None)
+    // a committed past-range generation is foreign: the named refusal
+    val (st2, out2) = paths("gen")
+    plantCommit(s"$st2/gen$huge", "5;")
+    val e = intercept[IllegalArgumentException] {
+      IngestIncr.admitMicroBatch(spark, admissionDf(docs.take(2)), 0L, idx, split, st2, out2)
+    }
+    assert(e.getMessage.contains(s"compacted generation gen$huge") &&
+      e.getMessage.contains("foreign writer"), e.getMessage)
+    assert(!new java.io.File(s"$st2/b0").exists(), "a refused batch must write nothing")
+    // a marker body past Long range fails the marker's validation
+    val (st3, out3) = paths("body")
+    IngestIncr.admitMicroBatch(spark, admissionDf(docs.take(2)), 0L, idx, split, st3, out3)
+    plantCommit(s"$st3/b0", s"$huge;")
+    val e2 = intercept[IllegalArgumentException] {
+      IngestIncr.admitMicroBatch(spark, admissionDf(docs.slice(2, 4)), 1L, idx, split, st3, out3)
+    }
+    assert(e2.getMessage.contains("failed validation"), e2.getMessage)
+  }
+
   test("LIVE ingest admission: checkpointed restart resumes without recount; re-delivery is idempotent") {
     import graft.operators.IngestIncr
     val (idx, split) = IngestIncr.ensurePipeIngestIndex(spark, sf001)
@@ -1662,6 +1750,40 @@ class StreamingSpec extends SparkSpec {
       } finally spark.conf.unset("spark.graft.minhash.indexBase")
     assert(idx.startsWith(base), s"built under the fresh base, got $idx")
     assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
+  }
+
+  test("an index ensure that reaps a stale sibling and reclaims a quiet husk forks no process") {
+    import graft.operators.VersionedIndex
+    // the reap path: the recursive age rule over a past-grace sibling,
+    // and the publish loop reclaiming a quiet marker-less version
+    val base = tempDir("graft-lc-fork-reap").toString
+    def ensure() = VersionedIndex.ensureVersioned(spark, sf001, "nofork-reap", Seq("part")) {
+      (staging, _, _) => spark.range(3).write.parquet(s"$staging/part")
+    }._1
+    val old = System.currentTimeMillis() - 3600L * 1000
+    def age(f: java.io.File): Unit = {
+      Option(f.listFiles()).toSeq.flatten.foreach(age)
+      f.setLastModified(old): Unit
+    }
+    spark.conf.set("spark.graft.minhash.indexBase", base)
+    spark.conf.set("spark.graft.minhash.reapGraceMs", "60000")
+    try {
+      val ver = new java.io.File(ensure())
+      assert(new java.io.File(ver, "_PUBLISHED").delete())
+      val stale = new java.io.File(ver.getParentFile, "v1-1-s4")
+      new java.io.File(stale, "part").mkdirs()
+      new java.io.File(stale, "part/part-00000.parquet").createNewFile()
+      age(ver); age(stale)
+      var again = ""
+      val shellForks = hadoopShellForks { again = ensure() }
+      assert(again === ver.toString)
+      assert(new java.io.File(ver, "_PUBLISHED").isFile, "the quiet husk was not republished")
+      assert(!stale.exists(), "the past-grace stale sibling was not reaped")
+      assert(shellForks.isEmpty, shellForks.take(5).mkString("; e.g. ", "; ", ""))
+    } finally {
+      spark.conf.unset("spark.graft.minhash.indexBase")
+      spark.conf.unset("spark.graft.minhash.reapGraceMs")
+    }
   }
 
   test("a checkpointed admission stream that folds its state forks no process") {
