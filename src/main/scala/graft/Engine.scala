@@ -17,10 +17,19 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
+  /** `raw`, the value of setting `key`, as a whole number in
+    * [`min`, `max`]; anything else fails naming the key. */
+  private[graft] def wholeSetting(key: String, raw: String, min: Long,
+      max: Long = Int.MaxValue): Long =
+    raw.trim.toLongOption.filter(v => v >= min && v <= max).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a whole number in [$min, $max], got '$raw'"))
+
   /** The core count a session runs with: `SPARK_GRAFT_CPUS` when set
     * (`env` is its value), else the host's. */
   private[graft] def cpus(env: Option[String]): Int =
-    env.fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt)
+    env.fold(Runtime.getRuntime.availableProcessors)(v =>
+      wholeSetting("SPARK_GRAFT_CPUS", v, 1).toInt)
 
   private lazy val defaultCpus = cpus(sys.env.get("SPARK_GRAFT_CPUS"))
 

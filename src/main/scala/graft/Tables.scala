@@ -39,18 +39,11 @@ final case class Tables(spark: SparkSession, dir: String) {
     * `event_time` — expressions over `ts`) are not translatable and
     * evaluate Spark-side after the scan, so a time-bounded query
     * against a relational events store streams the full table unless
-    * the store exposes an indexed raw column to filter on. For a big
-    * table set the
-    * partitioned-read envs (SPARK_GRAFT_JDBC_PARTTABLE names the table;
-    * PARTCOL/LOWER/UPPER/NUM describe its split column) so that scan
-    * parallelizes across executors instead of streaming through one
-    * connection — the 100 TB posture. The options apply ONLY to the
-    * named table: a split column picked for the fact table does not
-    * exist on the dims, and passing it there would fail every load.
-    * Unset, reads are single-split, fine for dims. */
+    * the store exposes an indexed raw column to filter on. A `jdbc:`
+    * read is single-split: one connection per table. */
   private def load(name: String): DataFrame =
     if (dir.startsWith("jdbc:")) {
-      val r = spark.read.format("jdbc")
+      spark.read.format("jdbc")
         .option("url", dir)
         .option("dbtable", name)
         // timestamp-WITHOUT-time-zone columns (the reference's prisma
@@ -63,37 +56,7 @@ final case class Tables(spark: SparkSession, dir: String) {
         // is exactly the semantics a naive store column needs
         // (r13 sweep; the same hazard the NTZ parquet branch documents)
         .option("preferTimestampNTZ", "true")
-      val partTable = sys.env.get("SPARK_GRAFT_JDBC_PARTTABLE")
-      // the TABLE name is validated against the catalog too: a typo'd
-      // value (`event`) would otherwise never match any load, the
-      // all-or-nothing guard below would never run, and every fact scan
-      // would silently stream through one connection — the exact
-      // fallback the guard exists to prevent (r13 sweep)
-      partTable.foreach(t => require(Tables.catalogTables.contains(t),
-        s"SPARK_GRAFT_JDBC_PARTTABLE=$t names no catalog table " +
-          s"(${Tables.catalogTables.mkString(", ")})"))
-      val part = partTable.filter(_ == name)
-        .map { _ =>
-          // all-or-nothing: a HALF-specified partition spec (PARTTABLE
-          // set but one of COL/LOWER/UPPER/NUM missing or typoed) must
-          // fail here, not silently fall back to a single-split scan —
-          // at the 100 TB posture that fallback is an undiagnosed
-          // one-connection stall, the exact failure mode the spec exists
-          // to prevent (r13 sweep)
-          val vals = Seq("PARTCOL", "LOWER", "UPPER", "NUM").map { k =>
-            val full = s"SPARK_GRAFT_JDBC_$k"
-            full -> sys.env.get(full)
-          }
-          val missing = vals.collect { case (k, None) => k }
-          require(missing.isEmpty,
-            s"SPARK_GRAFT_JDBC_PARTTABLE=$name is set but ${missing.mkString(", ")} " +
-              "missing — a partitioned JDBC read needs all of PARTCOL/LOWER/UPPER/NUM " +
-              "(a silent single-split fallback would stream the whole table through one connection)")
-          val Seq(c, lo, hi, n) = vals.map(_._2.get)
-          r.option("partitionColumn", c).option("lowerBound", lo)
-            .option("upperBound", hi).option("numPartitions", n)
-        }
-      part.getOrElse(r).load()
+        .load()
     } else Tables.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = load("region")

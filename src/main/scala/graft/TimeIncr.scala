@@ -118,11 +118,9 @@ object TimeIncr {
       dir -> r.getLong(0)
     }.toMap
     val spans = spansArg.getOrElse(Seq(maxIds(dirs.head) / 5)) // natural slice
-    // honor the session's shard conf so the harness measures the layout a
-    // deployment actually configures — read through the same resolver
-    // the production ensure path uses; the probe reads it back from the
-    // version name each pass builds under
-    val shards = operators.VersionedIndex.confShards(spark)
+    // the production ensure path's shard count; the probe reads it back
+    // from the version name each pass builds under
+    val shards = operators.VersionedIndex.bucketShards
     val tiers = for (dir <- dirs; span <- spans) yield {
       val split = maxIds(dir) - span
       // the span must carve a real increment out of a real corpus: a

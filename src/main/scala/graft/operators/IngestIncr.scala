@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Profile, Published, QueryDef, Tables}
+import graft.{Engine, Profile, Published, QueryDef, Tables}
 import graft.Published.{StateDelta, StateGen, children, committedMax, fsOf, isCommitted, reap}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -586,19 +586,17 @@ object IngestIncr {
   private[graft] def admitMicroBatch(s: SparkSession, batch: DataFrame,
       batchId: Long, idx: String, split: Long, statePath: String,
       outPath: String): Unit = {
+    // Cadence knob: at one trigger/30 s the default folds every ~8 min,
+    // keeping ≤ compactEvery delta dirs live; raise it where state
+    // rewrites cost more than small-file metadata (fast local disk),
+    // lower it on object stores where per-dir RPCs dominate.
+    val compactEvery = Engine.wholeSetting("spark.graft.admissionCompactEvery",
+      s.conf.get("spark.graft.admissionCompactEvery", "16"), 1)
     val loc0 = listState(s, statePath, batchId)
     // compact BEFORE processing, folding only deltas strictly below
     // THIS batch — so a generation can never contain the processing
     // batch's own delta and a re-delivery always sees exactly the state
-    // the first delivery saw. Cadence knob: at one trigger/30 s the
-    // default folds every ~8 min, keeping ≤ compactEvery delta dirs
-    // live; raise it where state rewrites cost more than small-file
-    // metadata (fast local disk), lower it on object stores where
-    // per-dir RPCs dominate.
-    val compactEvery =
-      s.conf.get("spark.graft.admissionCompactEvery", "16").toInt
-    require(compactEvery >= 1,
-      s"ingestAdmission: spark.graft.admissionCompactEvery must be >= 1")
+    // the first delivery saw.
     val loc =
       if (loc0.deltas.size >= compactEvery)
         Profile.labeled(s, "ingestAdmission: state fold")(

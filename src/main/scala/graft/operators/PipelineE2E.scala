@@ -42,10 +42,7 @@ import org.apache.spark.sql.functions._
   * offset jobs. The policy-independent frames (base, gated, cleaned)
   * share ONE memo entry across both variants; policy-dependent frames
   * carry the config's key suffix. PlanSpec asserts the executed plan
-  * touches no file scan of `documents` outside the one cache fill. At
-  * 100 TB the same shape holds with `spark.graft.featureMemoLevel`
-  * steering the persist tier (or NONE to trade re-scans for storage,
-  * the documented relief valve).
+  * touches no file scan of `documents` outside the one cache fill.
   *
   * Stage semantics (each pinned by its standalone twin's oracle):
   *  1. clean: language/length/quality gates + exact-dup keeper election

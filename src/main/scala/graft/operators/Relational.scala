@@ -263,10 +263,8 @@ object Relational {
       // sampler job the cache fill and the sort job a cache read: the
       // join's cost is paid once, cold-run timing includes the fill,
       // and the memo registry reclaims the frame like every dd_*
-      // feature (r17; measured at sf10 before adoption). At 100 TB the
-      // memo level conf (spark.graft.featureMemoLevel) steers the
-      // persist tier or disables it, trading the second evaluation back
-      // for zero storage — the documented relief valve.
+      // feature (r17; measured at sf10 before adoption). The persist is
+      // MEMORY_AND_DISK, so a join past executor memory spills.
       // versioned on BOTH sources (r17 review 3): the catalog's first
       // two-source memo — keyed on lineitem alone, an in-place
       // regeneration of orders.parquet would version-match and serve

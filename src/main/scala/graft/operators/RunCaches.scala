@@ -62,23 +62,14 @@ object RunCaches {
   private val tracked =
     scala.collection.mutable.ArrayBuffer.empty[(String, SparkContext, () => Unit)]
 
-  /** Memoized persisted frame for (`s`, `key`) at `version`.
-    * `spark.graft.featureMemoLevel=NONE` turns the memo off per session —
-    * the 100 TB relief valve: the frames are corpus-derived, and past
-    * the cluster's aggregate storage the persist itself becomes the
-    * failure where the unmemoized alternative is merely a second
-    * pushdown-pruned scan. Any other value is a StorageLevel name for
-    * the persist tier (default MEMORY_AND_DISK); an unknown one fails
-    * loudly. `persist` itself is lazy registration, not a job. */
+  /** Memoized persisted frame for (`s`, `key`) at `version`, at
+    * MEMORY_AND_DISK: a corpus-derived frame past executor memory spills
+    * rather than failing. `persist` itself is lazy registration, not a
+    * job. */
   private[graft] def cachedFeature(s: SparkSession, key: String,
-      version: Long = 0L)(build: => DataFrame): DataFrame = {
-    val lvl = s.conf.get("spark.graft.featureMemoLevel", "MEMORY_AND_DISK")
-    if (lvl.equalsIgnoreCase("NONE")) build
-    else {
-      val storage = StorageLevel.fromString(lvl.toUpperCase(java.util.Locale.ROOT))
-      memoize(s, key, version)(build.persist(storage))((df, _) => df.unpersist())
-    }
-  }
+      version: Long = 0L)(build: => DataFrame): DataFrame =
+    memoize(s, key, version)(build.persist(StorageLevel.MEMORY_AND_DISK))((df, _) =>
+      df.unpersist())
 
   /** Memoized broadcast of `build` for (`s`, `key`) at `version`. A
     * broadcast is pinned on driver and executors until destroyed, so an
@@ -176,8 +167,7 @@ object RunCaches {
   private[graft] def track(s: SparkSession, label: String)(release: () => Unit): Unit =
     synchronized { tracked += ((label, s.sparkContext, release)) }
 
-  /** Live memo entries — spec surface for the featureMemoLevel relief
-    * valve and the cross-session reclaim. */
+  /** Live memo entries — spec surface for the cross-session reclaim. */
   private[graft] def memoSize: Int = synchronized(memo.size)
 
   /** The live memo entry's version for `key` in session `s` — spec

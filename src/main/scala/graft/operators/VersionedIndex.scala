@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Published, QueryDef, Tables}
+import graft.{Engine, Published, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import RunCaches.{cachedFeature, evictPrefix, srcVersion}
@@ -9,7 +9,7 @@ import RunCaches.{cachedFeature, evictPrefix, srcVersion}
   * family is a declaration ([[IncrFamily]]), and this object owns
   * everything else — the one LSH election ([[bandedOf]], [[keepersOf]],
   * [[starEdges]], [[candidatesOf]]), the batch dedup ([[dedup]]), the
-  * version-name codec ([[Version]]), the three index settings,
+  * version-name codec ([[Version]]), the two index settings,
   * publish/adopt/reap/husk-reclaim ([[ensureVersioned]]), the one
   * index-part reader ([[readPart]]/[[prunedPart]]), and the
   * build/probe halves ([[writeIncrIndex]]/[[probeIncrIndex]]). Batch,
@@ -21,17 +21,11 @@ import RunCaches.{cachedFeature, evictPrefix, srcVersion}
   * the composed ingest index included):
   *  - `spark.graft.minhash.indexBase` — root the versioned directories
   *    are published under (default: the JVM tmpdir);
-  *  - `spark.graft.minhash.reapGraceMs` — grace age for reaping
-  *    (default 15 min; floored at 5 min on non-`file:` stores);
-  *  - `spark.graft.minhash.indexShards` — bucket shards per band
-  *    (default [[defaultShards]]).
+  *  - `spark.graft.minhash.reapGraceMs` — grace age for reaping, a
+  *    whole number of milliseconds ≥ 0 (default 15 min; floored at
+  *    5 min on non-`file:` stores).
   * The `minhash` namespace is historical: the first family owned them. */
 object VersionedIndex {
-
-  // --- settings ---
-
-  private def conf(s: SparkSession, key: String, dflt: String): String =
-    s.conf.getOption(s"spark.graft.minhash.$key").getOrElse(dflt)
 
   /** Bucket shards per band in a persisted band index. The pruning axis
     * is the BUCKET, not the band (an increment bands into all 8 bands),
@@ -46,28 +40,12 @@ object VersionedIndex {
     * keeper side table by `pmod(id, 32)`, pruned at probe time by the
     * shards the elected corpus keepers actually occupy.
     *
-    * DEFAULT shard count only: the session conf
-    * `spark.graft.minhash.indexShards` wins when set — 32×8 = 256
-    * prunable units fit the test tiers, while a 100 TB corpus wants
-    * thousands (pruning granularity AND per-partition size both scale
-    * with it). The shard count is baked into the published version
-    * directory's NAME ([[Version]]), so an index built under one setting
-    * can never be probed under another — a conf change simply versions a
-    * new index and the old one ages out through the reap pass. */
-  val defaultShards = 32
-
-  /** Session shard count — the single reader of the shard setting, so
-    * build, version name and any measurement harness can never disagree
-    * within a session. */
-  private[graft] def confShards(s: SparkSession): Int = {
-    val n = conf(s, "indexShards", defaultShards.toString).toInt
-    // upper bound = what Version.parse's 9-digit shard field can read
-    // back: a 10-digit count would publish a version name the probe
-    // CANNOT parse — refuse here, where the layout is named
-    require(n > 0 && n <= 999999999,
-      s"spark.graft.minhash.indexShards must be in [1, 999999999], got $n")
-    n
-  }
+    * One shard count for every build: 32×8 = 256 prunable units. It is
+    * baked into the published version directory's NAME ([[Version]]),
+    * and a probe reads its pruning modulus from there, so a layout
+    * written with another count ([[write]]'s `shards`) is probed
+    * correctly. */
+  val bucketShards = 32
 
   // --- version-name codec ---
 
@@ -75,14 +53,10 @@ object VersionedIndex {
     * split is the source's increment boundary, the source token its
     * identity (max mtime, or the row count where the store has no mtime
     * surface), and the shard count the layout's pruning modulus — so a
-    * regenerated corpus or a different shard setting always names a
-    * different directory, and a probe reads the modulus it must prune
-    * with from the name itself. */
+    * regenerated corpus always names a different directory, and a
+    * probe reads the modulus it must prune with from the name itself. */
   private[graft] final case class Version(split: Long, srcToken: Long, shards: Int) {
-    /** The name's tier part, shared by every shard layout of one source
-      * state — the reap pass spares published siblings under it. */
-    def tierPrefix: String = s"v$split-$srcToken-"
-    def name: String = tierPrefix + s"s$shards"
+    def name: String = s"v$split-$srcToken-s$shards"
   }
 
   private[graft] object Version {
@@ -108,8 +82,8 @@ object VersionedIndex {
   /** The shard modulus a probe must prune with, read from the version
     * name: pruning with any other modulus than the layout was written
     * with silently misses duplicates, and the name is the layout's own
-    * record (immune to a conf change between ensure and probe). A path
-    * that is not a version name carries no such record and is refused. */
+    * record. A path that is not a version name carries no such record
+    * and is refused. */
   private[operators] def shardsOf(indexPath: String, what: String): Int =
     Version.ofPath(indexPath).map(_.shards).getOrElse(
       throw new IllegalArgumentException(
@@ -537,6 +511,15 @@ object VersionedIndex {
       build: (String, Long, Int) => Unit): (String, Long) =
     {
       import org.apache.hadoop.fs.Path
+      // settings first, so a bad value fails before any corpus read.
+      // "where do the 100 TB indexes live" is deployment config, and two
+      // sessions in one JVM may legitimately differ
+      val idxBase = s.conf.get("spark.graft.minhash.indexBase", sys.props("java.io.tmpdir"))
+      // a negative grace would age every directory, a concurrent JVM's
+      // live .build-* staging included
+      val confGraceMs = Engine.wholeSetting("spark.graft.minhash.reapGraceMs",
+        s.conf.get("spark.graft.minhash.reapGraceMs", (15 * 60 * 1000L).toString),
+        0, Long.MaxValue)
       // corpus identity: a single-column bounded agg, not the feature
       // cache — warming the full-corpus frame here would undo the
       // probe's increment-only read
@@ -566,10 +549,6 @@ object VersionedIndex {
         else Tables.newestMtime(s, s"$dir/$srcTable.parquet") // loud on a bad dir
       val dirHash = // collision-proof component alongside the sanitized name
         f"${scala.util.hashing.MurmurHash3.stringHash(dir) & 0xffffffffL}%08x"
-      // "where do the 100 TB indexes live" is deployment config, and two
-      // sessions in one JVM may legitimately differ
-      val idxBase = conf(s, "indexBase", sys.props("java.io.tmpdir"))
-      val confGraceMs = conf(s, "reapGraceMs", (15 * 60 * 1000L).toString).toLong
       val base = new Path(idxBase,
         s"graft-$famPrefix-idx-" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "-" + dirHash)
       val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -587,12 +566,9 @@ object VersionedIndex {
       val graceMs =
         if (fs.getScheme == "file") confGraceMs
         else math.max(confGraceMs, 5 * 60 * 1000L)
-      // shard count is part of the version identity: a layout built
-      // under one shard setting must never serve a probe pruning under
-      // another (the pmod assignments would disagree silently). The
-      // version's tier prefix is shared with the reap pass's
-      // sibling-spare check below so the two can never drift apart.
-      val version = Version(split, srcToken, confShards(s))
+      // shard count is part of the version identity: a layout written
+      // with another count is probed with the count its name records
+      val version = Version(split, srcToken, bucketShards)
       val ver = new Path(base, version.name)
       // fast path outside the lock (published is the steady state);
       // re-checked under the base's lock before building
@@ -660,14 +636,13 @@ object VersionedIndex {
         // accumulate one full index copy per regeneration/crash, once
         // past grace by the age rule: young content may still be
         // scanned (or written) by a concurrent JVM.
-        // A PUBLISHED shard layout of the CURRENT tier — or of a NEWER
-        // one — is potentially live and never reaped: another session
-        // with a different indexShards conf probes its own current-tier
-        // sibling, and a builder holding a STALE source token whose
-        // corpus-scale build outlasted the grace window would otherwise
-        // delete the newer tier's live index out from under the
-        // sessions probing it (a published version goes mtime-quiet the
-        // moment it lands, so age proves nothing for published dirs).
+        // A PUBLISHED version of the CURRENT tier — or of a NEWER one —
+        // is potentially live and never reaped: a builder holding a
+        // STALE source token whose corpus-scale build outlasted the
+        // grace window would otherwise delete the newer tier's live
+        // index out from under the sessions probing it (a published
+        // version goes mtime-quiet the moment it lands, so age proves
+        // nothing for published dirs).
         // The tier ordering comes from the version name's own token
         // component; a token past Long range (a hostile or corrupted
         // sibling name) reads as current-or-newer, never as a
@@ -678,9 +653,9 @@ object VersionedIndex {
         Published.reap(fs, base) { st =>
           val n = st.getPath.getName
           st.isDirectory && (n.startsWith("v") || n.startsWith(".build-")) &&
-            !(Published.isPublished(fs, st.getPath) && (n.startsWith(version.tierPrefix) ||
+            !(Published.isPublished(fs, st.getPath) &&
               Version.Shape.findFirstMatchIn(n)
-                .exists(_.group(2).toLongOption.forall(_ >= srcToken)))) &&
+                .exists(_.group(2).toLongOption.forall(_ >= srcToken))) &&
             Published.aged(fs, st, now, graceMs)
         }
       } }

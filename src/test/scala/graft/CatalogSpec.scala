@@ -251,10 +251,8 @@ class CatalogSpec extends SparkSpec {
 
   test("main code reads only the pinned SPARK_GRAFT_* variables") {
     // every new variable is one more untested way to run the engine;
-    // this list may only shrink. SPARK_GRAFT_JDBC_ is the prefix Tables
-    // completes with PARTCOL/LOWER/UPPER/NUM
-    val allowed = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_JDBC_",
-      "SPARK_GRAFT_JDBC_PARTTABLE", "SPARK_GRAFT_SF1", "SPARK_GRAFT_SF10",
+    // this list may only shrink
+    val allowed = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF1", "SPARK_GRAFT_SF10",
       "SPARK_GRAFT_SF10_DIR", "SPARK_GRAFT_SF1_DIR", "SPARK_GRAFT_SF_DIR",
       "SPARK_GRAFT_STREAM_OUT", "SPARK_GRAFT_TIME_OUT")
     val root = java.nio.file.Paths.get("src/main/scala/graft")
@@ -267,9 +265,53 @@ class CatalogSpec extends SparkSpec {
     assert(found === allowed.sorted)
   }
 
+  test("main code reads only the pinned spark.graft.* settings") {
+    // this list may only shrink. Each key is spelled in full at its read
+    // site: a key built by interpolation (`spark.graft.minhash.$key`)
+    // reads here as a bare prefix and fails the census
+    val allowed = Seq("spark.graft.admissionCompactEvery", "spark.graft.checkpointDir",
+      "spark.graft.minhash.indexBase", "spark.graft.minhash.reapGraceMs")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(root), s"no sources at ${root.toAbsolutePath}")
+    val key = "spark\\.graft\\.[A-Za-z0-9_.]*".r
+    val files = java.nio.file.Files.walk(root)
+    val found = try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(f => key.findAllIn(java.nio.file.Files.readString(f)).map(_.stripSuffix(".")))
+      .distinct.sorted finally files.close()
+    assert(found === allowed.sorted)
+  }
+
+  test("a bad spark.graft.* value fails before any work, naming its key") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-badconf").toString
+    def ensure() = operators.VersionedIndex.ensureVersioned(spark, sf001, "badconf",
+      Seq("part")) { (_, _, _) => fail("built an index under a bad setting") }
+    def admit() = operators.IngestIncr.admitMicroBatch(spark, spark.emptyDataFrame,
+      0L, s"$tmp/idx", 0L, s"$tmp/state", s"$tmp/out")
+    val rows = Seq(
+      ("spark.graft.minhash.reapGraceMs", "-1", () => ensure()),
+      ("spark.graft.minhash.reapGraceMs", "15m", () => ensure()),
+      ("spark.graft.admissionCompactEvery", "0", () => admit()),
+      ("spark.graft.admissionCompactEvery", "abc", () => admit()),
+      ("spark.graft.admissionCompactEvery", "2.5", () => admit()))
+    for ((key, value, run) <- rows) {
+      spark.conf.set(key, value)
+      val e = try intercept[IllegalArgumentException](run()) finally spark.conf.unset(key)
+      assert(e.getMessage.startsWith(s"$key must be a whole number in [") &&
+        e.getMessage.endsWith(s"got '$value'"), e.getMessage)
+    }
+    assert(new java.io.File(tmp).list().isEmpty, "a refused setting wrote state")
+    new java.io.File(tmp).delete(): Unit
+  }
+
   test("Engine's core count: SPARK_GRAFT_CPUS when set, else the host's") {
     assert(Engine.cpus(Some("8")) === 8)
     assert(Engine.cpus(None) === Runtime.getRuntime.availableProcessors)
+    // refused up front, naming the variable, not later by Spark's master
+    // URL parser ("local[0]", "local[-2]") or a bare NumberFormatException
+    for (bad <- Seq("0", "-2", "abc", "4.5", "99999999999")) {
+      val e = intercept[IllegalArgumentException](Engine.cpus(Some(bad)))
+      assert(e.getMessage === s"SPARK_GRAFT_CPUS must be a whole number in [1, 2147483647], got '$bad'")
+    }
   }
 
   test("TimeQueries: `all` is the whole catalog; an unknown name fails before any query runs") {

@@ -675,48 +675,55 @@ class SemanticsSpec extends SparkSpec {
     }
   }
 
-  test("minhash index: shard count is session conf AND version identity — probe output invariant") {
+  test("minhash index: an 8-shard layout probes by its name's modulus") {
     import graft.operators.Similarity
-    // sharding is layout, not semantics: a probe against an 8-shard
-    // index must return exactly the rows of the default-shard probe.
-    // The shard count is baked into the version NAME so a layout built
-    // under one setting can never serve pruning under another.
+    // sharding is layout, not semantics: a probe of an 8-shard layout
+    // must return exactly the rows of the default-shard probe. Builds
+    // use one shard count, but the probe reads its pruning modulus from
+    // the version NAME (-s8), so a layout written with another count is
+    // probed with the count it was written with
     val defaultProbe = Similarity.ddMinhashIncr.run(spark, sf001)
       .collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
-    val (pDef, _) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
-    spark.conf.set("spark.graft.minhash.indexShards", "8")
-    // grace 1 ms makes EVERYTHING reapable — proving the sibling
-    // current-tier layout below survives by name, not by youth
-    spark.conf.set("spark.graft.minhash.reapGraceMs", "1")
-    // a marker-less current-tier sibling is a crashed sibling publish:
-    // it must still age out, or every abandoned shard setting would pin
-    // a corpus-scale index copy
-    val huskSibling = new java.io.File(pDef.stripSuffix("s32") + "s4")
-    huskSibling.mkdirs()
-    new java.io.File(huskSibling, "leftover.parquet").createNewFile()
-    // reaping runs only on a BUILD — drop any -s8 layout a previous run
-    // of this suite published, so the ensure below actually rebuilds
-    deleteAll(new java.io.File(pDef.stripSuffix("s32") + "s8"))
+    val (pDef, split) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
+    val tier = pDef.stripSuffix(s"s${VersionedIndex.bucketShards}")
+    val p8 = new java.io.File(tier + "s8")
+    // a marker-less current-tier sibling is a crashed publish: it must
+    // still age out, or every abandoned layout would pin a corpus-scale
+    // index copy
+    val huskSibling = new java.io.File(tier + "s4")
     try {
-      val (p8, split8) = VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001)
-      assert(p8.endsWith("-s8"), s"shard count must version the index, got $p8")
-      assert(new java.io.File(pDef).isDirectory,
-        "a PUBLISHED sibling shard layout of the CURRENT tier may be live in another session — reap must spare it")
+      deleteAll(p8)
+      VersionedIndex.write(Similarity.minhashIncr, spark, sf001, p8.toString, split, shards = 8)
+      val p8Path = new org.apache.hadoop.fs.Path(p8.toString)
+      Published.publish(p8Path.getFileSystem(spark.sparkContext.hadoopConfiguration), p8Path)
+      val bshards = new java.io.File(p8, "bands").listFiles.filter(_.isDirectory)
+        .flatMap(_.listFiles.map(_.getName)).filter(_.startsWith("bshard="))
+        .map(_.stripPrefix("bshard=").toInt).toSet
+      assert(bshards.nonEmpty && bshards.forall(b => b >= 0 && b < 8),
+        s"the layout must be written with 8 shards, got $bshards")
+      huskSibling.mkdirs()
+      new java.io.File(huskSibling, "leftover.parquet").createNewFile()
+      // reaping runs only on a BUILD: drop the default version so the
+      // ensure below rebuilds it. Grace 1 ms makes EVERYTHING reapable —
+      // proving the published -s8 sibling survives by its marker and
+      // source token, not by youth
+      deleteAll(new java.io.File(pDef))
+      spark.conf.set("spark.graft.minhash.reapGraceMs", "1")
+      try assert(VersionedIndex.ensure(Similarity.minhashIncr, spark, sf001) === ((pDef, split)))
+      finally spark.conf.unset("spark.graft.minhash.reapGraceMs")
+      assert(p8.isDirectory,
+        "a PUBLISHED sibling layout of the CURRENT tier may be live — reap must spare it")
       assert(!huskSibling.exists,
         "a marker-less quiet sibling is a crashed publish — reap must reclaim it")
-      // the probe reads the layout's shard count from the path's -sN
-      // suffix, so it prunes with 8 here
-      val probed = VersionedIndex.probe(Similarity.minhashIncr, spark, sf001, p8, split8)
+      val probed = VersionedIndex.probe(Similarity.minhashIncr, spark, sf001, p8.toString, split)
         .collect().toSeq.sortBy(_.getAs[Long]("doc_id"))
       assert(probed === defaultProbe,
         "an 8-shard index must yield the identical probe result")
     } finally {
-      spark.conf.unset("spark.graft.minhash.indexShards")
-      spark.conf.unset("spark.graft.minhash.reapGraceMs")
-      // the planted husk normally ages out inside ensure; if an assert
-      // failed before that, it must not survive into the shared index
-      // base that later minhash tests list and reap
+      // neither planted layout may survive into the shared index base
+      // that later minhash tests list and reap
       deleteAll(huskSibling)
+      deleteAll(p8)
     }
   }
 
@@ -943,30 +950,6 @@ class SemanticsSpec extends SparkSpec {
       Seq(r.getAs[Long]("vec_id"), r.getAs[Long]("keeper"))).toSet
     assert((ddIds intersect Set(20L, 21L)).isEmpty,
       "dd_embedding paired a NaN/null-element vector")
-  }
-
-  test("featureMemoLevel=NONE disables the corpus-frame memo; a bogus level fails loudly") {
-    import graft.operators.{RunCaches, Similarity}
-    // the 100 TB relief valve: with the memo off, dedup queries still
-    // answer (build-per-call) and NOTHING lands in the cache manager —
-    // a corpus-scale persist past the cluster's storage is the failure
-    // the conf exists to avoid
-    RunCaches.clearAll()
-    spark.conf.set("spark.graft.featureMemoLevel", "NONE")
-    try {
-      val r = Similarity.ddMinhash.run(spark, sf001).collect()
-      assert(r.nonEmpty)
-      assert(RunCaches.memoSize === 0,
-        "memo must stay empty under featureMemoLevel=NONE")
-    } finally spark.conf.unset("spark.graft.featureMemoLevel")
-    // an unknown level is a conf typo — loud, not a silent default
-    spark.conf.set("spark.graft.featureMemoLevel", "BOGUS_LEVEL")
-    try intercept[IllegalArgumentException] {
-      Similarity.ddMinhash.run(spark, sf001).collect()
-    } finally spark.conf.unset("spark.graft.featureMemoLevel")
-    // default path restores memoization
-    assert(Similarity.ddMinhash.run(spark, sf001).collect().nonEmpty)
-    assert(RunCaches.memoSize >= 1)
   }
 
   test("JDBC timestamp-without-time-zone events arrive zone-free (preferTimestampNTZ)") {
